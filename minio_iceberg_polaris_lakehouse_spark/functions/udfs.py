@@ -226,8 +226,6 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     which Spark would run JVM-side)."""
     from pyspark.sql.functions import udtf
 
-    from minio_iceberg_polaris_lakehouse_spark import diag
-
     @udtf(returnType="installment int, amount_cents bigint")
     class Installments:
         def eval(self, cents):
@@ -251,30 +249,4 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY o.o_orderkey, i.installment
         """
     )
-    # in-driver telemetry (r8 verdict #1): record what the UDTF actually
-    # computed in THIS environment for the first few orders — raw double,
-    # floored cents, and the fanned-out values — plus the conf snapshot.
-    # The sample job runs INSIDE a guard: telemetry may never break the
-    # golden it observes (diag.record only guards the file write).
-    try:
-        sample = [
-            r.asDict()
-            for r in spark.sql(
-                """
-                SELECT o.o_orderkey,
-                       CAST(o.o_totalprice AS STRING) AS price_repr,
-                       CAST(FLOOR(o.o_totalprice * 100) AS BIGINT) AS cents,
-                       i.installment, i.amount_cents
-                FROM udtf_orders o,
-                     LATERAL installments(
-                         CAST(FLOOR(o.o_totalprice * 100) AS BIGINT)) i
-                WHERE o.o_orderkey <= 7
-                ORDER BY o.o_orderkey, i.installment
-                """
-            ).collect()
-        ]
-        payload = {"sample": sample}
-    except Exception as e:
-        payload = {"sample_error": f"{type(e).__name__}: {e}"}
-    diag.record("udf_python_udtf", spark, payload)
     return out

@@ -33,6 +33,8 @@ Reference scope: the reference curates corpora with stock Spark SQL
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,21 +67,29 @@ def _argmin_struct(cents: list[tuple[int, list[float]]]):
     pass) with a scan-local `array_min` over K distance structs.
 
     The whole expression is built as ONE SQL string and parsed once.
-    Measured alternatives (A/B'd back-to-back at sf0.1, see
-    OPTIMIZATION_r13.md): building the same tree with pyspark Column
-    lambdas costs ~0.45 s of py4j/analysis PER iteration plan; spelling
-    the distance as a flat 64-term arithmetic chain makes it whole-stage
-    codegen material whose embedded literals CHANGE per iteration, so
-    janino recompiles every pass (~0.9 s each). The SQL-parsed
-    higher-order fold is the sweet spot: ~0.1 s to parse+analyze and
-    ~0.1 s to evaluate interpreted (HOFs have no codegen — and need
+    The alternatives cost more per iteration (their A/B timings were
+    never recorded): building the same tree with pyspark Column lambdas
+    pays py4j/analysis time per iteration plan; spelling the distance as
+    a flat 64-term arithmetic chain makes it whole-stage codegen
+    material whose embedded literals CHANGE per iteration, so janino
+    recompiles every pass. The SQL-parsed higher-order fold is parsed
+    once and evaluated interpreted (HOFs have no codegen — and need
     none here). The fold itself is token-identical to `_dist6`
     (same aggregate/zip_with, acc from 0.0, left-to-right), `{x!r}D`
     literals round-trip doubles exactly, and struct comparison is
     lexicographic on (dist, cid) — exactly the `MIN(struct(dist, cid))`
-    argmin the grouped form computed, so assignments are bit-identical."""
+    argmin the grouped form computed, so assignments are bit-identical.
+
+    Every component must be finite: `repr` of NaN/inf is no SQL literal
+    (`nanD`), so a non-finite centroid raises here, naming it."""
     structs = []
     for cid, c in cents:
+        for d, x in enumerate(c):
+            if not math.isfinite(x):
+                raise ValueError(
+                    f"k-means centroid {cid} has non-finite component {x!r} at dimension {d}; "
+                    "the input embeddings must be finite"
+                )
         arr = "array(" + ", ".join(f"{x!r}D" for x in c) + ")"
         dist = (
             f"round(aggregate(zip_with(e, {arr}, (x, y) -> (x - y) * (x - y)),"
@@ -119,9 +129,11 @@ def kmeans_fit(
     v = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("e")
     )
-    # No spread / no checkpoint: A/B'd both (OPTIMIZATION_r13.md) — at
-    # this corpus (2000 vectors) the extra materialization job and the
-    # per-job repartition wave each cost MORE than they save, and at
+    # No spread / no checkpoint: at this corpus (2000 vectors) an extra
+    # materialization job or repartition wave costs MORE than it saves
+    # (OPTIMIZATION_r12.md, "Tried, measured, and deliberately NOT
+    # shipped": a checkpoint job took IVF cells 0.91 → 1.11 s, a fan-out
+    # shuffle took dedup_exact 0.118 → 0.372 s), and at
     # scale the scan has natural splits so the literal-argmin + per-dim
     # folds parallelize per split anyway (there you would persist() the
     # double-cast corpus across the iteration jobs, MLlib-style).

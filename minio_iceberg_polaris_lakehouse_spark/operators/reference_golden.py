@@ -976,8 +976,8 @@ _REFRESH_FAILED: dict[tuple[str, str], str] = {}
 def _refresh_checked(
     lake, spark: SparkSession, golden: str, stmt: str, built: dict | None = None
 ) -> str:
-    """Run REFRESH MATERIALIZED VIEW, record telemetry, and FAIL LOUD if
-    the incremental path did not run.
+    """Run REFRESH MATERIALIZED VIEW and FAIL LOUD if the incremental
+    path did not run.
 
     Two driver rounds produced silent hash mismatches on the MV goldens
     (mode interpolated into the result; rows+schema matched, values
@@ -985,8 +985,7 @@ def _refresh_checked(
     downgrade ('full'), a 'noop' (refresh saw no new base snapshot), or
     any other mode now raises with the full REFRESH result row, so the
     driver records a *named cause* in its `err` column instead of an
-    undiagnosable wrong hash — and DIAG_GOLDENS.jsonl keeps the
-    environment snapshot either way. The FIRST failure is cached per
+    undiagnosable wrong hash. The FIRST failure is cached per
     (app, golden): a retried invocation re-raises the original cause
     instead of a masking 'noop' (the failed refresh already advanced
     the synced snapshot, so a re-run reports nothing to do). The cached
@@ -995,8 +994,6 @@ def _refresh_checked(
     replay for the driver's `err` column, then the next invocation
     drops and rebuilds the fixture from scratch instead of replaying
     the stale error forever within one app."""
-    from minio_iceberg_polaris_lakehouse_spark import diag
-
     fkey = (spark.sparkContext.applicationId, golden)
     if fkey in _REFRESH_FAILED:
         msg = _REFRESH_FAILED.pop(fkey)
@@ -1004,45 +1001,15 @@ def _refresh_checked(
             built.pop(fkey[0], None)
         raise RuntimeError(msg)
     row = lake.sql(stmt).collect()[0]
-    diag.record(
-        golden,
-        spark,
-        {
-            "refresh": {
-                "view": row.view,
-                "mode": row.mode,
-                "synced_snapshot": row.synced_snapshot,
-                "downgrade_reason": row.downgrade_reason,
-                # join views: per-base 'name=snapshot' pairs (their
-                # single synced_snapshot is necessarily NULL)
-                "synced_bases": getattr(row, "synced_bases", None),
-            }
-        },
-    )
     if row.mode != "incremental":
         msg = (
             f"{golden}: REFRESH ran mode={row.mode!r} instead of "
             f"'incremental' (downgrade_reason={row.downgrade_reason!r}, "
-            f"synced_snapshot={row.synced_snapshot!r}) — see "
-            "DIAG_GOLDENS.jsonl for the environment snapshot"
+            f"synced_snapshot={row.synced_snapshot!r})"
         )
         _REFRESH_FAILED[fkey] = msg
         raise RuntimeError(msg)
     return row.mode
-
-
-def _diag_result(golden: str, spark: SparkSession, df) -> None:
-    """Record the golden's ACTUAL result rows (≤10) in the telemetry —
-    if a driver round ever hash-fails with mode='incremental', the
-    artifact shows the values this environment computed, not just its
-    confs. Tiny fixed-size collect, invisible to the comparison."""
-    from minio_iceberg_polaris_lakehouse_spark import diag
-
-    try:
-        rows = [[str(x) for x in r] for r in df.limit(10).collect()]
-    except Exception as e:  # telemetry must never break the golden
-        rows = [[f"<collect failed: {type(e).__name__}: {e}>"]]
-    diag.record(golden, spark, {"result_sample": rows})
 
 
 @register(
@@ -1108,7 +1075,6 @@ def ref_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT region, CAST(total AS DOUBLE) AS total, n, '{mode}' AS mode "
         "FROM test_db.sales_mv ORDER BY region"
     )
-    _diag_result("ref_matview_incremental", spark, out)
     return out
 
 
@@ -1184,7 +1150,6 @@ def ref_matview_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT segment, CAST(total AS DOUBLE) AS total, n, '{mode}' AS mode "
         "FROM test_db.orders_by_segment ORDER BY segment"
     )
-    _diag_result("ref_matview_join", spark, out)
     return out
 
 

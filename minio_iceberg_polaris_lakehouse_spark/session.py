@@ -25,9 +25,13 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Iterable
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def default_parallelism() -> int:
@@ -52,6 +56,62 @@ def ship_package(spark: SparkSession) -> None:
     )
     sc.addPyFile(zpath)
     sc._lakehouse_pkg_shipped = True
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over rows the driver already holds: metadata tables,
+    procedure results, metadata COUNT(*), INSERT VALUES lists.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes the list as a
+    Python RDD, so collecting even a one-row answer runs a Spark job and
+    starts Python workers. An Arrow table becomes a JVM ``LocalRelation``
+    instead: collecting it runs no job and starts no worker.
+
+    ``schema`` is a ``StructType`` or a DDL string. A row is a tuple
+    (positional) or a ``Row`` with field names (matched by name). Values
+    are checked as ``createDataFrame`` checks them: a value that does not
+    fit its column's type, or a NULL in a NOT NULL column, raises. Naive
+    datetimes are read as UTC."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    names = schema.names
+    verify = T._make_type_verifier(schema)  # createDataFrame's own type and NULL checks
+    tuples = [_row_values(r, names) for r in rows]
+    for t in tuples:
+        verify(t)
+    cols = list(zip(*tuples)) or [() for _ in names]
+    arrow_schema = to_arrow_schema(schema)
+    arrays = []
+    for f, af, vals in zip(schema.fields, arrow_schema, cols):
+        if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
+            vals = [_arrow_value(v, f.dataType) for v in vals]
+        arrays.append(pa.array(vals, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
+def _row_values(row, names: list[str]) -> tuple:
+    if isinstance(row, Row) and hasattr(row, "__fields__"):
+        if sorted(row.__fields__) != sorted(names):
+            raise ValueError(f"row fields {row.__fields__} do not match schema {names}")
+        return tuple(row[n] for n in names)
+    if len(row) != len(names):
+        raise ValueError(f"row of {len(row)} values for a schema of {len(names)} columns")
+    return row
+
+
+def _arrow_value(v, dt: T.DataType):
+    """A nested value in the shape ``pa.array`` takes: structs as dicts,
+    maps as (key, value) lists."""
+    if v is None:
+        return None
+    if isinstance(dt, T.StructType):
+        vals = _row_values(v, dt.names)
+        return {f.name: _arrow_value(x, f.dataType) for f, x in zip(dt.fields, vals)}
+    if isinstance(dt, T.ArrayType):
+        return [_arrow_value(x, dt.elementType) for x in v]
+    if isinstance(dt, T.MapType):
+        return [(_arrow_value(k, dt.keyType), _arrow_value(x, dt.valueType)) for k, x in v.items()]
+    return v
 
 
 def get_spark(

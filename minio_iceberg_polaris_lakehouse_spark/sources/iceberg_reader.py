@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from minio_iceberg_polaris_lakehouse_spark import avro_io, fsio
+from minio_iceberg_polaris_lakehouse_spark.session import local_frame
 
 _PRIM_TO_SPARK = {
     "int": T.IntegerType(),
@@ -81,7 +82,8 @@ def _dv_tombstones(spark: SparkSession, specs: list[dict]) -> DataFrame:
     ``_metadata.file_path`` exactly like parquet tombstones."""
     import pandas as pd
 
-    spec_df = spark.createDataFrame(
+    spec_df = local_frame(
+        spark,
         [
             (s["puffin"], int(s["offset"]), int(s["length"]), s["referenced"])
             for s in specs
@@ -844,7 +846,7 @@ def read_iceberg_table(
         raise ValueError("row_lineage is exclusive with the internal _keep_lineage")
 
     def _empty() -> DataFrame:
-        e = spark.createDataFrame([], _struct(target))
+        e = local_frame(spark, [], _struct(target))
         if _keep_lineage:
             e = e.withColumn("__file", F.lit(None).cast("string")).withColumn(
                 "__pos", F.lit(None).cast("long")
@@ -1112,8 +1114,8 @@ def read_iceberg_table(
         first_map.update(avro_first_rows)
         first_rows = list(first_map.items())
         if first_rows:
-            firsts = spark.createDataFrame(
-                first_rows, "__file string, __first bigint"
+            firsts = local_frame(
+                spark, first_rows, "__file string, __first bigint"
             ).dropDuplicates(["__file"])
             out = out.join(F.broadcast(firsts), ["__file"], "left")
         else:
@@ -1164,7 +1166,7 @@ def incremental_read_iceberg_table(
     target_sid = by_id[to_snapshot_id].get("schema-id", md["current-schema-id"])
     target = schemas[target_sid]
     if to_snapshot_id == from_snapshot_id:
-        return spark.createDataFrame([], _struct(target))
+        return local_frame(spark, [], _struct(target))
 
     def _mans(snap) -> dict[str, dict]:
         _s, _m, recs = avro_io.read_container(snap["manifest-list"])
@@ -1202,7 +1204,7 @@ def incremental_read_iceberg_table(
         df = spark.read.schema(_struct(fschema)).parquet(*files)
         parts.append(df.select(*_align_cols(fschema, target)))
     if not parts:
-        return spark.createDataFrame([], _struct(target))
+        return local_frame(spark, [], _struct(target))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1287,7 +1289,7 @@ def changes_iceberg_table(
             )
     interval = list(reversed(chain))
     if not interval:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     def _mans(snap) -> dict[str, dict]:
         _s, _m, recs = avro_io.read_container(snap["manifest-list"])
@@ -1488,7 +1490,7 @@ def changes_iceberg_table(
                     )
         prev = cur
     if not parts:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1595,7 +1597,7 @@ def read_iceberg_snapshots(spark: SparkSession, location: str) -> DataFrame:
         )
         for s in md.get("snapshots", [])
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def read_iceberg_statistics(spark: SparkSession, location: str) -> DataFrame:
@@ -1639,7 +1641,8 @@ def read_iceberg_statistics(spark: SparkSession, location: str) -> DataFrame:
                     entry["statistics-path"],
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column string, ndv bigint, ndv_property bigint, "
         "snapshot_id bigint, statistics_path string",
@@ -1729,7 +1732,7 @@ def read_iceberg_history(spark: SparkSession, location: str) -> DataFrame:
         )
         for e in log
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def read_iceberg_files(spark: SparkSession, location: str) -> DataFrame:
@@ -1745,7 +1748,7 @@ def read_iceberg_files(spark: SparkSession, location: str) -> DataFrame:
         "record_count bigint, file_size_in_bytes bigint"
     )
     if snap is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     rows = []
     _s, _m, manifests = avro_io.read_container(snap["manifest-list"])
     for m in manifests:
@@ -1764,7 +1767,7 @@ def read_iceberg_files(spark: SparkSession, location: str) -> DataFrame:
                     int(df_.get("file_size_in_bytes") or 0),
                 )
             )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def read_iceberg_refs(spark: SparkSession, location: str) -> DataFrame:
@@ -1776,7 +1779,7 @@ def read_iceberg_refs(spark: SparkSession, location: str) -> DataFrame:
         (name, str(rec.get("type", "branch")).upper(), int(rec["snapshot-id"]))
         for name, rec in sorted((md.get("refs") or {}).items())
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def read_iceberg_schema(location: str) -> T.StructType:

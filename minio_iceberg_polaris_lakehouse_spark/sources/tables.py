@@ -136,9 +136,10 @@ def materialize_once(df: DataFrame) -> DataFrame:
     - EAGER localCheckpoint (the r12 shape) runs a separate blocking
       materialization job before the query's own action; lazy checkpoint
       materializes during the first consumer's job (usually a broadcast
-      subquery) and every later consumer reads the stored blocks —
-      measured consistently faster at bench scale (see
-      OPTIMIZATION_r13.md).
+      subquery) and every later consumer reads the stored blocks; a
+      separate materialization job costs more than it saves at bench
+      scale (OPTIMIZATION_r12.md, "Tried, measured, and deliberately
+      NOT shipped": an eager checkpoint took IVF cells 0.91 → 1.11 s).
 
     Trade-off, documented for the 100 TB story: checkpoint blocks are
     unreplicated and the lineage is CUT, so an executor loss fails the

@@ -75,6 +75,7 @@ import re
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
+from minio_iceberg_polaris_lakehouse_spark.session import local_frame
 from minio_iceberg_polaris_lakehouse_spark.warehouse import (
     SnapshotNotFoundError,
     Table,
@@ -1595,7 +1596,8 @@ class LakehouseSQL:
         if n is None:
             return None
         col = alias or "count(1)"  # Spark's COUNT(*) output name
-        return self.spark.createDataFrame([(n,)], T.StructType([T.StructField(col, T.LongType(), False)]))
+        schema = T.StructType([T.StructField(col, T.LongType(), False)])
+        return local_frame(self.spark, [(n,)], schema)
 
     # --------------------------------------------- SELECT manifest pruning
     def _scan_hints(self, s: str) -> dict[tuple[str, str], dict] | None:
@@ -1982,13 +1984,13 @@ class LakehouseSQL:
 
     # --------------------------------------------------------- DDL handlers
     def _show_catalogs(self, m: re.Match) -> DataFrame:
-        return self.spark.createDataFrame([Row(catalog=self.catalog)], "catalog string")
+        return local_frame(self.spark, [Row(catalog=self.catalog)], "catalog string")
 
     def _show_namespaces(self, m: re.Match) -> DataFrame:
         if m.group(1) and m.group(1).lower() != self.catalog.lower():
             raise WarehouseError(f"unknown catalog {m.group(1)}")
         rows = [Row(namespace=ns) for ns in self.wh.list_namespaces()]
-        return self.spark.createDataFrame(rows, "namespace string")
+        return local_frame(self.spark, rows, "namespace string")
 
     def _show_tables(self, m: re.Match) -> DataFrame:
         ns = self._resolve_ns_name(m.group(1))
@@ -2000,7 +2002,7 @@ class LakehouseSQL:
         )
         rows = [Row(namespace=ns, tableName=t, isTemporary=False) for t in sorted(names)]
         schema = "namespace string, tableName string, isTemporary boolean"
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def _create_namespace(self, m: re.Match) -> DataFrame:
         self.wh.create_namespace(self._resolve_ns_name(m.group(1)))
@@ -2107,8 +2109,8 @@ class LakehouseSQL:
                     Row(col_name="Provider", data_type="iceberg", comment=None),
                     Row(col_name="Registration", data_type="foreign (read-only)", comment=None),
                 ]
-            return self.spark.createDataFrame(
-                rows, "col_name string, data_type string, comment string"
+            return local_frame(
+                self.spark, rows, "col_name string, data_type string, comment string"
             )
         tab = self._existing_table(m.group(2))
         is_matview = f"{ns}.{t}" in self.wh.matviews()
@@ -2168,8 +2170,8 @@ class LakehouseSQL:
                         comment=None,
                     )
                 )
-        return self.spark.createDataFrame(
-            rows, "col_name string, data_type string, comment string"
+        return local_frame(
+            self.spark, rows, "col_name string, data_type string, comment string"
         )
 
     # --------------------------------------------------------- DML handlers
@@ -2443,11 +2445,7 @@ class LakehouseSQL:
             if ns is None or k.split(".", 1)[0] == ns
         ]
         schema = "namespace string, viewName string"
-        return (
-            self.spark.createDataFrame(rows, schema)
-            if rows
-            else self.spark.createDataFrame([], schema)
-        )
+        return local_frame(self.spark, rows, schema)
 
     def _show_tblproperties(self, m: re.Match) -> DataFrame:
         """SHOW TBLPROPERTIES t [('key')] — all properties, or one key's
@@ -2460,14 +2458,10 @@ class LakehouseSQL:
             val = props.get(key)
             if val is None:
                 raise WarehouseError(f"property {key!r} not set on {m.group(1)}")
-            return self.spark.createDataFrame([Row(value=str(val))], "value string")
+            return local_frame(self.spark, [Row(value=str(val))], "value string")
         rows = [Row(key=k, value=str(v)) for k, v in sorted(props.items())]
         schema = "key string, value string"
-        return (
-            self.spark.createDataFrame(rows, schema)
-            if rows
-            else self.spark.createDataFrame([], schema)
-        )
+        return local_frame(self.spark, rows, schema)
 
     def _create_table_like(self, m: re.Match) -> DataFrame:
         """CREATE TABLE [IF NOT EXISTS] t2 LIKE t1 — schema, partition
@@ -2651,7 +2645,8 @@ class LakehouseSQL:
             # (join) views, whose single synced_snapshot is necessarily
             # NULL — without it the refresh telemetry cannot prove which
             # changelog windows were folded (r9 driver-diagnosis gap)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     Row(
                         view=key,
@@ -2850,7 +2845,7 @@ class LakehouseSQL:
                 )
 
                 MV.probe_binds(
-                    self.spark.createDataFrame([], read_iceberg_schema(floc)),
+                    local_frame(self.spark, [], read_iceberg_schema(floc)),
                     spec,
                 )
                 chg = changes_iceberg_table(self.spark, floc, rec["synced"], cur)
@@ -2914,11 +2909,7 @@ class LakehouseSQL:
             "namespace string, viewName string, incremental boolean, "
             "base string, synced_snapshot bigint"
         )
-        return (
-            self.spark.createDataFrame(rows, schema)
-            if rows
-            else self.spark.createDataFrame([], schema)
-        )
+        return local_frame(self.spark, rows, schema)
 
     def _create_table_as_select(self, m: re.Match) -> DataFrame:
         """CREATE TABLE t AS SELECT ... (CTAS): schema inferred from the
@@ -3388,7 +3379,8 @@ class LakehouseSQL:
         before = tab.data_file_count()
         tab.compact(target_partitions=target, sort_by=sort_by, zorder=zorder)
         after = tab.data_file_count()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(rewritten_data_files_count=before, added_data_files_count=after)],
             "rewritten_data_files_count int, added_data_files_count int",
         )
@@ -3399,7 +3391,8 @@ class LakehouseSQL:
         previous = tab.current_snapshot_id()
         target = int(m.group(2))
         tab.rollback_to(target)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(previous_snapshot_id=previous, current_snapshot_id=target)],
             "previous_snapshot_id bigint, current_snapshot_id bigint",
         )
@@ -3420,7 +3413,8 @@ class LakehouseSQL:
         as_of_ms = int(ts.timestamp() * 1000)
         target = tab._resolve(as_of_ms=as_of_ms)["snapshot_id"]
         tab.rollback_to(target)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(previous_snapshot_id=previous, current_snapshot_id=target)],
             "previous_snapshot_id bigint, current_snapshot_id bigint",
         )
@@ -3437,8 +3431,8 @@ class LakehouseSQL:
             older_ms = int(ts.timestamp() * 1000)
         retain = int(m.group(3)) if m.group(3) else 1
         removed = tab.expire_snapshots(keep_last=retain, older_than_ms=older_ms)
-        return self.spark.createDataFrame(
-            [Row(deleted_data_files_count=removed)], "deleted_data_files_count int"
+        return local_frame(
+            self.spark, [Row(deleted_data_files_count=removed)], "deleted_data_files_count int"
         )
 
     def _call_remove_orphan_files(self, m: re.Match) -> DataFrame:
@@ -3459,8 +3453,8 @@ class LakehouseSQL:
             )
         else:
             removed = tab.remove_orphan_files()
-        return self.spark.createDataFrame(
-            [Row(orphan_file_location_count=removed)], "orphan_file_location_count int"
+        return local_frame(
+            self.spark, [Row(orphan_file_location_count=removed)], "orphan_file_location_count int"
         )
 
     def _call_rewrite_position_deletes(self, m: re.Match) -> DataFrame:
@@ -3470,7 +3464,8 @@ class LakehouseSQL:
         tab = self._existing_table(m.group(1).strip("'\""))
         before = tab._resolve().get("delete_dirs", [])
         tab.materialize_deletes()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(rewritten_delete_files_count=len(before))],
             "rewritten_delete_files_count int",
         )
@@ -3503,7 +3498,8 @@ class LakehouseSQL:
         if m.group(2):
             cols = [c.strip().strip("'\"") for c in m.group(2).split(",") if c.strip()]
         stats = tab.analyze(cols)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(statistics_file=tab.path + "/_meta.json", row_count=stats["row_count"])],
             "statistics_file string, row_count bigint",
         )
@@ -3515,7 +3511,8 @@ class LakehouseSQL:
         (warehouse.Table.compute_partition_stats)."""
         tab = self._existing_table(m.group(1).strip("'\""))
         out = tab.compute_partition_stats()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 Row(
                     statistics_path=out["statistics-path"],
@@ -3533,7 +3530,8 @@ class LakehouseSQL:
         small-manifest compaction; warehouse.Table.rewrite_manifests)."""
         tab = self._existing_table(m.group(1).strip("'\""))
         rewritten, added = tab.rewrite_manifests()
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(rewritten_manifests_count=rewritten, added_manifests_count=added)],
             "rewritten_manifests_count int, added_manifests_count int",
         )
@@ -3547,7 +3545,8 @@ class LakehouseSQL:
         tab = self._existing_table(m.group(1).strip("'\""))
         col = m.group(2).strip("'\"")
         n = tab.build_bloom_index(col)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(indexed_files_count=n, column=col)],
             "indexed_files_count int, column string",
         )
@@ -3608,7 +3607,8 @@ class LakehouseSQL:
         for sid in reversed(chain):
             current = tab.cherry_pick(sid)
         tab.drop_ref(branch)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(published=len(chain), current_snapshot_id=current)],
             "published int, current_snapshot_id bigint",
         )
@@ -3623,7 +3623,8 @@ class LakehouseSQL:
             raise WarehouseError("fast_forward target must be 'main'")
         previous = tab.current_snapshot_id()
         updated = tab.fast_forward(source)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(branch_updated=target, previous_ref=previous, updated_ref=updated)],
             "branch_updated string, previous_ref bigint, updated_ref bigint",
         )
@@ -3634,7 +3635,8 @@ class LakehouseSQL:
         tab = self._existing_table(m.group(1).strip("'\""))
         source = int(m.group(2))
         current = tab.cherry_pick(source)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [Row(source_snapshot_id=source, current_snapshot_id=current)],
             "source_snapshot_id bigint, current_snapshot_id bigint",
         )
@@ -3652,7 +3654,7 @@ class LakehouseSQL:
         start = int(m.group(3)) if m.group(3) else None
         end = int(m.group(4)) if m.group(4) else None
         tab.changes(from_version=start, to_version=end).createOrReplaceTempView(view)
-        return self.spark.createDataFrame([Row(changelog_view=view)], "changelog_view string")
+        return local_frame(self.spark, [Row(changelog_view=view)], "changelog_view string")
 
     def _call_snapshot_table(self, m: re.Match) -> DataFrame:
         """CALL c.system.snapshot(source_table => '<parquet dir>',
@@ -3674,7 +3676,7 @@ class LakehouseSQL:
             # blocks the retry with 'already exists'
             self.wh.drop_table(ns, name)
             raise
-        return self.spark.createDataFrame([Row(imported_files_count=n)])
+        return local_frame(self.spark, [Row(imported_files_count=n)], "imported_files_count bigint")
 
     def _call_add_files(self, m: re.Match) -> DataFrame:
         """CALL c.system.add_files(table => 'ns.t', source_table =>
@@ -3688,8 +3690,10 @@ class LakehouseSQL:
         if not t.exists():
             raise WarehouseError(f"table {ns}.{name} not found")
         _sid, n = t.add_files(src)  # count = what the commit ACTUALLY imported
-        return self.spark.createDataFrame(
-            [Row(added_files_count=n, changed_partition_count=1)]
+        return local_frame(
+            self.spark,
+            [Row(added_files_count=n, changed_partition_count=1)],
+            "added_files_count bigint, changed_partition_count bigint",
         )
 
     def _call_register_table(self, m: re.Match) -> DataFrame:
@@ -3726,7 +3730,8 @@ class LakehouseSQL:
                     total_records += int(man.get("added_rows_count") or 0) + int(
                         man.get("existing_rows_count") or 0
                     )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 Row(
                     current_snapshot_id=cur,
@@ -3776,7 +3781,7 @@ class LakehouseSQL:
         if props:
             kvs = ",\n  ".join(f"'{k}' = '{v}'" for k, v in sorted(props.items()))
             stmt += f"\nTBLPROPERTIES (\n  {kvs})"
-        return self.spark.createDataFrame([Row(createtab_stmt=stmt)], "createtab_stmt string")
+        return local_frame(self.spark, [Row(createtab_stmt=stmt)], "createtab_stmt string")
 
     def _explain(self, m: re.Match) -> DataFrame:
         """EXPLAIN [EXTENDED|FORMATTED|CODEGEN|COST] <query> — rewrite the
@@ -3786,7 +3791,7 @@ class LakehouseSQL:
         return self.spark.sql(f"EXPLAIN {mode} {self._rewrite_query(query)}".strip())
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], T.StructType([]))
+        return local_frame(self.spark, [], T.StructType([]))
 
     # statement table: (fullmatch regex, handler) — first match wins
     _STATEMENTS = [

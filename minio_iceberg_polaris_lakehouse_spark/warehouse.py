@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from minio_iceberg_polaris_lakehouse_spark import fsio
+from minio_iceberg_polaris_lakehouse_spark.session import local_frame
 
 META_FILE = "_meta.json"
 SNAP_FILE = "_snapshots.json"
@@ -1735,7 +1736,7 @@ class Table:
         whose sequence predates the delete file's (Iceberg v2)."""
         schema = self.schema() if schema is None else schema
         if not dirs:
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
             if file_pos:
                 df = df.select(
                     "*",
@@ -1877,7 +1878,7 @@ class Table:
         dirs = snap.get("delete_dirs", [])
         schema = "file_path string, pos bigint, delete_file_path string"
         if not dirs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         paths = [os.path.join(self.path, d) for d in dirs]
         return self.spark.read.schema(self._DELETE_SCHEMA).parquet(*paths).select(
             "file_path", "pos", F.col("_metadata.file_path").alias("delete_file_path")
@@ -1951,7 +1952,7 @@ class Table:
 
         frames = self._dir_frames(snap["manifest"], schema, lineage=lineage)
         if not frames:
-            out = self.spark.createDataFrame([], schema)
+            out = local_frame(self.spark, [], schema)
             out = _with_null_metadata_columns(out, cols)
             if lineage:
                 out = out.select(
@@ -2069,7 +2070,7 @@ class Table:
         dirs = snap["manifest"]
         del_dirs = snap.get("delete_dirs", [])
         if not dirs:
-            return self.spark.createDataFrame([], schema).select(*cols)
+            return local_frame(self.spark, [], schema).select(*cols)
 
         # ---- manifest-level FILE SKIPPING from footer bounds (Iceberg's
         # "file skipping via statistics", README.md:138-139): drop whole
@@ -2115,7 +2116,7 @@ class Table:
                 kept_dirs.append(d)
             dirs = kept_dirs
             if not dirs:
-                return self.spark.createDataFrame([], schema).select(*cols)
+                return local_frame(self.spark, [], schema).select(*cols)
 
         def derived(lit_val, spec, monotone_only=False):
             """Partition-column literal for a predicate on the SOURCE
@@ -2331,7 +2332,7 @@ class Table:
         schema = self._snapshot_schema(by_id[to_version])
         cols = schema.fieldNames()
         if not new_dirs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if del_dirs or eq_recs:
             df = self._read_dirs(
                 new_dirs,
@@ -2500,7 +2501,7 @@ class Table:
                 + [T.StructField(c, T.LongType(), True) for c in lin]
                 + [T.StructField(n, t, True) for n, t in self._CHANGE_COLS]
             )
-            return self.spark.createDataFrame([], empty)
+            return local_frame(self.spark, [], empty)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -2642,7 +2643,7 @@ class Table:
 
     def insert_values(self, rows: list[tuple], branch: str | None = None) -> int:
         """INSERT INTO t VALUES ... (reference S7: getting_started.ipynb:96)."""
-        return self.append(self.spark.createDataFrame(rows, self.schema()), branch=branch)
+        return self.append(local_frame(self.spark, rows, self.schema()), branch=branch)
 
     def set_identifier_fields(self, *columns: str) -> None:
         """ALTER TABLE … SET IDENTIFIER FIELDS (Iceberg schema
@@ -3806,7 +3807,7 @@ class Table:
             for s in snaps
         ]
         schema = "made_current_at timestamp, snapshot_id bigint, parent_id bigint, is_current_ancestor boolean"
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def snapshots(self) -> DataFrame:
         """<table>.snapshots (reference getting_started.ipynb:144-152,169):
@@ -3831,7 +3832,7 @@ class Table:
             "operation string, manifest_list string, summary map<string,string>, "
             "first_row_id bigint"
         )
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def files(self) -> DataFrame:
         """<table>.files metadata table (Iceberg): one row per live data
@@ -3880,7 +3881,7 @@ class Table:
             "lower_bounds map<string,string>, upper_bounds map<string,string>, "
             "first_row_id bigint"
         )
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def manifests(self) -> DataFrame:
         """<table>.manifests metadata table: one row per manifest (data
@@ -3911,7 +3912,7 @@ class Table:
             "content int, path string, length bigint, partition_spec_id int, "
             "added_snapshot_id bigint"
         )
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def delete_files(self) -> DataFrame:
         """<table>.delete_files metadata table (Iceberg): the current
@@ -3951,7 +3952,7 @@ class Table:
             "content int, path string, length bigint, partition_spec_id int, "
             "added_snapshot_id bigint"
         )
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def refs(self) -> DataFrame:
         """<table>.refs metadata table: the main branch pointer plus any
@@ -3961,7 +3962,7 @@ class Table:
         rows = [] if cur is None else [Row(name="main", type="BRANCH", snapshot_id=cur)]
         for name, rec in sorted(self._meta().get("refs", {}).items()):
             rows.append(Row(name=name, type=rec["type"], snapshot_id=int(rec["snapshot_id"])))
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def entries(self) -> DataFrame:
         """<table>.entries metadata table (Iceberg): one row per manifest
@@ -4004,7 +4005,7 @@ class Table:
             "status int, snapshot_id bigint, sequence_number bigint, content int, "
             "file_path string, record_count bigint, file_size_in_bytes bigint"
         )
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def all_data_files(self) -> DataFrame:
         """<table>.all_data_files metadata table (Iceberg): every DATA
@@ -4036,7 +4037,7 @@ class Table:
             "content int, file_path string, file_format string, spec_id int, "
             "record_count bigint, file_size_in_bytes bigint"
         )
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def metadata_log_entries(self) -> DataFrame:
         """<table>.metadata_log_entries metadata table (Iceberg): one row
@@ -4059,7 +4060,7 @@ class Table:
                 )
             )
         schema = "timestamp timestamp, file string, latest_snapshot_id bigint"
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def ancestors_of(self, snapshot_id: int | None = None) -> DataFrame:
         """CALL system.ancestors_of: the parent-chain lineage of a
@@ -4078,7 +4079,7 @@ class Table:
             rows.append(Row(snapshot_id=s["snapshot_id"], timestamp=_ms_to_ts(s["committed_at_ms"])))
             cur = s["parent_id"] if s["parent_id"] in by_id else None
         schema = "snapshot_id bigint, timestamp timestamp"
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     # ------------------------------------------------ bloom file index
     def _bloom_index_path(self, column: str) -> str:
@@ -4399,7 +4400,7 @@ class Table:
                         parts.add(sub)
         schema = "partition string"
         rows = [Row(partition=p) for p in sorted(parts)]
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def partitions_table(self) -> DataFrame:
         """<table>.partitions metadata table (Iceberg): one row per live
@@ -4431,7 +4432,7 @@ class Table:
             for p, c in sorted(agg.items())
         ]
         schema = "partition string, record_count bigint, file_count int"
-        return self.spark.createDataFrame(rows, schema) if rows else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def compute_partition_stats(self) -> dict:
         """`CALL system.compute_partition_stats` — write the Iceberg-spec
@@ -4983,7 +4984,7 @@ class Table:
             "min string, max string, stale boolean"
         )
         if stats is None:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         rows = [
             Row(
                 column=c,
@@ -4995,7 +4996,7 @@ class Table:
             )
             for c, rec in sorted(stats["columns"].items())
         ]
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     # ---------------- maintenance (D11) ----------------
     def data_file_count(self, version: int | None = None) -> int:

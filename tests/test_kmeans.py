@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.operators.kmeans import (
@@ -123,3 +124,11 @@ def test_argmin_struct_matches_column_fold(spark, sf_dir):
     )
     ref = {r["vec_id"]: (r["cid"], r["dist"]) for r in ref_rows}
     assert got == ref
+
+
+def test_argmin_struct_rejects_non_finite_centroids():
+    """NaN/inf would render as the unparseable literal `nanD`/`infD`:
+    the argmin builder names the bad centroid instead."""
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match=r"centroid 3 has non-finite component .* dimension 1"):
+            _argmin_struct([(0, [0.0, 1.0]), (3, [0.5, bad])])

@@ -8,8 +8,7 @@ is enforced at registration (registry.py guard). Advice: int SQL
 literals on DECIMAL truncate-partitioned columns derived partition
 value 0 (silent row loss) in both the foreign pruner and the engine
 hive-filter path; naive timestamp literals on timestamptz columns are
-session-zone, not UTC; _is_own_export failed open; the DIAG rotation
-rewrote in place; bench's final size check was a bare assert.
+session-zone, not UTC; _is_own_export failed open; bench's final size check was a bare assert.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ import json
 
 import pytest
 
-from minio_iceberg_polaris_lakehouse_spark import diag
 from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
 
 
@@ -94,7 +92,7 @@ def test_join_refresh_surfaces_per_base_synced_snapshots(lake):
     assert row2.mode == "noop" and row2.synced_bases == row.synced_bases
 
 
-def test_refresh_checked_cached_reraise_unsticks_built_flag(spark, tmp_path, monkeypatch):
+def test_refresh_checked_cached_reraise_unsticks_built_flag(spark):
     """First retry replays the ORIGINAL cause; doing so clears both the
     failure cache and the golden's built flag, so the NEXT invocation
     rebuilds the fixture instead of replaying a stale error forever."""
@@ -102,7 +100,6 @@ def test_refresh_checked_cached_reraise_unsticks_built_flag(spark, tmp_path, mon
 
     from minio_iceberg_polaris_lakehouse_spark.operators import reference_golden as RG
 
-    monkeypatch.setattr(diag, "DIAG_PATH", tmp_path / "D.jsonl")
     RG._REFRESH_FAILED.clear()
     app = spark.sparkContext.applicationId
     built = {app: True}
@@ -734,20 +731,7 @@ def test_zone_equivalence_shared_and_utc_aliases_prune(lake, spark):
     assert [r.id for r in sc.filter("ts = '2024-01-01 04:00:00'").collect()] == [1]
 
 
-# ------------------------------------------------------------- telemetry/bench
-
-
-def test_diag_rotation_renames_never_rewrites(spark, tmp_path, monkeypatch):
-    diag_file = tmp_path / "DIAG_GOLDENS.jsonl"
-    monkeypatch.setattr(diag, "DIAG_PATH", diag_file)
-    monkeypatch.setattr(diag, "_MAX_BYTES", 100)
-    diag.record("g1", spark, {"k": "x" * 200})
-    diag.record("g2", spark, {"k": "y"})  # triggers rotation first
-    rotated = tmp_path / "DIAG_GOLDENS.rotated.jsonl"
-    assert rotated.exists()
-    assert json.loads(rotated.read_text().splitlines()[-1])["name"] == "g1"
-    lines = diag_file.read_text().splitlines()
-    assert len(lines) == 1 and json.loads(lines[0])["name"] == "g2"
+# ------------------------------------------------------------------- bench
 
 
 def test_bench_summary_carries_probe_adjusted_total():

@@ -1,16 +1,13 @@
 """Regression pins for the round-8 verdict findings: the MV downgrade
 trigger is now an EXPLICIT schema-drift probe (not a blanket
 AnalysisException catch), the MV goldens fail loud instead of silently
-hashing a downgraded mode, and the driver-red goldens write in-driver
-telemetry to DIAG_GOLDENS.jsonl."""
+hashing a downgraded mode."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
-from minio_iceberg_polaris_lakehouse_spark import diag, matview as MV
+from minio_iceberg_polaris_lakehouse_spark import matview as MV
 from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
 
 
@@ -66,16 +63,12 @@ def test_refresh_downgrades_only_on_drift_not_other_analysis_errors(lake):
     assert "no longer binds" in (row.downgrade_reason or "")
 
 
-def test_mv_golden_fail_loud_on_downgrade(spark, tmp_path, monkeypatch):
+def test_mv_golden_fail_loud_on_downgrade(spark):
     """A REFRESH that does not run 'incremental' raises with the named
-    cause (driver records err) instead of hashing a silent wrong mode;
-    the telemetry line lands in DIAG_GOLDENS.jsonl either way."""
+    cause (driver records err) instead of hashing a silent wrong mode."""
     from pyspark.sql import Row
 
     from minio_iceberg_polaris_lakehouse_spark.operators import reference_golden as RG
-
-    diag_file = tmp_path / "DIAG.jsonl"
-    monkeypatch.setattr(diag, "DIAG_PATH", diag_file)
 
     class FakeResult:
         def collect(self):
@@ -92,17 +85,6 @@ def test_mv_golden_fail_loud_on_downgrade(spark, tmp_path, monkeypatch):
 
     with pytest.raises(RuntimeError, match="mode='full'.*expired"):
         RG._refresh_checked(FakeLake(), spark, "ref_matview_incremental", "REFRESH")
-    line = json.loads(diag_file.read_text().splitlines()[-1])
-    assert line["name"] == "ref_matview_incremental"
-    assert line["payload"]["refresh"]["mode"] == "full"
-    assert line["confs"]["spark.master"].startswith("local")
-    assert line["invocation"] >= 1
-
-
-def test_diag_record_never_raises(spark, tmp_path, monkeypatch):
-    # unwritable path: record must swallow the failure
-    monkeypatch.setattr(diag, "DIAG_PATH", tmp_path / "no_dir" / "x" / "d.jsonl")
-    diag.record("x", spark, {"k": object()})  # unserializable payload too
 
 
 def test_bench_summary_fits_driver_tail_window():
@@ -292,14 +274,13 @@ def test_partition_stats_totals_null_when_deletes_unattributable(lake, spark):
     assert [r["total_record_count"] for r in stats2] == [1, 1]
 
 
-def test_refresh_checked_retry_reraises_original_cause(spark, tmp_path, monkeypatch):
+def test_refresh_checked_retry_reraises_original_cause(spark):
     """A retried invocation after a failed REFRESH re-raises the FIRST
     failure's cause, not a masking 'noop' from the already-synced view."""
     from pyspark.sql import Row
 
     from minio_iceberg_polaris_lakehouse_spark.operators import reference_golden as RG
 
-    monkeypatch.setattr(diag, "DIAG_PATH", tmp_path / "D.jsonl")
     RG._REFRESH_FAILED.clear()
 
     calls = {"n": 0}
