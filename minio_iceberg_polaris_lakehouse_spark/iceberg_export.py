@@ -1,36 +1,38 @@
-"""Iceberg v2 format-compatible metadata export.
+"""Iceberg v2 metadata, written by every native commit.
 
 The reference's whole point is an OPEN table format: any engine can read
 the table by walking `vN.metadata.json` → manifest list → manifests →
 data files (reference README.md:169-178 shows the metadata tree;
-getting_started.ipynb:137-152 the real paths). The engine's internal
-snapshot log (`_meta.json`/`_snapshots.json`) is private, so alongside it
-every commit also writes metadata following the PUBLIC Apache Iceberg
-table-spec (https://iceberg.apache.org/spec/ — field names, layout and
-the filesystem-table `version-hint.text` convention):
+getting_started.ipynb:137-152 the real paths). The engine's own snapshot
+log (`_meta.json`/`_snapshots.json`) drives its commits; every commit
+also writes metadata following the PUBLIC Apache Iceberg table spec
+(https://iceberg.apache.org/spec/ — field names, layout and the
+filesystem-table `version-hint.text` convention):
 
-    <table>/metadata/v<N>.metadata.json      table metadata (spec §Table Metadata)
-    <table>/metadata/snap-<id>.manifest-list.json
-    <table>/metadata/version-hint.text       latest metadata version
+    <table>/metadata/v<N>.metadata.json             table metadata (spec §Table Metadata)
+    <table>/metadata/snap-<id>-manifest-list.avro   one manifest list per snapshot
+    <table>/metadata/manifest-<dir>.avro            one manifest per data/delete dir
+    <table>/metadata/version-hint.text              latest metadata version
 
 so an independent reader can resolve the current schema (with stable
 field ids), partition specs, the snapshot chain, and the exact data-file
-list with record counts/sizes — without this engine's code.
-
-Both metadata levels are written in the REAL binary layout: manifest
+list with record counts/sizes — without this engine's code. Manifest
 lists and manifests are Avro object-container files (deflate codec,
 field-id annotated schemas) produced by the engine's pure-stdlib Avro
 writer (avro_io.py, byte-validated in tests against the independent Java
-Avro implementation on Spark's classpath). A spec-shaped JSON rendering
-of each manifest list (`snap-<id>.manifest-list.json`, both levels
-inlined) is kept alongside as a human-debuggable sibling; the metadata
-document's `manifest-list` field points at the Avro file, as the spec
-requires (reference README.md:169-175 shows `snap-….avro`).
+Avro implementation on Spark's classpath).
 
-Cost model: export is driver-side JSON/Avro of O(files) entries built
-from footer stats CACHED at write time (per-dir .stats.json sidecars) — no
-data reads, no Spark job, same order of work as Iceberg's own commit
-path. Per-dir manifest Avro files are immutable and written once.
+Sequence numbers: a snapshot's sequence number is its snapshot id (ids
+are monotonic and never reused), and a dir's is the id of the snapshot
+that added it — the same numbers `dir_seqs`, `.entries` and the
+equality-delete rule use, so expiry never renumbers anything.
+
+Cost model: a commit writes O(1) metadata files — the new dirs'
+manifests, the new snapshot's manifest list, vN+1 and the hint.
+Manifests and manifest lists are immutable and written once; earlier
+lists are never rewritten. Everything is built driver-side from footer
+stats CACHED at write time (per-dir .stats.json sidecars) — no data
+reads, no Spark job.
 """
 
 from __future__ import annotations
@@ -333,18 +335,29 @@ def _is_utcish_tz(tz) -> bool:
     return tz is None or is_utcish(tz)
 
 
-def _partition_summary(files: list[dict], part_field, tz=None) -> list[dict] | None:
+def _partition_summary(meta: dict, spec_rec: dict, files: list[dict]) -> list[dict] | None:
     """The manifest-list `partitions` field-summary list for one
-    manifest's files (this engine's one-partition-field specs)."""
+    manifest's files (this engine's one-partition-field specs). Bounds
+    are written only in spec byte form: a non-string source whose values
+    this export string-encodes (decimal) gets none — its text order is
+    not its value order."""
+    part_field = _partition_avro_field(meta, spec_rec)
     if part_field is None:
         return None
-    name, avro_type = part_field[0], part_field[1]
-    vals = [_partition_value(f["path"], name, avro_type, tz=tz) for f in files]
+    name, avro_type = part_field
+    vals = [_partition_value(f["path"], name, avro_type, tz=spec_rec.get("tz")) for f in files]
     present = [v for v in vals if v is not None]
     try:
         lo, hi = (min(present), max(present)) if present else (None, None)
     except TypeError:
         lo = hi = None
+    if avro_type == "string":
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        source = spec_rec.get("source")
+        if source not in schema.fieldNames() or not isinstance(
+            schema[source].dataType, T.StringType
+        ):
+            lo = hi = None
     return [
         {
             "contains_null": any(v is None for v in vals),
@@ -518,10 +531,8 @@ def _manifest_entry_schema(partition_field) -> dict:
                         {
                             # Iceberg v3 row lineage (field-id 142): the
                             # first row id assigned to this data file —
-                            # genuine v3 readers take lineage from HERE;
-                            # the manifest-list JSON mirror is only this
-                            # engine's debuggable copy. Null for delete
-                            # files and pre-lineage commits.
+                            # the only place the export records it. Null
+                            # for delete files and pre-lineage commits.
                             "name": "first_row_id",
                             "type": ["null", "long"],
                             "default": None,
@@ -539,15 +550,16 @@ def _write_manifest_avro(
     meta: dict,
     dirname: str,
     files: list[dict],
-    added_snapshot_id: int,
     seq: int,
     spec_rec: dict,
     content: int = 0,
 ) -> str:
     """One immutable Avro manifest per data directory (written once;
     manifests are content-addressed by dir, which is itself immutable).
-    ``content`` is the Iceberg v2 file-content code: 0 = DATA,
-    1 = POSITION_DELETES (merge-on-read tombstone files)."""
+    ``seq`` is the dir's sequence number, which is also the id of the
+    snapshot that added it. ``content`` is the Iceberg v2 file-content
+    code: 0 = DATA, 1 = POSITION_DELETES (merge-on-read tombstone
+    files)."""
     mdir = os.path.join(table.path, "metadata")
     path = os.path.join(mdir, f"manifest-{dirname}.avro")
     if fsio.isfile(path):
@@ -556,8 +568,7 @@ def _write_manifest_avro(
     schema = _manifest_entry_schema(part_field)
     # v3 row lineage IN the Avro records (field-id 142): per data file,
     # the dir's commit-assigned base + its row-count offset in canonical
-    # path order — identical to the JSON mirror's rule, so genuine v3
-    # consumers (which never read the mirror) see the same ids
+    # path order — the rule Table._lineage_cols derives `_row_id` with
     first_ids: dict[str, int] = {}
     row_base = meta.get("dir_row_ids", {}).get(dirname) if content == 0 else None
     if row_base is not None:
@@ -575,7 +586,7 @@ def _write_manifest_avro(
         records.append(
             {
                 "status": 1,  # ADDED (in its adding snapshot)
-                "snapshot_id": added_snapshot_id,
+                "snapshot_id": seq,
                 "sequence_number": seq,
                 "file_sequence_number": seq,
                 "data_file": {
@@ -710,12 +721,49 @@ def _compile_eq_deletes(table: Table, meta: dict, snap: dict) -> str | None:
     return dirname
 
 
+def _manifest_record(
+    table: Table, meta: dict, snap: dict, d: str, seq: int, content: int
+) -> dict:
+    """The manifest-list record for dir ``d`` in ``snap``, writing the
+    dir's manifest on first use. ``seq`` is the dir's sequence number,
+    which is also the id of the snapshot that added it."""
+    files = _load_dir_stats(table.path, d, meta)
+    spec_rec = meta.get("dir_specs", {}).get(d, {"source": None, "transform": "identity", "spec_id": 0})
+    mpath = _write_manifest_avro(table, meta, d, files, seq, spec_rec, content=content)
+    rows = sum(f["rows"] for f in files)
+    added = seq == snap["snapshot_id"]
+    rec = {
+        "manifest_path": mpath,
+        "manifest_length": fsio.getsize(mpath),
+        "partition_spec_id": int(spec_rec.get("spec_id", 0)),
+        "content": content,  # 0 = DATA, 1 = POSITION_DELETES
+        "sequence_number": seq,
+        "min_sequence_number": seq,
+        "added_snapshot_id": seq,
+        "added_files_count": len(files) if added else 0,
+        "existing_files_count": 0 if added else len(files),
+        "deleted_files_count": 0,
+        "added_rows_count": rows if added else 0,
+        "existing_rows_count": 0 if added else rows,
+        "deleted_rows_count": 0,
+    }
+    if content == 0:
+        # field 507: partition value summary — readers skip this manifest
+        # (never opening its avro) when a predicate provably excludes its
+        # value range
+        rec["partitions"] = _partition_summary(meta, spec_rec, files)
+    return rec
+
+
 def write_iceberg_metadata(table: Table) -> str:
-    """Export the table's current state as Iceberg-v2-shaped metadata.
-    Returns the metadata file path. Called after every commit; safe to
-    call standalone. Equality deletes are compiled into positional
-    delete files at export time (_compile_eq_deletes), so external
-    readers see exactly the engine's own row set."""
+    """Export the table's current state as Iceberg-v2 metadata. Returns
+    the metadata file path. Called after every commit and metadata
+    change; safe to call standalone. Writes a manifest list only for a
+    snapshot that has none yet (lists, like manifests, are immutable),
+    then the vN+1 metadata document and the version hint. Equality
+    deletes are compiled into positional delete files at export time
+    (_compile_eq_deletes), so external readers see exactly the engine's
+    own row set."""
     meta = table._meta()
     snaps = table._snaps()
     mains = [s for s in snaps if not s.get("branch")]
@@ -737,134 +785,48 @@ def write_iceberg_metadata(table: Table) -> str:
     ]
     current_schema_id = schema_versions.index(meta["schema"])
 
-    dir_specs = meta.get("dir_specs", {})
-    # equality deletes surface to external readers as compiled positional
-    # delete dirs, one per distinct (eq set, affected dirs) fingerprint
-    eqpos: dict[int, str] = {}
-    for s in snaps:
-        d = _compile_eq_deletes(table, meta, s)
-        if d:
-            eqpos[s["snapshot_id"]] = d
-    # a dir's adding snapshot = its first appearance in the chain (drives
-    # the manifest's added_snapshot_id/sequence_number and the list's
-    # added-vs-existing counts)
-    added_in: dict[str, tuple[int, int]] = {}
-    for seq, s in enumerate(snaps, start=1):
-        extra = [eqpos[s["snapshot_id"]]] if s["snapshot_id"] in eqpos else []
-        for d in s["manifest"] + s.get("delete_dirs", []) + extra:
-            added_in.setdefault(d, (s["snapshot_id"], seq))
+    # one sequence-number rule: a dir's sequence number is the id of the
+    # snapshot that added it (table meta's dir_seqs survives expiry)
+    dir_seqs = meta.get("dir_seqs", {})
     snapshot_entries = []
-    for seq, s in enumerate(snaps, start=1):
-        manifest_list_avro = os.path.join(mdir, f"snap-{s['snapshot_id']}-manifest-list.avro")
-        manifest_list_json = os.path.join(mdir, f"snap-{s['snapshot_id']}.manifest-list.json")
-        manifests_json = []
-        list_records = []
-        for d in s["manifest"]:
-            files = _load_dir_stats(table.path, d, meta)
-            spec_rec = dir_specs.get(d, {"source": None, "transform": "identity", "spec_id": 0})
-            add_snap, add_seq = added_in.get(d, (s["snapshot_id"], seq))
-            mpath = _write_manifest_avro(table, meta, d, files, add_snap, add_seq, spec_rec)
-            rows = sum(f["rows"] for f in files)
-            added = add_snap == s["snapshot_id"]
-            list_records.append(
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": fsio.getsize(mpath),
-                    "partition_spec_id": int(spec_rec.get("spec_id", 0)),
-                    "content": 0,  # data
-                    "sequence_number": add_seq,
-                    "min_sequence_number": add_seq,
-                    "added_snapshot_id": add_snap,
-                    "added_files_count": len(files) if added else 0,
-                    "existing_files_count": 0 if added else len(files),
-                    "deleted_files_count": 0,
-                    "added_rows_count": rows if added else 0,
-                    "existing_rows_count": 0 if added else rows,
-                    "deleted_rows_count": 0,
-                    # field 507: partition value summary — readers skip
-                    # this manifest (never opening its avro) when a
-                    # predicate provably excludes its value range
-                    "partitions": _partition_summary(
-                        files, _partition_avro_field(meta, spec_rec), tz=spec_rec.get("tz")
-                    ),
-                }
+    for s in snaps:
+        sid = s["snapshot_id"]
+        # equality deletes surface to external readers as a compiled
+        # positional delete dir (always compiled, so a crashed build
+        # self-heals); its sequence number is the newest compiled
+        # delete's, above every data dir whose positions it lists
+        eqpos = _compile_eq_deletes(table, meta, s)
+        manifest_list = os.path.join(mdir, f"snap-{sid}-manifest-list.avro")
+        if not fsio.isfile(manifest_list):
+            records = [
+                _manifest_record(table, meta, s, d, int(dir_seqs.get(d, sid)), 0)
+                for d in s["manifest"]
+            ] + [
+                _manifest_record(table, meta, s, d, int(dir_seqs.get(d, sid)), 1)
+                for d in s.get("delete_dirs", [])
+            ]
+            if eqpos:
+                eq_seq = max(int(r["seq"]) for r in s["eq_deletes"])
+                records.append(_manifest_record(table, meta, s, eqpos, eq_seq, 1))
+            avro_io.write_container(
+                manifest_list,
+                _MANIFEST_LIST_SCHEMA,
+                records,
+                metadata={
+                    "snapshot-id": str(sid),
+                    "parent-snapshot-id": str(s["parent_id"]),
+                    "sequence-number": str(sid),
+                    "format-version": "2",
+                },
             )
-            # Iceberg v3 row lineage in the debuggable JSON mirror: each
-            # data file's first_row_id = the dir's commit-assigned base +
-            # its row-count offset in canonical path order (the same rule
-            # Table._lineage_cols derives `_row_id` with)
-            row_base = meta.get("dir_row_ids", {}).get(d)
-            first_ids: dict[str, int | None] = {}
-            off = 0
-            for f in sorted(files, key=lambda r: r["path"]):
-                first_ids[f["path"]] = (int(row_base) + off) if row_base is not None else None
-                off += int(f.get("rows", 0))
-            manifests_json.append(
-                {
-                    "manifest_path": mpath,
-                    "partition_spec_id": int(spec_rec.get("spec_id", 0)),
-                    "added_snapshot_id": add_snap,
-                    "data_files": [
-                        {
-                            "content": 0,  # 0 = DATA (v2 spec)
-                            "file_path": os.path.join(table.path, d, f["path"]),
-                            "file_format": "PARQUET",
-                            "record_count": f["rows"],
-                            "file_size_in_bytes": f["bytes"],
-                            "first_row_id": first_ids[f["path"]],
-                        }
-                        for f in files
-                    ],
-                }
-            )
-        eq_extra = [eqpos[s["snapshot_id"]]] if s["snapshot_id"] in eqpos else []
-        for d in s.get("delete_dirs", []) + eq_extra:
-            files = _load_dir_stats(table.path, d, meta)
-            add_snap, add_seq = added_in.get(d, (s["snapshot_id"], seq))
-            spec_rec = dir_specs.get(d, {"source": None, "transform": "identity", "spec_id": 0})
-            mpath = _write_manifest_avro(
-                table, meta, d, files, add_snap, add_seq, spec_rec, content=1
-            )
-            rows = sum(f["rows"] for f in files)
-            added = add_snap == s["snapshot_id"]
-            list_records.append(
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": fsio.getsize(mpath),
-                    "partition_spec_id": int(spec_rec.get("spec_id", 0)),
-                    "content": 1,  # POSITION_DELETES manifest
-                    "sequence_number": add_seq,
-                    "min_sequence_number": add_seq,
-                    "added_snapshot_id": add_snap,
-                    "added_files_count": len(files) if added else 0,
-                    "existing_files_count": 0 if added else len(files),
-                    "deleted_files_count": 0,
-                    "added_rows_count": rows if added else 0,
-                    "existing_rows_count": 0 if added else rows,
-                    "deleted_rows_count": 0,
-                }
-            )
-        avro_io.write_container(
-            manifest_list_avro,
-            _MANIFEST_LIST_SCHEMA,
-            list_records,
-            metadata={
-                "snapshot-id": str(s["snapshot_id"]),
-                "parent-snapshot-id": str(s["parent_id"]),
-                "sequence-number": str(seq),
-                "format-version": "2",
-            },
-        )
-        # human-debuggable sibling with both metadata levels inlined
-        _atomic_write_json(manifest_list_json, {"manifests": manifests_json})
         schema_json = s.get("schema") or meta["schema"]
         snapshot_entries.append(
             {
-                "snapshot-id": s["snapshot_id"],
+                "snapshot-id": sid,
                 "parent-snapshot-id": s["parent_id"],
-                "sequence-number": seq,
+                "sequence-number": sid,
                 "timestamp-ms": s["committed_at_ms"],
-                "manifest-list": manifest_list_avro,
+                "manifest-list": manifest_list,
                 "summary": {
                     "operation": (
                         s["operation"] if s["operation"] in ("append", "replace", "overwrite", "delete") else "overwrite"
@@ -887,7 +849,11 @@ def write_iceberg_metadata(table: Table) -> str:
         "format-version": 2,
         "table-uuid": meta.get("table_uuid", "00000000-0000-0000-0000-000000000000"),
         "location": table.path,
-        "last-sequence-number": len(snaps),
+        # never decreases: expiry may drop the highest snapshot, but its
+        # id is never reused (Table._append_snapshot)
+        "last-sequence-number": max(
+            [int(meta.get("last_sequence_number", 0))] + [s["snapshot_id"] for s in snaps]
+        ),
         "last-updated-ms": snaps[-1]["committed_at_ms"] if snaps else meta.get("created_at_ms", 0),
         "last-column-id": int(meta.get("last_column_id", len(ids))),
         "schemas": schemas,
@@ -983,15 +949,14 @@ def write_iceberg_metadata(table: Table) -> str:
             },
         },
     }
-    # monotonic metadata version persisted in table meta — snapshot
-    # expiry shrinks the snapshot list, so len(snaps) would regress and
-    # overwrite historical vN files
-    version = int(meta.get("metadata_version", 0)) + 1
-    meta["metadata_version"] = version
-    table._write_meta(meta)
+    # the next version follows the hint (the foreign writer's rule):
+    # vN files are immutable history, never overwritten
+    hint = os.path.join(mdir, "version-hint.text")
+    try:
+        version = int(fsio.read_text(hint).strip()) + 1
+    except FileNotFoundError:
+        version = 1
     path = os.path.join(mdir, f"v{version}.metadata.json")
     _atomic_write_json(path, doc)
-    fsio.write_bytes_atomic(
-        os.path.join(mdir, "version-hint.text"), str(version).encode(), uuid.uuid4().hex
-    )
+    fsio.write_bytes_atomic(hint, str(version).encode(), uuid.uuid4().hex)
     return path

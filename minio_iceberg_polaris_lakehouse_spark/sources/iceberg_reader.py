@@ -583,69 +583,11 @@ def _part_range_excl(
 
 def _bucket_hash_ok(md: dict) -> bool:
     """True iff bucket partition VALUES in this table follow the
-    Iceberg-spec bucket hash (the spec requires it; only this engine's
-    own exports stamp a different hash).
-
-    An ABSENT stamp is trusted as spec-hashed only for genuinely
-    foreign metadata: exports this engine produced BEFORE the stamp
-    existed carry Spark murmur3(seed 42) bucket values with no
-    property, and deriving spec buckets against those would prune the
-    WRONG files. Our exporter is detectable without a property — it is
-    the only writer that mirrors each manifest list to a sibling
-    `snap-<id>.manifest-list.json` debug document — so unstamped
-    metadata whose current snapshot has that mirror is treated as
-    legacy-engine-hashed (no bucket pruning)."""
+    Iceberg-spec bucket hash: the spec requires it, so an absent stamp
+    means spec-hashed; only a table stamped with another hash (this
+    engine's Spark murmur3 opt-out) is not."""
     stamp = (md.get("properties") or {}).get("write.bucket-hash")
-    if stamp == "iceberg-murmur3":
-        return True
-    if stamp is not None:
-        return False
-    # no stamp: version-gate against this engine's pre-stamp exports;
-    # undeterminable provenance (None) fails CLOSED — no bucket pruning
-    return _is_own_export(md) is False
-
-
-def _is_own_export(md: dict) -> bool | None:
-    """Whether this metadata tree was produced by THIS engine's exporter
-    — detectable without any property because only our exporter mirrors
-    each manifest list to a sibling `snap-<id>.manifest-list.json` debug
-    document. Returns None when provenance cannot be determined (treat
-    conservatively at the call site).
-
-    Checks EVERY snapshot's mirror, not just the current one, and the
-    metadata directory itself: a pre-stamp export whose current
-    snapshot's mirror was expired/cleaned would otherwise classify as
-    foreign and get spec-hash bucket pruning against Spark-hashed
-    values (wrong-file pruning, row loss). Any exists()/listdir error
-    is inconclusive → None (callers fail closed: no bucket pruning)."""
-    mirrors: list[str] = []
-    for s in md.get("snapshots", []):
-        ml = s.get("manifest-list", "")
-        mirror = re.sub(r"-manifest-list\.avro$", ".manifest-list.json", ml)
-        if mirror != ml:
-            mirrors.append(mirror)
-    inconclusive = False
-    for mirror in mirrors:
-        try:
-            if fsio.exists(mirror):
-                return True
-        except Exception:
-            inconclusive = True
-    # snapshot entries may point at expired paths — also scan the live
-    # metadata directory for ANY of our mirror documents
-    for mirror in mirrors[:1]:
-        mdir = mirror.rsplit("/", 1)[0] if "/" in mirror else mirror
-        try:
-            if any(
-                n.startswith("snap-") and n.endswith(".manifest-list.json")
-                for n in fsio.listdir(mdir)
-            ):
-                return True
-        except Exception:
-            inconclusive = True
-    if inconclusive:
-        return None
-    return False
+    return stamp is None or stamp == "iceberg-murmur3"
 
 
 def _manifest_pruner(md: dict, target: dict, eq: dict | None, between: dict | None):
@@ -664,22 +606,6 @@ def _manifest_pruner(md: dict, target: dict, eq: dict | None, between: dict | No
     type_by_name = {f["name"]: f["type"] for f in target.get("fields", [])}
     pred_cols = set(eq or ()) | set(between or ())
     bucket_ok = _bucket_hash_ok(md)
-    own_export = _is_own_export(md)
-
-    def dec_bound(raw: bytes, bt: str):
-        """Partition-space bound decode, provenance-aware for DECIMAL:
-        this engine's exporter string-encodes decimal partition values
-        (avro string fallback) and its summary min/max are therefore
-        STRING-ordered ('-0.50' < '-10.50' — not a decimal range at
-        all), while the spec encodes unscaled big-endian bytes whose
-        decode IS decimal-ordered. Own/unknown provenance → None (no
-        manifest-LIST pruning on decimal summaries; the manifest-level
-        FILE pruner still prunes exactly from typed partition values —
-        costs one Avro decode, never rows); genuinely foreign → spec
-        bytes."""
-        if str(bt).startswith("decimal") and own_export is not False:
-            return None
-        return _decode_bound(raw, bt)
 
     def keep(m: dict) -> bool:
         if m.get("content") == 1:
@@ -698,12 +624,12 @@ def _manifest_pruner(md: dict, target: dict, eq: dict | None, between: dict | No
             ct = type_by_name.get(col)
             bt = _partition_space_type(tr, ct)
             lo_b = (
-                dec_bound(s["lower_bound"], bt)
+                _decode_bound(s["lower_bound"], bt)
                 if s.get("lower_bound") is not None
                 else None
             )
             hi_b = (
-                dec_bound(s["upper_bound"], bt)
+                _decode_bound(s["upper_bound"], bt)
                 if s.get("upper_bound") is not None
                 else None
             )
@@ -798,8 +724,8 @@ def read_iceberg_table(
 
     ``row_lineage=True`` adds Iceberg v3's `_row_id` /
     `_last_updated_sequence_number` from the OPEN metadata alone:
-    per-file first-row-ids come from the exported manifest-list JSON
-    mirror (joined as a broadcast, not collected per row), materialized
+    per-file first-row-ids come from the Avro manifest records
+    (joined as a broadcast, not collected per row), materialized
     lineage columns in rewritten files (detected from one parquet footer
     per file group, metadata-only) win over derivation, and the update
     sequence falls back to the file's data sequence — the same rules the
@@ -960,8 +886,7 @@ def read_iceberg_table(
         # writer produces): explicit per-file first_row_id when present,
         # else the spec's inheritance rule — manifest-list record's
         # first_row_id plus the running record_count of prior entries in
-        # this manifest that also omitted it. The JSON mirror (this
-        # engine's own export) is only the fallback below.
+        # this manifest that also omitted it.
         man_base = m.get("first_row_id")
         inherit_off = 0
         for e in live:
@@ -1091,28 +1016,11 @@ def read_iceberg_table(
         # (the eq-delete changelog's `data_seq < delete_seq` gate)
         return out if _keep_seq else out.drop("__seq")
     if row_lineage:
-        # per-file first-row-ids, two sources merged (maps are
-        # manifest-sized → broadcast join, never a collect per row):
-        # the AVRO manifest records (what a genuine v3 writer carries —
-        # explicit or inherited, collected above) win; the export's
-        # manifest-list JSON mirror fills anything the Avro lacked
-        # (this engine's own pre-v3-avro exports).
-        mlist_json = re.sub(
-            r"-manifest-list\.avro$", ".manifest-list.json", snap["manifest-list"]
-        )
-        first_map: dict[str, int] = {}
-        try:
-            mirror = json.loads(fsio.read_text(mlist_json))
-            for man in mirror.get("manifests", []):
-                for fe in man.get("data_files", []):
-                    if fe.get("first_row_id") is not None:
-                        first_map[re.sub(r"^file:(//)?", "", fe["file_path"])] = int(
-                            fe["first_row_id"]
-                        )
-        except (OSError, ValueError):
-            pass  # no mirror: Avro-only (or pre-lineage → ids stay NULL)
-        first_map.update(avro_first_rows)
-        first_rows = list(first_map.items())
+        # per-file first-row-ids from the AVRO manifest records
+        # (explicit or inherited, collected above; manifest-sized →
+        # broadcast join, never a collect per row). Pre-lineage files
+        # have none → their ids stay NULL.
+        first_rows = list(avro_first_rows.items())
         if first_rows:
             firsts = local_frame(
                 spark, first_rows, "__file string, __first bigint"

@@ -207,21 +207,14 @@ class Transaction:
 
     def _drop_branches_locked(self) -> None:
         """Drop the transaction branches while commit() still holds every
-        table's lock (drop_ref would re-acquire and self-deadlock), and
-        re-export the open Iceberg metadata so the published document
-        stops advertising the dropped __txn_* ref (fast_forward likewise
-        re-exports after re-pointing; write_iceberg_metadata takes no
-        commit lock, so calling it under the held lock is safe)."""
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-            write_iceberg_metadata,
-        )
-
+        table's lock (drop_ref would re-acquire and self-deadlock); the
+        drop re-exports, so the published document stops advertising the
+        dropped __txn_* ref."""
         for tab in self._tables.values():
-            meta = tab._meta()
-            if self._branch in meta.get("refs", {}):
-                meta["refs"].pop(self._branch)
-                tab._write_meta(meta)
-                write_iceberg_metadata(tab)
+            try:
+                tab._drop_ref_locked(self._branch)
+            except WarehouseError:
+                pass  # never created / already gone
 
     # -------------------------------------------------------- context mgr
     def __enter__(self) -> "Transaction":

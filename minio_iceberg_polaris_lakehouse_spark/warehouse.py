@@ -1130,6 +1130,14 @@ class Table:
     def _write_meta(self, meta: dict) -> None:
         _atomic_write_json(os.path.join(self.path, META_FILE), meta)
 
+    def _write_meta_and_export(self, meta: dict) -> None:
+        """Persist a metadata-only change (refs, properties, stats files)
+        and publish it in the open Iceberg metadata."""
+        self._write_meta(meta)
+        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
+
+        write_iceberg_metadata(self)
+
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self._meta()["schema"]))
 
@@ -1218,8 +1226,21 @@ class Table:
         branch: str | None = None,
         eq_deletes: list[dict] | None = None,
         parent_id: int | None = None,
+        pending: list["PendingData"] | None = None,
+        repoint: str | None = None,
     ) -> int:
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
+        """Commit one snapshot — caller MUST hold the commit lock. Writes
+        each metadata file once: `_meta.json` (the new dirs' specs,
+        sequence numbers and row-id bases, the advanced ref), then
+        `_snapshots.json`, then the Iceberg export. ``pending`` carries
+        freshly written dirs' specs; a ``branch`` commit advances that
+        branch's ref to the new snapshot, and ``repoint`` names a ref
+        that moves to it as well (fast_forward's branch)."""
+        meta = self._meta()
+        # the snapshot id IS the Iceberg sequence number: monotonic and
+        # never reused, even when expiry dropped the highest snapshot
+        last = snaps[-1]["snapshot_id"] if snaps else 0
+        sid = max(last, int(meta.get("last_sequence_number", 0))) + 1
         if parent_id is not None:
             # explicit base (branch commits pass their ref's snapshot so a
             # branch re-pointed after a publish forks from the PUBLISHED
@@ -1252,20 +1273,24 @@ class Table:
             # schema as of this commit — time travel projects THIS, not
             # the table's current schema (Iceberg resolves time-travel
             # reads with the snapshot's schema)
-            "schema": self._meta()["schema"],
+            "schema": meta["schema"],
         }
         if branch:
             # staged on a named branch (write-audit-publish): invisible to
             # main reads until fast_forward/cherry_pick publishes it
             entry["branch"] = branch
         snaps.append(entry)
+        for p in pending or []:
+            meta.setdefault("dir_specs", {})[p.dirname] = p.spec_rec
         # persist each dir's DATA SEQUENCE (the snapshot that first added
-        # it) in table meta: equality-delete applicability must survive
-        # expire_snapshots truncating the log it could otherwise be
-        # derived from
-        meta = self._meta()
+        # it; delete dirs too — the export's manifests carry it) in table
+        # meta: equality-delete applicability and the exported sequence
+        # numbers must survive expire_snapshots truncating the log they
+        # could otherwise be derived from
         seq_rec = meta.setdefault("dir_seqs", {})
-        changed = False
+        for d in dirs + (delete_dirs or []):
+            seq_rec.setdefault(d, sid)
+        meta["last_sequence_number"] = sid
         # Iceberg v3 row lineage: every dir first committed here gets a
         # first-row-id base carved out of the table's next-row-id counter,
         # advanced by the dir's footer row count — `_row_id` then derives
@@ -1277,9 +1302,6 @@ class Table:
         next_row = int(meta.get("next_row_id", 0))
         first_row_id = None
         for d in dirs:
-            if d not in seq_rec:
-                seq_rec[d] = sid
-                changed = True
             if d not in row_rec:
                 rows = sum(
                     int(f.get("rows", 0)) for f in _load_dir_stats(self.path, d, meta)
@@ -1288,36 +1310,19 @@ class Table:
                 if first_row_id is None:
                     first_row_id = next_row
                 next_row += rows
-                changed = True
-        if changed:
-            meta["next_row_id"] = next_row
-            self._write_meta(meta)
+        meta["next_row_id"] = next_row
         if first_row_id is not None:
             entry["first_row_id"] = first_row_id
+        for ref in {branch, repoint} - {None}:
+            meta["refs"][ref]["snapshot_id"] = sid
+        self._write_meta(meta)
         _atomic_write_json(os.path.join(self.path, SNAP_FILE), {"snapshots": snaps})
-        # mirror the commit as Iceberg-v2-shaped open metadata so readers
-        # other than this engine can resolve schema + data files
+        # publish the commit as Iceberg-v2 open metadata so readers other
+        # than this engine can resolve schema + data files
         from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
 
         write_iceberg_metadata(self)
         return sid
-
-    def _record_pending(self, pending: list["PendingData"]) -> None:
-        """Merge freshly written dirs' specs into _meta.json. MUST run
-        inside the commit lock: commits also rewrite _meta.json
-        (write_iceberg_metadata bumps metadata_version), so an unlocked
-        read-modify-write here can lose a concurrent appender's dir_specs
-        entry — the Iceberg export would then list that directory with no
-        data files and independent readers would silently miss rows.
-        Per-file stats do NOT land here: they live in the dir's immutable
-        .stats.json sidecar (written lock-free with the data), keeping
-        this file O(dirs)."""
-        if not pending:
-            return
-        meta = self._meta()
-        for p in pending:
-            meta.setdefault("dir_specs", {})[p.dirname] = p.spec_rec
-        self._write_meta(meta)
 
     @staticmethod
     def _split_adds(adds: list) -> tuple[list[str], list["PendingData"]]:
@@ -1340,7 +1345,6 @@ class Table:
         new_dirs, pending = self._split_adds(adds)
         lock, token = self._acquire_commit_lock()
         try:
-            self._record_pending(pending)
             snaps = self._snaps()
             if branch:
                 meta = self._meta()
@@ -1351,7 +1355,7 @@ class Table:
                         "(create it first: create_ref(name, 'branch'))"
                     )
                 base = next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
-                sid = self._append_snapshot(
+                return self._append_snapshot(
                     snaps,
                     operation,
                     base["manifest"] + new_dirs,
@@ -1360,11 +1364,8 @@ class Table:
                     branch=branch,
                     eq_deletes=base.get("eq_deletes", []),
                     parent_id=base["snapshot_id"],
+                    pending=pending,
                 )
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
             mains = self._main_snaps(snaps)
             live = (mains[-1]["manifest"] if mains else []) + new_dirs
             # appends don't touch existing rows: the parent's tombstones
@@ -1373,7 +1374,7 @@ class Table:
             inherited = mains[-1].get("delete_dirs", []) if mains else []
             inherited_eq = mains[-1].get("eq_deletes", []) if mains else []
             return self._append_snapshot(
-                snaps, operation, live, summary, inherited, eq_deletes=inherited_eq
+                snaps, operation, live, summary, inherited, eq_deletes=inherited_eq, pending=pending
             )
         finally:
             self._release_commit_lock(lock, token)
@@ -1416,8 +1417,7 @@ class Table:
                     f"{self.ns}.{self.name}: snapshot moved {expected_parent} -> "
                     f"{current} during {operation}; re-read and retry"
                 )
-            self._record_pending(pending)
-            sid = self._append_snapshot(
+            return self._append_snapshot(
                 snaps,
                 operation,
                 dirs,
@@ -1426,12 +1426,8 @@ class Table:
                 branch=branch,
                 eq_deletes=eq_deletes,
                 parent_id=current if branch else None,
+                pending=pending,
             )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
         finally:
             self._release_commit_lock(lock, token)
 
@@ -2523,7 +2519,7 @@ class Table:
         O(files) metadata-only, the same stats an Iceberg commit records
         in its manifest). Does NOT touch _meta.json — the dir's spec and
         stats ride in the returned PendingData and are merged into meta by
-        the commit, inside the commit lock (see _record_pending)."""
+        the commit, inside the commit lock (see _append_snapshot)."""
         dirname = f"data-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.path, dirname)
         meta = self._meta()
@@ -2659,10 +2655,7 @@ class Table:
         if missing:
             raise WarehouseError(f"identifier fields not in schema: {missing}")
         meta["identifier_fields"] = list(columns)
-        self._write_meta(meta)
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
-
-        write_iceberg_metadata(self)
+        self._write_meta_and_export(meta)
 
     def identifier_fields(self) -> list[str]:
         return list(self._meta().get("identifier_fields", []))
@@ -2710,7 +2703,6 @@ class Table:
         new_eq = {"dir": del_dir, "cols": list(cols), "seq": None}
         lock, token = self._acquire_commit_lock()
         try:
-            self._record_pending([pend])
             snaps = self._snaps()
             if branch:
                 meta = self._meta()
@@ -2721,7 +2713,7 @@ class Table:
                         "(create it first: create_ref(name, 'branch'))"
                     )
                 base = next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
-                sid = self._append_snapshot(
+                return self._append_snapshot(
                     snaps,
                     "delete",
                     base["manifest"],
@@ -2730,17 +2722,15 @@ class Table:
                     branch=branch,
                     eq_deletes=base.get("eq_deletes", []) + [new_eq],
                     parent_id=base["snapshot_id"],
+                    pending=[pend],
                 )
-                meta = self._meta()
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
             mains = self._main_snaps(snaps)
             live = mains[-1]["manifest"] if mains else []
             inherited = mains[-1].get("delete_dirs", []) if mains else []
             inherited_eq = mains[-1].get("eq_deletes", []) if mains else []
             return self._append_snapshot(
-                snaps, "delete", live, summary, inherited, eq_deletes=inherited_eq + [new_eq]
+                snaps, "delete", live, summary, inherited, eq_deletes=inherited_eq + [new_eq],
+                pending=[pend],
             )
         finally:
             self._release_commit_lock(lock, token)
@@ -2813,7 +2803,6 @@ class Table:
         new_eq = {"dir": del_dir, "cols": list(cols), "seq": None}  # seq = this commit
         lock, token = self._acquire_commit_lock()
         try:
-            self._record_pending([p, pend_del])
             snaps = self._snaps()
             if branch:
                 meta = self._meta()
@@ -2824,7 +2813,7 @@ class Table:
                         "(create it first: create_ref(name, 'branch'))"
                     )
                 base = next(s for s in snaps if s["snapshot_id"] == int(rec["snapshot_id"]))
-                sid = self._append_snapshot(
+                return self._append_snapshot(
                     snaps,
                     "overwrite",
                     base["manifest"] + [p.dirname],
@@ -2833,11 +2822,8 @@ class Table:
                     branch=branch,
                     eq_deletes=base.get("eq_deletes", []) + [new_eq],
                     parent_id=base["snapshot_id"],
+                    pending=[p, pend_del],
                 )
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
             mains = self._main_snaps(snaps)
             live = (mains[-1]["manifest"] if mains else []) + [p.dirname]
             inherited = mains[-1].get("delete_dirs", []) if mains else []
@@ -2849,6 +2835,7 @@ class Table:
                 summary,
                 inherited,
                 eq_deletes=inherited_eq + [new_eq],
+                pending=[p, pend_del],
             )
         finally:
             self._release_commit_lock(lock, token)
@@ -2949,23 +2936,20 @@ class Table:
         p = self._write_data(df)
         lock, token = self._acquire_commit_lock()
         try:
-            self._record_pending([p])
             if branch:
                 head = self._branch_head(branch)
-                sid = self._append_snapshot(
+                return self._append_snapshot(
                     self._snaps(),
                     "overwrite",
                     [p.dirname],
                     {"replaced": True, "added-records": p.rows},
                     branch=branch,
                     parent_id=head,
+                    pending=[p],
                 )
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-                return sid
             return self._append_snapshot(
-                self._snaps(), "overwrite", [p.dirname], {"replaced": True, "added-records": p.rows}
+                self._snaps(), "overwrite", [p.dirname], {"replaced": True, "added-records": p.rows},
+                pending=[p],
             )
         finally:
             self._release_commit_lock(lock, token)
@@ -3096,8 +3080,7 @@ class Table:
                     f"{self.ns}.{self.name}: snapshot moved {parent} -> "
                     f"{current} during dynamic overwrite; re-read and retry"
                 )
-            self._record_pending(pends)
-            sid = self._append_snapshot(
+            return self._append_snapshot(
                 snaps,
                 "overwrite",
                 snap["manifest"] + [p.dirname],
@@ -3106,12 +3089,8 @@ class Table:
                 branch=branch,
                 eq_deletes=snap.get("eq_deletes", []),
                 parent_id=parent if branch else None,
+                pending=pends,
             )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
         finally:
             self._release_commit_lock(lock, token)
 
@@ -3169,8 +3148,7 @@ class Table:
                     f"{self.ns}.{self.name}: snapshot moved {parent} -> "
                     f"{current} during merge-on-read delete; re-read and retry"
                 )
-            self._record_pending([pend])
-            sid = self._append_snapshot(
+            return self._append_snapshot(
                 snaps,
                 "delete",
                 snap["manifest"],
@@ -3183,12 +3161,8 @@ class Table:
                 branch=branch,
                 eq_deletes=snap.get("eq_deletes", []),
                 parent_id=parent if branch else None,
+                pending=[pend],
             )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
         finally:
             self._release_commit_lock(lock, token)
 
@@ -3243,8 +3217,7 @@ class Table:
                     f"{self.ns}.{self.name}: snapshot moved {parent} -> "
                     f"{current} during equality delete; re-read and retry"
                 )
-            self._record_pending([pend])
-            sid = self._append_snapshot(
+            return self._append_snapshot(
                 snaps,
                 "delete",
                 snap["manifest"],
@@ -3258,12 +3231,8 @@ class Table:
                 eq_deletes=snap.get("eq_deletes", [])
                 + [{"dir": dirname, "cols": cols, "seq": None}],  # seq = this commit
                 parent_id=parent if branch else None,
+                pending=[pend],
             )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
         finally:
             self._release_commit_lock(lock, token)
 
@@ -3368,8 +3337,7 @@ class Table:
                     f"{self.ns}.{self.name}: snapshot moved {parent} -> "
                     f"{current} during merge-on-read update; re-read and retry"
                 )
-            self._record_pending([pend_del, p])
-            sid = self._append_snapshot(
+            return self._append_snapshot(
                 snaps,
                 "update",
                 snap["manifest"] + [p.dirname],
@@ -3383,12 +3351,8 @@ class Table:
                 branch=branch,
                 eq_deletes=snap.get("eq_deletes", []),
                 parent_id=parent if branch else None,
+                pending=[pend_del, p],
             )
-            if branch:
-                meta = self._meta()  # re-read: the commit re-exported metadata
-                meta["refs"][branch]["snapshot_id"] = sid
-                self._write_meta(meta)
-            return sid
         finally:
             self._release_commit_lock(lock, token)
 
@@ -3968,18 +3932,15 @@ class Table:
         """<table>.entries metadata table (Iceberg): one row per manifest
         entry (data/delete file) of the current snapshot — status
         (1 ADDED by the current snapshot, 0 EXISTING from an ancestor),
-        the snapshot that added it, its data sequence number (the adding
-        commit's 1-based position in the log, Iceberg's per-commit
-        sequence), and the file's stats. Metadata-only."""
+        the snapshot that added it, its data sequence number (that
+        snapshot's id — the number the exported manifests carry, stable
+        across expiry), and the file's stats. Metadata-only."""
         snap = self._resolve()
-        snaps = self._snaps()
-        added_in: dict[str, tuple[int, int]] = {}
-        for seq, s in enumerate(snaps, start=1):
-            for d in s["manifest"] + s.get("delete_dirs", []) + [
-                r["dir"] for r in s.get("eq_deletes", [])
-            ]:
-                added_in.setdefault(d, (s["snapshot_id"], seq))
         meta = self._meta()
+        seq_of = {
+            **meta.get("dir_seqs", {}),
+            **{r["dir"]: r["seq"] for r in snap.get("eq_deletes", [])},
+        }
         rows = []
         for content, dirs in (
             (0, snap["manifest"]),
@@ -3987,13 +3948,13 @@ class Table:
             (2, [r["dir"] for r in snap.get("eq_deletes", [])]),
         ):
             for d in dirs:
-                sid, seq = added_in.get(d, (snap["snapshot_id"], len(snaps)))
-                status = 1 if sid == snap["snapshot_id"] else 0
+                seq = int(seq_of.get(d, snap["snapshot_id"]))
+                status = 1 if seq == snap["snapshot_id"] else 0
                 for f in _load_dir_stats(self.path, d, meta):
                     rows.append(
                         Row(
                             status=status,
-                            snapshot_id=sid,
+                            snapshot_id=seq,
                             sequence_number=seq,
                             content=content,
                             file_path=os.path.join(self.path, d, f["path"]),
@@ -4253,7 +4214,7 @@ class Table:
                 "snapshot_id": int(sid),
                 "type": ref_type.upper(),
             }
-            self._write_meta(meta)
+            self._write_meta_and_export(meta)
         finally:
             self._release_commit_lock(lock, token)
 
@@ -4308,29 +4269,20 @@ class Table:
             )
         if check_only:
             return None
-        sid = self._append_snapshot(
+        # the commit re-points the branch at the published main head
+        # (Iceberg's fast_forward leaves branch == main): the NEXT staged
+        # commit forks from the published state, so repeated stage+publish
+        # cycles on one branch — the normal WAP workflow — keep
+        # fast-forwarding instead of conflicting on a stale fork base
+        return self._append_snapshot(
             snaps,
             "append",
             head["manifest"],
             {"published-from-branch": branch, "published-snapshot-id": head["snapshot_id"]},
             head.get("delete_dirs", []),
             eq_deletes=head.get("eq_deletes", []),
+            repoint=branch,
         )
-        # re-point the branch at the published main head (Iceberg's
-        # fast_forward leaves branch == main): the NEXT staged commit
-        # forks from the published state, so repeated stage+publish
-        # cycles on one branch — the normal WAP workflow — keep
-        # fast-forwarding instead of conflicting on a stale fork base
-        meta = self._meta()  # re-read: the commit re-exported metadata
-        meta["refs"][branch]["snapshot_id"] = sid
-        self._write_meta(meta)
-        # re-export so the open metadata's refs reflect the re-point
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-            write_iceberg_metadata,
-        )
-
-        write_iceberg_metadata(self)
-        return sid
 
     def cherry_pick(self, snapshot_id: int) -> int:
         """CALL system.cherrypick_snapshot: apply ONE staged snapshot's
@@ -4379,13 +4331,18 @@ class Table:
     def drop_ref(self, name: str) -> None:
         lock, token = self._acquire_commit_lock()
         try:
-            meta = self._meta()
-            if name not in meta.get("refs", {}):
-                raise WarehouseError(f"unknown ref {name!r}")
-            del meta["refs"][name]
-            self._write_meta(meta)
+            self._drop_ref_locked(name)
         finally:
             self._release_commit_lock(lock, token)
+
+    def _drop_ref_locked(self, name: str) -> None:
+        """drop_ref body — caller MUST hold this table's commit lock
+        (multi-table transactions drop their branches under it)."""
+        meta = self._meta()
+        if name not in meta.get("refs", {}):
+            raise WarehouseError(f"unknown ref {name!r}")
+        del meta["refs"][name]
+        self._write_meta_and_export(meta)
 
     def partitions(self) -> DataFrame:
         """SHOW PARTITIONS: distinct hive partition values across the
@@ -4617,14 +4574,9 @@ class Table:
                 for e in meta.get("partition_statistics_files", [])
                 if e["snapshot-id"] != snap_id
             ] + [entry]
-            self._write_meta(meta)
+            self._write_meta_and_export(meta)
         finally:
             self._release_commit_lock(lock, token)
-        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-            write_iceberg_metadata,
-        )
-
-        write_iceberg_metadata(self)
         return {**entry, "partitions": len(rows)}
 
     def _bucket_spec_hash(self, meta: dict | None = None) -> bool:
@@ -4833,17 +4785,13 @@ class Table:
                     for e in meta.get("statistics_files", [])
                     if e["snapshot-id"] != stats_entry["snapshot-id"]
                 ] + [stats_entry]
-            self._write_meta(meta)
+                # a statistics update is a metadata update: the open
+                # metadata document advertises the new stats file
+                self._write_meta_and_export(meta)
+            else:
+                self._write_meta(meta)
         finally:
             self._release_commit_lock(lock, token)
-        if stats_entry is not None:
-            # a statistics update is a metadata update: re-export so the
-            # open metadata document advertises the new stats file
-            from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-                write_iceberg_metadata,
-            )
-
-            write_iceberg_metadata(self)
         return stats
 
     # nominal sketch size (DataSketches default): ANALYZE ships at most
@@ -5215,6 +5163,9 @@ class Table:
                 | {r["dir"] for s in keep for r in s.get("eq_deletes", [])}
             )
             removed = 0
+            # Iceberg's expireSnapshots also deletes the manifest lists of
+            # expired snapshots and the manifests of collected files
+            dead_metadata: set[str] = set()
             for s in snaps:
                 if s in keep:
                     continue
@@ -5228,6 +5179,8 @@ class Table:
                         if fsio.isdir(p):
                             fsio.rmtree(p)
                             removed += 1
+                        dead_metadata.add(f"manifest-{d}.avro")
+                dead_metadata.add(f"snap-{s['snapshot_id']}-manifest-list.avro")
             _atomic_write_json(os.path.join(self.path, SNAP_FILE), {"snapshots": keep})
             # prune commit-time sequence records for dirs that no longer
             # exist anywhere (keeps meta O(live dirs))
@@ -5269,7 +5222,6 @@ class Table:
             # resolves to — the export just (re)compiled/reused every
             # live one, so the name recomputation below is a cached
             # lookup, never a Spark job
-            meta = self._meta()
             live_eqpos = {
                 d
                 for s in keep
@@ -5282,7 +5234,13 @@ class Table:
                     and fsio.isdir(os.path.join(self.path, d))
                 ):
                     fsio.rmtree(os.path.join(self.path, d))
+                    dead_metadata.add(f"manifest-{d}.avro")
                     removed += 1
+            for name in dead_metadata:
+                try:
+                    fsio.remove(os.path.join(self.path, "metadata", name))
+                except FileNotFoundError:
+                    pass  # equality-delete dirs have no manifest
             return removed
         finally:
             self._release_commit_lock(lock, token)

@@ -143,7 +143,9 @@ def _independent_read(table_path: str, columns: list[str]) -> list[tuple]:
     """Full external-reader walk: version-hint → vN.metadata.json →
     manifest-list Avro → manifest Avros → pyarrow on the data files,
     applying content=1 POSITIONAL delete files exactly as the Iceberg v2
-    spec reads them — byte-exact file_path match, no normalization, and
+    spec reads them — byte-exact file_path match, no normalization, a
+    delete applying only to data whose sequence number is ≤ its own
+    (an entry's sequence_number, else its manifest-list record's), and
     none of the engine's read path."""
     from minio_iceberg_polaris_lakehouse_spark import avro_io
 
@@ -156,17 +158,52 @@ def _independent_read(table_path: str, columns: list[str]) -> list[tuple]:
     for m in manifests:
         _s2, _m2, entries = avro_io.read_container(m["manifest_path"])
         for e in entries:
-            (delete_files if m["content"] == 1 else data_files).append(e["data_file"])
-    tombs = set()
-    for fe in delete_files:
+            seq = e["sequence_number"]
+            seq = m["sequence_number"] if seq is None else seq
+            (delete_files if m["content"] == 1 else data_files).append((e["data_file"], seq))
+    tombs: dict[tuple[str, int], int] = {}
+    for fe, seq in delete_files:
         for r in pq.read_table(fe["file_path"]).to_pylist():
-            tombs.add((r["file_path"], r["pos"]))
+            key = (r["file_path"], r["pos"])
+            tombs[key] = max(seq, tombs.get(key, seq))
     rows = []
-    for fe in data_files:
+    for fe, seq in data_files:
         for pos, r in enumerate(pq.read_table(fe["file_path"], columns=columns).to_pylist()):
-            if (fe["file_path"], pos) not in tombs:
+            if tombs.get((fe["file_path"], pos), -1) < seq:
                 rows.append(tuple(r[c] for c in columns))
     return sorted(rows)
+
+
+def _assert_sequence_numbers(table_path: str) -> None:
+    """Across every exported metadata version: a snapshot's
+    sequence-number never changes, last-sequence-number never decreases,
+    and it is ≥ the sequence number of every manifest entry the version
+    references."""
+    from minio_iceberg_polaris_lakehouse_spark import avro_io
+
+    mdir = os.path.join(table_path, "metadata")
+    versions = sorted(
+        int(f[1 : -len(".metadata.json")])
+        for f in os.listdir(mdir)
+        if f.startswith("v") and f.endswith(".metadata.json")
+    )
+    seen: dict[int, int] = {}
+    last = 0
+    for v in versions:
+        with open(os.path.join(mdir, f"v{v}.metadata.json")) as f:
+            md = json.load(f)
+        assert md["last-sequence-number"] >= last
+        last = md["last-sequence-number"]
+        for s in md["snapshots"]:
+            assert seen.setdefault(s["snapshot-id"], s["sequence-number"]) == s["sequence-number"]
+            assert s["sequence-number"] <= last
+    # the current version's lists and manifests all exist; entry seqs ≤ last
+    md = _load_current_metadata(table_path)
+    for s in md["snapshots"]:
+        for m in avro_io.read_container(s["manifest-list"])[2]:
+            assert m["sequence_number"] <= last
+            for e in avro_io.read_container(m["manifest_path"])[2]:
+                assert (e["sequence_number"] or 0) <= last
 
 
 def test_positional_deletes_readable_externally(wh, spark):
@@ -303,6 +340,170 @@ def test_duckdb_iceberg_reader_if_available(wh, spark):
     assert out[0] == 1
 
 
+def test_expiry_keeps_sequence_numbers_for_spec_readers(wh, spark):
+    """Sequence numbers are snapshot ids, never list positions: after
+    expire_snapshots drops the first three of four appends, a later
+    merge-on-read DELETE still outranks every data file it tombstones,
+    so a reader applying the v2 rule (delete applies when data seq ≤
+    delete seq) drops the deleted rows."""
+    t = wh.create_table(
+        "db", "seq_exp", "id int",
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    for k in range(4):
+        t.insert_values([(k * 10 + i,) for i in range(10)])
+    t.expire_snapshots(keep_last=1)
+    t.delete_where("id >= 30")
+    assert t.read().count() == 30
+    assert len(_independent_read(t.path, ["id"])) == 30
+    md = _load_current_metadata(t.path)
+    assert [(s["snapshot-id"], s["sequence-number"]) for s in md["snapshots"]] == [(4, 4), (5, 5)]
+    assert md["last-sequence-number"] == 5
+    _assert_sequence_numbers(t.path)
+
+
+def test_snapshot_id_not_reused_after_newest_snapshot_expires(wh, spark):
+    """A staged snapshot whose branch was dropped is the newest snapshot
+    and expires; the next commit still takes a fresh id, so
+    last-sequence-number never decreases and no sequence number is
+    reused for different files."""
+    t = wh.create_table("db", "seq_reuse", "id int")
+    t.insert_values([(1,)])
+    t.create_ref("wip", "branch")
+    t.append(spark.createDataFrame([(2,)], "id int"), branch="wip")  # snapshot 2
+    t.drop_ref("wip")
+    t.expire_snapshots(keep_last=1)
+    assert [s["snapshot-id"] for s in _load_current_metadata(t.path)["snapshots"]] == [1]
+    assert t.insert_values([(3,)]) == 3
+    assert _independent_read(t.path, ["id"]) == [(1,), (3,)]
+    _assert_sequence_numbers(t.path)
+
+
+def test_expiry_deletes_orphaned_manifest_lists_and_manifests(wh, spark):
+    """expire_snapshots deletes the manifest lists of expired snapshots
+    and the manifests of the dirs it collects (Iceberg's
+    expireSnapshots), keeping every file the current document uses."""
+    from minio_iceberg_polaris_lakehouse_spark import avro_io
+
+    t = wh.create_table("db", "exp_meta", "id int")
+    t.insert_values([(1,)])
+    t.insert_values([(2,)])
+    t.overwrite(spark.createDataFrame([(3,)], "id int"))
+    t.insert_values([(4,)])
+    t.expire_snapshots(keep_last=1)
+    mdir = os.path.join(t.path, "metadata")
+    md = _load_current_metadata(t.path)
+    lists = {s["manifest-list"] for s in md["snapshots"]}
+    manifests = {
+        m["manifest_path"] for ml in lists for m in avro_io.read_container(ml)[2]
+    }
+    assert all(os.path.isfile(p) for p in lists | manifests)
+    on_disk = {
+        os.path.join(mdir, f)
+        for f in os.listdir(mdir)
+        if f.startswith(("snap-", "manifest-"))
+    }
+    # the overwrite collected the first two appends' dirs; snapshots
+    # 1-3 expired — nothing of theirs stays behind
+    assert on_disk == lists | manifests
+    assert len(lists) == 1 and len(manifests) == 2
+
+
+def test_commit_writes_each_metadata_file_once(wh, spark, monkeypatch):
+    """One append writes each metadata file once, whatever the history
+    length: no earlier manifest list is rewritten and no JSON copy of a
+    manifest list is written."""
+    from collections import Counter
+
+    from minio_iceberg_polaris_lakehouse_spark import fsio
+
+    def kind(path: str) -> str:
+        name = os.path.basename(path)
+        if name.startswith("snap-") and name.endswith("-manifest-list.avro"):
+            return "manifest-list"
+        if name.startswith("manifest-") and name.endswith(".avro"):
+            return "manifest"
+        if name.startswith("v") and name.endswith(".metadata.json"):
+            return "vN.metadata.json"
+        return name
+
+    def budget(n_snapshots: int) -> Counter:
+        t = wh.create_table("db", f"budget{n_snapshots}", "id int")
+        for i in range(n_snapshots):
+            t.insert_values([(i,)])
+        writes: Counter = Counter()
+        real = fsio.write_bytes_atomic
+
+        def spy(path, data, tmp_suffix):
+            writes[kind(path)] += 1
+            return real(path, data, tmp_suffix)
+
+        monkeypatch.setattr(fsio, "write_bytes_atomic", spy)
+        try:
+            t.insert_values([(99,)])
+        finally:
+            monkeypatch.setattr(fsio, "write_bytes_atomic", real)
+        return writes
+
+    one, five = budget(1), budget(5)
+    assert one == five == Counter(
+        {
+            "_meta.json": 1,
+            "_snapshots.json": 1,
+            "manifest-list": 1,
+            "vN.metadata.json": 1,
+            "version-hint.text": 1,
+            "manifest": 1,  # one new data dir ...
+            ".stats.json": 1,  # ... and its stats sidecar
+        }
+    )
+    assert not [
+        f
+        for root, _d, files in os.walk(wh.root)
+        for f in files
+        if f.endswith(".manifest-list.json")
+    ]
+
+
+def test_exported_refs_match_engine(wh, spark):
+    """Branch commits, create_ref and drop_ref publish the ref move in
+    the same export: the exported refs map always equals the engine's
+    and a ref read through the open metadata sees the branch head."""
+    from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+        read_iceberg_table,
+    )
+
+    t = wh.create_table("db", "refs_exp", "id int")
+    t.insert_values([(i,) for i in range(10)])
+
+    def check():
+        exported = {
+            name: (r["snapshot-id"], r["type"])
+            for name, r in _load_current_metadata(t.path)["refs"].items()
+        }
+        engine = {
+            r.name: (r.snapshot_id, r.type.lower()) for r in t.refs().collect()
+        }
+        assert exported == engine
+
+    t.create_ref("audit", "branch")
+    check()
+    t.append(spark.createDataFrame([(i,) for i in range(10, 15)], "id int"), branch="audit")
+    check()
+    t.delete_where("id >= 12", branch="audit")
+    check()
+    t.create_ref("v1", "tag")
+    check()
+    t.drop_ref("v1")
+    check()
+    assert t.read(version="audit").count() == 12
+    assert read_iceberg_table(spark, t.path, ref="audit").count() == 12
+    t.fast_forward("audit")
+    check()
+    assert read_iceberg_table(spark, t.path).count() == 12
+    _assert_sequence_numbers(t.path)
+
+
 def test_metadata_version_monotonic_across_expiry(wh, spark):
     """Snapshot expiry must not regress the metadata version counter
     (vN files are immutable history; a len(snapshots)-derived version
@@ -406,6 +607,7 @@ def test_export_fuzz_external_reader_matches_engine(spark, tmp_path_factory, ops
     )
 
     assert sorted(map(tuple, read_iceberg_table(spark, t.path).collect())) == engine
+    _assert_sequence_numbers(t.path)
 
 
 def test_orphan_removal_sweeps_crashed_eqpos_tmp(wh, spark):

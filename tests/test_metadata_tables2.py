@@ -5,6 +5,7 @@ round: `.entries`, `.all_data_files`, `.metadata_log_entries`,
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -42,6 +43,25 @@ def test_entries_statuses_and_sequence(lake):
         assert r.content == 0
         assert r.record_count == 1
         assert fsio.isfile(r.file_path)
+    # after expiry the sequence numbers stay the adding snapshots' ids —
+    # the same numbers the exported manifests carry
+    from minio_iceberg_polaris_lakehouse_spark import avro_io
+    from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+        resolve_metadata_path,
+    )
+
+    lake.sql("INSERT INTO db.t VALUES (3, 'c')")
+    tab.expire_snapshots(keep_last=1)
+    rows = lake.sql("SELECT * FROM db.t.entries").collect()
+    assert sorted(r.sequence_number for r in rows) == [1, 2, 3]
+    md = json.loads(fsio.read_text(resolve_metadata_path(tab.path)))
+    (ml,) = [s["manifest-list"] for s in md["snapshots"]]
+    exported = {
+        e["data_file"]["file_path"]: e["sequence_number"]
+        for m in avro_io.read_container(ml)[2]
+        for e in avro_io.read_container(m["manifest_path"])[2]
+    }
+    assert {r.file_path: r.sequence_number for r in rows} == exported
 
 
 def test_all_data_files_sees_expired_current_union(lake):

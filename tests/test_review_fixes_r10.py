@@ -8,7 +8,7 @@ is enforced at registration (registry.py guard). Advice: int SQL
 literals on DECIMAL truncate-partitioned columns derived partition
 value 0 (silent row loss) in both the foreign pruner and the engine
 hive-filter path; naive timestamp literals on timestamptz columns are
-session-zone, not UTC; _is_own_export failed open; bench's final size check was a bare assert.
+session-zone, not UTC; bench's final size check was a bare assert.
 """
 
 from __future__ import annotations
@@ -242,6 +242,19 @@ def test_engine_scan_int_literal_on_decimal_truncate(lake):
     assert [r.id for r in df.collect()] == [1]
     df2 = lake.sql("SELECT id FROM db.tdec3 WHERE amt = -10")
     assert [r.id for r in df2.collect()] == [3]
+    # the export string-encodes decimal partition values, so it writes no
+    # manifest-list bounds for them (their text order is not their value
+    # order); the foreign reader still prunes by file and finds the row
+    from minio_iceberg_polaris_lakehouse_spark import avro_io
+    from minio_iceberg_polaris_lakehouse_spark.sources import iceberg_reader as IR
+
+    t = lake.wh.table("db", "tdec3")
+    md = json.loads(open(IR.resolve_metadata_path(t.path)).read())
+    (cur,) = [s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]]
+    sums = [p for m in avro_io.read_container(cur["manifest-list"])[2] for p in m["partitions"]]
+    assert sums and all(p["lower_bound"] is None and p["upper_bound"] is None for p in sums)
+    fr = IR.read_iceberg_table(lake.spark, t.path, eq={"amt": -10})
+    assert [r.id for r in fr.filter("amt = -10").collect()] == [3]
 
 
 # -------------------------------------------------- session-zone literals
@@ -457,49 +470,6 @@ def test_export_non_utc_temporal_dirs_emit_null_partition_values(lake, spark):
     # and under UTC too (cross-zone foreign read)
     fr = IR.read_iceberg_table(spark, t.path, eq={"ts": "2024-01-01 19:00:00"})
     assert [r.id for r in fr.filter("ts = '2024-01-01 19:00:00'").collect()] == [1]
-
-
-# ------------------------------------------------------ provenance fail-closed
-
-
-def test_is_own_export_checks_all_snapshots_and_fails_closed(tmp_path):
-    from minio_iceberg_polaris_lakehouse_spark.sources import iceberg_reader as IR
-
-    mdir = tmp_path / "metadata"
-    mdir.mkdir()
-    old_ml = str(mdir / "snap-1-manifest-list.avro")
-    cur_ml = str(mdir / "snap-2-manifest-list.avro")
-    md = {
-        "current-snapshot-id": 2,
-        "snapshots": [
-            {"snapshot-id": 1, "manifest-list": old_ml},
-            {"snapshot-id": 2, "manifest-list": cur_ml},
-        ],
-    }
-    # only the OLD snapshot's mirror survives (current one expired):
-    # still detected as our own export → bucket pruning disabled
-    (mdir / "snap-1.manifest-list.json").write_text("{}")
-    assert IR._is_own_export(md) is True
-    assert IR._bucket_hash_ok(md) is False
-    # no mirror anywhere and no stray json in the dir → genuinely foreign
-    (mdir / "snap-1.manifest-list.json").unlink()
-    assert IR._is_own_export(md) is False
-    assert IR._bucket_hash_ok(md) is True
-    # exists() errors are INCONCLUSIVE → None → bucket pruning disabled
-    import minio_iceberg_polaris_lakehouse_spark.fsio as fsio
-
-    orig_exists, orig_listdir = fsio.exists, fsio.listdir
-
-    def boom(path):
-        raise OSError("transient store error")
-
-    fsio.exists = boom
-    fsio.listdir = boom
-    try:
-        assert IR._is_own_export(md) is None
-        assert IR._bucket_hash_ok(md) is False
-    finally:
-        fsio.exists, fsio.listdir = orig_exists, orig_listdir
 
 
 # ------------------------------------------------------------------ QUALIFY

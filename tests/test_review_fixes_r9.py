@@ -203,29 +203,17 @@ def test_decimal_single_value_minimal_bytes():
     assert b == (murmur3_x86_32(bytes([0x80])) & 0x7FFFFFFF) % 16
 
 
-def test_unstamped_bucket_metadata_with_engine_mirror_not_trusted(tmp_path):
-    """Metadata with NO write.bucket-hash property is spec-hashed only
-    if it didn't come from this engine's exporter; the exporter's
-    manifest-list JSON mirror is the fingerprint of a legacy export
-    whose bucket values are Spark-hashed."""
+def test_bucket_hash_stamp_decides_spec_trust():
+    """Bucket partition values are spec-hashed unless the table is
+    stamped with another hash: an absent stamp follows the spec, an
+    explicit stamp wins either way."""
     from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
         _bucket_hash_ok,
     )
 
-    ml_avro = str(tmp_path / "snap-77-manifest-list.avro")
-    md = {
-        "properties": {},
-        "current-snapshot-id": 77,
-        "snapshots": [{"snapshot-id": 77, "manifest-list": ml_avro}],
-    }
-    # genuinely foreign (no mirror): absence of stamp → spec hash trusted
-    assert _bucket_hash_ok(md) is True
-    # legacy export from this engine: mirror file exists → NOT trusted
-    (tmp_path / "snap-77.manifest-list.json").write_text("{}")
-    assert _bucket_hash_ok(md) is False
-    # explicit stamps still win either way
-    assert _bucket_hash_ok({**md, "properties": {"write.bucket-hash": "iceberg-murmur3"}}) is True
-    assert _bucket_hash_ok({**md, "properties": {"write.bucket-hash": "spark-murmur3-seed42"}}) is False
+    assert _bucket_hash_ok({"properties": {}}) is True
+    assert _bucket_hash_ok({"properties": {"write.bucket-hash": "iceberg-murmur3"}}) is True
+    assert _bucket_hash_ok({"properties": {"write.bucket-hash": "spark-murmur3-seed42"}}) is False
 
 
 # --- round-9 self-review fixes -------------------------------------------

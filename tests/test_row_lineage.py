@@ -10,7 +10,7 @@ Spec behaviors covered (format v3 row lineage):
   identity by materializing ids into the rewritten files; updated rows
   keep `_row_id` but bump `_last_updated_sequence_number` to the updating
   commit; fresh rows (MERGE inserts) get new ids;
-- the open-metadata export mirrors next-row-id / first-row-id.
+- the open-metadata export records next-row-id / first-row-id.
 
 Reference parity: the reference's Iceberg 1.4/v2 stack predates row
 lineage; this is the v3 feature (alongside deletion vectors, puffin.py)
@@ -273,9 +273,8 @@ def _strip_avro_lineage(mdir: str) -> None:
 
 
 def test_foreign_reader_lineage_from_avro_records_alone(wh, spark):
-    """A genuine v3 consumer never reads this engine's JSON mirror: with
-    the mirror DELETED, `_row_id` must still resolve from first_row_id
-    in the Avro manifest records (field-id 142)."""
+    """`_row_id` resolves from first_row_id in the Avro manifest records
+    (field-id 142) — the only place the export records lineage."""
     from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
         read_iceberg_table,
     )
@@ -284,10 +283,6 @@ def test_foreign_reader_lineage_from_avro_records_alone(wh, spark):
     tab.insert_values([(1, "a"), (2, "b")])
     tab.insert_values([(3, "c")])
     native = _ids(tab)
-    mdir = os.path.join(tab.path, "metadata")
-    for f in fsio.listdir(mdir):
-        if f.endswith(".manifest-list.json"):
-            os.remove(os.path.join(mdir, f))
     rows = read_iceberg_table(spark, tab.path, row_lineage=True).collect()
     got = {r.id: (r._row_id, r._last_updated_sequence_number) for r in rows}
     assert got == native
@@ -300,13 +295,8 @@ def test_foreign_reader_pre_lineage_metadata_yields_nulls(wh, spark):
 
     tab = _make(wh)
     tab.insert_values([(1, "a")])
-    # simulate a v2 writer's table: no JSON mirror AND no first_row_id
-    # in the Avro records
-    mdir = os.path.join(tab.path, "metadata")
-    for f in fsio.listdir(mdir):
-        if f.endswith(".manifest-list.json"):
-            os.remove(os.path.join(mdir, f))
-    _strip_avro_lineage(mdir)
+    # simulate a v2 writer's table: no first_row_id in the Avro records
+    _strip_avro_lineage(os.path.join(tab.path, "metadata"))
     rows = read_iceberg_table(spark, tab.path, row_lineage=True).collect()
     assert rows[0]._row_id is None  # the spec's 'not assigned', not a guess
 
