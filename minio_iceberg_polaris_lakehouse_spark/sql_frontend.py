@@ -2986,7 +2986,7 @@ class LakehouseSQL:
         the upsert form the reference points at for dedup remediation
         (SETUP_GUIDE_WIN.md:368 'Use MERGE or DELETE + INSERT'). ``src``
         is a warehouse table name or a parenthesized SELECT; execution is
-        the warehouse's copy-on-write merge (join + union plan). The
+        the warehouse's copy-on-write merge (one full outer join). The
         conditional arm references the two sides by the statement's own
         aliases (defaulting to t/s when none are written); matched rows
         failing it carry over unchanged. It requires the engine merge

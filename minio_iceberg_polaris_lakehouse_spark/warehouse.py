@@ -48,7 +48,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,6 +62,10 @@ SNAP_FILE = "_snapshots.json"
 # rows; invisible to normal reads (explicit read schemas skip them)
 LIN_ROW_ID = "_lin_row_id"
 LIN_UPD_SEQ = "_lin_upd_seq"
+# MERGE row actions besides the index of the firing UPDATE arm, and the
+# marker around the hex key in the cardinality check's raise_error
+_CARRY, _NBS_UPDATE, _INSERT = -1, -2, -3
+_MERGE_DUP = "__merge_dup_key__"
 
 
 class WarehouseError(RuntimeError):
@@ -2568,7 +2572,7 @@ class Table:
             aligned = aligned.repartitionByRange(*[F.col(c) for c in order]).sortWithinPartitions(
                 *order
             )
-        writer = aligned
+        writer = aligned.write
         if spec.column() is not None:
             src_dt = schema[spec.source].dataType if spec.source in cols else None
             spec_hash = self._bucket_spec_hash(meta)
@@ -2580,10 +2584,14 @@ class Table:
                 ship_package(self.spark)
             writer = aligned.withColumn(
                 spec.column(), spec.expr(src_dt, spec_hash=spec_hash)
-            )
-            writer.write.option("compression", "zstd").partitionBy(spec.column()).parquet(out)
-        else:
-            writer.write.option("compression", "zstd").parquet(out)
+            ).write.partitionBy(spec.column())
+        try:
+            writer.option("compression", "zstd").parquet(out)
+        except BaseException:
+            # a failed job (e.g. MERGE's cardinality check) leaves the
+            # directory it started; no commit will ever reference it
+            fsio.rmtree(out, ignore_errors=True)
+            raise
         stats = _parquet_footer_stats(out)
         spec_rec = {
             "source": spec.source,
@@ -3372,8 +3380,8 @@ class Table:
         """MERGE INTO target USING source ON target.<on> = source.<on>
         WHEN MATCHED [AND <matched_condition>] THEN UPDATE SET
         <update_cols> (or all non-key columns) | DELETE, WHEN NOT
-        MATCHED THEN INSERT * — expressed as a join + union, the exact
-        relational algebra Iceberg's copy-on-write MERGE plans.
+        MATCHED THEN INSERT * — planned as one full outer join, the
+        shape Spark plans for an Iceberg copy-on-write MERGE.
         ``matched_action='delete'`` is the dedup-remediation form
         (matched target rows drop instead of updating);
         ``matched_condition`` is the conditional arm (Spark/Iceberg's
@@ -3391,8 +3399,8 @@ class Table:
                 f"not {not_matched_by_source_action}"
             )
         # one MERGE engine: this classic two-arm form is the degenerate
-        # case of the full clause matrix (merge_into_arms) — same join +
-        # union algebra, cardinality check, and v3 identity preservation
+        # case of the full clause matrix (merge_into_arms) — same plan,
+        # cardinality check, and v3 identity preservation
         cols = [f.name for f in self.schema().fields]
         update_cols = update_cols or [c for c in cols if c != on]
         sa = source_alias
@@ -3447,10 +3455,12 @@ class Table:
               'update', set: dict} | None — target rows with no source
               match; condition-gated, non-firing rows carry over.
 
-        Same machinery as merge_into: copy-on-write join+union plan,
-        MERGE cardinality pre-check, Iceberg v3 row-identity
-        preservation (carried/updated rows keep `_row_id`; touched rows'
-        update sequence resets to this commit; inserts get fresh ids)."""
+        Same machinery as merge_into: one copy-on-write plan — target
+        FULL OUTER JOIN source on the key, one action column per row,
+        one projection — with the MERGE cardinality check inside the
+        write job, and Iceberg v3 row-identity preservation
+        (carried/updated rows keep `_row_id`; touched rows' update
+        sequence resets to this commit; inserts get fresh ids)."""
         matched_arms = matched_arms or []
         for arm in matched_arms:
             if arm.get("action") not in ("update", "delete"):
@@ -3458,119 +3468,108 @@ class Table:
         nbs = not_matched_by_source_arm
         if nbs and nbs.get("action") not in ("update", "delete"):
             raise WarehouseError(f"bad NOT MATCHED BY SOURCE action: {nbs.get('action')}")
-        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
-        cols = [f.name for f in self.schema().fields]
-        tgt0 = (
-            self.read(version=branch, lineage=True)
-            if branch
-            else self.read(lineage=True)
-        )
-        dup = (
-            source.join(tgt0.select(on), on, "left_semi")
-            .groupBy(on)
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise WarehouseError(
-                f"MERGE: multiple source rows match target key {on}={dup[0][0]!r} "
-                "(ON clause must match at most one source row per target row)"
-            )
         ta, sa = target_alias, source_alias
         if ta == sa:
             raise WarehouseError(f"MERGE aliases must differ: both {ta!r}")
-        tgt = tgt0.alias(ta)
-        src = source.alias(sa)
-        _lin_keep = [
-            F.col(f"{ta}._row_id").alias("_row_id"),
-            F.col(f"{ta}._last_updated_sequence_number").alias(
-                "_last_updated_sequence_number"
-            ),
-        ]
-        _lin_touched = [
-            F.col(f"{ta}._row_id").alias("_row_id"),
-            F.lit(None).cast("long").alias("_last_updated_sequence_number"),
-        ]
+        parent = self._branch_head(branch) if branch else self.current_snapshot_id()
+        schema = self.schema()
+        cols = schema.fieldNames()
 
-        def _cond(c: str | None):
-            return F.coalesce(F.expr(c), F.lit(False)) if c else F.lit(True)
-
-        def _set_exprs(set_map: dict | None):
-            if set_map is None:  # SET * — every non-key column from the source
-                set_map = {c: f"{sa}.{c}" for c in cols if c != on}
+        def _assigns(set_map: dict) -> dict:
             unknown = [c for c in set_map if c not in cols]
             if unknown:
                 raise WarehouseError(f"MERGE SET of unknown column(s): {unknown}")
-            return [
-                (F.expr(set_map[c]) if c in set_map else F.col(f"{ta}.{c}")).alias(c)
-                for c in cols
-            ]
+            return {c: F.expr(e) for c, e in set_map.items()}
 
-        pairs = tgt.join(src, F.col(f"{ta}.{on}") == F.col(f"{sa}.{on}"), "inner")
-        merged = None
-
-        def _union(df: DataFrame):
-            nonlocal merged
-            merged = df if merged is None else merged.unionByName(df)
-
-        fired = F.lit(False)
-        for arm in matched_arms:
-            this = (~fired) & _cond(arm.get("cond"))
+        # Spark's RewriteMergeIntoTable shape: the source carries its
+        # per-key row count (the window's hash exchange is the one the
+        # join reuses), the target a presence marker. One-sided clauses
+        # resolve on their own side, as in Spark, so an unqualified name
+        # is not ambiguous: NOT MATCHED BY SOURCE on the target (__nbs,
+        # __nbs_<col>), the INSERT condition on the source (__ins)
+        tgt = (
+            self.read(version=branch, lineage=True) if branch else self.read(lineage=True)
+        ).alias(ta).withColumn("__t", F.lit(True))
+        src = source.alias(sa).withColumn("__sn", F.count(F.lit(1)).over(Window.partitionBy(on)))
+        nbs_set: dict = {}
+        if nbs:
+            fires = F.expr(nbs["cond"]) if nbs.get("cond") else F.lit(True)
+            if nbs["action"] == "update":
+                nbs_set = {c: F.when(fires, e) for c, e in _assigns(nbs.get("set") or {}).items()}
+            tgt = tgt.withColumns({"__nbs": fires, **{f"__nbs_{c}": e for c, e in nbs_set.items()}})
+        if insert_arm is not None:
+            cond = insert_arm.get("cond")
+            src = src.withColumn("__ins", F.expr(cond) if cond else F.lit(True))
+        tgt, src = tgt.alias(ta), src.alias(sa)
+        rows = tgt.join(src, F.col(f"{ta}.{on}") == F.col(f"{sa}.{on}"), "full_outer")
+        in_t, in_s = F.col(f"{ta}.__t").isNotNull(), F.col(f"{sa}.__sn").isNotNull()
+        matched = in_t & in_s
+        # __act: the index of the firing UPDATE arm, _CARRY, _NBS_UPDATE,
+        # _INSERT, or NULL (the row is dropped); the first CASE branch is
+        # the cardinality check, so it fails the write job itself
+        dup_key = F.hex(F.col(f"{sa}.{on}").cast("string"))
+        act = F.when(
+            matched & (F.col(f"{sa}.__sn") > 1),
+            F.raise_error(F.concat(F.lit(_MERGE_DUP), dup_key, F.lit(_MERGE_DUP))),
+        )
+        sets: list[tuple[int, dict]] = []
+        for i, arm in enumerate(matched_arms):
+            cond = matched & F.expr(arm["cond"]) if arm.get("cond") else matched
             if arm["action"] == "update":
-                _union(pairs.filter(this).select(*_set_exprs(arm.get("set")), *_lin_touched))
-            # delete: the pair's rows simply do not re-emit
-            fired = fired | _cond(arm.get("cond"))
-        # matched rows no arm claimed carry over with target values
-        _union(
-            pairs.filter(~fired).select(
-                *[F.col(f"{ta}.{c}").alias(c) for c in cols], *_lin_keep
+                set_map = arm.get("set")
+                if set_map is None:  # SET * — every non-key column from the source
+                    set_map = {c: f"{sa}.{c}" for c in cols if c != on}
+                sets.append((i, _assigns(set_map)))
+            act = act.when(cond, F.lit(i if arm["action"] == "update" else None))
+        # the rows left are one-sided: target-only, then source-only
+        act = act.when(matched, F.lit(_CARRY))
+        if nbs:
+            sets.append((_NBS_UPDATE, {c: F.col(f"{ta}.__nbs_{c}") for c in nbs_set}))
+            fired = _NBS_UPDATE if nbs["action"] == "update" else None
+            act = act.when(F.col(f"{ta}.__nbs"), F.lit(fired))
+        act = act.when(in_t, F.lit(_CARRY))
+        if insert_arm is not None:
+            sets.append((_INSERT, {c: F.col(f"{sa}.{c}") for c in cols}))
+            act = act.when(F.col(f"{sa}.__ins"), F.lit(_INSERT))
+        code = F.col("__act")
+
+        def _value(c: str):
+            # a column no assignment of the row's action sets keeps the
+            # target value
+            v = None
+            for k, assigns in sets:
+                if c in assigns:
+                    e = assigns[c].cast(schema[c].dataType)
+                    v = F.when(code == k, e) if v is None else v.when(code == k, e)
+            t = F.col(f"{ta}.{c}")
+            return (t if v is None else v.otherwise(t)).alias(c)
+
+        merged = (
+            rows.withColumn("__act", act)
+            .filter(code.isNotNull())
+            .select(
+                *[_value(c) for c in cols],
+                # inserts read NULL from the absent target row: fresh ids
+                F.col(f"{ta}._row_id").alias("_row_id"),
+                F.when(code == _CARRY, F.col(f"{ta}._last_updated_sequence_number")).alias(
+                    "_last_updated_sequence_number"
+                ),
             )
         )
-        unmatched = tgt.join(src, F.col(f"{ta}.{on}") == F.col(f"{sa}.{on}"), "left_anti")
-        if nbs:
-            c = _cond(nbs.get("cond"))
-            if nbs["action"] == "update":
-                # t-only rows: expressions may reference the target alias
-                nbs_set = nbs.get("set") or {}
-                unknown = [col for col in nbs_set if col not in cols]
-                if unknown:
-                    raise WarehouseError(f"MERGE SET of unknown column(s): {unknown}")
-                _union(
-                    unmatched.filter(c).select(
-                        *[
-                            (
-                                F.expr(nbs_set[col])
-                                if col in nbs_set
-                                else F.col(f"{ta}.{col}")
-                            ).alias(col)
-                            for col in cols
-                        ],
-                        *_lin_touched,
-                    )
-                )
-            _union(
-                unmatched.filter(~c).select(
-                    *[F.col(f"{ta}.{c2}").alias(c2) for c2 in cols], *_lin_keep
-                )
-            )
-        else:
-            _union(
-                unmatched.select(
-                    *[F.col(f"{ta}.{c2}").alias(c2) for c2 in cols], *_lin_keep
-                )
-            )
-        if insert_arm is not None:
-            new_rows = src.join(
-                tgt, F.col(f"{sa}.{on}") == F.col(f"{ta}.{on}"), "left_anti"
-            ).filter(_cond(insert_arm.get("cond"))).select(
-                *[F.col(c) for c in cols],
-                F.lit(None).cast("long").alias("_row_id"),
-                F.lit(None).cast("long").alias("_last_updated_sequence_number"),
-            )
-            _union(new_rows)
-        p = self._write_data(merged, lineage_cols=True)
+        try:
+            p = self._write_data(merged, lineage_cols=True)
+        except Exception as e:
+            dup = re.search(rf"{_MERGE_DUP}([0-9A-F]*){_MERGE_DUP}", str(e))
+            if dup is None:
+                raise
+            # the typed key, fetched back from the source by its string
+            hex_key = dup.group(1)
+            hit = source.filter(F.hex(F.col(on).cast("string")) == hex_key).select(on).take(1)
+            key = hit[0][0] if hit else bytes.fromhex(hex_key).decode(errors="replace")
+            raise WarehouseError(
+                f"MERGE: multiple source rows match target key {on}={key!r} "
+                "(ON clause must match at most one source row per target row)"
+            ) from None
         summary = {
             "on": on,
             "matched-arms": str(len(matched_arms)),
@@ -4814,7 +4813,6 @@ class Table:
         hashing is acceptable here because ANALYZE is explicit
         maintenance, not a query path."""
         import pandas as pd
-        from pyspark.sql import Window
 
         from minio_iceberg_polaris_lakehouse_spark import puffin as PUF
         from minio_iceberg_polaris_lakehouse_spark import theta as TH

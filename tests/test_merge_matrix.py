@@ -5,6 +5,8 @@ UPDATE/DELETE — Spark 3.5 / Iceberg semantics."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
@@ -190,3 +192,200 @@ def test_python_api_multi_arm(spark, tmp_path):
     )
     got = {r.id: r.v for r in t.read().collect()}
     assert got == {1: 110, 3: 5, 9: 90}
+
+
+def test_merge_rejects_duplicate_source_keys(lake, spark):
+    """Several source rows matching one target key is a cardinality
+    violation (Iceberg/Spark MERGE semantics), not a silent row
+    multiplication."""
+    lake.sql("CREATE TABLE polaris.db.m (id INT, v STRING) USING ICEBERG")
+    lake.sql("INSERT INTO polaris.db.m VALUES (1, 'a')")
+    with pytest.raises(WarehouseError, match="multiple source rows"):
+        lake.sql(
+            "MERGE INTO polaris.db.m t "
+            "USING (SELECT * FROM VALUES (1, 'x'), (1, 'y') AS s(id, v)) s "
+            "ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+    # table unchanged
+    assert [(r.id, r.v) for r in lake.sql("SELECT id, v FROM db.m").collect()] == [(1, "a")]
+
+
+def test_merge_allows_duplicate_unmatched_source_rows(lake):
+    """Iceberg/Spark MERGE only raises a cardinality violation when a
+    TARGET row matches multiple source rows; duplicate source rows that
+    match nothing are legal and all insert via WHEN NOT MATCHED. The
+    pre-fix check rejected any duplicate source key."""
+    lake.sql("CREATE TABLE polaris.db.mi (id INT, v STRING) USING ICEBERG")
+    lake.sql("INSERT INTO polaris.db.mi VALUES (1, 'a')")
+    lake.sql(
+        "MERGE INTO polaris.db.mi t "
+        "USING (SELECT * FROM VALUES (7, 'x'), (7, 'y'), (1, 'upd') AS s(id, v)) s "
+        "ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = sorted((r.id, r.v) for r in lake.sql("SELECT id, v FROM db.mi").collect())
+    assert got == [(1, "upd"), (7, "x"), (7, "y")]
+    # matched duplicates still rejected
+    with pytest.raises(WarehouseError, match="multiple source rows"):
+        lake.sql(
+            "MERGE INTO polaris.db.mi t "
+            "USING (SELECT * FROM VALUES (1, 'p'), (1, 'q') AS s(id, v)) s "
+            "ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+
+
+def _files_and_history(lake, name):
+    tab = lake.wh.table("db", name)
+    data_dirs = sorted(d for d in os.listdir(tab.path) if d.startswith("data-"))
+    with open(os.path.join(tab.path, "_meta.json")) as f:
+        meta = f.read()
+    snaps = sorted(tuple(r) for r in lake.sql(f"SELECT * FROM db.{name}.snapshots").collect())
+    return data_dirs, meta, snaps
+
+
+@pytest.mark.parametrize(
+    "key_type, key, want",
+    [
+        ("INT", "1", "id=1 "),
+        ("STRING", "'k1'", "id='k1' "),
+        ("STRING", "'it''s'", "id=\"it's\" "),
+        ("BINARY", "X'FF00'", "id=b'\\xff\\x00' "),
+        ("STRUCT<a: INT, b: STRING>", "named_struct('a', 1, 'b', 'z')", "id=Row(a=1, b='z') "),
+        ("ARRAY<INT>", "array(1, 2)", "id=[1, 2] "),
+    ],
+    ids=["int", "string", "string_with_quote", "binary_not_utf8", "struct", "array"],
+)
+def test_rejected_merge_leaves_table_untouched(lake, key_type, key, want):
+    """The cardinality check fails inside the write job: the error is
+    the engine's own (no Spark error class or SQLSTATE), and the data
+    directory the failed job started is removed, so the table's files,
+    metadata and history are exactly what they were."""
+    lake.sql(f"CREATE TABLE polaris.db.rj (id {key_type}, v STRING) USING ICEBERG")
+    lake.sql(f"INSERT INTO polaris.db.rj VALUES ({key}, 'a')")
+    before = _files_and_history(lake, "rj")
+    with pytest.raises(WarehouseError) as err:
+        lake.sql(
+            "MERGE INTO polaris.db.rj t "
+            f"USING (SELECT * FROM VALUES ({key}, 'x'), ({key}, 'y') AS s(id, v)) s "
+            "ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+    assert str(err.value) == (
+        f"MERGE: multiple source rows match target key {want}"
+        "(ON clause must match at most one source row per target row)"
+    )
+    assert _files_and_history(lake, "rj") == before
+
+
+def test_one_sided_clauses_resolve_unqualified_names(lake):
+    """An unqualified name in a one-sided clause means that side's
+    column, as in Spark's MERGE: the INSERT condition sees only the
+    source, NOT MATCHED BY SOURCE (condition and SET) only the target."""
+    lake.sql("INSERT INTO polaris.db.acct VALUES (5, 8, 'x')")
+    src = "(SELECT * FROM VALUES (1, 7, 'u'), (6, 60, 'new'), (7, -1, 'neg') AS s(id, bal, status)) s"
+    before = _state(lake)
+    lake.sql(
+        f"MERGE INTO polaris.db.acct t USING {src} ON t.id = s.id "
+        "WHEN NOT MATCHED AND bal > 0 THEN INSERT *"
+    )
+    assert _state(lake) == {**before, 6: (60, "new")}
+    lake.sql(
+        f"MERGE INTO polaris.db.acct t USING {src} ON t.id = s.id "
+        "WHEN MATCHED AND t.bal > 0 THEN UPDATE SET bal = s.bal "
+        "WHEN NOT MATCHED BY SOURCE AND bal > 7 THEN UPDATE SET bal = bal - 1, "
+        "status = concat(status, '!')"
+    )
+    assert _state(lake) == {
+        1: (7, "ok"), 2: (-5, "ok"), 3: (0, "ok"), 4: (49, "old!"), 5: (7, "x!"), 6: (60, "new"),
+    }
+    lake.sql(
+        f"MERGE INTO polaris.db.acct t USING {src} ON t.id = s.id "
+        "WHEN NOT MATCHED BY SOURCE AND status = 'ok' THEN DELETE "
+        "WHEN NOT MATCHED AND status <> 'neg' THEN INSERT *"
+    )
+    assert _state(lake) == {1: (7, "ok"), 4: (49, "old!"), 5: (7, "x!"), 6: (60, "new")}
+
+
+def test_other_write_failures_propagate(lake):
+    """Only the cardinality check becomes a WarehouseError; any other
+    failure of the MERGE write surfaces as Spark raised it, and leaves
+    no data directory behind either."""
+    before = _files_and_history(lake, "acct")
+    with pytest.raises(Exception, match="boom") as err:
+        lake.sql(
+            "MERGE INTO polaris.db.acct t USING (SELECT * FROM VALUES "
+            "(1, 1, 'x') AS s(id, bal, status)) s ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET status = raise_error('boom')"
+        )
+    assert not isinstance(err.value, WarehouseError)
+    assert _files_and_history(lake, "acct") == before
+
+
+def test_null_keys_never_match(lake):
+    """NULL = NULL is not true in the ON clause: a source row with a
+    NULL key inserts, and a target row with a NULL key is never matched —
+    it carries over, or obeys WHEN NOT MATCHED BY SOURCE."""
+    lake.sql("INSERT INTO polaris.db.acct VALUES (NULL, 7, 'nk')")
+    src = (
+        "(SELECT * FROM VALUES (NULL, 8, 'ns'), (NULL, 9, 'ns'), (1, 1, 'x') "
+        "AS s(id, bal, status)) s"
+    )
+    lake.sql(
+        f"MERGE INTO polaris.db.acct t USING {src} ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+
+    def rows():
+        return sorted(
+            (r.id is None, r.id or 0, r.bal, r.status)
+            for r in lake.sql("SELECT * FROM polaris.db.acct").collect()
+        )
+
+    assert rows() == [
+        (False, 1, 1, "x"),
+        (False, 2, -5, "ok"),
+        (False, 3, 0, "ok"),
+        (False, 4, 50, "old"),
+        (True, 0, 7, "nk"),
+        (True, 0, 8, "ns"),
+        (True, 0, 9, "ns"),
+    ]
+    lake.sql(
+        f"MERGE INTO polaris.db.acct t USING {src} ON t.id = s.id "
+        "WHEN MATCHED THEN DELETE "
+        "WHEN NOT MATCHED BY SOURCE AND t.bal > 7 THEN UPDATE SET status = 'gone'"
+    )
+    assert rows() == [
+        (False, 2, -5, "ok"),
+        (False, 3, 0, "ok"),
+        (False, 4, 50, "gone"),
+        (True, 0, 7, "nk"),
+        (True, 0, 8, "gone"),
+        (True, 0, 9, "gone"),
+    ]
+    lake.sql(
+        f"MERGE INTO polaris.db.acct t USING {src} ON t.id = s.id "
+        "WHEN NOT MATCHED BY SOURCE AND t.id IS NULL THEN DELETE"
+    )
+    assert rows() == [(False, 2, -5, "ok"), (False, 3, 0, "ok"), (False, 4, 50, "gone")]
+
+
+def test_two_arm_merge_runs_at_most_three_jobs(spark, lake):
+    """Copy-on-write MERGE is one plan — target FULL OUTER JOIN source,
+    the cardinality check inline — so a two-arm MERGE runs at most
+    three Spark jobs, the write included."""
+    sc = spark.sparkContext
+    group = "merge_two_arm_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        lake.sql(
+            "MERGE INTO polaris.db.acct t USING (SELECT * FROM VALUES "
+            "(1, 11, 'u'), (6, 60, 'new') AS s(id, bal, status)) s ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert _state(lake)[6] == (60, "new")

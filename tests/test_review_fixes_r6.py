@@ -14,7 +14,6 @@ import pytest
 from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
 from minio_iceberg_polaris_lakehouse_spark.warehouse import (
     Warehouse,
-    WarehouseError,
     _file_column_bounds,
 )
 
@@ -78,23 +77,6 @@ def test_decimal_bounds_merge_numerically(tmp_path):
     assert pf.metadata.num_row_groups == 2
     bounds = _file_column_bounds(pf)
     assert bounds["d"] == ["9.5", "10.5"]
-
-
-def test_merge_rejects_duplicate_source_keys(lake, spark):
-    """Several source rows matching one target key is a cardinality
-    violation (Iceberg/Spark MERGE semantics), not a silent row
-    multiplication."""
-    lake.sql("CREATE TABLE polaris.db.m (id INT, v STRING) USING ICEBERG")
-    lake.sql("INSERT INTO polaris.db.m VALUES (1, 'a')")
-    with pytest.raises(WarehouseError, match="multiple source rows"):
-        lake.sql(
-            "MERGE INTO polaris.db.m t "
-            "USING (SELECT * FROM VALUES (1, 'x'), (1, 'y') AS s(id, v)) s "
-            "ON t.id = s.id "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-    # table unchanged
-    assert [(r.id, r.v) for r in lake.sql("SELECT id, v FROM db.m").collect()] == [(1, "a")]
 
 
 def test_update_with_commas_and_where_inside_literals(lake):

@@ -1,6 +1,6 @@
 """Regression pins for the round-6 ADVICE findings — each test fails on
-the pre-fix code (silent delete un-application, over-strict MERGE
-rejection, silent stream data loss, or a loadTable metadata race)."""
+the pre-fix code (silent delete un-application, silent stream data
+loss, or a loadTable metadata race)."""
 
 from __future__ import annotations
 
@@ -18,31 +18,6 @@ from minio_iceberg_polaris_lakehouse_spark.warehouse import (
 @pytest.fixture()
 def lake(spark, tmp_path):
     return LakehouseSQL(spark, str(tmp_path / "wh"))
-
-
-def test_merge_allows_duplicate_unmatched_source_rows(lake):
-    """Iceberg/Spark MERGE only raises a cardinality violation when a
-    TARGET row matches multiple source rows; duplicate source rows that
-    match nothing are legal and all insert via WHEN NOT MATCHED. The
-    pre-fix check rejected any duplicate source key."""
-    lake.sql("CREATE TABLE polaris.db.mi (id INT, v STRING) USING ICEBERG")
-    lake.sql("INSERT INTO polaris.db.mi VALUES (1, 'a')")
-    lake.sql(
-        "MERGE INTO polaris.db.mi t "
-        "USING (SELECT * FROM VALUES (7, 'x'), (7, 'y'), (1, 'upd') AS s(id, v)) s "
-        "ON t.id = s.id "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-    )
-    got = sorted((r.id, r.v) for r in lake.sql("SELECT id, v FROM db.mi").collect())
-    assert got == [(1, "upd"), (7, "x"), (7, "y")]
-    # matched duplicates still rejected
-    with pytest.raises(WarehouseError, match="multiple source rows"):
-        lake.sql(
-            "MERGE INTO polaris.db.mi t "
-            "USING (SELECT * FROM VALUES (1, 'p'), (1, 'q') AS s(id, v)) s "
-            "ON t.id = s.id "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
 
 
 def test_stream_fails_loudly_when_checkpoint_snapshot_expired(spark, tmp_path):
