@@ -16,11 +16,11 @@ filesystem-table `version-hint.text` convention):
 
 so an independent reader can resolve the current schema (with stable
 field ids), partition specs, the snapshot chain, and the exact data-file
-list with record counts/sizes — without this engine's code. Manifest
-lists and manifests are Avro object-container files (deflate codec,
-field-id annotated schemas) produced by the engine's pure-stdlib Avro
-writer (avro_io.py, byte-validated in tests against the independent Java
-Avro implementation on Spark's classpath).
+list with record counts, sizes and column bounds — without this
+engine's code. Manifest lists and manifests are Avro object-container
+files (deflate codec, field-id annotated schemas) produced by the
+engine's pure-stdlib Avro writer (avro_io.py, byte-validated in tests
+against the independent Java Avro implementation on Spark's classpath).
 
 Sequence numbers: a snapshot's sequence number is its snapshot id (ids
 are monotonic and never reused), and a dir's is the id of the snapshot
@@ -38,9 +38,11 @@ reads, no Spark job.
 from __future__ import annotations
 
 import datetime
+import decimal
 import hashlib
 import json
 import os
+import re
 import struct
 import urllib.parse
 import uuid
@@ -49,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from minio_iceberg_polaris_lakehouse_spark import avro_io, fsio
+from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import _date_days, _ts_micros
 from minio_iceberg_polaris_lakehouse_spark.warehouse import (
     DIR_STATS_FILE,
     Table,
@@ -134,6 +137,9 @@ def _default_json(lit: str, dtype: T.DataType):
     booleans, decimals as their exact string form (JSON floats would
     drop scale), date/timestamp literals as their ISO strings."""
     s = lit.strip()
+    typed = re.fullmatch(r"(?is)(?:DATE|TIMESTAMP(?:_NTZ|_LTZ)?)\s*('.*')", s)
+    if typed:  # DATE '2024-01-01' → its ISO string
+        s = typed.group(1)
     if len(s) >= 2 and s[0] == s[-1] and s[0] in "'\"":
         s = s[1:-1]
     if isinstance(dtype, T.BooleanType):
@@ -303,27 +309,72 @@ def _avro_transform_type(transform: str, meta: dict, source: str) -> object:
 
 
 def _bound_bytes(v, avro_type) -> bytes | None:
-    """Iceberg single-value serialization of a partition value for the
-    manifest-list field summary's lower/upper bound."""
+    """Iceberg single-value serialization (spec Appendix D) of a
+    partition value (Avro type) or a data file's column bound (Iceberg
+    type; footer stats carry dates, timestamps and decimals as strings).
+    None when the value has no safe encoding — the bound is then left
+    out, which only costs pruning."""
     if v is None:
         return None
-    t = avro_type.get("type") if isinstance(avro_type, dict) else avro_type
+    t = avro_type.get("type") if isinstance(avro_type, dict) else str(avro_type)
     try:
         if t == "int":
             return struct.pack("<i", int(v))
         if t == "long":
             return struct.pack("<q", int(v))
-        if t == "float":
-            return struct.pack("<f", float(v))
-        if t == "double":
-            return struct.pack("<d", float(v))
+        if t in ("float", "double"):
+            f = float(v)
+            if f != f:  # NaN is never a bound
+                return None
+            return struct.pack("<f" if t == "float" else "<d", f)
         if t == "boolean":
             return b"\x01" if v else b"\x00"
         if t == "string":
             return str(v).encode("utf-8")
-    except (ValueError, struct.error):
+        if t == "date":
+            days = v if isinstance(v, int) else _date_days(str(v))
+            return None if days is None else struct.pack("<i", days)
+        if t in ("timestamptz", "timestamp"):
+            # a timestamptz bound must name its instant, a timestamp
+            # (no zone) bound must not: anything else is ambiguous
+            if (datetime.datetime.fromisoformat(str(v)).tzinfo is not None) != (t == "timestamptz"):
+                return None
+            return struct.pack("<q", _ts_micros(str(v)))
+        if t.startswith("decimal("):
+            scale = int(t[len("decimal(") : -1].split(",")[1])
+            unscaled = decimal.Decimal(str(v)).scaleb(scale)
+            if unscaled != unscaled.to_integral_value():
+                return None
+            n = int(unscaled)  # minimal big-endian two's complement
+            return n.to_bytes((n + (n < 0)).bit_length() // 8 + 1, "big", signed=True)
+    except (ValueError, TypeError, IndexError, struct.error, decimal.InvalidOperation):
         return None
     return None
+
+
+def _column_bounds(iceberg_schema: dict, files: list[dict]) -> list[tuple[list, list]]:
+    """Per data file, the manifest entry's lower_bounds / upper_bounds
+    (fields 125/128): footer [min, max] keyed by the field id the
+    manifest's own schema gives the file's column name, in that field's
+    single-value encoding. Nested, binary and uuid columns carry none."""
+    fields = {
+        f["name"]: (int(f["id"]), f["type"])
+        for f in iceberg_schema["fields"]
+        if isinstance(f["type"], str) and f["type"] not in ("binary", "uuid")
+    }
+    out = []
+    for f in files:
+        lower, upper = [], []
+        for name, (lo, hi) in (f.get("bounds") or {}).items():
+            if name not in fields:
+                continue
+            fid, t = fields[name]
+            lo_b, hi_b = _bound_bytes(lo, t), _bound_bytes(hi, t)
+            if lo_b is not None and hi_b is not None:
+                lower.append({"key": fid, "value": lo_b})
+                upper.append({"key": fid, "value": hi_b})
+        out.append((lower, upper))
+    return out
 
 
 def _is_utcish_tz(tz) -> bool:
@@ -435,6 +486,23 @@ def _partition_value(rel_path: str, field_name: str, avro_type, tz=None) -> obje
     return None
 
 
+def _bounds_field(name: str, field_id: int) -> dict:
+    kv = {
+        "type": "record",
+        "name": f"k{field_id + 1}_v{field_id + 2}",
+        "fields": [
+            {"name": "key", "type": "int", "field-id": field_id + 1},
+            {"name": "value", "type": "bytes", "field-id": field_id + 2},
+        ],
+    }
+    return {
+        "name": name,
+        "type": ["null", {"type": "array", "logicalType": "map", "items": kv}],
+        "default": None,
+        "field-id": field_id,
+    }
+
+
 def _manifest_entry_schema(partition_field) -> dict:
     """Entry schema with the partition record's fields. Accepts the
     engine's single ``(name, avro_type)`` tuple (field-id 1000, its own
@@ -486,6 +554,12 @@ def _manifest_entry_schema(partition_field) -> dict:
                         },
                         {"name": "record_count", "type": "long", "field-id": 103},
                         {"name": "file_size_in_bytes", "type": "long", "field-id": 104},
+                        # per-column footer [min, max] (spec fields 125/128,
+                        # maps from field id to single-value bytes, written
+                        # as Avro k/v record arrays): what a reader's file
+                        # pruning compares predicates against
+                        _bounds_field("lower_bounds", 125),
+                        _bounds_field("upper_bounds", 128),
                         {
                             # Iceberg v2 equality_ids (field-id 135): the
                             # schema field ids an EQUALITY_DELETES file
@@ -545,6 +619,25 @@ def _manifest_entry_schema(partition_field) -> dict:
     }
 
 
+def _name_as_written(table: Table, meta: dict, dirname: str, iceberg_schema: dict) -> None:
+    """Give each field the name the dir's files carry it under. A
+    manifest first written after a RENAME COLUMN (its commit's export
+    failed) must still name its files' columns, or readers NULL them;
+    the rename chain resolves as the engine's own reads do (_dir_frames)."""
+    current = {f["name"] for f in iceberg_schema["fields"]}
+    as_written = {}
+    for w in table._dir_columns(dirname, meta) or []:
+        n = w
+        for r in meta["renames"]:
+            if n in current:
+                break
+            if n == r["from"]:
+                n = r["to"]
+        as_written[n] = w
+    for f in iceberg_schema["fields"]:
+        f["name"] = as_written.get(f["name"], f["name"])
+
+
 def _write_manifest_avro(
     table: Table,
     meta: dict,
@@ -576,8 +669,13 @@ def _write_manifest_avro(
         for f in sorted(files, key=lambda r: r["path"]):
             first_ids[f["path"]] = int(row_base) + off
             off += int(f.get("rows", 0))
+    ids = meta.get("column_ids", {})
+    iceberg_schema = _schema_json(meta, 0, T.StructType.fromJson(json.loads(meta["schema"])))
+    if content == 0 and meta.get("renames"):
+        _name_as_written(table, meta, dirname, iceberg_schema)
+    bounds = _column_bounds(iceberg_schema, files) if content == 0 else [([], [])] * len(files)
     records = []
-    for f in files:
+    for f, (lower, upper) in zip(files, bounds):
         partition: dict[str, object] = {}
         if part_field is not None:
             partition[part_field[0]] = _partition_value(
@@ -596,6 +694,8 @@ def _write_manifest_avro(
                     "partition": partition,
                     "record_count": f["rows"],
                     "file_size_in_bytes": f["bytes"],
+                    "lower_bounds": lower or None,
+                    "upper_bounds": upper or None,
                     **(
                         {"first_row_id": first_ids[f["path"]]}
                         if f["path"] in first_ids
@@ -604,8 +704,6 @@ def _write_manifest_avro(
                 },
             }
         )
-    ids = meta.get("column_ids", {})
-    iceberg_schema = _schema_json(meta, 0, T.StructType.fromJson(json.loads(meta["schema"])))
     specs = _partition_specs(meta, ids)
     sid = min(int(spec_rec.get("spec_id", 0)), len(specs) - 1)
     avro_io.write_container(

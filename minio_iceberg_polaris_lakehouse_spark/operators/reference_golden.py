@@ -21,7 +21,6 @@ a DECIMAL(10,2) aggregate. Fixture rows come from:
 from __future__ import annotations
 
 import os
-import re
 import tempfile
 import threading
 
@@ -1385,8 +1384,8 @@ def ref_decimal_truncate_int_literal(spark: SparkSession, sf_dir: str) -> DataFr
     (warehouse.derived partition filters and the foreign pruner's
     _transform_pred). The table has four 0.50-step partitions; each
     returned row is the row-loss proof, and `pruned` is the plan-time
-    proof: for the natives, the executed plan carries the correctly
-    derived partition-dir filter (10.00 / -10.00 — floor, not
+    proof: for the natives, every file the scan planned lies in the
+    correctly derived partition dir (10.00 / -10.00 — floor, not
     toward-zero, for the negative); for the foreign read, the int-hint
     equality planned strictly fewer files than the full scan. Spec
     parity: Iceberg spec 'Truncate Transform Details' (decimal W is
@@ -1423,11 +1422,8 @@ def ref_decimal_truncate_int_literal(spark: SparkSession, sf_dir: str) -> DataFr
 
     def native(src: str, lit: str, dirval: str) -> DataFrame:
         df = lake.sql(f"SELECT id, amt FROM test_db.dec_trunc_int WHERE amt = {lit}")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # the scan line renders: PartitionFilters: [...,
-        # (_p_truncate50_amt#N = 10.00)] — pin the DERIVED dir value on
-        # the partition column specifically, not the row-filter literal
-        flag = 1 if re.search(rf"_p_truncate50_amt#\d+ = {re.escape(dirval)}\)", plan) else 0
+        files = df.inputFiles()
+        flag = 1 if files and all(f"/_p_truncate50_amt={dirval}/" in f for f in files) else 0
         return df.select(
             F.lit(src).alias("src"),
             F.col("id"),

@@ -311,6 +311,14 @@ def _resolve_naive(d):
     return a.astimezone(_dt.timezone.utc)
 
 
+def _micros(d) -> int:
+    """UTC epoch microseconds of an aware datetime, exactly (no float)."""
+    import datetime as _dt
+
+    delta = d - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+    return (delta.days * 86_400 + delta.seconds) * 1_000_000 + delta.microseconds
+
+
 def _ts_micros(s: str, session_naive: bool = False) -> int | None:
     """Parse a timestamp string (path-encoded partition value or
     predicate literal, ' ' or 'T' separator, optional offset) to UTC
@@ -328,8 +336,36 @@ def _ts_micros(s: str, session_naive: bool = False) -> int | None:
         d = _resolve_naive(d) if session_naive else d.replace(tzinfo=_dt.timezone.utc)
         if d is None:
             return None
-    delta = d - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-    return (delta.days * 86_400 + delta.seconds) * 1_000_000 + delta.microseconds
+    return _micros(d)
+
+
+def _date_days(s: str) -> int | None:
+    import datetime as _dt
+
+    try:
+        return (_dt.date.fromisoformat(s) - _dt.date(1970, 1, 1)).days
+    except ValueError:
+        return None
+
+
+def _object_literal(v, t: str) -> int | None:
+    """Epoch days (date column) or UTC epoch micros (timestamptz column)
+    of a date/datetime OBJECT predicate value, in the frame Spark gives
+    its literal: PySpark turns a naive datetime into a Catalyst literal
+    in the process-local zone (time.mktime), and a date compared with a
+    timestamp column casts in the session zone. None (no pruning) for
+    the mixed and zone-less cases."""
+    import datetime as _dt
+
+    is_dt = isinstance(v, _dt.datetime)
+    if t == "date":
+        return None if is_dt else (v - _dt.date(1970, 1, 1)).days
+    if t != "timestamptz":
+        return None
+    d = v.astimezone(_dt.timezone.utc) if is_dt else _resolve_naive(
+        _dt.datetime(v.year, v.month, v.day)
+    )
+    return None if d is None else _micros(d)
 
 
 def _coerce_vals(pv, v, col_type) -> tuple | None:
@@ -342,6 +378,15 @@ def _coerce_vals(pv, v, col_type) -> tuple | None:
     if isinstance(pv, bool) or isinstance(v, bool):
         return None
     t = str(col_type)
+    if isinstance(v, _dt.date):
+        # a date/datetime OBJECT (the Table.scan API) → the column's
+        # epoch-unit space, in the frame its Catalyst literal takes
+        v = _object_literal(v, t)
+        if v is None:
+            return None
+        if isinstance(pv, str):
+            pv = _ts_micros(pv) if t.startswith("timestamp") else _date_days(pv)
+        return None if not isinstance(pv, int) else (pv, v)
     if t.startswith("decimal"):
         # decimal partition values appear as path strings ('10.00'),
         # Avro-decoded Decimals, or derived-literal Decimals — compare
@@ -433,9 +478,12 @@ def _transform_pred(transform: str, v, col_type) -> tuple[object, bool] | None:
             # SESSION zone, not UTC — resolve it the same way (None on
             # unknown zone / ambiguous wall time → no pruning).
             if d.tzinfo is None:
-                d = _resolve_naive(d) if t == "timestamptz" else d.replace(
-                    tzinfo=_dt.timezone.utc
-                )
+                if t != "timestamptz":
+                    d = d.replace(tzinfo=_dt.timezone.utc)
+                elif isinstance(x, _dt.datetime):
+                    d = x.astimezone(_dt.timezone.utc)  # see _object_literal
+                else:
+                    d = _resolve_naive(d)
                 if d is None:
                     return None
             return d.astimezone(_dt.timezone.utc)
@@ -456,9 +504,7 @@ def _transform_pred(transform: str, v, col_type) -> tuple[object, bool] | None:
             return (d.year - 1970, True)
         # exact micros floor division: int(timestamp()) truncates toward
         # zero, mapping pre-1970 fractional-second instants one hour high
-        delta = d - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-        micros = (delta.days * 86_400 + delta.seconds) * 1_000_000 + delta.microseconds
-        return (micros // 3_600_000_000, True)
+        return (_micros(d) // 3_600_000_000, True)
     m = re.fullmatch(r"bucket\[(\d+)\]", transform)
     if m:
         from minio_iceberg_polaris_lakehouse_spark.theta import iceberg_bucket
@@ -640,14 +686,56 @@ def _manifest_pruner(md: dict, target: dict, eq: dict | None, between: dict | No
     return keep
 
 
-def _file_pruner(md: dict, target: dict, eq: dict | None, between: dict | None):
+def _bloom_positions_py(h: int, bits: int, k: int) -> list[int]:
+    """Driver-side replay of the Kirsch-Mitzenmacher probe positions the
+    index build computes JVM-side (functions/bloom.py arithmetic): h is
+    the signed-64 xxhash64 of the probe literal."""
+    h1 = (h & 0xFFFFFFFFFFFFFFFF) >> 33
+    h2 = (h & 0x7FFFFFFF) | 1
+    return [(h1 + i * h2) % bits for i in range(k)]
+
+
+def _bloom_probes(spark, mdir: str, target: dict, eq: dict | None) -> list[tuple[dict, list[int]]]:
+    """(per-file bitsets, probe positions) for each equality column with
+    a `bloom_idx_<col>.json` index (CALL system.build_bloom_index) in the
+    metadata dir. The literals are hashed by the same JVM xxhash64 the
+    build used, over a LocalRelation, so the probe runs no Spark job."""
+    types = {f["name"]: f["type"] for f in target["fields"]}
+    found = []
+    for col, v in (eq or {}).items():
+        p = os.path.join(mdir, f"bloom_idx_{col}.json")
+        if v is None or col not in types or not fsio.exists(p):
+            continue
+        try:
+            payload = json.loads(fsio.read_text(p))
+        except (OSError, ValueError):
+            continue
+        if payload.get("column") == col:
+            found.append((payload, F.xxhash64(F.lit(v).cast(_spark_type(types[col])))))
+    if not found:
+        return []
+    hashes = local_frame(spark, [(0,)], "x int").select(*[h for _p, h in found]).collect()[0]
+    return [
+        (payload["files"], _bloom_positions_py(h, payload["bits"], payload["k"]))
+        for (payload, _c), h in zip(found, hashes)
+    ]
+
+
+def _file_pruner(
+    md: dict,
+    target: dict,
+    eq: dict | None,
+    between: dict | None,
+    bloom: list[tuple[dict, list[int]]] = (),
+):
     """Build `keep(spec_id, data_file) -> bool` for manifest-level file
     pruning over open metadata: PARTITION VALUES (predicates mapped
-    through the partition transform — hidden partitioning) and, when
-    the manifest carries them, per-column lower/upper BOUNDS.
-    Conservative everywhere — incomparable, absent, or null values keep
-    the file; only a provable exclusion skips. Returns None when there
-    is nothing to prune on."""
+    through the partition transform — hidden partitioning), per-column
+    lower/upper BOUNDS when the manifest carries them, and ``bloom``
+    probes (_bloom_probes; keyed by the file's path under the table
+    location). Conservative everywhere — incomparable, absent, or null
+    values keep the file; only a provable exclusion (or an empty file)
+    skips. Returns None when there is nothing to prune on."""
     if not eq and not between:
         return None
 
@@ -656,6 +744,7 @@ def _file_pruner(md: dict, target: dict, eq: dict | None, between: dict | None):
     type_by_name = {f["name"]: f["type"] for f in target.get("fields", [])}
     type_by_id = {int(f["id"]): f["type"] for f in target.get("fields", [])}
     bucket_ok = _bucket_hash_ok(md)
+    root = re.sub(r"^file:(//)?", "", md.get("location") or "/")
 
     def bound_map(raw) -> dict[int, bytes]:
         if isinstance(raw, dict):
@@ -668,9 +757,21 @@ def _file_pruner(md: dict, target: dict, eq: dict | None, between: dict | None):
             }
         return {}
 
+    def bloom_keeps(path: str) -> bool:
+        key = os.path.normpath(os.path.relpath(re.sub(r"^file:(//)?", "", path), root))
+        for files, positions in bloom:
+            words = files.get(key)  # no entry (written after the build): keep
+            if words is not None and not all(
+                words.get(str(pos >> 6), 0) & (1 << (pos & 63)) for pos in positions
+            ):
+                return False
+        return True
+
     pred_cols = set(eq or ()) | set(between or ())
 
     def keep(spec_id: int, data_file: dict) -> bool:
+        if data_file.get("record_count") == 0:
+            return False
         part = data_file.get("partition")
         if isinstance(part, dict):
             for f in specs.get(spec_id, []):
@@ -699,7 +800,7 @@ def _file_pruner(md: dict, target: dict, eq: dict | None, between: dict | None):
             hi_b = _decode_bound(ubs[fid], t) if fid in ubs else None
             if _bounds_exclude(lo_b, hi_b, col, t, eq, between):
                 return False
-        return True
+        return not bloom or bloom_keeps(data_file["file_path"])
 
     return keep
 
@@ -736,14 +837,17 @@ def read_iceberg_table(
     ``eq`` / ``between`` are OPTIONAL scan predicates (column →
     value / (lo, hi)) used for manifest-level FILE PRUNING only —
     Iceberg scan planning over the open metadata: data files whose
-    identity-transform partition value (and, when the manifest carries
-    them, column bounds) provably exclude the predicate never reach
+    partition value (mapped through its transform), column bounds (when
+    the manifest carries them) or Bloom index (`bloom_idx_<col>.json`
+    beside the metadata file) provably exclude the predicate never reach
     Spark's planner. Pruning is conservative (incomparable or absent
     values keep the file) and NEVER replaces the query's own filter —
     the caller still applies its full WHERE on top, so a missed prune
     costs IO, never correctness."""
-    md = json.loads(fsio.read_text(resolve_metadata_path(location)))
+    md_path = resolve_metadata_path(location)
+    md = json.loads(fsio.read_text(md_path))
     snaps = md.get("snapshots", [])
+    time_travel = snapshot_id is not None or as_of_ms is not None or ref is not None
     schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
     if ref is not None:
         if snapshot_id is not None or as_of_ms is not None:
@@ -765,7 +869,11 @@ def read_iceberg_table(
         cur = md.get("current-snapshot-id")
         snap = next((s for s in snaps if s["snapshot-id"] == cur), None)
 
-    target_sid = snap.get("schema-id", md["current-schema-id"]) if snap else md["current-schema-id"]
+    # a current read projects the CURRENT schema (an ALTER after the last
+    # commit shows at once); time travel projects the snapshot's schema
+    target_sid = md["current-schema-id"]
+    if snap and time_travel:
+        target_sid = snap.get("schema-id", target_sid)
     target = schemas[target_sid]
 
     if row_lineage and _keep_lineage:
@@ -820,113 +928,139 @@ def read_iceberg_table(
     # instant the row filter will match (a UTC assumption under a
     # non-UTC session excludes the file holding the matching row)
     try:
-        _SESSION_TZ.set(spark.conf.get("spark.sql.session.timeZone") or "UTC")
+        zone = spark.conf.get("spark.sql.session.timeZone") or "UTC"
     except Exception:
-        _SESSION_TZ.set("UTC")
-    keep_file = _file_pruner(md, target, eq, between)
-    keep_manifest = _manifest_pruner(md, target, eq, between)
-    for m in manifests:
-        if keep_manifest is not None and not keep_manifest(m):
-            continue
-        _s2, m2, entries = avro_io.read_container(m["manifest_path"])
-        # status 2 = DELETED: the entry records a file REMOVED by this
-        # snapshot lineage — reading it would resurrect deleted rows
-        live = [e for e in entries if e.get("status") != 2]
-        emb = m2.get("schema")
-        if emb is not None:
-            fschema = json.loads(emb.decode() if isinstance(emb, bytes) else emb)
-        else:
-            sid = schema_of_snap.get(m["added_snapshot_id"], target_sid)
-            fschema = schemas[sid]
-        if m["content"] == 1:
-            for e in live:
-                if e["data_file"].get("content") == 2:
-                    ids = e["data_file"].get("equality_ids")
-                    if not ids:
-                        raise ValueError(
-                            f"equality-delete file without equality_ids in "
-                            f"{m['manifest_path']} — cannot apply; silently "
-                            "ignoring it would return deleted rows"
+        zone = "UTC"
+    zone_token = _SESSION_TZ.set(zone)
+    try:
+        bloom = _bloom_probes(spark, os.path.dirname(md_path), target, eq) if eq else ()
+        keep_file = _file_pruner(md, target, eq, between, bloom)
+        keep_manifest = _manifest_pruner(md, target, eq, between)
+        for m in manifests:
+            if keep_manifest is not None and not keep_manifest(m):
+                continue
+            _s2, m2, entries = avro_io.read_container(m["manifest_path"])
+            # status 2 = DELETED: the entry records a file REMOVED by this
+            # snapshot lineage — reading it would resurrect deleted rows
+            live = [e for e in entries if e.get("status") != 2]
+            emb = m2.get("schema")
+            if emb is not None:
+                fschema = json.loads(emb.decode() if isinstance(emb, bytes) else emb)
+            else:
+                sid = schema_of_snap.get(m["added_snapshot_id"], target_sid)
+                fschema = schemas[sid]
+            if m["content"] == 1:
+                for e in live:
+                    if e["data_file"].get("content") == 2:
+                        ids = e["data_file"].get("equality_ids")
+                        if not ids:
+                            raise ValueError(
+                                f"equality-delete file without equality_ids in "
+                                f"{m['manifest_path']} — cannot apply; silently "
+                                "ignoring it would return deleted rows"
+                            )
+                        eq_deletes.append(
+                            {
+                                "path": e["data_file"]["file_path"],
+                                "ids": list(ids),
+                                "seq": _entry_seq(e, m),
+                                "schema": fschema,
+                            }
                         )
-                    eq_deletes.append(
-                        {
-                            "path": e["data_file"]["file_path"],
-                            "ids": list(ids),
-                            "seq": _entry_seq(e, m),
-                            "schema": fschema,
-                        }
+                    elif _is_dv_entry(e["data_file"]):
+                        dv_specs.append(
+                            {
+                                "puffin": e["data_file"]["file_path"],
+                                "offset": int(e["data_file"]["content_offset"]),
+                                "length": int(e["data_file"]["content_size_in_bytes"]),
+                                "referenced": re.sub(
+                                    r"^file:(//)?",
+                                    "",
+                                    e["data_file"]["referenced_data_file"],
+                                ),
+                            }
+                        )
+                    elif (e["data_file"].get("file_format") or "").upper() == "PUFFIN":
+                        # a Puffin delete entry MUST carry fields 143-145;
+                        # falling through to the parquet tombstone path would
+                        # fail confusingly (or worse, silently skip deletes)
+                        raise ValueError(
+                            f"PUFFIN delete entry without referenced_data_file/"
+                            f"content_offset in {m['manifest_path']} — cannot "
+                            "apply; silently ignoring it would return deleted rows"
+                        )
+                    else:
+                        delete_paths.append(e["data_file"]["file_path"])
+                continue
+            skey = json.dumps(fschema, sort_keys=True)
+            # Iceberg v3 row lineage from the AVRO records (what a real v3
+            # writer produces): explicit per-file first_row_id when present,
+            # else the spec's inheritance rule — manifest-list record's
+            # first_row_id plus the running record_count of prior entries in
+            # this manifest that also omitted it.
+            man_base = m.get("first_row_id")
+            inherit_off = 0
+            for e in live:
+                seq = _entry_seq(e, m)
+                # lineage bookkeeping runs for EVERY entry (the inheritance
+                # offset must not shift when a file is pruned); only the
+                # read list is pruned
+                if keep_file is None or keep_file(
+                    int(m.get("partition_spec_id", 0)), e["data_file"]
+                ):
+                    groups.setdefault((skey, seq), (fschema, seq, []))[2].append(
+                        e["data_file"]["file_path"]
                     )
-                elif _is_dv_entry(e["data_file"]):
-                    dv_specs.append(
-                        {
-                            "puffin": e["data_file"]["file_path"],
-                            "offset": int(e["data_file"]["content_offset"]),
-                            "length": int(e["data_file"]["content_size_in_bytes"]),
-                            "referenced": re.sub(
-                                r"^file:(//)?",
-                                "",
-                                e["data_file"]["referenced_data_file"],
-                            ),
-                        }
-                    )
-                elif (e["data_file"].get("file_format") or "").upper() == "PUFFIN":
-                    # a Puffin delete entry MUST carry fields 143-145;
-                    # falling through to the parquet tombstone path would
-                    # fail confusingly (or worse, silently skip deletes)
-                    raise ValueError(
-                        f"PUFFIN delete entry without referenced_data_file/"
-                        f"content_offset in {m['manifest_path']} — cannot "
-                        "apply; silently ignoring it would return deleted rows"
-                    )
-                else:
-                    delete_paths.append(e["data_file"]["file_path"])
-            continue
-        skey = json.dumps(fschema, sort_keys=True)
-        # Iceberg v3 row lineage from the AVRO records (what a real v3
-        # writer produces): explicit per-file first_row_id when present,
-        # else the spec's inheritance rule — manifest-list record's
-        # first_row_id plus the running record_count of prior entries in
-        # this manifest that also omitted it.
-        man_base = m.get("first_row_id")
-        inherit_off = 0
-        for e in live:
-            seq = _entry_seq(e, m)
-            # lineage bookkeeping runs for EVERY entry (the inheritance
-            # offset must not shift when a file is pruned); only the
-            # read list is pruned
-            if keep_file is None or keep_file(
-                int(m.get("partition_spec_id", 0)), e["data_file"]
-            ):
-                groups.setdefault((skey, seq), (fschema, seq, []))[2].append(
-                    e["data_file"]["file_path"]
-                )
-            if row_lineage:
-                frid = e["data_file"].get("first_row_id")
-                if frid is None and e.get("first_row_id") is not None:
-                    frid = e["first_row_id"]  # entry-level placement
-                path_norm = re.sub(r"^file:(//)?", "", e["data_file"]["file_path"])
-                if frid is not None:
-                    avro_first_rows[path_norm] = int(frid)
-                elif man_base is not None:
-                    avro_first_rows[path_norm] = int(man_base) + inherit_off
-                    inherit_off += int(e["data_file"].get("record_count") or 0)
+                if row_lineage:
+                    frid = e["data_file"].get("first_row_id")
+                    if frid is None and e.get("first_row_id") is not None:
+                        frid = e["first_row_id"]  # entry-level placement
+                    path_norm = re.sub(r"^file:(//)?", "", e["data_file"]["file_path"])
+                    if frid is not None:
+                        avro_first_rows[path_norm] = int(frid)
+                    elif man_base is not None:
+                        avro_first_rows[path_norm] = int(man_base) + inherit_off
+                        inherit_off += int(e["data_file"].get("record_count") or 0)
+    finally:
+        _SESSION_TZ.reset(zone_token)
 
     if not groups:
         return _empty()
 
-    meta_cols = [
-        F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "").alias("__file"),
-        F.col("_metadata.row_index").alias("__pos"),
-    ]
+    # (file, position) identities feed delete application and lineage;
+    # data sequence numbers feed the equality-delete rule and lineage.
+    # A read that needs neither scans each schema generation once, and
+    # one whose files carry the target schema as-is needs no projection.
+    need_pos = bool(delete_paths or dv_specs) or _keep_lineage or row_lineage
+    need_seq = bool(eq_deletes) or _keep_seq or row_lineage
+    if not need_seq:
+        by_schema: dict[str, tuple[dict, int, list[str]]] = {}
+        for (skey, _seq), (fschema, _s, files) in groups.items():
+            by_schema.setdefault(skey, (fschema, 0, []))[2].extend(files)
+        groups = by_schema
+    meta_cols = (
+        [
+            F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "").alias("__file"),
+            F.col("_metadata.row_index").alias("__pos"),
+        ]
+        if need_pos
+        else []
+    )
+    target_fields = [(f["id"], f["name"], f["type"]) for f in target["fields"]]
     parts: list[DataFrame] = []
     for file_schema, seq, files in groups.values():
         if not files:
             continue
         base_struct = _struct(file_schema)
-        cols = _align_cols(file_schema, target)
+        as_is = (
+            not row_lineage  # lineage reads add _lin_* columns to the file schema
+            and [(f["id"], f["name"], f["type"]) for f in file_schema["fields"]] == target_fields
+        )
+        cols = ["*"] if as_is else _align_cols(file_schema, target)
         if not row_lineage:
             df = spark.read.schema(base_struct).parquet(*files)
-            parts.append(df.select(*cols, *meta_cols, F.lit(seq).alias("__seq")))
+            extra = meta_cols + ([F.lit(seq).alias("__seq")] if need_seq else [])
+            parts.append(df.select(*cols, *extra) if extra or not as_is else df)
             continue
         # footer sniff per FILE (metadata-only, handle closed): rewritten
         # files carry materialized _lin_* columns the schema JSON never
@@ -1038,7 +1172,9 @@ def read_iceberg_table(
             ),
         )
         return out
-    return out.drop("__file", "__pos", "__seq")
+    return out.drop(*[c for c in ("__file", "__pos", "__seq") if c in out.columns]) if (
+        need_pos or need_seq
+    ) else out
 
 
 def incremental_read_iceberg_table(

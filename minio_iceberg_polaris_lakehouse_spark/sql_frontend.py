@@ -1605,7 +1605,7 @@ class LakehouseSQL:
         TOP-LEVEL conjuncts to a SINGLE table, so the view can be backed
         by Table.scan() and manifest-level file skipping fires for plain
         SQL — `SELECT … FROM t WHERE id BETWEEN 5 AND 9 AND v = 'x'`
-        plans only the files whose footer bounds can match.
+        plans only the files whose manifest bounds can match.
 
         Soundness over coverage: hints only fire when the statement shape
         GUARANTEES the predicate is a required conjunct of that one
@@ -3525,8 +3525,8 @@ class LakehouseSQL:
 
     def _call_rewrite_manifests(self, m: re.Match) -> DataFrame:
         """CALL c.system.rewrite_manifests(table => 't') — consolidate
-        per-dir manifest sidecars into a few bundle files so scan
-        planning reads O(bundles) metadata, not O(dirs) (Iceberg's
+        per-dir manifest sidecars into a few bundle files so listing a
+        snapshot's files reads O(bundles) metadata, not O(dirs) (Iceberg's
         small-manifest compaction; warehouse.Table.rewrite_manifests)."""
         tab = self._existing_table(m.group(1).strip("'\""))
         rewritten, added = tab.rewrite_manifests()

@@ -1,8 +1,7 @@
-"""Time-zone name equivalence shared by the three session-zone guards
-(warehouse scan pruning, the Iceberg export's partition-value gate, and
-the foreign reader's literal resolution) — one alias list, so 'Etc/UTC'
-vs 'UTC' never silently disables pruning in one module while another
-treats them as equal."""
+"""Time-zone name equivalence shared by the session-zone guards (the
+Iceberg export's partition-value gate and the reader's literal
+resolution) — one alias list, so 'Etc/UTC' vs 'UTC' never silently
+disables pruning in one module while another treats them as equal."""
 
 from __future__ import annotations
 
@@ -13,13 +12,3 @@ def is_utcish(tz) -> bool:
     """True when the zone NAME denotes UTC (None is NOT utcish here —
     callers that treat 'unset' as zone-free check None themselves)."""
     return tz in UTC_ALIASES
-
-
-def zones_equivalent(a, b) -> bool:
-    """Same-zone check for pruning guards: exact name match, or both
-    names being UTC aliases. Distinct non-UTC names are NOT resolved
-    (e.g. 'Asia/Tokyo' vs 'GMT+09:00' stay inequivalent — conservative:
-    a guard declines to prune, never prunes wrongly)."""
-    if a == b:
-        return a is not None
-    return is_utcish(a) and is_utcish(b)

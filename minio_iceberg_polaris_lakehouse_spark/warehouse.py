@@ -54,6 +54,9 @@ from pyspark.sql import types as T
 
 from minio_iceberg_polaris_lakehouse_spark import fsio
 from minio_iceberg_polaris_lakehouse_spark.session import local_frame
+from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (  # noqa: F401
+    _bloom_positions_py,
+)
 
 META_FILE = "_meta.json"
 SNAP_FILE = "_snapshots.json"
@@ -144,14 +147,6 @@ class PartitionSpec:
     # (parameterized transforms encode their width in the name, Iceberg's
     # bucket[N] / truncate[W])
     transform: str = "identity"
-    # session zone a TEMPORAL transform's hive dirs were derived in (the
-    # engine's day/month/hour dir values come from session-zone calendar
-    # extraction over timestamptz columns, unlike the UTC-defined open
-    # export) — recorded per written dir so scan-time partition-filter
-    # derivation can detect a zone change and decline to prune instead
-    # of excluding the dir that holds the matching row. None: zone-free
-    # (dates, non-temporal transforms) or legacy dirs (same-zone assumed)
-    tz: str | None = None
 
     def column(self) -> str | None:
         return None if self.source is None else f"_p_{self.transform}_{self.source}"
@@ -792,19 +787,6 @@ def _tzinfo_of(tz: str):
         )
 
 
-def _session_tzinfo():
-    """tzinfo of the active session's spark.sql.session.timeZone — the
-    frame Spark gives naive TIMESTAMP literals."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession() or SparkSession._instantiatedSession
-    if spark is None:
-        import datetime
-
-        return datetime.timezone.utc
-    return _tzinfo_of(spark.conf.get("spark.sql.session.timeZone"))
-
-
 def _json_safe_bound(v: Any) -> Any:
     """JSON-serializable form of a parquet min/max statistic. Dates and
     timestamps become ISO strings, Decimals strings; binary (no total
@@ -819,6 +801,21 @@ def _json_safe_bound(v: Any) -> Any:
     if isinstance(v, decimal.Decimal):
         return str(v)
     return None
+
+
+def _stat_min_max(st) -> tuple:
+    """(min, max) of a column chunk's statistics. pyarrow cannot convert
+    those of a DECIMAL stored as INT32/INT64 (how Spark writes precision
+    up to 18); they rescale from the raw integers."""
+    import decimal
+
+    try:
+        return st.min, st.max
+    except NotImplementedError:  # pyarrow's ArrowNotImplementedError
+        lt = json.loads(st.logical_type.to_json())
+        if lt.get("Type") != "Decimal" or st.physical_type not in ("INT32", "INT64"):
+            raise
+        return tuple(decimal.Decimal(v).scaleb(-int(lt["scale"])) for v in (st.min_raw, st.max_raw))
 
 
 def _file_column_bounds(pf) -> dict[str, list]:
@@ -845,7 +842,7 @@ def _file_column_bounds(pf) -> dict[str, list]:
                 # would make Decimal/date merges lexicographic
                 # (min('10.5','9.5') == '10.5': an inverted lower bound
                 # that causes wrong skips, i.e. silent row loss)
-                lo, hi = st.min, st.max
+                lo, hi = _stat_min_max(st)
                 if _json_safe_bound(lo) is None or _json_safe_bound(hi) is None:
                     raise ValueError("unorderable bound type")
             except Exception:  # pyarrow raises ArrowNotImplementedError for
@@ -941,130 +938,8 @@ def _load_dir_stats(table_path: str, dirname: str, meta: dict) -> list[dict]:
     return stats
 
 
-def _bound_key(dtype: T.DataType, v: Any):
-    """Comparable key for a predicate value / stored file bound under the
-    column's Spark type. Returns None when no safe comparison exists —
-    callers must then keep the file (conservative: a missing key can only
-    cost IO, never rows)."""
-    import datetime
-    import decimal
-
-    if v is None:
-        return None
-    try:
-        if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            return int(v)
-        if isinstance(dtype, (T.FloatType, T.DoubleType)):
-            return float(v)
-        if isinstance(dtype, T.DecimalType):
-            return decimal.Decimal(str(v))
-        if isinstance(dtype, T.StringType):
-            return str(v)
-        if isinstance(dtype, T.BooleanType):
-            return bool(v)
-        if isinstance(dtype, T.DateType):
-            if isinstance(v, datetime.datetime):
-                return v.date()
-            if isinstance(v, datetime.date):
-                return v
-            return datetime.date.fromisoformat(str(v)[:10])
-        if isinstance(dtype, T.TimestampType):
-            # Everything compares in ONE frame (UTC wall clock) — footer
-            # stats carry tz-aware UTC instants; merely stripping tzinfo
-            # from them while leaving naive predicate values as-is would
-            # compare local against UTC wall clock and wrongly skip files
-            # (silent row loss) whenever the relevant zone isn't UTC.
-            # Naive values take the frame their ROW FILTER will use
-            # (skipping must never be stricter than the filter):
-            # - naive datetime/date OBJECTS (Table.scan API) become
-            #   Catalyst literals in the JVM's default = process-local
-            #   zone → astimezone() with no argument;
-            # - naive STRINGS (SQL literals via scan hints) are cast by
-            #   Spark in spark.sql.session.timeZone.
-            from_string = not isinstance(v, (datetime.date, datetime.datetime))
-            if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
-                v = datetime.datetime(v.year, v.month, v.day)
-            elif not isinstance(v, datetime.datetime):
-                v = datetime.datetime.fromisoformat(str(v))
-            if v.tzinfo is None:
-                v = (
-                    v.replace(tzinfo=_session_tzinfo())
-                    if from_string
-                    else v.astimezone()
-                )
-            return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-    except (ValueError, TypeError, ArithmeticError):
-        return None
-    return None
-
-
 BLOOM_IDX_BITS = 1 << 17  # 16 KiB of bits per file
 BLOOM_IDX_K = 4
-
-
-def _bloom_positions_py(h: int, bits: int, k: int) -> list[int]:
-    """Driver-side replay of the Kirsch-Mitzenmacher probe positions the
-    index build computes JVM-side (functions/bloom.py arithmetic): h is
-    the signed-64 xxhash64 of the probe literal."""
-    h1 = (h & 0xFFFFFFFFFFFFFFFF) >> 33
-    h2 = (h & 0x7FFFFFFF) | 1
-    return [(h1 + i * h2) % bits for i in range(k)]
-
-
-def _bloom_file_survives(idx_files: dict, key: str, positions: list[int]) -> bool:
-    """False only when the file's bitset PROVES the probed value absent.
-    Files without an index entry (written after the build) always
-    survive — the index can thin, never wrongly drop."""
-    entry = idx_files.get(key)
-    if entry is None:
-        return True
-    for pos in positions:
-        w = entry.get(str(pos >> 6), 0)
-        if not (w & (1 << (pos & 63))):
-            return False
-    return True
-
-
-def _file_survives(
-    bounds: dict[str, list] | None,
-    schema: T.StructType,
-    eq: dict[str, Any] | None,
-    between: dict[str, tuple] | None,
-) -> bool:
-    """Manifest-level file skipping (Iceberg lower_bounds/upper_bounds
-    pruning, reference README.md:138-139 "file skipping via statistics"):
-    False only when the footer bounds PROVE no row can match. Parquet
-    min/max exclude nulls, and eq/between predicates drop nulls too, so
-    skipping on non-null ranges is exact."""
-    if not bounds:
-        return True
-    names = set(schema.fieldNames())
-    for col, v in (eq or {}).items():
-        if col not in bounds or col not in names:
-            continue
-        dt = schema[col].dataType
-        key, lo, hi = _bound_key(dt, v), _bound_key(dt, bounds[col][0]), _bound_key(dt, bounds[col][1])
-        if key is None or lo is None or hi is None:
-            continue
-        try:
-            if key < lo or key > hi:
-                return False
-        except TypeError:
-            continue
-    for col, (plo, phi) in (between or {}).items():
-        if col not in bounds or col not in names:
-            continue
-        dt = schema[col].dataType
-        klo, khi = _bound_key(dt, plo), _bound_key(dt, phi)
-        lo, hi = _bound_key(dt, bounds[col][0]), _bound_key(dt, bounds[col][1])
-        if lo is None or hi is None:
-            continue
-        try:
-            if (khi is not None and khi < lo) or (klo is not None and klo > hi):
-                return False
-        except TypeError:
-            continue
-    return True
 
 
 def _with_null_metadata_columns(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -1081,8 +956,10 @@ def _with_null_metadata_columns(df: DataFrame, cols: list[str]) -> DataFrame:
 
 def _atomic_write_json(path: str, obj: dict) -> None:
     """Commit = write-temp + rename: the atomic metadata-pointer swap the
-    table format's ACID guarantee rests on (reference README.md:124)."""
-    fsio.write_bytes_atomic(path, json.dumps(obj).encode(), uuid.uuid4().hex)
+    table format's ACID guarantee rests on (reference README.md:124).
+    Compact separators, as Iceberg writes its metadata JSON."""
+    body = json.dumps(obj, separators=(",", ":")).encode()
+    fsio.write_bytes_atomic(path, body, uuid.uuid4().hex)
 
 
 @dataclass
@@ -1497,9 +1374,7 @@ class Table:
             p = meta["partition"]
             return PartitionSpec(p.get("source"), p.get("transform", "identity")), 0
         return (
-            PartitionSpec(
-                rec.get("source"), rec.get("transform", "identity"), tz=rec.get("tz")
-            ),
+            PartitionSpec(rec.get("source"), rec.get("transform", "identity")),
             int(rec.get("spec_id", 0)),
         )
 
@@ -1548,7 +1423,6 @@ class Table:
         self,
         dirs: list[str],
         schema: T.StructType | None = None,
-        file_subsets: dict[str, list[str]] | None = None,
         lineage: bool = False,
     ) -> list[tuple[PartitionSpec, int, DataFrame]]:
         """One scan per commit directory — commit dirs are each internally
@@ -1604,18 +1478,6 @@ class Table:
                 )
             path = os.path.join(self.path, d)
 
-            def read_dir(read_schema: T.StructType, d=d, path=path) -> DataFrame:
-                # explicit surviving-file list from bounds pruning, read
-                # with basePath so hive partition columns still resolve
-                sub = (file_subsets or {}).get(d)
-                if sub is not None:
-                    return (
-                        self.spark.read.schema(read_schema)
-                        .option("basePath", path)
-                        .parquet(*[os.path.join(path, rel) for rel in sub])
-                    )
-                return self.spark.read.schema(read_schema).parquet(path)
-
             alias: dict[str, str] = {}
             if renames:
                 written = self._dir_columns(d, meta) or []
@@ -1630,12 +1492,12 @@ class Table:
                         for f in phys.fields
                     ]
                 )
-                df = read_dir(read_schema)
+                df = self.spark.read.schema(read_schema).parquet(path)
                 df = df.select(
                     *[F.col(inv.get(f.name, f.name)).alias(f.name) for f in phys.fields]
                 )
             else:
-                df = read_dir(phys)
+                df = self.spark.read.schema(phys).parquet(path)
             if defaults:
                 # Iceberg v3 initial-defaults: a column declared with a
                 # DEFAULT reads the default — not NULL — from dirs whose
@@ -2052,243 +1914,75 @@ class Table:
         return out
 
     def scan(self, eq: dict[str, Any] | None = None, between: dict[str, tuple] | None = None) -> DataFrame:
-        """Partition-pruned scan: filters on the *source* column get the
-        derived partition-directory predicate attached automatically — the
-        engine-side half of Iceberg's hidden partitioning ("queries filter
-        the raw column and partitions prune", reference README.md:126-127).
+        """Pruned read of the current snapshot: ``eq={"created_at":
+        "2024-11-25"}`` / ``between={"ts": (lo, hi)}`` (either end may be
+        None) filter the rows, and the one scan planner —
+        `read_iceberg_table` over the table's published Iceberg metadata
+        — plans only the files whose partition values (mapped through
+        the transform each file was written under: hidden partitioning,
+        correct across spec evolution), column bounds or Bloom index can
+        match. Pruning saves IO only; the filters apply on top."""
+        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+            read_iceberg_table,
+        )
 
-        eq={"created_at": "2024-11-25"} / between={"ts": (lo, hi)}.
-
-        Pruning is applied PER DIRECTORY under the spec each dir was
-        written with, so it stays correct across a partition-spec
-        evolution (old dirs prune by the old transform, new dirs by the
-        new one — files written before the evolution are simply not
-        prunable by the new column, exactly Iceberg's semantics)."""
         schema = self.schema()
-        cols = [f.name for f in schema.fields]
-        snap = self._resolve()
-        dirs = snap["manifest"]
-        del_dirs = snap.get("delete_dirs", [])
-        if not dirs:
-            return local_frame(self.spark, [], schema).select(*cols)
-
-        # ---- manifest-level FILE SKIPPING from footer bounds (Iceberg's
-        # "file skipping via statistics", README.md:138-139): drop whole
-        # files — or whole commit dirs — whose [min,max] provably exclude
-        # the predicate, before Spark plans a single split. Metadata-only;
-        # at 100 TB this is the difference between reading a table and
-        # reading the handful of files a selective predicate touches.
-        # Disabled under column renames (bounds are keyed by written
-        # physical names; conservative, costs IO only).
-        meta = self._meta()
-        subsets: dict[str, list[str]] = {}
-        if (eq or between) and not meta.get("renames"):
-            # per-file Bloom INDEX pruning for equality probes on
-            # high-cardinality columns whose [min,max] ranges overlap
-            # across files (where bounds alone can't skip anything):
-            # CALL system.build_bloom_index wrote one immutable bitset
-            # per data file (Iceberg stores the same kind of secondary
-            # stats as Puffin blobs); a probe costs k bit tests per file,
-            # all metadata-side.
-            bloom_probes = self._bloom_probes(eq, schema)
-            kept_dirs = []
-            for d in dirs:
-                fstats = _load_dir_stats(self.path, d, meta)
-                if not fstats:
-                    kept_dirs.append(d)
-                    continue
-                keep = [
-                    fs["path"]
-                    for fs in fstats
-                    if fs["rows"] > 0
-                    and _file_survives(fs.get("bounds"), schema, eq, between)
-                    and all(
-                        _bloom_file_survives(
-                            fd, os.path.normpath(os.path.join(d, fs["path"])), ps
-                        )
-                        for fd, ps in bloom_probes
-                    )
+        df = read_iceberg_table(
+            self.spark, self._published_metadata(schema), eq=eq, between=between
+        )
+        # Iceberg has no 8/16-bit integers: restore the table's own types
+        narrow = {
+            f.name: f.dataType
+            for f in schema.fields
+            if isinstance(f.dataType, (T.ByteType, T.ShortType))
+        }
+        if narrow:
+            df = df.select(
+                *[
+                    F.col(c).cast(narrow[c]).alias(c) if c in narrow else F.col(c)
+                    for c in schema.fieldNames()
                 ]
-                if not keep:
-                    continue
-                if len(keep) < len(fstats):
-                    subsets[d] = keep
-                kept_dirs.append(d)
-            dirs = kept_dirs
-            if not dirs:
-                return local_frame(self.spark, [], schema).select(*cols)
+            )
+        conds = [F.col(c) == v for c, v in (eq or {}).items()]
+        for c, (lo, hi) in (between or {}).items():
+            conds += ([F.col(c) >= lo] if lo is not None else []) + (
+                [F.col(c) <= hi] if hi is not None else []
+            )
+        if conds:
+            cond = conds[0]
+            for c in conds[1:]:
+                cond = cond & c
+            df = df.filter(cond)
+        return df
 
-        def derived(lit_val, spec, monotone_only=False):
-            """Partition-column literal for a predicate on the SOURCE
-            column — the engine half of hidden partitioning. With
-            ``monotone_only`` (range pruning) order-breaking transforms
-            (bucket) return None; hour's yyyy-MM-dd-HH and truncate's
-            prefix/floor are monotone, so ranges map through them."""
-            tr = spec.transform
-            if tr == "identity":
-                return F.lit(lit_val)
-            if tr in ("day", "month", "year", "hour"):
-                src_dt = (
-                    schema[spec.source].dataType
-                    if spec.source in schema.fieldNames()
-                    else None
-                )
-                if isinstance(src_dt, T.TimestampType) and spec.tz is not None:
-                    # the dir's calendar values were extracted in the
-                    # WRITE session's zone; deriving the literal in a
-                    # DIFFERENT current zone lands on a different dir
-                    # value near day/hour boundaries — decline to prune
-                    # (the row filter still applies; costs IO, never
-                    # rows). Name comparison goes through the shared
-                    # alias table so 'Etc/UTC' vs 'UTC' still prunes.
-                    from minio_iceberg_polaris_lakehouse_spark.tzones import (
-                        zones_equivalent,
-                    )
+    def _published_metadata(self, schema: T.StructType) -> str:
+        """Path of the published `vN.metadata.json`. When its current
+        snapshot is not the table's head, or its current columns are not
+        ``schema``'s (an export after a commit or ALTER failed), the
+        table is re-exported under the commit lock first: a scan planned
+        from the published metadata must never serve an older state."""
+        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+            resolve_metadata_path,
+        )
 
-                    try:
-                        cur = self.spark.conf.get("spark.sql.session.timeZone") or "UTC"
-                    except Exception:
-                        cur = None
-                    if not zones_equivalent(cur, spec.tz):
-                        return None
-            if tr == "day":
-                return F.to_date(F.lit(lit_val))
-            if tr == "month":
-                return F.date_format(F.lit(lit_val), "yyyy-MM")
-            if tr == "year":
-                return F.year(F.lit(lit_val))
-            if tr == "hour":
-                return F.date_format(F.lit(lit_val), "yyyy-MM-dd-HH")
-            n = spec.param()
-            if n is not None and tr.startswith("truncate"):
-                if isinstance(lit_val, str):
-                    return F.lit(lit_val[:n])
-                import decimal as _decimal
+        head = self.current_snapshot_id()
+        try:
+            path = resolve_metadata_path(self.path)
+            md = json.loads(fsio.read_text(path))
+            (cur,) = [s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"]]
+            if md.get("current-snapshot-id") == (-1 if head is None else head) and [
+                f["name"] for f in cur["fields"]
+            ] == schema.fieldNames():
+                return path
+        except FileNotFoundError:
+            pass
+        from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
 
-                # The COLUMN type decides the partition space: an integer
-                # SQL literal on a DECIMAL truncate column (WHERE amt = 10,
-                # parsed to int) must floor in UNSCALED-width space below —
-                # the int fast path would derive 10 - 10 % 50 = 0 and emit
-                # a partition filter matching no directory (silent row
-                # loss now that the write path uses unscaled-width dirs).
-                _src_dt = (
-                    schema[spec.source].dataType
-                    if spec.source in schema.fieldNames()
-                    else None
-                )
-                if (
-                    isinstance(lit_val, int)
-                    and not isinstance(lit_val, bool)
-                    and not isinstance(_src_dt, T.DecimalType)
-                ):
-                    return F.lit(lit_val - (lit_val % n))
-
-                if isinstance(lit_val, (_decimal.Decimal, float, int)) and not isinstance(
-                    lit_val, bool
-                ):
-                    dt = _src_dt
-                    if isinstance(dt, T.DecimalType):
-                        # spec: width applies to the UNSCALED value;
-                        # floor semantics (Python Decimal % keeps the
-                        # dividend's sign — normalize to pmod). Floats
-                        # (SQL-hint literals) convert via str — exact
-                        # for literals that came from decimal text.
-                        dv = (
-                            lit_val
-                            if isinstance(lit_val, _decimal.Decimal)
-                            else _decimal.Decimal(str(lit_val))
-                        )
-                        w = _decimal.Decimal(n).scaleb(-dt.scale)
-                        r = dv % w
-                        if r < 0:
-                            r += w
-                        return F.lit(dv - r).cast(dt)
-                return None
-            if n is not None and tr.startswith("bucket") and not monotone_only:
-                dt = schema[spec.source].dataType if spec.source in schema.fieldNames() else None
-                if self._bucket_spec_hash(meta):
-                    # spec-hash tables: the bucket of a LITERAL computes
-                    # driver-side (theta.iceberg_bucket), no UDF in the plan
-                    from minio_iceberg_polaris_lakehouse_spark.theta import (
-                        iceberg_bucket,
-                    )
-
-                    bucket_lit = lit_val
-                    if isinstance(dt, T.TimestampType) and isinstance(lit_val, str):
-                        # resolve the string to the instant Spark's row
-                        # filter will match: a naive literal reads in the
-                        # SESSION zone (iceberg_bucket's own fallback
-                        # assumes UTC → wrong bucket → row loss)
-                        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-                            _SESSION_TZ,
-                            _ts_micros,
-                        )
-
-                        try:
-                            tzname = (
-                                self.spark.conf.get("spark.sql.session.timeZone")
-                                or "UTC"
-                            )
-                        except Exception:
-                            tzname = "UTC"
-                        tok = _SESSION_TZ.set(tzname)
-                        try:
-                            bucket_lit = _ts_micros(lit_val, session_naive=True)
-                        finally:
-                            _SESSION_TZ.reset(tok)
-                        if bucket_lit is None:
-                            return None
-                    b = iceberg_bucket(
-                        bucket_lit, n, dt.simpleString() if dt is not None else "string"
-                    )
-                    return None if b is None else F.lit(b)
-                lit = F.lit(lit_val).cast(dt) if dt is not None else F.lit(lit_val)
-                # literal hashed exactly as the writer hashed the column —
-                # Catalyst folds this to a constant partition filter
-                return F.pmod(F.hash(lit), F.lit(n))
-            return None
-
-        eq_recs = snap.get("eq_deletes", [])
-        seqs = self._dir_seqs() if eq_recs else {}
-        parts = []
-        for (spec, _sid, df), dname in zip(self._dir_frames(dirs, file_subsets=subsets), dirs):
-            for col, v in (eq or {}).items():
-                df = df.filter(F.col(col) == v)
-                if spec.source == col and spec.column() in df.columns:
-                    dv = derived(v, spec)
-                    if dv is not None:
-                        df = df.filter(F.col(spec.column()) == dv)
-            for col, (lo, hi) in (between or {}).items():
-                # open-ended ranges: (lo, None) = `col >= lo`, (None, hi)
-                # = `col <= hi` — same pruning machinery, one-sided
-                if lo is not None:
-                    df = df.filter(F.col(col) >= lo)
-                if hi is not None:
-                    df = df.filter(F.col(col) <= hi)
-                if spec.source == col and spec.column() in df.columns:
-                    dlo = None if lo is None else derived(lo, spec, monotone_only=True)
-                    dhi = None if hi is None else derived(hi, spec, monotone_only=True)
-                    if dlo is not None:
-                        df = df.filter(F.col(spec.column()) >= dlo)
-                    if dhi is not None:
-                        df = df.filter(F.col(spec.column()) <= dhi)
-            extra = []
-            if del_dirs:
-                extra += [
-                    F.col("_metadata.file_path").alias("_file"),
-                    F.col("_metadata.row_index").alias("_pos"),
-                ]
-            if eq_recs:
-                extra.append(F.lit(int(seqs.get(dname, 0))).cast("long").alias("_seq"))
-            parts.append(df.select(*cols, *extra))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if del_dirs:
-            out = self._apply_deletes(out, del_dirs, cols + (["_seq"] if eq_recs else []))
-        if eq_recs:
-            out = self._apply_eq_deletes(out, eq_recs, cols)
-        return out
+        lock, token = self._acquire_commit_lock()
+        try:
+            return write_iceberg_metadata(self)
+        finally:
+            self._release_commit_lock(lock, token)
 
     def incremental_scan(
         self, from_version: int, to_version: int | None = None
@@ -2607,8 +2301,9 @@ class Table:
             and isinstance(schema[spec.source].dataType, T.TimestampType)
         ):
             # temporal dirs over timestamptz derive in the SESSION zone —
-            # record it so scans under a different zone decline to prune
-            # (PartitionSpec.tz) instead of silently losing rows
+            # record it so the export publishes no partition value for a
+            # non-UTC dir (no single spec value is right for its files)
+            # instead of one a pruning reader would lose rows on
             try:
                 spec_rec["tz"] = (
                     self.spark.conf.get("spark.sql.session.timeZone") or "UTC"
@@ -2656,14 +2351,15 @@ class Table:
         an empty list clears the identity. The open-metadata export
         mirrors the declaration as identifier-field-ids in the schema
         JSON so foreign engines see the same contract."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        names = set(schema.fieldNames())
-        missing = [c for c in columns if c not in names]
-        if missing:
-            raise WarehouseError(f"identifier fields not in schema: {missing}")
-        meta["identifier_fields"] = list(columns)
-        self._write_meta_and_export(meta)
+
+        def change(meta: dict) -> None:
+            names = set(T.StructType.fromJson(json.loads(meta["schema"])).fieldNames())
+            missing = [c for c in columns if c not in names]
+            if missing:
+                raise WarehouseError(f"identifier fields not in schema: {missing}")
+            meta["identifier_fields"] = list(columns)
+
+        self._alter(change)
 
     def identifier_fields(self) -> list[str]:
         return list(self._meta().get("identifier_fields", []))
@@ -3579,6 +3275,26 @@ class Table:
         return self._commit_replace("merge", [p], summary, parent, branch=branch)
 
     # ---------------- schema evolution (D10) ----------------
+    def _alter(self, change) -> None:
+        """Apply a metadata-only change — ``change(meta)`` edits the table
+        meta in place, raising WarehouseError to refuse — under the commit
+        lock, so a concurrent commit cannot undo it, and publish it in the
+        open Iceberg metadata at once."""
+        lock, token = self._acquire_commit_lock()
+        try:
+            meta = self._meta()
+            change(meta)
+            self._write_meta_and_export(meta)
+        finally:
+            self._release_commit_lock(lock, token)
+
+    def _check_default(self, default: str, dtype: str) -> str:
+        lit = default.strip()
+        val = self.spark.sql(f"SELECT CAST({lit} AS {dtype}) AS v").collect()[0].v
+        if val is None and lit.upper() != "NULL":
+            raise WarehouseError(f"DEFAULT {default} is not a valid {dtype} literal")
+        return lit
+
     def add_column(self, name: str, dtype: str, default: str | None = None) -> None:
         """Metadata-only ADD COLUMN with NULL backfill on read
         (reference README.md:132-133) — no data files rewritten.
@@ -3592,40 +3308,38 @@ class Table:
         values, including explicit NULLs — the default applies by the
         column's absence from a file, the name-based analogue of
         Iceberg's absent-field-id rule."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name in [f.name for f in schema.fields]:
-            raise WarehouseError(f"column {name} exists")
         # fromDDL accepts any case and parameterized types (DECIMAL(10,2))
-        schema = schema.add(T.StructType.fromDDL(f"{name} {dtype}").fields[0])
-        if default is not None:
-            lit = default.strip()
-            val = self.spark.sql(f"SELECT CAST({lit} AS {dtype}) AS v").collect()[0].v
-            if val is None and lit.upper() != "NULL":
-                raise WarehouseError(
-                    f"DEFAULT {default} is not a valid {dtype} literal"
-                )
-            if lit.upper() != "NULL":
+        field = T.StructType.fromDDL(f"{name} {dtype}").fields[0]
+        lit = None if default is None else self._check_default(default, dtype)
+
+        def change(meta: dict) -> None:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name in schema.fieldNames():
+                raise WarehouseError(f"column {name} exists")
+            if lit is not None and lit.upper() != "NULL":
                 meta.setdefault("column_defaults", {})[name] = lit
-        meta["schema"] = schema.json()
-        meta["last_column_id"] = int(meta.get("last_column_id", len(schema.fields) - 1)) + 1
-        meta.setdefault("column_ids", {})[name] = meta["last_column_id"]
-        self._write_meta(meta)
+            meta["schema"] = schema.add(field).json()
+            meta["last_column_id"] = int(meta.get("last_column_id", len(schema.fields) - 1)) + 1
+            meta.setdefault("column_ids", {})[name] = meta["last_column_id"]
+
+        self._alter(change)
 
     def drop_column(self, name: str) -> None:
         """Metadata-only DROP COLUMN — data files are untouched; reads
         simply stop projecting the column (reference README.md:132-133:
         add/drop/rename without rewriting files)."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name not in schema.fieldNames():
-            raise WarehouseError(f"column {name} does not exist")
-        if meta["partition"].get("source") == name:
-            raise WarehouseError(f"column {name} is the partition source")
-        meta["schema"] = T.StructType([f for f in schema.fields if f.name != name]).json()
-        meta.get("column_defaults", {}).pop(name, None)
-        meta.get("column_write_defaults", {}).pop(name, None)
-        self._write_meta(meta)
+
+        def change(meta: dict) -> None:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name not in schema.fieldNames():
+                raise WarehouseError(f"column {name} does not exist")
+            if meta["partition"].get("source") == name:
+                raise WarehouseError(f"column {name} is the partition source")
+            meta["schema"] = T.StructType([f for f in schema.fields if f.name != name]).json()
+            meta.get("column_defaults", {}).pop(name, None)
+            meta.get("column_write_defaults", {}).pop(name, None)
+
+        self._alter(change)
 
     def set_column_default(self, name: str, default: str | None) -> None:
         """ALTER COLUMN … SET DEFAULT <literal> / DROP DEFAULT (Iceberg
@@ -3635,21 +3349,18 @@ class Table:
         changing the default never rewrites history. DROP DEFAULT is an
         explicit 'fill NULL' marker that overrides an initial-default
         for writes."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        schema = self.schema()
         if name not in schema.fieldNames():
             raise WarehouseError(f"column {name} does not exist")
-        wd = meta.setdefault("column_write_defaults", {})
-        if default is None:
-            wd[name] = None
-        else:
-            lit = default.strip()
-            dtype = schema[name].dataType.simpleString()
-            val = self.spark.sql(f"SELECT CAST({lit} AS {dtype}) AS v").collect()[0].v
-            if val is None and lit.upper() != "NULL":
-                raise WarehouseError(f"DEFAULT {default} is not a valid {dtype} literal")
-            wd[name] = lit
-        self._write_meta(meta)
+        dtype = schema[name].dataType.simpleString()
+        lit = None if default is None else self._check_default(default, dtype)
+
+        def change(meta: dict) -> None:
+            if name not in T.StructType.fromJson(json.loads(meta["schema"])).fieldNames():
+                raise WarehouseError(f"column {name} does not exist")
+            meta.setdefault("column_write_defaults", {})[name] = lit
+
+        self._alter(change)
 
     def evolve_partition_spec(self, partition_by: str | None, transform: str = "identity") -> None:
         """Partition-spec evolution without rewrites (reference
@@ -3657,42 +3368,48 @@ class Table:
         transform; existing dirs keep their recorded spec and continue to
         prune by it. Metadata-only."""
         if partition_by is not None:
-            if partition_by not in self.schema().fieldNames():
-                raise WarehouseError(f"unknown partition source {partition_by}")
             PartitionSpec(partition_by, transform).expr()  # validates transform
-        meta = self._meta()
-        new_spec = {"source": partition_by, "transform": transform}
-        meta["partition"] = dict(new_spec)
-        history = meta.setdefault(
-            "spec_history", [{"source": None, "transform": "identity"}]
-        )
-        if new_spec not in history:
-            history.append(new_spec)
-        self._write_meta(meta)
+
+        def change(meta: dict) -> None:
+            if partition_by is not None and partition_by not in T.StructType.fromJson(
+                json.loads(meta["schema"])
+            ).fieldNames():
+                raise WarehouseError(f"unknown partition source {partition_by}")
+            new_spec = {"source": partition_by, "transform": transform}
+            meta["partition"] = dict(new_spec)
+            history = meta.setdefault(
+                "spec_history", [{"source": None, "transform": "identity"}]
+            )
+            if new_spec not in history:
+                history.append(new_spec)
+
+        self._alter(change)
 
     def rename_column(self, old: str, new: str) -> None:
         """Metadata-only RENAME COLUMN: reads map old physical names
         through the rename chain (see _dir_frames), so no files are
         rewritten and values survive. The current partition spec's source
         cannot be renamed (specs are keyed by name here, not field id)."""
-        if self._meta()["partition"].get("source") == old:
-            raise WarehouseError(f"column {old} is the partition source")
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        fields = [
-            T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-        meta["schema"] = T.StructType(fields).json()
-        meta.setdefault("renames", []).append({"from": old, "to": new})
-        ids = meta.setdefault("column_ids", {})
-        if old in ids:
-            ids[new] = ids.pop(old)  # rename keeps the field id (Iceberg)
-        for key in ("column_defaults", "column_write_defaults"):
-            rec = meta.get(key, {})
-            if old in rec:
-                rec[new] = rec.pop(old)  # the default follows the column
-        self._write_meta(meta)
+
+        def change(meta: dict) -> None:
+            if meta["partition"].get("source") == old:
+                raise WarehouseError(f"column {old} is the partition source")
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            fields = [
+                T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
+                for f in schema.fields
+            ]
+            meta["schema"] = T.StructType(fields).json()
+            meta.setdefault("renames", []).append({"from": old, "to": new})
+            ids = meta.setdefault("column_ids", {})
+            if old in ids:
+                ids[new] = ids.pop(old)  # rename keeps the field id (Iceberg)
+            for key in ("column_defaults", "column_write_defaults"):
+                rec = meta.get(key, {})
+                if old in rec:
+                    rec[new] = rec.pop(old)  # the default follows the column
+
+        self._alter(change)
 
     @staticmethod
     def _is_widening(old: T.DataType, new: T.DataType) -> bool:
@@ -3714,44 +3431,48 @@ class Table:
         physical type upcasts on read (Spark's parquet reader resolves the
         declared read schema against each file's footer), exactly
         Iceberg's field-id type promotion."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        if name not in schema.fieldNames():
-            raise WarehouseError(f"no such column {name}")
         new_dt = T.StructType.fromDDL(f"x {dtype}").fields[0].dataType
-        old_dt = schema[name].dataType
-        if old_dt == new_dt:
+        schema = self.schema()
+        if name in schema.fieldNames() and schema[name].dataType == new_dt:
             return
-        if not self._is_widening(old_dt, new_dt):
-            raise WarehouseError(
-                f"cannot change {name} from {old_dt.simpleString()} to "
-                f"{new_dt.simpleString()}: only widening promotions are allowed "
-                "(int->bigint, float->double, decimal precision growth)"
-            )
-        fields = [
-            T.StructField(f.name, new_dt if f.name == name else f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-        meta["schema"] = T.StructType(fields).json()
-        self._write_meta(meta)
+
+        def change(meta: dict) -> None:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            if name not in schema.fieldNames():
+                raise WarehouseError(f"no such column {name}")
+            old_dt = schema[name].dataType
+            if old_dt != new_dt and not self._is_widening(old_dt, new_dt):
+                raise WarehouseError(
+                    f"cannot change {name} from {old_dt.simpleString()} to "
+                    f"{new_dt.simpleString()}: only widening promotions are allowed "
+                    "(int->bigint, float->double, decimal precision growth)"
+                )
+            fields = [
+                T.StructField(f.name, new_dt if f.name == name else f.dataType, f.nullable)
+                for f in schema.fields
+            ]
+            meta["schema"] = T.StructType(fields).json()
+
+        self._alter(change)
 
     def set_write_order(self, *columns: str) -> None:
         """ALTER TABLE … WRITE ORDERED BY (Iceberg sort orders): future
         writes range-partition + sort rows by these columns, so each data
         file covers a narrow, near-disjoint value range and the footer
-        bounds recorded at commit make scan-time file skipping actually
-        bite (clustering is what turns min/max stats from "usually
-        overlapping" into "prunes 99% of files" at 100 TB). Metadata-only;
-        existing files are untouched (compact() rewrites them under the
-        order). Empty column list clears the order."""
-        meta = self._meta()
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        names = set(schema.fieldNames())
-        missing = [c for c in columns if c not in names]
-        if missing:
-            raise WarehouseError(f"sort columns not in schema: {missing}")
-        meta["sort_order"] = list(columns)
-        self._write_meta(meta)
+        bounds published in each manifest make scan-time file skipping
+        actually bite (clustering is what turns min/max stats from
+        "usually overlapping" into "prunes 99% of files" at 100 TB).
+        Metadata-only; existing files are untouched (compact() rewrites
+        them under the order). Empty column list clears the order."""
+
+        def change(meta: dict) -> None:
+            names = set(T.StructType.fromJson(json.loads(meta["schema"])).fieldNames())
+            missing = [c for c in columns if c not in names]
+            if missing:
+                raise WarehouseError(f"sort columns not in schema: {missing}")
+            meta["sort_order"] = list(columns)
+
+        self._alter(change)
 
     # ---------------- metadata tables (S3/S4) ----------------
     def history(self) -> DataFrame:
@@ -4113,43 +3834,14 @@ class Table:
         )
         return len(files)
 
-    def _bloom_probes(
-        self, eq: dict[str, Any] | None, schema: T.StructType
-    ) -> list[tuple[dict, list[int]]]:
-        """(files-bitsets, probe-positions) per indexed equality column.
-        The probe literal is hashed by the SAME JVM xxhash64 the build
-        used (one 1-row job per probed column — metadata-scale), then the
-        k positions replay driver-side."""
-        probes: list[tuple[dict, list[int]]] = []
-        for col, v in (eq or {}).items():
-            if v is None or col not in schema.fieldNames():
-                continue
-            p = self._bloom_index_path(col)
-            if not fsio.exists(p):
-                continue
-            try:
-                payload = json.loads(fsio.read_text(p))
-            except Exception:
-                continue
-            if payload.get("column") != col:
-                continue
-            h = (
-                self.spark.range(1)
-                .select(F.xxhash64(F.lit(v).cast(schema[col].dataType)).alias("h"))
-                .collect()[0]["h"]
-            )
-            probes.append(
-                (payload["files"], _bloom_positions_py(h, payload["bits"], payload["k"]))
-            )
-        return probes
-
     BUNDLE_SIZE = 100  # dirs per consolidated manifest bundle
 
     def rewrite_manifests(self, bundle_size: int | None = None) -> tuple[int, int]:
         """CALL system.rewrite_manifests: consolidate many small per-dir
-        manifests (the `.stats.json` sidecars scan planning reads) into a
-        few immutable bundle files under `metadata/`, so planning a
-        snapshot costs O(bundles) metadata reads instead of O(dirs) —
+        manifests (the `.stats.json` sidecars the metadata tables and the
+        Iceberg export read) into a few immutable bundle files under
+        `metadata/`, so listing a snapshot's files costs O(bundles)
+        metadata reads instead of O(dirs) —
         Iceberg's small-manifest compaction, mapped to this engine's
         dir-granular manifests. Metadata-only: no data moves, no snapshot
         is added (the engine's manifests are dir-keyed, not
@@ -4590,9 +4282,8 @@ class Table:
         """ALTER TABLE … SET TBLPROPERTIES — metadata-only; the Iceberg
         knobs this engine honors (write.delete.mode, write.update.mode,
         …) take effect on the next write."""
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+
+        def change(meta: dict) -> None:
             if "write.bucket-hash" in props:
                 new = str(props["write.bucket-hash"])
                 if new not in ("iceberg-murmur3", "spark-murmur3-seed42"):
@@ -4611,21 +4302,18 @@ class Table:
                         f"{cur or 'spark-murmur3-seed42'})"
                     )
             meta["properties"].update({str(k): str(v) for k, v in props.items()})
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
+
+        self._alter(change)
 
     def unset_properties(self, keys: list[str]) -> None:
         """ALTER TABLE … UNSET TBLPROPERTIES (IF EXISTS semantics: absent
         keys are ignored, matching Spark)."""
-        lock, token = self._acquire_commit_lock()
-        try:
-            meta = self._meta()
+
+        def change(meta: dict) -> None:
             for k in keys:
                 meta["properties"].pop(k, None)
-            self._write_meta(meta)
-        finally:
-            self._release_commit_lock(lock, token)
+
+        self._alter(change)
 
     def rollback_to(self, snapshot_id: int) -> int:
         """CALL system.rollback_to_snapshot: make an earlier snapshot's

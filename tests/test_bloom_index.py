@@ -129,3 +129,22 @@ def test_sql_call_and_sql_point_lookup(spark, tmp_path):
     out = lake.sql("SELECT id, k FROM db.pt WHERE k = 'z3'")
     got = sorted(tuple(x) for x in out.collect())
     assert got and all(k == "z3" for _, k in got)
+
+
+def test_bloom_probe_prunes_inside_bounds_and_runs_no_spark_job(wh):
+    """Interleaved keys: every file's [min, max] covers the probe, so
+    only the bitsets can drop a file. The probe literal hashes over a
+    LocalRelation, so planning the scan launches no Spark job."""
+    t = wh.create_table("db", "bl", "id int, k string")
+    t.insert_values([(i, f"k{i:03d}") for i in range(0, 200, 2)])
+    t.insert_values([(i, f"k{i:03d}") for i in range(1, 200, 2)])
+    t.build_bloom_index("k")
+    sc = t.spark.sparkContext
+    sc.setJobGroup("bloom-probe", "bloom-probe")
+    try:
+        df = t.scan(eq={"k": "k101"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bloom-probe") == []
+    assert len(df.inputFiles()) < len(t.read().inputFiles())
+    assert [tuple(r) for r in df.collect()] == [(101, "k101")]

@@ -1,14 +1,16 @@
-"""Scan-time file skipping from parquet footer bounds + write clustering.
+"""Scan-time file skipping from manifest column bounds + write clustering.
 
 The reference leans on Iceberg's manifest statistics for exactly this
 ("listing files, computing statistics ... fast even with billions of
 files", reference README.md:138-139; file-skipping path README.md:178).
-Here the commit records per-file column [min,max] from the parquet
-footers (metadata-only) and Table.scan() drops files — or whole commit
-dirs — whose bounds provably exclude the predicate, before Spark plans a
-single split. `ALTER TABLE ... WRITE ORDERED BY` range-clusters writes so
-those bounds are tight. At 100 TB this is the difference between reading
-a table and reading the handful of files a selective predicate touches.
+Here each commit publishes every data file's column [min,max] from its
+parquet footer (metadata-only) in the Iceberg manifest entry, and
+Table.scan() plans through the one scan planner, read_iceberg_table over
+the table's published metadata: files whose bounds provably exclude the
+predicate are dropped before Spark plans a single split. `ALTER TABLE
+... WRITE ORDERED BY` range-clusters writes so those bounds are tight. At
+100 TB this is the difference between reading a table and reading the
+handful of files a selective predicate touches.
 """
 
 from __future__ import annotations
@@ -309,3 +311,64 @@ def test_sql_inequality_hints_prune(spark, tmp_path):
     # open-ended Python-side scan API agrees
     tab = fe.wh.table("db", "iq")
     assert sorted(r.id for r in tab.scan(between={"id": (None, 99)}).collect()) == [1, 2]
+
+
+def test_scan_never_serves_stale_published_metadata(wh, monkeypatch):
+    """scan plans from the published Iceberg metadata. A commit whose
+    export failed after `_snapshots.json` was written leaves that
+    metadata one snapshot behind: scan re-exports (or raises), and never
+    returns the previous snapshot's rows."""
+    from minio_iceberg_polaris_lakehouse_spark import iceberg_export
+
+    t = wh.create_table("db", "stale", "id int")
+    t.insert_values([(1,)])
+    real = iceberg_export.write_iceberg_metadata
+
+    def failing_export(table):
+        raise OSError("metadata store unavailable")
+
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", failing_export)
+    with pytest.raises(OSError):
+        t.insert_values([(2,)])
+    assert t.current_snapshot_id() == 2  # the commit itself is durable
+    with pytest.raises(OSError):
+        t.scan(eq={"id": 2}).collect()  # cannot publish: no stale answer
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", real)
+    assert [tuple(r) for r in t.scan(eq={"id": 2}).collect()] == [(2,)]
+    assert sorted(tuple(r) for r in t.scan(between={"id": (0, 9)}).collect()) == [(1,), (2,)]
+    # the same for a metadata-only ALTER whose export failed
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", failing_export)
+    with pytest.raises(OSError):
+        t.add_column("w", "int")
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", real)
+    assert [tuple(r) for r in t.scan(eq={"id": 2}).collect()] == [(2, None)]
+
+
+def test_manifest_first_written_after_rename_keeps_values(wh, monkeypatch):
+    """A commit whose export failed gets its manifest from the next
+    export. When a RENAME COLUMN comes first, that manifest must still
+    name the column its files were written with."""
+    from minio_iceberg_polaris_lakehouse_spark import iceberg_export
+
+    t = wh.create_table("db", "late", "id int, v string")
+    t.insert_values([(1, "a")])
+    real = iceberg_export.write_iceberg_metadata
+    monkeypatch.setattr(
+        iceberg_export, "write_iceberg_metadata", lambda table: (_ for _ in ()).throw(OSError())
+    )
+    with pytest.raises(OSError):
+        t.insert_values([(2, "b")])
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", real)
+    t.rename_column("v", "w")
+    got = sorted(tuple(r) for r in t.scan(between={"id": (0, 9)}).collect())
+    assert got == sorted(tuple(r) for r in t.read().collect()) == [(1, "a"), (2, "b")]
+
+
+def test_scan_keeps_narrow_integer_types(wh):
+    """Iceberg has no 8/16-bit integers; scan still returns the table's
+    own SMALLINT/TINYINT columns."""
+    t = wh.create_table("db", "narrow", "s smallint, b tinyint, v string")
+    t.insert_values([(1, 2, "a"), (300, 7, "b")])
+    out = t.scan(eq={"s": 300})
+    assert out.dtypes == t.read().dtypes
+    assert [tuple(r) for r in out.collect()] == [(300, 7, "b")]

@@ -792,3 +792,42 @@ if _HAS_HYP:
             ), f"naive {lit} in session {name} lost from its {transform} partition {pv}"
         finally:
             IR._SESSION_TZ.reset(tok)
+
+
+def test_foreign_name_of_native_table_prunes_on_column_bounds(lake):
+    """Native commits publish each data file's column bounds, so the
+    registered foreign name prunes on a NON-partition column exactly as
+    the native name does."""
+    lake.sql("CREATE TABLE polaris.db.nb (id INT, v STRING) USING ICEBERG")
+    lake.sql("INSERT INTO db.nb VALUES (1, 'a'), (2, 'b')")
+    lake.sql("INSERT INTO db.nb VALUES (100, 'x'), (200, 'y')")
+    t = lake.wh.table("db", "nb")
+    lake.sql(
+        f"CALL polaris.system.register_table(table => 'ext.nb', metadata_file => '{t.path}')"
+    )
+    full = len(lake.sql("SELECT id FROM ext.nb").inputFiles())
+    foreign = lake.sql("SELECT id, v FROM ext.nb WHERE id = 100")
+    native = lake.sql("SELECT id, v FROM db.nb WHERE id = 100")
+    assert [tuple(r) for r in foreign.collect()] == [(100, "x")]
+    assert len(foreign.inputFiles()) < full
+    assert len(foreign.inputFiles()) == len(native.inputFiles())
+
+
+def test_current_foreign_read_projects_current_schema(lake):
+    """A read with no time travel projects the CURRENT schema: after
+    ADD COLUMN (no data commit since) the registered foreign name shows
+    the new column, NULL or its initial-default for existing rows."""
+    lake.sql("CREATE TABLE polaris.db.cs (id INT) USING ICEBERG")
+    lake.sql("INSERT INTO db.cs VALUES (1), (2)")
+    t = lake.wh.table("db", "cs")
+    lake.sql(
+        f"CALL polaris.system.register_table(table => 'ext.cs', metadata_file => '{t.path}')"
+    )
+    lake.sql("ALTER TABLE db.cs ADD COLUMN w INT")
+    lake.sql("ALTER TABLE db.cs ADD COLUMN score INT DEFAULT 7")
+    rows = lake.sql("SELECT * FROM ext.cs ORDER BY id").collect()
+    assert [tuple(r) for r in rows] == [(1, None, 7), (2, None, 7)]
+    # time travel keeps the snapshot's schema
+    first = t.current_snapshot_id()
+    old = lake.sql(f"SELECT * FROM ext.cs VERSION AS OF {first}")
+    assert old.columns == ["id"]

@@ -669,3 +669,83 @@ def test_export_publishes_sort_order(spark, tmp_path):
         f["transform"] == "identity" and f["direction"] == "asc"
         for f in order["fields"]
     )
+
+
+def test_alters_publish_at_once(wh, spark):
+    """Every metadata-only ALTER publishes a new metadata version: the
+    open metadata's current columns equal the engine's after each one,
+    with no data commit in between."""
+    import datetime
+
+    from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+        read_iceberg_table,
+    )
+
+    t = wh.create_table("db", "alt", "id int, v string")
+    t.insert_values([(1, "a")])
+    alters = [
+        lambda: t.add_column("w", "int"),
+        lambda: t.rename_column("v", "vv"),
+        lambda: t.alter_column_type("id", "bigint"),
+        lambda: t.add_column("d", "int", default="7"),
+        lambda: t.add_column("day", "date", default="DATE '2024-02-03'"),
+        lambda: t.set_column_default("d", "8"),
+        lambda: t.drop_column("w"),
+        lambda: t.evolve_partition_spec("id", "bucket4"),
+        lambda: t.set_write_order("vv"),
+        lambda: t.set_properties({"owner": "x"}),
+        lambda: t.unset_properties(["owner"]),
+    ]
+    for alter in alters:
+        before = _load_current_metadata(t.path)
+        alter()
+        md = _load_current_metadata(t.path)
+        assert md != before
+        ext = read_iceberg_table(spark, t.path)
+        assert ext.dtypes == t.read().dtypes
+    assert [tuple(r) for r in ext.collect()] == [(1, "a", 7, datetime.date(2024, 2, 3))]
+    cur = md["schemas"][md["current-schema-id"]]
+    assert {f["name"]: f.get("write-default") for f in cur["fields"]}["d"] == 8
+    assert md["partition-specs"][md["default-spec-id"]]["fields"][0]["transform"] == "bucket[4]"
+    assert md["default-sort-order-id"] == 1
+    assert "owner" not in md["properties"]
+
+
+def test_manifest_entries_carry_typed_column_bounds(wh, spark):
+    """Data-file manifest entries carry footer [min, max] as spec fields
+    125/128: keyed by field id, in the single-value binary encoding of
+    the column's type (dates as days, timestamps as UTC micros, decimals
+    as big-endian unscaled two's complement)."""
+    import datetime
+    import decimal
+
+    from minio_iceberg_polaris_lakehouse_spark import avro_io
+    from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import _decode_bound
+
+    t = wh.create_table("db", "bnd", "id bigint, d date, ts timestamp, amt decimal(10,2), s string")
+    t.insert_values(
+        [
+            (3, datetime.date(2024, 1, 2), datetime.datetime(2024, 1, 2, 3, 4, 5), decimal.Decimal("-1.50"), "b"),
+            (9, datetime.date(2024, 3, 1), datetime.datetime(2024, 3, 1, 0, 0, 1), decimal.Decimal("12.25"), "q"),
+        ]
+    )
+    md = _load_current_metadata(t.path)
+    cur = next(s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"])
+    schema = md["schemas"][md["current-schema-id"]]
+    types = {f["id"]: (f["name"], f["type"]) for f in schema["fields"]}
+    lo, hi = {}, {}
+    for m in avro_io.read_container(cur["manifest-list"])[2]:
+        for e in avro_io.read_container(m["manifest_path"])[2]:
+            if e["data_file"]["record_count"] == 0:
+                continue
+            for side, out, pick in (("lower_bounds", lo, min), ("upper_bounds", hi, max)):
+                for kv in e["data_file"][side]:
+                    name, typ = types[kv["key"]]
+                    v = _decode_bound(kv["value"], typ)
+                    out[name] = v if name not in out else pick(out[name], v)
+    epoch = datetime.datetime(2024, 1, 2, 3, 4, 5, tzinfo=datetime.timezone.utc).timestamp()
+    assert lo["id"] == 3 and hi["id"] == 9
+    assert lo["d"] == (datetime.date(2024, 1, 2) - datetime.date(1970, 1, 1)).days
+    assert lo["ts"] == int(epoch) * 1_000_000
+    assert lo["amt"] == decimal.Decimal("-1.50") and hi["amt"] == decimal.Decimal("12.25")
+    assert lo["s"] == "b" and hi["s"] == "q"

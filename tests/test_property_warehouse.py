@@ -10,6 +10,9 @@ don't enumerate."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -200,8 +203,29 @@ _skip_row = st.tuples(
 )
 
 
+# DATE, TIMESTAMP and DECIMAL columns derive from id, so their bounds
+# are as tight or as overlapping as the id bounds of the same file; their
+# predicates mix Python objects with the string literals the SQL hints
+# pass.
+_EPOCH_DAY = datetime.date(2024, 1, 1)
+_EPOCH_TS = datetime.datetime(2024, 1, 1)
+
+
+def _skip_cols(i):
+    if i is None:
+        return (None, None, None)
+    return (
+        _EPOCH_DAY + datetime.timedelta(days=i),
+        _EPOCH_TS + datetime.timedelta(hours=i),
+        decimal.Decimal(i) / 4,
+    )
+
+
+_id = st.integers(min_value=-55, max_value=55)
+
+
 @settings(
-    max_examples=8,
+    max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
@@ -210,22 +234,21 @@ _skip_row = st.tuples(
         st.lists(_skip_row, min_size=1, max_size=4), min_size=1, max_size=3
     ),
     pred=st.one_of(
-        st.tuples(st.just("eq_id"), st.integers(min_value=-55, max_value=55)),
+        st.tuples(st.just("eq_id"), _id),
         st.tuples(st.just("eq_v"), st.text(alphabet="abcxyz", min_size=0, max_size=4)),
-        st.tuples(
-            st.just("between_id"),
-            st.tuples(
-                st.integers(min_value=-55, max_value=55),
-                st.integers(min_value=-55, max_value=55),
-            ),
-        ),
+        st.tuples(st.just("between_id"), st.tuples(_id, _id)),
+        st.tuples(st.just("eq_d"), st.tuples(_id, st.booleans())),
+        st.tuples(st.just("between_ts"), st.tuples(_id, _id, st.booleans())),
+        st.tuples(st.just("eq_amt"), _id),
     ),
 )
 def test_file_skipping_never_loses_rows(spark, prop_wh, commits, pred):
     _counter[0] += 1
-    t = prop_wh.create_table("db", f"skip_{_counter[0]}", "id int, v string")
+    t = prop_wh.create_table(
+        "db", f"skip_{_counter[0]}", "id int, v string, d date, ts timestamp, amt decimal(10,2)"
+    )
     for rows in commits:
-        t.insert_values(rows)
+        t.insert_values([(i, v, *_skip_cols(i)) for i, v in rows])
     kind, arg = pred
     if kind == "eq_id":
         got = t.scan(eq={"id": arg})
@@ -233,10 +256,25 @@ def test_file_skipping_never_loses_rows(spark, prop_wh, commits, pred):
     elif kind == "eq_v":
         got = t.scan(eq={"v": arg})
         want = t.read().filter(F.col("v") == arg)
-    else:
+    elif kind == "between_id":
         lo, hi = min(arg), max(arg)
         got = t.scan(between={"id": (lo, hi)})
         want = t.read().filter(F.col("id").between(lo, hi))
+    elif kind == "eq_d":
+        day = _skip_cols(arg[0])[0]
+        got = t.scan(eq={"d": day if arg[1] else day.isoformat()})
+        want = t.read().filter(F.col("d") == F.lit(day))
+    elif kind == "between_ts":
+        lo, hi = (_skip_cols(x)[1] for x in sorted(arg[:2]))
+        if not arg[2]:
+            lo, hi = str(lo), str(hi)
+        got = t.scan(between={"ts": (lo, hi)})
+        want = t.read().filter(F.col("ts").between(F.lit(lo), F.lit(hi)))
+    else:
+        amt = _skip_cols(arg)[2]
+        got = t.scan(eq={"amt": amt})
+        want = t.read().filter(F.col("amt") == F.lit(amt))
+
     def key(r):  # None-safe total order for the multiset comparison
         return tuple((x is None, x) for x in r)
 

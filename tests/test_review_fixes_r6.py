@@ -4,7 +4,6 @@ duplication, or statement mis-parse)."""
 
 from __future__ import annotations
 
-import datetime
 import decimal
 
 import pyarrow as pa
@@ -35,34 +34,6 @@ def test_scan_hint_does_not_leak_into_second_reference(lake):
     assert sorted(r.id for r in out.collect()) == [1, 1, 2, 3]
     # single-reference statements still get the hint (file skipping)
     assert lake.sql("SELECT id FROM db.h WHERE id = 2").collect()[0].id == 2
-
-
-def test_timestamp_file_skipping_matches_filter_frame(lake, spark):
-    """Footer bounds are UTC instants; naive predicate values take the
-    frame their row filter will use. Skipping must never drop a file
-    whose rows the filter would match, in either consumer:
-    - Table.scan with a naive datetime OBJECT → JVM-local frame
-    - a SQL literal via the scan-hint path → session-zone frame."""
-    lake.sql("CREATE TABLE polaris.db.tz (id INT, ts TIMESTAMP) USING ICEBERG")
-    lake.sql("INSERT INTO polaris.db.tz VALUES (1, TIMESTAMP '2024-01-01 05:00:00')")
-    tab = lake.wh.table("db", "tz")
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        # scan API: the naive object frame is process-local (UTC in this
-        # container), independent of the session zone — same value the
-        # Catalyst literal resolves to, so filter and skip agree
-        got = tab.scan(eq={"ts": datetime.datetime(2024, 1, 1, 5, 0, 0)}).collect()
-        assert len(got) == 1 and got[0].id == 1
-        # SQL path: the literal is session-zone New-York wall clock
-        # (00:00 EST == 05:00 UTC); the hint-driven skip must keep the
-        # file and the full statement must return the row
-        got2 = lake.sql(
-            "SELECT id FROM db.tz WHERE ts = TIMESTAMP '2024-01-01 00:00:00'"
-        ).collect()
-        assert len(got2) == 1 and got2[0].id == 1
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
 
 
 def test_decimal_bounds_merge_numerically(tmp_path):

@@ -11,6 +11,7 @@ import datetime
 
 import pytest
 
+from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
 from minio_iceberg_polaris_lakehouse_spark.warehouse import Warehouse
 
 
@@ -19,8 +20,23 @@ def wh(spark, tmp_path):
     return Warehouse(spark, str(tmp_path / "warehouse"))
 
 
+@pytest.fixture()
+def lake(spark, tmp_path):
+    return LakehouseSQL(spark, str(tmp_path / "wh"))
+
+
 def _files_read(df) -> int:
     return len(df.inputFiles())
+
+
+def _planned_parts(df, field: str) -> set[str]:
+    """Values of hive partition dir ``field`` among the files a scan plans."""
+    return {
+        seg.split("=", 1)[1]
+        for f in df.inputFiles()
+        for seg in f.split("/")
+        if seg.startswith(field + "=")
+    }
 
 
 def test_hour_transform_partitions_and_prunes(wh):
@@ -160,3 +176,128 @@ def test_type_widening_through_sql_and_time_travel(spark, tmp_path):
     # time travel to the pre-widening snapshot projects the OLD schema
     tt = fe.sql("SELECT id, v FROM db.wt VERSION AS OF 1").collect()
     assert [(r.id, r.v) for r in tt] == [(1, "a")]
+
+
+# ---- pruned scans: literal frames, decimal truncate, write zones -----------
+
+
+def test_timestamp_file_skipping_matches_filter_frame(lake, spark):
+    """Footer bounds are UTC instants; naive predicate values take the
+    frame their row filter will use. Skipping must never drop a file
+    whose rows the filter would match, in either consumer:
+    - Table.scan with a naive datetime OBJECT → JVM-local frame
+    - a SQL literal via the scan-hint path → session-zone frame."""
+    lake.sql("CREATE TABLE polaris.db.tz (id INT, ts TIMESTAMP) USING ICEBERG")
+    lake.sql("INSERT INTO polaris.db.tz VALUES (1, TIMESTAMP '2024-01-01 05:00:00')")
+    tab = lake.wh.table("db", "tz")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        # scan API: the naive object frame is process-local (UTC in this
+        # container), independent of the session zone — same value the
+        # Catalyst literal resolves to, so filter and skip agree
+        got = tab.scan(eq={"ts": datetime.datetime(2024, 1, 1, 5, 0, 0)}).collect()
+        assert len(got) == 1 and got[0].id == 1
+        # SQL path: the literal is session-zone New-York wall clock
+        # (00:00 EST == 05:00 UTC); the hint-driven skip must keep the
+        # file and the full statement must return the row
+        got2 = lake.sql(
+            "SELECT id FROM db.tz WHERE ts = TIMESTAMP '2024-01-01 00:00:00'"
+        ).collect()
+        assert len(got2) == 1 and got2[0].id == 1
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_decimal_truncate_uses_unscaled_width(lake, spark):
+    """Iceberg spec: truncate[W] on decimal applies W to the UNSCALED
+    value (truncate[50] on scale-2 → 0.50 value steps), with floor
+    semantics for negatives — value-unit pmod would place rows in dirs
+    no compliant engine derives."""
+    import os
+
+    lake.sql(
+        "CREATE TABLE polaris.db.tdec (id INT, amt DECIMAL(10,2)) USING ICEBERG "
+        "PARTITIONED BY (truncate(50, amt))"
+    )
+    lake.sql(
+        "INSERT INTO db.tdec VALUES (1, 10.25), (2, -10.25), (3, 10.75), (4, 0.49)"
+    )
+    t = lake.wh.table("db", "tdec")
+    dirs = {
+        seg.split("=", 1)[1]
+        for root, _, _f in os.walk(t.path)
+        for seg in root.split(os.sep)
+        if seg.startswith("_p_truncate50_amt=")
+    }
+    assert dirs == {"10.00", "-10.50", "10.50", "0.00"}
+    # scan derives the partition value from an eq literal: only the
+    # derived dir's files are planned
+    sc = t.scan(eq={"amt": __import__("decimal").Decimal("10.25")})
+    assert _planned_parts(sc, "_p_truncate50_amt") == {"10.00"}
+    assert sc.filter("amt = 10.25").count() == 1
+    # negative literal maps with floor, not toward-zero
+    sc2 = t.scan(eq={"amt": __import__("decimal").Decimal("-10.25")})
+    assert _planned_parts(sc2, "_p_truncate50_amt") == {"-10.50"}
+    assert sc2.filter("amt = -10.25").count() == 1
+
+
+def test_temporal_hive_dirs_pin_write_zone_and_decline_cross_zone_pruning(lake, spark):
+    """The engine's day(ts) hive dirs extract calendar fields in the
+    WRITE session's zone; a scan under a DIFFERENT zone must not derive
+    a partition filter (it would land on a different dir value near day
+    boundaries and exclude the dir holding the matching row)."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        lake.sql(
+            "CREATE TABLE polaris.db.tzd (id INT, ts TIMESTAMP) USING ICEBERG "
+            "PARTITIONED BY (days(ts))"
+        )
+        # 2024-01-01T19:00Z = Tokyo 2024-01-02 04:00 → Tokyo-day dir
+        lake.sql(
+            "INSERT INTO db.tzd VALUES "
+            "(1, '2024-01-01T19:00:00+00:00'), (2, '2024-01-03T02:00:00+00:00')"
+        )
+        t = lake.wh.table("db", "tzd")
+        meta = t._meta()
+        recs = list(meta.get("dir_specs", {}).values())
+        assert recs and all(r.get("tz") == "Asia/Tokyo" for r in recs)
+        # same-zone scan still prunes to the matching dir
+        sc = t.scan(eq={"ts": "2024-01-02 04:00:00"})
+        assert _planned_parts(sc, "_p_day_ts") == {"2024-01-02"}
+        assert [r.id for r in sc.filter("ts = '2024-01-02 04:00:00'").collect()] == [1]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    # cross-zone (UTC) scan: the SAME instant is naive '2024-01-01 19:00'
+    # — the zone guard must decline the partition filter and keep the row
+    sc = t.scan(eq={"ts": "2024-01-01 19:00:00"})
+    assert [r.id for r in sc.filter("ts = '2024-01-01 19:00:00'").collect()] == [1]
+
+
+def test_zone_equivalence_shared_and_utc_aliases_prune(lake, spark):
+    """'Etc/UTC' written vs 'UTC' read are the same zone — the export's
+    temporal-dir gate must still publish the partition values through
+    the shared alias table, so scans prune."""
+    from minio_iceberg_polaris_lakehouse_spark.tzones import is_utcish
+
+    assert is_utcish("GMT+00:00") and not is_utcish("GMT+09:00")
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Etc/UTC")
+    try:
+        lake.sql(
+            "CREATE TABLE polaris.db.tzq (id INT, ts TIMESTAMP) USING ICEBERG "
+            "PARTITIONED BY (days(ts))"
+        )
+        lake.sql(
+            "INSERT INTO db.tzq VALUES (1, '2024-01-01T04:00:00+00:00'), "
+            "(2, '2024-01-03T04:00:00+00:00')"
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    # read under plain 'UTC': equivalent zone → partitions prune
+    t = lake.wh.table("db", "tzq")
+    sc = t.scan(eq={"ts": "2024-01-01 04:00:00"})
+    assert _planned_parts(sc, "_p_day_ts") == {"2024-01-01"}
+    assert [r.id for r in sc.filter("ts = '2024-01-01 04:00:00'").collect()] == [1]
