@@ -661,7 +661,7 @@ def _write_manifest_avro(
     schema = _manifest_entry_schema(part_field)
     # v3 row lineage IN the Avro records (field-id 142): per data file,
     # the dir's commit-assigned base + its row-count offset in canonical
-    # path order — the rule Table._lineage_cols derives `_row_id` with
+    # path order; readers derive `_row_id` as first row id + position
     first_ids: dict[str, int] = {}
     row_base = meta.get("dir_row_ids", {}).get(dirname) if content == 0 else None
     if row_base is not None:

@@ -939,8 +939,8 @@ def ref_merge_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ref_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v3 ROW LINEAGE through the SQL path (warehouse.py
-    `_lineage_cols` / `_write_data(lineage_cols=True)`): the
+    """Iceberg v3 ROW LINEAGE through the SQL path (the reader's
+    `row_lineage` / `_write_data(lineage_cols=True)`): the
     lineage_demo fixture appended ids 1-3 (row ids 0-2, sequence 1) and
     id 4 (row id 3, sequence 2), then a copy-on-write UPDATE of id 2
     (sequence 3), a full compaction rewrite (sequence 4), and a

@@ -10,7 +10,10 @@ DataFrame — using none of the engine's private snapshot log. It reads
 tables this engine exported AND any other filesystem table following
 the same spec subset (v2, positional + equality deletes, identity-style
 layout where logical columns live in the data files) — including
-Flink/CDC-written tables, whose writers emit equality deletes.
+Flink/CDC-written tables, whose writers emit equality deletes. It is
+also the engine's own read path: every `Table` read mode (time travel,
+row lineage, metadata columns, incremental and changelog scans) is a
+call into this module over the table's published metadata.
 
 Schema evolution is resolved the way Iceberg resolves it — by FIELD ID,
 not by name: each data manifest is read with the schema version its
@@ -34,8 +37,9 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -805,6 +809,456 @@ def _file_pruner(
     return keep
 
 
+def _norm(path: str) -> str:
+    """Plain filesystem form of a path or `file:` URI — the one form data
+    files, tombstones and `_metadata.file_path` are compared in."""
+    return re.sub(r"^file:(//)?", "", path)
+
+
+def _select_snapshot(
+    md: dict, location: str, snapshot_id: int | None, as_of_ms: int | None, ref: str | None
+) -> dict | None:
+    """The snapshot a read selects: a ref's head, a snapshot id, the
+    main-lineage snapshot current at ``as_of_ms``, else the current one
+    (None for a table never committed to)."""
+    snaps = md.get("snapshots", [])
+    if ref is not None:
+        if snapshot_id is not None or as_of_ms is not None:
+            raise ValueError("ref is exclusive with snapshot_id/as_of_ms")
+        rec = (md.get("refs") or {}).get(ref)
+        if rec is None:
+            raise ValueError(f"no branch or tag {ref!r} at {location}")
+        snapshot_id = int(rec["snapshot-id"])
+    if snapshot_id is None and as_of_ms is not None:
+        # timestamp time travel resolves over the snapshot-log — when
+        # each snapshot became main's head. A snapshot staged on a branch
+        # (write-audit-publish) is in `snapshots` but not in the log, so
+        # it stays invisible to timestamp reads until it is published
+        log = md.get("snapshot-log") or [
+            {"timestamp-ms": s["timestamp-ms"], "snapshot-id": s["snapshot-id"]} for s in snaps
+        ]
+        older = sorted(
+            (e for e in log if e["timestamp-ms"] <= as_of_ms), key=lambda e: e["timestamp-ms"]
+        )
+        if not older:
+            raise ValueError(f"no snapshot at or before {as_of_ms} at {location}")
+        snapshot_id = int(older[-1]["snapshot-id"])
+    if snapshot_id is not None:
+        snap = next((s for s in snaps if s["snapshot-id"] == snapshot_id), None)
+        if snap is None:
+            raise ValueError(f"no snapshot {snapshot_id} at {location}")
+        return snap
+    cur = md.get("current-snapshot-id")
+    return next((s for s in snaps if s["snapshot-id"] == cur), None)
+
+
+def _schema_at(md: dict, snap: dict | None) -> dict:
+    """The schema a snapshot recorded (the current one when ``snap`` is
+    None): time travel projects the snapshot's columns."""
+    schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
+    sid = md["current-schema-id"]
+    if snap is not None:
+        sid = snap.get("schema-id", sid)
+    return schemas[sid]
+
+
+class _Plan(NamedTuple):
+    """One snapshot's files, from its manifests. ``data`` entries are
+    dicts: `path` (as the manifest records it), `file` (_norm'd),
+    `schema` (the generation the file was written under) and its `skey`,
+    `seq` (data sequence number), `spec_id`, `partition` (the manifest's
+    partition tuple) and `first_row_id` (v3 lineage, or None)."""
+
+    data: list
+    pos_deletes: list  # parquet (file_path, pos) tombstone files
+    dvs: list  # v3 deletion vectors: {puffin, offset, length, referenced}
+    eq_deletes: list  # {path, ids, seq, schema}
+
+
+_NO_FILES = _Plan([], [], [], [])
+
+
+def _plan(
+    md: dict,
+    snap: dict | None,
+    target: dict,
+    keep_manifest=None,
+    keep_file=None,
+    cache: dict | None = None,
+) -> _Plan:
+    """Walk ``snap``'s manifest list and manifests (driver-side,
+    O(manifests)). ``keep_manifest`` / ``keep_file`` prune data manifests
+    and data files (delete files are never pruned: a tombstone for a
+    pruned file simply matches nothing). ``cache`` shares decoded
+    manifests across the snapshots of one changelog walk — manifests
+    are immutable."""
+    if snap is None:
+        return _NO_FILES
+    schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
+    # schema version each snapshot wrote under — the fallback for
+    # manifests without an embedded schema
+    schema_of_snap = {
+        s["snapshot-id"]: s.get("schema-id", target.get("schema-id"))
+        for s in md.get("snapshots", [])
+    }
+    plan = _Plan([], [], [], [])
+    _s, _m, manifests = avro_io.read_container(snap["manifest-list"])
+    for m in manifests:
+        if keep_manifest is not None and not keep_manifest(m):
+            continue
+        path = m["manifest_path"]
+        if cache is not None and path in cache:
+            m2, entries = cache[path]
+        else:
+            _s2, m2, entries = avro_io.read_container(path)
+            if cache is not None:
+                cache[path] = (m2, entries)
+        # status 2 = DELETED: the entry records a file REMOVED by this
+        # snapshot lineage — reading it would resurrect deleted rows
+        live = [e for e in entries if e.get("status") != 2]
+        # data files group by the SCHEMA THEY WERE WRITTEN WITH: the
+        # manifest's own embedded schema (immutable, written with it);
+        # the adding snapshot's schema only when absent — expiry can
+        # drop that snapshot while its manifest stays referenced
+        emb = m2.get("schema")
+        if emb is not None:
+            fschema = json.loads(emb.decode() if isinstance(emb, bytes) else emb)
+        else:
+            fschema = schemas.get(schema_of_snap.get(m["added_snapshot_id"]), target)
+        if m["content"] == 1:
+            for e in live:
+                f = e["data_file"]
+                if f.get("content") == 2:
+                    ids = f.get("equality_ids")
+                    if not ids:
+                        raise ValueError(
+                            f"equality-delete file without equality_ids in {path} — "
+                            "cannot apply; silently ignoring it would return deleted rows"
+                        )
+                    plan.eq_deletes.append(
+                        {
+                            "path": f["file_path"],
+                            "ids": list(ids),
+                            "seq": _entry_seq(e, m),
+                            "schema": fschema,
+                        }
+                    )
+                elif _is_dv_entry(f):
+                    plan.dvs.append(
+                        {
+                            "puffin": f["file_path"],
+                            "offset": int(f["content_offset"]),
+                            "length": int(f["content_size_in_bytes"]),
+                            "referenced": _norm(f["referenced_data_file"]),
+                        }
+                    )
+                elif (f.get("file_format") or "").upper() == "PUFFIN":
+                    # a Puffin delete entry MUST carry fields 143-145
+                    raise ValueError(
+                        f"PUFFIN delete entry without referenced_data_file/content_offset "
+                        f"in {path} — cannot apply; silently ignoring it would return "
+                        "deleted rows"
+                    )
+                else:
+                    plan.pos_deletes.append(f["file_path"])
+            continue
+        skey = json.dumps(fschema, sort_keys=True)
+        spec_id = int(m.get("partition_spec_id", 0))
+        # v3 row lineage: an explicit per-file first_row_id, else the
+        # spec's inheritance — the manifest-list record's first_row_id
+        # plus the record counts of earlier entries that also omit it.
+        # Runs for EVERY entry: pruning a file must not shift the offset
+        man_base = m.get("first_row_id")
+        inherit_off = 0
+        for e in live:
+            f = e["data_file"]
+            frid = f.get("first_row_id")
+            if frid is None:
+                frid = e.get("first_row_id")  # entry-level placement
+            if frid is None and man_base is not None:
+                frid = int(man_base) + inherit_off
+                inherit_off += int(f.get("record_count") or 0)
+            if keep_file is None or keep_file(spec_id, f):
+                plan.data.append(
+                    {
+                        "path": f["file_path"],
+                        "file": _norm(f["file_path"]),
+                        "schema": fschema,
+                        "skey": skey,
+                        "seq": _entry_seq(e, m),
+                        "spec_id": spec_id,
+                        "partition": f.get("partition") or {},
+                        "first_row_id": None if frid is None else int(frid),
+                    }
+                )
+    return plan
+
+
+def _parquet(
+    spark: SparkSession, schema: T.StructType | str, paths: list[str], cols: list | None = None
+) -> DataFrame:
+    """``cols`` (default: all) of the parquet files ``paths``, unioned
+    from slices no longer than Spark's parallel-listing threshold: a
+    longer path list makes building the DataFrame launch a file-listing
+    job with a task per path (on 4 vCPU: 33 files took 1 job / 431 ms,
+    32 files 0 jobs / 70 ms). Slices pack their splits apart, so they
+    plan more scan tasks, but the listing costs more: build + SUM over
+    128 files of 2.6 MB ran 33 tasks / 0.64-0.93 s sliced against 143
+    tasks / 1.11-1.33 s as one call, and over 512 files of 0.7 MB 129
+    tasks / 1.6-2.8 s against 551 / 2.6-3.4 s. Each slice projects
+    ``cols`` itself, since `_metadata` does not survive a union."""
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    step = max(int(spark.conf.get(conf, "32")), 1)
+    out = None
+    for i in range(0, len(paths), step):
+        df = spark.read.schema(schema).parquet(*paths[i : i + step])
+        df = df.select(*cols) if cols else df
+        out = df if out is None else out.unionByName(df)
+    return out
+
+
+def _tombstones(spark: SparkSession, pos_deletes: list, dvs: list) -> DataFrame | None:
+    """(__file, __pos) rows of parquet position-delete files and v3
+    deletion vectors; None when there are none. Paths are _norm'd on the
+    tombstone side too: delete files may record `file:` URIs."""
+    tombs = None
+    if pos_deletes:
+        tombs = _parquet(
+            spark,
+            "file_path string, pos bigint",
+            pos_deletes,
+            [
+                F.regexp_replace(F.col("file_path"), "^file:(//)?", "").alias("__file"),
+                F.col("pos").alias("__pos"),
+            ],
+        )
+    if dvs:
+        dvt = _dv_tombstones(spark, dvs)
+        tombs = dvt if tombs is None else tombs.unionByName(dvt)
+    return tombs
+
+
+def _partition_type(transform: str, source_type) -> T.DataType:
+    """Spark type of one `_partition` field: identity/truncate keep the
+    source's type (string once the source is dropped), day is a date,
+    month/hour are their human strings, year/bucket integers."""
+    if transform == "identity" or transform.startswith("truncate"):
+        return _spark_type(source_type) if isinstance(source_type, str) else T.StringType()
+    if transform == "day":
+        return T.DateType()
+    if transform in ("year",) or transform.startswith("bucket"):
+        return T.IntegerType()
+    return T.StringType()
+
+
+def _partition_value(transform: str, v, dt: T.DataType):
+    """A manifest partition datum in `_partition` form: date ordinals as
+    dates, month/hour ordinals as Iceberg's human strings (`2024-03`,
+    `2024-03-01-10`)."""
+    import datetime as _dt
+
+    if v is None:
+        return None
+    if isinstance(dt, T.DateType) and isinstance(v, int):
+        return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
+    if transform == "month" and isinstance(v, int):
+        return f"{1970 + v // 12:04d}-{v % 12 + 1:02d}"
+    if transform == "hour" and isinstance(v, int):
+        return (_dt.datetime(1970, 1, 1) + _dt.timedelta(hours=v)).strftime("%Y-%m-%d-%H")
+    return v
+
+
+def _partition_column(md: dict, files: list) -> Column:
+    """`_partition`: one struct over every partition field of the specs
+    the files were written under (NULL where a file's spec lacks it),
+    looked up per file path — a literal map, no join."""
+    specs = {s["spec-id"]: s.get("fields", []) for s in md.get("partition-specs", [])}
+    source_types = {f["id"]: f["type"] for f in _schema_at(md, None)["fields"]}
+    fields: dict[str, tuple[str, T.DataType]] = {}
+    for f in files:
+        for pf in specs.get(f["spec_id"], []):
+            if pf["name"] not in fields:
+                tr = pf.get("transform", "identity")
+                dt = _partition_type(tr, source_types.get(pf.get("source-id")))
+                fields[pf["name"]] = (tr, dt)
+    if not fields:
+        return F.lit(None).cast(T.StructType())
+    pairs: list[Column] = []
+    for f in files:
+        pairs.append(F.lit(f["file"]))
+        pairs.append(
+            F.struct(
+                *[
+                    F.lit(_partition_value(tr, f["partition"].get(name), dt)).cast(dt).alias(name)
+                    for name, (tr, dt) in fields.items()
+                ]
+            )
+        )
+    return F.element_at(F.create_map(*pairs), F.col("__file"))
+
+
+def _empty_frame(
+    spark: SparkSession,
+    target: dict,
+    keep_pos: bool = False,
+    keep_seq: bool = False,
+    row_lineage: bool = False,
+    metadata_columns: bool = False,
+) -> DataFrame:
+    extra = []
+    if metadata_columns:
+        extra += [
+            F.lit(None).cast("string").alias("_file"),
+            F.lit(None).cast("long").alias("_pos"),
+            F.lit(None).cast("int").alias("_spec_id"),
+            F.lit(None).cast(T.StructType()).alias("_partition"),
+            F.lit(None).cast("boolean").alias("_deleted"),
+        ]
+    if row_lineage:
+        extra += [
+            F.lit(None).cast("long").alias("_row_id"),
+            F.lit(None).cast("long").alias("_last_updated_sequence_number"),
+        ]
+    if keep_pos:
+        extra += [
+            F.lit(None).cast("string").alias("__file"),
+            F.lit(None).cast("long").alias("__pos"),
+        ]
+    if keep_seq:
+        extra.append(F.lit(None).cast("long").alias("__seq"))
+    e = local_frame(spark, [], _struct(target))
+    return e.select("*", *extra) if extra else e
+
+
+def _read_files(
+    spark: SparkSession,
+    md: dict,
+    target: dict,
+    files: list,
+    deletes: _Plan,
+    keep_pos: bool = False,
+    keep_seq: bool = False,
+    row_lineage: bool = False,
+    metadata_columns: bool = False,
+) -> DataFrame:
+    """Rows of the data-file entries ``files`` aligned to ``target`` by
+    field id, minus the rows the delete files of ``deletes`` retire (its
+    data files are ignored). Every read mode is this one function:
+    ``row_lineage`` adds `_row_id` / `_last_updated_sequence_number`,
+    ``metadata_columns`` adds `_file, _pos, _spec_id, _partition` and a
+    live `_deleted` (tombstoned rows stay, flagged), ``keep_pos`` /
+    ``keep_seq`` keep the internal `__file`/`__pos` identity and the data
+    sequence `__seq`."""
+    if not files:
+        return _empty_frame(spark, target, keep_pos, keep_seq, row_lineage, metadata_columns)
+    kept = {f["file"] for f in files}
+    # a deletion vector names its data file: skip decoding the ones for
+    # files this read does not touch
+    dvs = [d for d in deletes.dvs if d["referenced"] in kept]
+    has_tombs = bool(deletes.pos_deletes or dvs)
+    need_pos = has_tombs or keep_pos or row_lineage or metadata_columns
+    need_seq = bool(deletes.eq_deletes) or keep_seq or row_lineage
+    # one scan per schema generation — and per data sequence / spec id
+    # when the read carries them as literals
+    groups: dict[tuple, tuple[dict, int, int, list[str]]] = {}
+    for f in files:
+        key = (f["skey"], f["seq"] if need_seq else 0, f["spec_id"] if metadata_columns else 0)
+        groups.setdefault(key, (f["schema"], key[1], key[2], []))[3].append(f["path"])
+    names = [f["name"] for f in target["fields"]]
+    target_fields = [(f["id"], f["name"], f["type"]) for f in target["fields"]]
+    extra = (
+        [
+            F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "").alias("__file"),
+            F.col("_metadata.row_index").alias("__pos"),
+        ]
+        if need_pos
+        else []
+    )
+    if row_lineage:
+        # rewrites (compaction, copy-on-write DML) materialize lineage
+        # columns the schema JSON never lists; files without them read NULL
+        extra += [
+            F.col("_lin_row_id").alias("__lin_row_id"),
+            F.col("_lin_upd_seq").alias("__lin_upd_seq"),
+        ]
+    parts: list[DataFrame] = []
+    for file_schema, seq, spec_id, paths in groups.values():
+        struct = _struct(file_schema)
+        if row_lineage:
+            struct = T.StructType(
+                list(struct.fields)
+                + [
+                    T.StructField("_lin_row_id", T.LongType(), True),
+                    T.StructField("_lin_upd_seq", T.LongType(), True),
+                ]
+            )
+        as_is = [(f["id"], f["name"], f["type"]) for f in file_schema["fields"]] == target_fields
+        cols = (names if row_lineage else ["*"]) if as_is else _align_cols(file_schema, target)
+        lits = ([F.lit(seq).cast("long").alias("__seq")] if need_seq else []) + (
+            [F.lit(spec_id).alias("_spec_id")] if metadata_columns else []
+        )
+        projected = extra or lits or not as_is
+        parts.append(_parquet(spark, struct, paths, [*cols, *extra, *lits] if projected else None))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+
+    tombs = _tombstones(spark, deletes.pos_deletes, dvs) if has_tombs else None
+    dead = F.lit(False)
+    if tombs is not None and metadata_columns:
+        # live `_deleted`: tombstoned rows stay visible, flagged. A left
+        # join repeats a row per matching tombstone, so dedupe first;
+        # the anti-join below ignores duplicate build rows
+        flag = tombs.dropDuplicates(["__file", "__pos"]).withColumn("__dead", F.lit(True))
+        out = out.join(F.broadcast(flag), ["__file", "__pos"], "left")
+        dead = F.coalesce(F.col("__dead"), F.lit(False))
+    elif tombs is not None:
+        out = out.join(F.broadcast(tombs), ["__file", "__pos"], "left_anti")
+    for i, rec in enumerate(deletes.eq_deletes):
+        keys, cond = _eq_delete_keys_cond(spark, out, rec, target)
+        if metadata_columns:
+            hit = keys.withColumn(f"__ehit{i}", F.lit(True))
+            out = out.join(F.broadcast(hit), cond, "left").drop(*keys.columns)
+            dead = dead | F.coalesce(F.col(f"__ehit{i}"), F.lit(False))
+        else:
+            out = out.join(F.broadcast(keys), cond, "left_anti")
+    if not (need_pos or need_seq or metadata_columns):
+        return out
+    sel: list = list(names)
+    if metadata_columns:
+        sel += [
+            F.col("__file").alias("_file"),
+            F.col("__pos").alias("_pos"),
+            "_spec_id",
+            _partition_column(md, files).alias("_partition"),
+            dead.alias("_deleted"),
+        ]
+    if row_lineage:
+        # `_row_id`: a materialized id wins; else the file's first row id
+        # plus the row's position (path-keyed literal map, no join).
+        # Files that predate lineage have none: NULL, 'not assigned'
+        pairs = [
+            c for f in files if f["first_row_id"] is not None
+            for c in (F.lit(f["file"]), F.lit(f["first_row_id"]).cast("long"))
+        ]
+        derived = (
+            (F.element_at(F.create_map(*pairs), F.col("__file")) + F.col("__pos")).cast("long")
+            if pairs
+            else F.lit(None).cast("long")
+        )
+        sel += [
+            F.coalesce(F.col("__lin_row_id"), derived).alias("_row_id"),
+            F.coalesce(F.col("__lin_upd_seq"), F.col("__seq")).alias(
+                "_last_updated_sequence_number"
+            ),
+        ]
+    if keep_pos:
+        sel += ["__file", "__pos"]
+    if keep_seq:
+        sel.append("__seq")
+    return out.select(*sel)
+
+
 def read_iceberg_table(
     spark: SparkSession,
     location: str,
@@ -816,23 +1270,28 @@ def read_iceberg_table(
     row_lineage: bool = False,
     eq: dict | None = None,
     between: dict | None = None,
+    metadata_columns: bool = False,
+    _files=None,
 ) -> DataFrame:
     """Open the table at ``location`` (table dir / metadata dir /
     metadata file) as a DataFrame; optional time travel by snapshot id,
-    timestamp (milliseconds), or a named branch/tag from the metadata
-    document's ``refs`` map (Iceberg's ref time travel — VERSION AS OF
-    'audit-2024' works on a foreign table exactly as on a native one).
+    timestamp (milliseconds; resolved over the snapshot-log, so only
+    snapshots that were main's head count), or a named branch/tag from
+    the metadata document's ``refs`` map (VERSION AS OF 'audit-2024').
+    A current read projects the current schema; time travel projects the
+    snapshot's.
 
     ``row_lineage=True`` adds Iceberg v3's `_row_id` /
-    `_last_updated_sequence_number` from the OPEN metadata alone:
-    per-file first-row-ids come from the Avro manifest records
-    (joined as a broadcast, not collected per row), materialized
-    lineage columns in rewritten files (detected from one parquet footer
-    per file group, metadata-only) win over derivation, and the update
-    sequence falls back to the file's data sequence — the same rules the
-    native reader applies, so engine and foreign reads agree bit-for-bit
-    across compaction/CoW rewrites. Tables whose metadata predates row
-    lineage yield NULL ids (the spec's 'not assigned').
+    `_last_updated_sequence_number` from the open metadata alone: a
+    file's first row id comes from its Avro manifest record (explicit or
+    inherited), lineage columns that rewrites materialized into the file
+    win over derivation, and the update sequence falls back to the
+    file's data sequence. Tables whose metadata predates row lineage
+    yield NULL ids (the spec's 'not assigned').
+
+    ``metadata_columns=True`` adds Iceberg's `_file, _pos, _spec_id,
+    _partition, _deleted`: rows that merge-on-read deletes retire stay
+    visible with `_deleted = true`, the rest read false.
 
     ``eq`` / ``between`` are OPTIONAL scan predicates (column →
     value / (lo, hi)) used for manifest-level FILE PRUNING only —
@@ -843,86 +1302,22 @@ def read_iceberg_table(
     Spark's planner. Pruning is conservative (incomparable or absent
     values keep the file) and NEVER replaces the query's own filter —
     the caller still applies its full WHERE on top, so a missed prune
-    costs IO, never correctness."""
+    costs IO, never correctness.
+
+    Internal: ``_files`` (paths) reads only those data files of the
+    snapshot, its deletes still applied; ``_keep_lineage`` keeps each
+    live row's `__file`/`__pos` and projects the current schema even at
+    a ref, ``_keep_seq`` its data sequence."""
     md_path = resolve_metadata_path(location)
     md = json.loads(fsio.read_text(md_path))
-    snaps = md.get("snapshots", [])
+    snap = _select_snapshot(md, location, snapshot_id, as_of_ms, ref)
+    # the internal DML reads (`_keep_lineage`) stage a write on a branch
+    # head: they project the CURRENT schema, which an ALTER (no snapshot)
+    # may have moved past the head's
     time_travel = snapshot_id is not None or as_of_ms is not None or ref is not None
-    schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
-    if ref is not None:
-        if snapshot_id is not None or as_of_ms is not None:
-            raise ValueError("ref is exclusive with snapshot_id/as_of_ms")
-        rec = (md.get("refs") or {}).get(ref)
-        if rec is None:
-            raise ValueError(f"no branch or tag {ref!r} at {location}")
-        snapshot_id = int(rec["snapshot-id"])
-    if snapshot_id is not None:
-        snap = next((s for s in snaps if s["snapshot-id"] == snapshot_id), None)
-        if snap is None:
-            raise ValueError(f"no snapshot {snapshot_id} at {location}")
-    elif as_of_ms is not None:
-        older = [s for s in snaps if s["timestamp-ms"] <= as_of_ms]
-        if not older:
-            raise ValueError(f"no snapshot at or before {as_of_ms} at {location}")
-        snap = max(older, key=lambda s: s["timestamp-ms"])
-    else:
-        cur = md.get("current-snapshot-id")
-        snap = next((s for s in snaps if s["snapshot-id"] == cur), None)
-
-    # a current read projects the CURRENT schema (an ALTER after the last
-    # commit shows at once); time travel projects the snapshot's schema
-    target_sid = md["current-schema-id"]
-    if snap and time_travel:
-        target_sid = snap.get("schema-id", target_sid)
-    target = schemas[target_sid]
-
+    target = _schema_at(md, snap if time_travel and not _keep_lineage else None)
     if row_lineage and _keep_lineage:
         raise ValueError("row_lineage is exclusive with the internal _keep_lineage")
-
-    def _empty() -> DataFrame:
-        e = local_frame(spark, [], _struct(target))
-        if _keep_lineage:
-            e = e.withColumn("__file", F.lit(None).cast("string")).withColumn(
-                "__pos", F.lit(None).cast("long")
-            )
-            if _keep_seq:
-                e = e.withColumn("__seq", F.lit(None).cast("long"))
-        if row_lineage:
-            e = e.withColumn("_row_id", F.lit(None).cast("long")).withColumn(
-                "_last_updated_sequence_number", F.lit(None).cast("long")
-            )
-        return e
-
-    if snap is None:  # table created but never committed to
-        return _empty()
-
-    # schema version each snapshot wrote under — manifests carry their
-    # adding snapshot, which dates the physical column names in the files
-    schema_of_snap = {s["snapshot-id"]: s.get("schema-id", target_sid) for s in snaps}
-
-    _s, _m, manifests = avro_io.read_container(snap["manifest-list"])
-    # data files group by the SCHEMA THEY WERE WRITTEN WITH. The
-    # authoritative source is the manifest's own embedded schema metadata
-    # (written at the manifest's creation, immutable) — the
-    # adding-snapshot lookup is only the fallback, because expiry can
-    # remove the adding snapshot from the metadata document while its
-    # manifest stays referenced, and falling back to the TARGET schema
-    # would silently NULL every renamed column in those files.
-    # Each group also carries its DATA SEQUENCE number (Iceberg v2:
-    # entry-level sequence_number, inheriting from the manifest-list
-    # record when null) — equality deletes only hit rows whose data
-    # sequence predates the delete file's.
-    groups: dict[tuple[str, int], tuple[dict, int, list[str]]] = {}
-    delete_paths: list[str] = []
-    dv_specs: list[dict] = []  # v3 deletion vectors: {puffin, offset, length, referenced}
-    eq_deletes: list[dict] = []  # {path, ids, seq, schema}
-    avro_first_rows: dict[str, int] = {}  # v3 lineage read from the Avro records
-    # two-level scan planning (Iceberg's): (1) manifest-LIST pruning —
-    # whole DATA manifests whose field-507 partition summaries exclude
-    # the predicate are skipped without opening their Avro; (2) file
-    # pruning inside kept manifests (partition values + bounds). Delete
-    # manifests are NEVER pruned — a tombstone for a pruned file simply
-    # finds no rows in the anti-join.
     # naive predicate literals on timestamptz columns are read by Spark
     # in the SESSION zone — thread it so the pruners derive the same
     # instant the row filter will match (a UTC assumption under a
@@ -934,247 +1329,30 @@ def read_iceberg_table(
     zone_token = _SESSION_TZ.set(zone)
     try:
         bloom = _bloom_probes(spark, os.path.dirname(md_path), target, eq) if eq else ()
-        keep_file = _file_pruner(md, target, eq, between, bloom)
-        keep_manifest = _manifest_pruner(md, target, eq, between)
-        for m in manifests:
-            if keep_manifest is not None and not keep_manifest(m):
-                continue
-            _s2, m2, entries = avro_io.read_container(m["manifest_path"])
-            # status 2 = DELETED: the entry records a file REMOVED by this
-            # snapshot lineage — reading it would resurrect deleted rows
-            live = [e for e in entries if e.get("status") != 2]
-            emb = m2.get("schema")
-            if emb is not None:
-                fschema = json.loads(emb.decode() if isinstance(emb, bytes) else emb)
-            else:
-                sid = schema_of_snap.get(m["added_snapshot_id"], target_sid)
-                fschema = schemas[sid]
-            if m["content"] == 1:
-                for e in live:
-                    if e["data_file"].get("content") == 2:
-                        ids = e["data_file"].get("equality_ids")
-                        if not ids:
-                            raise ValueError(
-                                f"equality-delete file without equality_ids in "
-                                f"{m['manifest_path']} — cannot apply; silently "
-                                "ignoring it would return deleted rows"
-                            )
-                        eq_deletes.append(
-                            {
-                                "path": e["data_file"]["file_path"],
-                                "ids": list(ids),
-                                "seq": _entry_seq(e, m),
-                                "schema": fschema,
-                            }
-                        )
-                    elif _is_dv_entry(e["data_file"]):
-                        dv_specs.append(
-                            {
-                                "puffin": e["data_file"]["file_path"],
-                                "offset": int(e["data_file"]["content_offset"]),
-                                "length": int(e["data_file"]["content_size_in_bytes"]),
-                                "referenced": re.sub(
-                                    r"^file:(//)?",
-                                    "",
-                                    e["data_file"]["referenced_data_file"],
-                                ),
-                            }
-                        )
-                    elif (e["data_file"].get("file_format") or "").upper() == "PUFFIN":
-                        # a Puffin delete entry MUST carry fields 143-145;
-                        # falling through to the parquet tombstone path would
-                        # fail confusingly (or worse, silently skip deletes)
-                        raise ValueError(
-                            f"PUFFIN delete entry without referenced_data_file/"
-                            f"content_offset in {m['manifest_path']} — cannot "
-                            "apply; silently ignoring it would return deleted rows"
-                        )
-                    else:
-                        delete_paths.append(e["data_file"]["file_path"])
-                continue
-            skey = json.dumps(fschema, sort_keys=True)
-            # Iceberg v3 row lineage from the AVRO records (what a real v3
-            # writer produces): explicit per-file first_row_id when present,
-            # else the spec's inheritance rule — manifest-list record's
-            # first_row_id plus the running record_count of prior entries in
-            # this manifest that also omitted it.
-            man_base = m.get("first_row_id")
-            inherit_off = 0
-            for e in live:
-                seq = _entry_seq(e, m)
-                # lineage bookkeeping runs for EVERY entry (the inheritance
-                # offset must not shift when a file is pruned); only the
-                # read list is pruned
-                if keep_file is None or keep_file(
-                    int(m.get("partition_spec_id", 0)), e["data_file"]
-                ):
-                    groups.setdefault((skey, seq), (fschema, seq, []))[2].append(
-                        e["data_file"]["file_path"]
-                    )
-                if row_lineage:
-                    frid = e["data_file"].get("first_row_id")
-                    if frid is None and e.get("first_row_id") is not None:
-                        frid = e["first_row_id"]  # entry-level placement
-                    path_norm = re.sub(r"^file:(//)?", "", e["data_file"]["file_path"])
-                    if frid is not None:
-                        avro_first_rows[path_norm] = int(frid)
-                    elif man_base is not None:
-                        avro_first_rows[path_norm] = int(man_base) + inherit_off
-                        inherit_off += int(e["data_file"].get("record_count") or 0)
+        plan = _plan(
+            md,
+            snap,
+            target,
+            keep_manifest=_manifest_pruner(md, target, eq, between),
+            keep_file=_file_pruner(md, target, eq, between, bloom),
+        )
     finally:
         _SESSION_TZ.reset(zone_token)
-
-    if not groups:
-        return _empty()
-
-    # (file, position) identities feed delete application and lineage;
-    # data sequence numbers feed the equality-delete rule and lineage.
-    # A read that needs neither scans each schema generation once, and
-    # one whose files carry the target schema as-is needs no projection.
-    need_pos = bool(delete_paths or dv_specs) or _keep_lineage or row_lineage
-    need_seq = bool(eq_deletes) or _keep_seq or row_lineage
-    if not need_seq:
-        by_schema: dict[str, tuple[dict, int, list[str]]] = {}
-        for (skey, _seq), (fschema, _s, files) in groups.items():
-            by_schema.setdefault(skey, (fschema, 0, []))[2].extend(files)
-        groups = by_schema
-    meta_cols = (
-        [
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "").alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        ]
-        if need_pos
-        else []
+    files = plan.data
+    if _files is not None:
+        wanted = {_norm(p) for p in _files}
+        files = [f for f in files if f["file"] in wanted]
+    return _read_files(
+        spark,
+        md,
+        target,
+        files,
+        plan,
+        keep_pos=_keep_lineage,
+        keep_seq=_keep_lineage and _keep_seq,
+        row_lineage=row_lineage,
+        metadata_columns=metadata_columns,
     )
-    target_fields = [(f["id"], f["name"], f["type"]) for f in target["fields"]]
-    parts: list[DataFrame] = []
-    for file_schema, seq, files in groups.values():
-        if not files:
-            continue
-        base_struct = _struct(file_schema)
-        as_is = (
-            not row_lineage  # lineage reads add _lin_* columns to the file schema
-            and [(f["id"], f["name"], f["type"]) for f in file_schema["fields"]] == target_fields
-        )
-        cols = ["*"] if as_is else _align_cols(file_schema, target)
-        if not row_lineage:
-            df = spark.read.schema(base_struct).parquet(*files)
-            extra = meta_cols + ([F.lit(seq).alias("__seq")] if need_seq else [])
-            parts.append(df.select(*cols, *extra) if extra or not as_is else df)
-            continue
-        # footer sniff per FILE (metadata-only, handle closed): rewritten
-        # files carry materialized _lin_* columns the schema JSON never
-        # lists — they win over derivation, exactly as in the native
-        # reader. Sniffing only one file per group would mis-resolve ids
-        # whenever foreign metadata mixes materialized and
-        # non-materialized files in one (schema, seq) group.
-        import pyarrow.parquet as _pq
-
-        def _has_lin(path: str) -> bool:
-            with fsio.open_binary(path) as fh:
-                return "_lin_row_id" in _pq.ParquetFile(fh).schema_arrow.names
-
-        with_lin = [f for f in files if _has_lin(f)]
-        without_lin = [f for f in files if f not in set(with_lin)]
-        if with_lin:
-            lin_struct = T.StructType(
-                list(base_struct.fields)
-                + [
-                    T.StructField("_lin_row_id", T.LongType(), True),
-                    T.StructField("_lin_upd_seq", T.LongType(), True),
-                ]
-            )
-            df = spark.read.schema(lin_struct).parquet(*with_lin)
-            parts.append(
-                df.select(
-                    *cols,
-                    *meta_cols,
-                    F.lit(seq).alias("__seq"),
-                    F.col("_lin_row_id").alias("__lin_row_id"),
-                    F.col("_lin_upd_seq").alias("__lin_upd_seq"),
-                )
-            )
-        if without_lin:
-            df = spark.read.schema(base_struct).parquet(*without_lin)
-            parts.append(
-                df.select(
-                    *cols,
-                    *meta_cols,
-                    F.lit(seq).alias("__seq"),
-                    F.lit(None).cast("long").alias("__lin_row_id"),
-                    F.lit(None).cast("long").alias("__lin_upd_seq"),
-                )
-            )
-    if not parts:  # every entry was status=2 / groups held no files
-        return _empty()
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-
-    if dv_specs and keep_file is not None:
-        # a pruned scan never reads rows a DV for a PRUNED data file could
-        # tombstone — the manifest names each DV's referenced file, so
-        # skip decoding those blobs entirely (parquet positional-delete
-        # files name their targets only per ROW, so they still all load
-        # and simply match nothing)
-        kept = {
-            re.sub(r"^file:(//)?", "", f)
-            for _sch, _seq, fl in groups.values()
-            for f in fl
-        }
-        dv_specs = [d for d in dv_specs if d["referenced"] in kept]
-    if delete_paths or dv_specs:
-        tombs = None
-        if delete_paths:
-            # normalize the tombstone side too: legacy/foreign delete files
-            # may record file: URIs while _metadata.file_path was already
-            # stripped above — an unnormalized mismatch silently un-applies
-            # the delete
-            tombs = spark.read.parquet(*delete_paths).select(
-                F.regexp_replace(F.col("file_path"), "^file:(//)?", "").alias("__file"),
-                F.col("pos").alias("__pos"),
-            )
-        if dv_specs:
-            # v3 deletion vectors decode executor-side to the same
-            # (__file, __pos) shape and ride the same anti-join
-            dvt = _dv_tombstones(spark, dv_specs)
-            tombs = dvt if tombs is None else tombs.unionByName(dvt)
-        tombs = tombs.dropDuplicates(["__file", "__pos"])
-        out = out.join(F.broadcast(tombs), ["__file", "__pos"], "left_anti")
-    for rec in eq_deletes:
-        out = _apply_eq_delete(spark, out, rec, target)
-    if _keep_lineage:
-        # internal (delete writer / changelog): live rows WITH their
-        # (file, position) identity — __file is URI-normalized like the
-        # delete files; _keep_seq additionally keeps the data sequence
-        # (the eq-delete changelog's `data_seq < delete_seq` gate)
-        return out if _keep_seq else out.drop("__seq")
-    if row_lineage:
-        # per-file first-row-ids from the AVRO manifest records
-        # (explicit or inherited, collected above; manifest-sized →
-        # broadcast join, never a collect per row). Pre-lineage files
-        # have none → their ids stay NULL.
-        first_rows = list(avro_first_rows.items())
-        if first_rows:
-            firsts = local_frame(
-                spark, first_rows, "__file string, __first bigint"
-            ).dropDuplicates(["__file"])
-            out = out.join(F.broadcast(firsts), ["__file"], "left")
-        else:
-            out = out.withColumn("__first", F.lit(None).cast("long"))
-        out = out.select(
-            *[c for c in out.columns if not c.startswith("__")],
-            F.coalesce(
-                F.col("__lin_row_id"), (F.col("__first") + F.col("__pos")).cast("long")
-            ).alias("_row_id"),
-            F.coalesce(F.col("__lin_upd_seq"), F.col("__seq")).alias(
-                "_last_updated_sequence_number"
-            ),
-        )
-        return out
-    return out.drop(*[c for c in ("__file", "__pos", "__seq") if c in out.columns]) if (
-        need_pos or need_seq
-    ) else out
 
 
 def incremental_read_iceberg_table(
@@ -1183,76 +1361,37 @@ def incremental_read_iceberg_table(
     from_snapshot_id: int,
     to_snapshot_id: int | None = None,
 ) -> DataFrame:
-    """Iceberg-style incremental APPEND scan over a FOREIGN table's open
-    metadata: the rows added by snapshots (from, to] — the manifests
-    present in `to`'s manifest list but not in `from`'s, read with the
-    same field-id schema alignment as the full scan. The
-    change-consumption primitive a downstream pipeline polls, O(new
-    data), never a rescan.
+    """Iceberg-style incremental APPEND scan: the rows of the data files
+    present at `to` but not at `from`, with `to`'s deletes applied (a row
+    a later merge-on-read delete retired never surfaces), projected with
+    `to`'s schema. The change-consumption primitive a downstream
+    pipeline polls — O(new data), never a rescan.
 
-    Mirrors warehouse.Table.incremental_scan's contract exactly:
-    - a missing `from` snapshot raises SnapshotNotFoundError-equivalent
-      (ValueError here; the streaming source maps it) — an expired
-      checkpoint must fail loudly, not silently skip;
-    - an interval that REMOVES a manifest (rewrite/compaction/overwrite)
-      or ADDS delete manifests is not expressible as pure appends and
-      raises — the consumer falls back to a full re-read."""
+    A missing snapshot raises ValueError (an expired checkpoint must fail
+    loudly, not silently skip). An interval that REMOVES a data file
+    (rewrite, compaction, copy-on-write DML) is not expressible as
+    appends and raises: the consumer falls back to a full re-read."""
     md = json.loads(fsio.read_text(resolve_metadata_path(location)))
-    snaps = md.get("snapshots", [])
-    by_id = {s["snapshot-id"]: s for s in snaps}
+    by_id = {s["snapshot-id"]: s for s in md.get("snapshots", [])}
     if from_snapshot_id not in by_id:
         raise ValueError(f"snapshot {from_snapshot_id} not found at {location}")
     if to_snapshot_id is None:
         to_snapshot_id = md.get("current-snapshot-id")
     if to_snapshot_id not in by_id:
         raise ValueError(f"snapshot {to_snapshot_id} not found at {location}")
-    schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
-    target_sid = by_id[to_snapshot_id].get("schema-id", md["current-schema-id"])
-    target = schemas[target_sid]
-    if to_snapshot_id == from_snapshot_id:
-        return local_frame(spark, [], _struct(target))
-
-    def _mans(snap) -> dict[str, dict]:
-        _s, _m, recs = avro_io.read_container(snap["manifest-list"])
-        return {r["manifest_path"]: r for r in recs}
-
-    base = _mans(by_id[from_snapshot_id])
-    head = _mans(by_id[to_snapshot_id])
-    removed = [p for p in base if p not in head]
+    target = _schema_at(md, by_id[to_snapshot_id])
+    cache: dict = {}
+    base = {f["file"] for f in _plan(md, by_id[from_snapshot_id], target, cache=cache).data}
+    head = _plan(md, by_id[to_snapshot_id], target, cache=cache)
+    removed = sorted(base - {f["file"] for f in head.data})
     if removed:
         raise ValueError(
-            f"incremental scan crosses replacing snapshot(s): manifests "
-            f"removed {removed[:3]}{'…' if len(removed) > 3 else ''} — data "
-            "was rewritten; fall back to a full scan"
+            f"incremental scan crosses replacing snapshot(s): data files removed "
+            f"{removed[:3]}{'…' if len(removed) > 3 else ''} — data was rewritten; "
+            "fall back to a full scan"
         )
-    added = [r for p, r in head.items() if p not in base]
-    if any(r.get("content") == 1 for r in added):
-        raise ValueError(
-            "incremental scan crosses row-level DELETEs — not expressible "
-            "as pure appends; fall back to a full scan"
-        )
-
-    parts: list[DataFrame] = []
-    for man in added:
-        _s2, m2, entries = avro_io.read_container(man["manifest_path"])
-        live = [e for e in entries if e.get("status") != 2]
-        emb = m2.get("schema")
-        fschema = (
-            json.loads(emb.decode() if isinstance(emb, bytes) else emb)
-            if emb is not None
-            else target
-        )
-        files = [e["data_file"]["file_path"] for e in live]
-        if not files:
-            continue
-        df = spark.read.schema(_struct(fschema)).parquet(*files)
-        parts.append(df.select(*_align_cols(fschema, target)))
-    if not parts:
-        return local_frame(spark, [], _struct(target))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    added = [f for f in head.data if f["file"] not in base]
+    return _read_files(spark, md, target, added, head)
 
 
 def changes_iceberg_table(
@@ -1260,59 +1399,62 @@ def changes_iceberg_table(
     location: str,
     from_snapshot_id: int,
     to_snapshot_id: int | None = None,
+    row_lineage: bool = False,
 ) -> DataFrame:
-    """CDC changelog over a FOREIGN table's open metadata — the consumer
-    twin of warehouse.Table.changes for tables this engine didn't write
-    (a Flink/CDC-fed Iceberg table consumed into a bronze→silver
-    pipeline). Returns the interval's row-level changes tagged
-    `_change_type` ('insert' | 'delete') and `_commit_snapshot_id`
-    (the snapshot whose manifest-list diff introduced the change).
+    """Iceberg changelog scan (`CALL system.create_changelog_view`) over
+    the open metadata: the row-level changes committed by the snapshots
+    in (``from_snapshot_id``, ``to_snapshot_id``], each tagged
+    `_change_type` ('insert' | 'delete'), `_commit_snapshot_id` and
+    `_change_ordinal` (the position among the window's commits that
+    changed something). ``from_snapshot_id=0`` replays from the start.
 
-    Scope and guarantees:
-    - appended data manifests → 'insert' rows (field-id aligned);
-    - added POSITIONAL delete manifests → the deleted rows re-read from
-      their data files and emitted as 'delete' (the tombstone side
-      broadcast);
-    - added EQUALITY delete manifests (content=2 — what Flink upsert
-      sinks and this engine's upsert_iceberg_table commit) → the
-      parent-state rows matching the delete keys under the v2 sequence
-      rule, emitted as 'delete'; an upsert snapshot therefore reads as
-      delete(old image) + insert(new image), the exact feed a
-      downstream MERGE applies;
-    - an interval that REMOVES a manifest (rewrite/compaction) raises —
-      distinguishing a rewrite from a logical change needs the writer's
-      private lineage, and guessing silently would corrupt a downstream
-      MERGE. The caller falls back to a full re-sync.
+    Per snapshot, against its parent's files:
+    - rows of added data files are inserts;
+    - parent-live rows of removed data files are deletes (a rewrite
+      emits delete + insert for the rows it carries over);
+    - rows retired by added position deletes or deletion vectors are
+      deletes: the parent's live rows, or rows of files the same
+      snapshot added;
+    - parent-live rows matching an added equality delete's keys under
+      the v2 sequence rule are deletes — an upsert reads as
+      delete(old image) + insert(new image);
+    - `replace` snapshots (compaction, rewrite_position_delete_files)
+      change no rows and emit nothing.
+    The scan reads only the churned files of each snapshot, plus the
+    parent's live rows for a row-level delete commit.
 
-    Rows also carry `_change_ordinal`: the commit's 0-based position
-    within the interval (parent-chain order), so a consumer applies
-    multi-commit windows in commit order."""
+    ``row_lineage=True`` adds each row's v3 `_row_id`: a delete and an
+    insert with the same id are one row changing in place.
+
+    Commit order comes from the PARENT POINTERS, never from sorting
+    snapshot ids (real writers draw random ids). A parent that expiry
+    removed is bridged over the snapshot-log (main's history) to the
+    surviving snapshot current before it, so a window across the gap
+    diffs the two states. A ``from`` still not reached (a diverged
+    branch) raises ValueError."""
     md = json.loads(fsio.read_text(resolve_metadata_path(location)))
     by_id = {s["snapshot-id"]: s for s in md.get("snapshots", [])}
-    # from=0 is the virtual before-first snapshot: the FULL changelog
-    # replay (every snapshot's manifests diff against an empty base)
     if from_snapshot_id != 0 and from_snapshot_id not in by_id:
         raise ValueError(f"snapshot {from_snapshot_id} not found at {location}")
     if to_snapshot_id is None:
         to_snapshot_id = md.get("current-snapshot-id")
-    if to_snapshot_id not in by_id:
+    no_head = to_snapshot_id in (None, -1)  # main never committed to: no changes
+    if not no_head and to_snapshot_id not in by_id:
         raise ValueError(f"snapshot {to_snapshot_id} not found at {location}")
-    schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
-    target = schemas[by_id[to_snapshot_id].get("schema-id", md["current-schema-id"])]
+    target = _schema_at(md, by_id.get(to_snapshot_id))
+    names = [f["name"] for f in target["fields"]] + (["_row_id"] if row_lineage else [])
     out_schema = T.StructType(
         _struct(target).fields
+        + ([T.StructField("_row_id", T.LongType(), True)] if row_lineage else [])
         + [
             T.StructField("_change_type", T.StringType(), False),
             T.StructField("_commit_snapshot_id", T.LongType(), False),
             T.StructField("_change_ordinal", T.IntegerType(), False),
         ]
     )
-    # Commit order comes from the PARENT POINTERS, never from sorting
-    # snapshot ids: real writers (Flink, Spark+Iceberg) draw random
-    # int64 ids, so id order has no relation to commit order. Walk
-    # to_snapshot_id → parents until from_snapshot_id (or the root for
-    # the virtual 0); a from that is not an ancestor means the
-    # checkpoint diverged from this lineage — fail loudly.
+    if no_head:
+        return local_frame(spark, [], out_schema)
+    log = [int(e["snapshot-id"]) for e in md.get("snapshot-log", [])]
     chain: list[dict] = []
     cur_id = to_snapshot_id
     seen: set[int] = set()
@@ -1321,9 +1463,16 @@ def changes_iceberg_table(
             break
         seen.add(cur_id)
         chain.append(by_id[cur_id])
-        cur_id = by_id[cur_id].get("parent-snapshot-id")
-        if cur_id is not None:
-            cur_id = int(cur_id)
+        parent_id = by_id[cur_id].get("parent-snapshot-id")
+        if parent_id is not None and int(parent_id) in by_id:
+            cur_id = int(parent_id)
+        elif cur_id in log:
+            # expiry cut the parent pointer: diff against the surviving
+            # state the main history made current just before
+            i = len(log) - 1 - log[::-1].index(cur_id)
+            cur_id = next((x for x in reversed(log[:i]) if x in by_id), None)
+        else:
+            cur_id = None
     else:
         if from_snapshot_id != 0:
             raise ValueError(
@@ -1331,208 +1480,64 @@ def changes_iceberg_table(
                 f"{to_snapshot_id} at {location} — lineage diverged; "
                 "full re-sync required"
             )
-    interval = list(reversed(chain))
-    if not interval:
-        return local_frame(spark, [], out_schema)
 
-    def _mans(snap) -> dict[str, dict]:
-        _s, _m, recs = avro_io.read_container(snap["manifest-list"])
-        return {r["manifest_path"]: r for r in recs}
+    def read(files: list, deletes: _Plan, **kw) -> DataFrame:
+        return _read_files(spark, md, target, files, deletes, row_lineage=row_lineage, **kw)
 
-    def _aligned(fschema: dict, files: list[str], with_pos: bool) -> DataFrame:
-        df = spark.read.schema(_struct(fschema)).parquet(*files)
-        cols = _align_cols(fschema, target)
-        extra = (
-            [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ).alias("__file"),
-                F.col("_metadata.row_index").alias("__pos"),
-            ]
-            if with_pos
-            else []
+    def tag(df: DataFrame, change: str, sid: int, ordinal: int) -> DataFrame:
+        return df.select(
+            *names,
+            F.lit(change).alias("_change_type"),
+            F.lit(sid).cast("long").alias("_commit_snapshot_id"),
+            F.lit(ordinal).cast("int").alias("_change_ordinal"),
         )
-        return df.select(*cols, *extra)
 
-    def _manifest_schema(m2: dict) -> dict:
-        emb = m2.get("schema")
-        if emb is None:
-            return target
-        return json.loads(emb.decode() if isinstance(emb, bytes) else emb)
-
-    # data files present at any point, by path → their schema generation
-    # (for re-reading rows a later positional delete tombstones). Keys
-    # are URI-NORMALIZED ('file:'-stripped) because the lookups below
-    # come from the tombstones' normalized __file column — a foreign
-    # writer recording file: URIs in its manifests must still resolve.
-    def _norm(p: str) -> str:
-        return re.sub(r"^file:(//)?", "", p)
-
-    file_schema: dict[str, dict] = {}
-    prev = _mans(by_id[from_snapshot_id]) if from_snapshot_id != 0 else {}
-    for p, rec in prev.items():
-        if rec.get("content") == 0:
-            _s2, m2, entries = avro_io.read_container(p)
-            fs = _manifest_schema(m2)
-            for e in entries:
-                if e.get("status") != 2 and e["data_file"].get("content", 0) == 0:
-                    file_schema[_norm(e["data_file"]["file_path"])] = fs
-
+    cache: dict = {}
+    parent = _plan(md, by_id.get(from_snapshot_id), target, cache=cache)
     parts: list[DataFrame] = []
-    for ordinal, snap in enumerate(interval):
+    ordinal = 0
+    for snap in reversed(chain):
         sid = snap["snapshot-id"]
-        cur = _mans(snap)
-        removed = [p for p in prev if p not in cur]
+        plan = _plan(md, snap, target, cache=cache)
+        if (snap.get("summary") or {}).get("operation") == "replace":
+            parent = plan  # rewrites bytes, not rows
+            continue
+        par_files = {f["file"] for f in parent.data}
+        cur_files = {f["file"] for f in plan.data}
+        added = [f for f in plan.data if f["file"] not in par_files]
+        removed = [f for f in parent.data if f["file"] not in cur_files]
+        old_pos = {_norm(p) for p in parent.pos_deletes}
+        old_dvs = {(d["puffin"], d["offset"]) for d in parent.dvs}
+        old_eq = {_norm(r["path"]) for r in parent.eq_deletes}
+        new_pos = [p for p in plan.pos_deletes if _norm(p) not in old_pos]
+        new_dvs = [d for d in plan.dvs if (d["puffin"], d["offset"]) not in old_dvs]
+        new_eq = [r for r in plan.eq_deletes if _norm(r["path"]) not in old_eq]
+        emitted = []
+        if added:
+            emitted.append(tag(read(added, _NO_FILES), "insert", sid, ordinal))
         if removed:
-            raise ValueError(
-                f"changelog crosses replacing snapshot {sid}: manifests "
-                "removed — data was rewritten; full re-sync required"
-            )
-        # TWO passes over the snapshot's new manifests: all DATA
-        # manifests register their files first, THEN delete manifests
-        # resolve against them — the manifest LIST carries no ordering
-        # guarantee, and a same-snapshot (data + positional-delete)
-        # commit may list the delete manifest first
-        new_mans = sorted(
-            ((p, rec) for p, rec in cur.items() if p not in prev),
-            key=lambda pr: pr[1].get("content") or 0,
-        )
-        for p, rec in new_mans:
-            _s2, m2, entries = avro_io.read_container(p)
-            live = [e for e in entries if e.get("status") != 2]
-            fs = _manifest_schema(m2)
-            if rec.get("content") == 0:
-                files = []
-                for e in live:
-                    files.append(e["data_file"]["file_path"])
-                    file_schema[_norm(e["data_file"]["file_path"])] = fs
-                if files:
-                    parts.append(
-                        _aligned(fs, files, with_pos=False).select(
-                            "*",
-                            F.lit("insert").alias("_change_type"),
-                            F.lit(sid).cast("long").alias("_commit_snapshot_id"),
-                            F.lit(ordinal).cast("int").alias("_change_ordinal"),
-                        )
-                    )
-            else:
-                eq = [e for e in live if e["data_file"].get("content") == 2]
-                if eq:
-                    # equality deletes: the retired rows are the PARENT
-                    # state's rows matching the delete keys under the v2
-                    # sequence rule — all derivable from open metadata
-                    # (parent read applies every older delete, so a row
-                    # an earlier commit already killed never re-emits;
-                    # same-snapshot data files are absent from the
-                    # parent by construction). O(parent live data) per
-                    # eq-delete commit, like the engine's own changelog.
-                    parent_id = snap.get("parent-snapshot-id")
-                    if parent_id is None:
-                        prev = cur
-                        continue  # eq delete on an empty table: no rows die
-                    alive = read_iceberg_table(
-                        spark,
-                        location,
-                        snapshot_id=int(parent_id),
-                        _keep_lineage=True,
-                        _keep_seq=True,
-                    )
-                    hits: DataFrame | None = None
-                    for e in eq:
-                        ids = e["data_file"].get("equality_ids")
-                        if not ids:
-                            raise ValueError(
-                                f"equality-delete file without equality_ids "
-                                f"in snapshot {sid}"
-                            )
-                        rec = {
-                            "path": e["data_file"]["file_path"],
-                            "ids": list(ids),
-                            "seq": _entry_seq(e, cur[p]),
-                            "schema": fs,
-                        }
-                        h = _eq_delete_hits(spark, alive, rec, target)
-                        hits = h if hits is None else hits.unionByName(h)
-                    if hits is not None:
-                        dead = hits.dropDuplicates(["__file", "__pos"]).drop(
-                            "__file", "__pos", "__seq"
-                        )
-                        parts.append(
-                            dead.select(
-                                "*",
-                                F.lit("delete").alias("_change_type"),
-                                F.lit(sid).cast("long").alias("_commit_snapshot_id"),
-                                F.lit(ordinal).cast("int").alias("_change_ordinal"),
-                            )
-                        )
-                    # positional entries may ride the same manifest
-                    live = [e for e in live if e["data_file"].get("content") != 2]
-                dv_entries = [e for e in live if _is_dv_entry(e["data_file"])]
-                del_files = [
-                    e["data_file"]["file_path"]
-                    for e in live
-                    if not _is_dv_entry(e["data_file"])
-                ]
-                if not del_files and not dv_entries:
-                    continue
-                tombs = None
-                if del_files:
-                    tombs = spark.read.parquet(*del_files).select(
-                        F.regexp_replace(
-                            F.col("file_path"), "^file:(//)?", ""
-                        ).alias("__file"),
-                        F.col("pos").alias("__pos"),
-                    )
-                if dv_entries:
-                    dvt = _dv_tombstones(
-                        spark,
-                        [
-                            {
-                                "puffin": e["data_file"]["file_path"],
-                                "offset": int(e["data_file"]["content_offset"]),
-                                "length": int(e["data_file"]["content_size_in_bytes"]),
-                                "referenced": _norm(
-                                    e["data_file"]["referenced_data_file"]
-                                ),
-                            }
-                            for e in dv_entries
-                        ],
-                    )
-                    tombs = dvt if tombs is None else tombs.unionByName(dvt)
-                tombs = tombs.dropDuplicates(["__file", "__pos"])
-                # the tombstoned data files, re-read under their own
-                # schema generation; semi-join keeps only deleted rows
-                targets = sorted(
-                    {
-                        r["__file"]
-                        for r in tombs.select("__file").distinct().collect()
-                    }
-                )
-                by_gen: dict[str, tuple[dict, list[str]]] = {}
-                for fpath in targets:
-                    fs2 = file_schema.get(fpath)
-                    if fs2 is None:
-                        raise ValueError(
-                            f"delete file in snapshot {sid} targets unknown "
-                            f"data file {fpath}"
-                        )
-                    key = json.dumps(fs2, sort_keys=True)
-                    by_gen.setdefault(key, (fs2, []))[1].append(fpath)
-                for fs2, fpaths in by_gen.values():
-                    deleted = (
-                        _aligned(fs2, fpaths, with_pos=True)
-                        .join(F.broadcast(tombs), ["__file", "__pos"], "left_semi")
-                        .drop("__file", "__pos")
-                    )
-                    parts.append(
-                        deleted.select(
-                            "*",
-                            F.lit("delete").alias("_change_type"),
-                            F.lit(sid).cast("long").alias("_commit_snapshot_id"),
-                            F.lit(ordinal).cast("int").alias("_change_ordinal"),
-                        )
-                    )
-        prev = cur
+            emitted.append(tag(read(removed, parent), "delete", sid, ordinal))
+        if new_pos or new_dvs:
+            # what the new tombstones retire: the parent's live rows, or
+            # rows of files this snapshot added (the parent's deletes
+            # cannot name those)
+            before = read(parent.data + added, parent, keep_pos=True)
+            tombs = _tombstones(spark, new_pos, new_dvs)
+            hit = before.join(F.broadcast(tombs), ["__file", "__pos"], "left_semi")
+            emitted.append(tag(hit, "delete", sid, ordinal))
+        if new_eq:
+            alive = read(parent.data, parent, keep_pos=True, keep_seq=True)
+            hits = None
+            for rec in new_eq:
+                keys, cond = _eq_delete_keys_cond(spark, alive, rec, target)
+                h = alive.join(F.broadcast(keys), cond, "left_semi")
+                hits = h if hits is None else hits.unionByName(h)
+            # a row matching several delete files retires once
+            emitted.append(tag(hits.dropDuplicates(["__file", "__pos"]), "delete", sid, ordinal))
+        if emitted:
+            parts += emitted
+            ordinal += 1
+        parent = plan
     if not parts:
         return local_frame(spark, [], out_schema)
     out = parts[0]
@@ -1543,8 +1548,12 @@ def changes_iceberg_table(
 
 def _eq_delete_keys_cond(spark, out: DataFrame, rec: dict, target: dict):
     """(broadcastable keys frame, join condition) of one equality-delete
-    file against lineage-bearing rows ``out`` — the shared core of the
-    anti-join (read path) and semi-join (changelog) applications."""
+    file against rows ``out`` carrying `__seq`. Key columns are
+    identified by FIELD ID (`equality_ids`): resolved to their name in
+    the delete file's own schema generation and, independently, in the
+    target schema (a rename between the two is legal). Comparison is
+    null-safe and gated on the v2 sequence rule `data_seq < delete_seq`,
+    so a key re-inserted after the delete is not retired."""
     by_id_src = {f["id"]: f for f in rec["schema"]["fields"]}
     by_id_tgt = {f["id"]: f for f in target["fields"]}
     pairs = []
@@ -1571,33 +1580,6 @@ def _eq_delete_keys_cond(spark, out: DataFrame, rec: dict, target: dict):
     for _, tgt in pairs:
         cond = cond & out[tgt["name"]].eqNullSafe(F.col(f"__eq_{tgt['name']}"))
     return keys, cond
-
-
-def _eq_delete_hits(
-    spark: SparkSession, out: DataFrame, rec: dict, target: dict
-) -> DataFrame:
-    """Rows of ``out`` one equality-delete file RETIRES (semi-join form,
-    for the changelog's 'delete' emission)."""
-    keys, cond = _eq_delete_keys_cond(spark, out, rec, target)
-    return out.join(F.broadcast(keys), cond, "left_semi")
-
-
-def _apply_eq_delete(
-    spark: SparkSession, out: DataFrame, rec: dict, target: dict
-) -> DataFrame:
-    """Anti-join the live rows against one equality-delete file.
-
-    Key columns are identified by FIELD ID (`equality_ids`): resolved to
-    their name in the delete file's own schema generation (the column
-    name physically in the delete parquet) and independently to their
-    name in the target schema (the column name in the aligned data rows
-    — a rename between the two is legal). Comparison is null-safe and
-    gated on the v2 sequence rule `data_seq < delete_seq`, so a key
-    re-inserted after the delete is NOT tombstoned. Mirrors
-    warehouse.Table._apply_eq_deletes / _eq_match_cond for the engine's
-    own tables; delete side broadcast (metadata-sized)."""
-    keys, cond = _eq_delete_keys_cond(spark, out, rec, target)
-    return out.join(F.broadcast(keys), cond, "left_anti")
 
 
 # ---------------- metadata tables from the open metadata ----------------

@@ -1680,8 +1680,11 @@ class LakehouseSQL:
                     break
             return t if re.fullmatch(_IDENT, t) and t in fields else None
 
+        # a literal token, typed string literals (DATE '2025-01-02') included
+        lit_re = r"(?:(?:DATE|TIMESTAMP(?:_NTZ|_LTZ)?)\s+)?\S+"
+
         def lit_of(token: str):
-            t = token.strip()
+            t = re.sub(r"(?i)^(?:DATE|TIMESTAMP(?:_NTZ|_LTZ)?)\s+(?=\x00L)", "", token.strip())
             lm = re.fullmatch(r"\x00L(\d+)\x00", t)
             if lm:
                 return literals[int(lm.group(1))][1:-1].replace("''", "'")
@@ -1712,13 +1715,13 @@ class LakehouseSQL:
             return "\x00B\x00"  # consumed — keeps the AND split clean
 
         pred = re.sub(
-            rf"(?i)({_IDENT}(?:\.{_IDENT})?)\s+BETWEEN\s+(\S+)\s+AND\s+(\S+)",
+            rf"(?i)({_IDENT}(?:\.{_IDENT})?)\s+BETWEEN\s+({lit_re})\s+AND\s+({lit_re})",
             grab_between,
             pred,
         )
         for conjunct in re.split(r"(?i)\s+AND\s+", pred):
             em = re.fullmatch(
-                rf"\s*({_IDENT}(?:\.{_IDENT})?)\s*(=|>=|<=|>|<)\s*(\S+)\s*", conjunct
+                rf"(?i)\s*({_IDENT}(?:\.{_IDENT})?)\s*(=|>=|<=|>|<)\s*({lit_re})\s*", conjunct
             )
             if not em:
                 continue
@@ -2808,8 +2811,9 @@ class LakehouseSQL:
         carrying positional deletes or Flink-style upsert commits
         (equality delete + data in one snapshot) still maintain
         incrementally. MIN/MAX gate to full recompute when the window
-        has deletes (not invertible); rewrites/compaction raise inside
-        the changelog and land on the always-correct full recompute."""
+        has deletes (not invertible); a copy-on-write rewrite reads as
+        delete + insert of the rows it carries over and compaction emits
+        nothing, so both fold incrementally too."""
         import json as _json
 
         from pyspark.sql import functions as F
@@ -2866,10 +2870,9 @@ class LakehouseSQL:
             except (*_MV_DOWNGRADE, ValueError) as e:
                 # changes_iceberg_table raises ValueError for exactly
                 # the foreign recoverable causes: the synced snapshot
-                # expired out of the metadata, lineage diverged, or the
-                # interval contains a rewrite/compaction (not
-                # expressible as a changelog) — plus the shared typed
-                # causes in _MV_DOWNGRADE. Anything else propagates.
+                # expired out of the metadata or lineage diverged —
+                # plus the shared typed causes in _MV_DOWNGRADE.
+                # Anything else propagates.
                 downgrade = f"{type(e).__name__}: {e}"
         base_df = read_iceberg_table(self.spark, floc, snapshot_id=cur if cur else None)
         df = MV.materialize(base_df, spec)

@@ -13,9 +13,10 @@ immediately (crash between poll and sink loses the batch);
 at-least-once — exactly-once with an idempotent sink. A checkpointed
 snapshot that has disappeared from the metadata document (foreign
 writer expired it) fails LOUDLY — silently re-basing would skip the
-rows appended since the checkpoint. An interval containing a rewrite or
-row-level deletes raises too (not expressible as appends); the operator
-re-creates the stream for a documented full re-read.
+rows appended since the checkpoint. An interval containing a rewrite
+raises too (not expressible as appends); the operator re-creates the
+stream for a documented full re-read. Rows that row-level deletes in the
+interval retired are simply not delivered.
 """
 
 from __future__ import annotations

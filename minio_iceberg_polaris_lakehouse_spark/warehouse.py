@@ -56,6 +56,10 @@ from minio_iceberg_polaris_lakehouse_spark import fsio
 from minio_iceberg_polaris_lakehouse_spark.session import local_frame
 from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (  # noqa: F401
     _bloom_positions_py,
+    changes_iceberg_table,
+    incremental_read_iceberg_table,
+    read_iceberg_table,
+    resolve_metadata_path,
 )
 
 META_FILE = "_meta.json"
@@ -587,10 +591,6 @@ class Warehouse:
         """Attach a foreign Iceberg table under ``ns.name``; returns the
         resolved current metadata file (validates the location up
         front — a bad path must fail at CALL time, not first SELECT)."""
-        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-            resolve_metadata_path,
-        )
-
         key = f"{ns}.{name}"
         if Table(self, ns, name).exists():
             raise WarehouseError(f"{key} is a native table")
@@ -620,10 +620,6 @@ class Warehouse:
     ):
         """DataFrame over a registered foreign table (time travel via the
         open metadata — snapshot id or timestamp)."""
-        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-            read_iceberg_table,
-        )
-
         loc = self.foreign_tables().get(f"{ns}.{name}")
         if loc is None:
             raise WarehouseError(f"foreign table {ns}.{name} is not registered")
@@ -652,10 +648,6 @@ class Warehouse:
         # honor the FOREIGN table's own write.upsert.enabled property
         # (Flink parity): its appends — incl. SQL INSERT INTO — commit
         # the upsert shape keyed on the schema's identifier-field-ids
-        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-            resolve_metadata_path,
-        )
-
         md = json.loads(fsio.read_text(resolve_metadata_path(loc)))
         if str(md.get("properties", {}).get("write.upsert.enabled", "")).lower() == "true":
             return self.upsert_foreign_table(ns, name, df)
@@ -940,18 +932,6 @@ def _load_dir_stats(table_path: str, dirname: str, meta: dict) -> list[dict]:
 
 BLOOM_IDX_BITS = 1 << 17  # 16 KiB of bits per file
 BLOOM_IDX_K = 4
-
-
-def _with_null_metadata_columns(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Metadata-column shape for an empty (zero-snapshot) table."""
-    return df.select(
-        *cols,
-        F.lit(None).cast("string").alias("_file"),
-        F.lit(None).cast("long").alias("_pos"),
-        F.lit(None).cast("int").alias("_spec_id"),
-        F.lit(None).cast(T.StructType()).alias("_partition"),
-        F.lit(None).cast("boolean").alias("_deleted"),
-    )
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -1423,7 +1403,6 @@ class Table:
         self,
         dirs: list[str],
         schema: T.StructType | None = None,
-        lineage: bool = False,
     ) -> list[tuple[PartitionSpec, int, DataFrame]]:
         """One scan per commit directory — commit dirs are each internally
         consistent hive layouts but differ across schema-evolution /
@@ -1460,22 +1439,6 @@ class Table:
         for d in dirs:
             spec, spec_id = self._dir_spec(d, meta)
             phys = self._physical_schema(spec, schema)
-            # lineage reads surface the materialized row-id columns that
-            # rewrites (compaction / copy-on-write DML) persisted into
-            # this dir's parquet files; dirs written by plain appends have
-            # none — their ids derive from first-row-id + position instead
-            # (`_lineage_cols` in read()/_read_dirs)
-            has_lin = bool(
-                lineage and meta.get("dir_specs", {}).get(d, {}).get("lineage")
-            )
-            if has_lin:
-                phys = T.StructType(
-                    list(phys.fields)
-                    + [
-                        T.StructField(LIN_ROW_ID, T.LongType(), True),
-                        T.StructField(LIN_UPD_SEQ, T.LongType(), True),
-                    ]
-                )
             path = os.path.join(self.path, d)
 
             alias: dict[str, str] = {}
@@ -1524,63 +1487,8 @@ class Table:
                             for f in phys.fields
                         ]
                     )
-            if lineage and not has_lin:
-                df = df.select(
-                    "*",
-                    F.lit(None).cast("long").alias(LIN_ROW_ID),
-                    F.lit(None).cast("long").alias(LIN_UPD_SEQ),
-                )
             out.append((spec, spec_id, df))
         return out
-
-    def _snapshot_schema(self, snap: dict) -> T.StructType:
-        """The schema recorded AT the snapshot's commit — time travel
-        projects this, not the current schema (so a column dropped later
-        still shows in VERSION AS OF reads of older snapshots). Snapshots
-        from before schema tracking fall back to the current schema."""
-        if snap.get("schema"):
-            return T.StructType.fromJson(json.loads(snap["schema"]))
-        return self.schema()
-
-    def _lineage_cols(self, d: str, meta: dict, seqs: dict[str, int]) -> list[Column]:
-        """Iceberg v3 row-lineage expressions for one data dir (must be
-        evaluated while `_metadata` and the `_lin_*` columns are in scope).
-
-        Derived rule (the spec's inheritance): `_row_id` = the dir's
-        first-row-id base (assigned at commit, `_append_snapshot`) + the
-        file's row-count offset within the dir (footer stats, canonical
-        path order) + the row's position in the file — zero per-row
-        storage for plain appends. A materialized `_lin_row_id` (written
-        by compaction / copy-on-write rewrites) wins, so carried-over rows
-        keep their identity across rewrites. `_last_updated_sequence_
-        number` defaults to the dir's data sequence; materialized values
-        carry the original update commit through compaction. Dirs with no
-        recorded stats (raw protocol commits) yield NULL ids — the spec's
-        'not yet assigned' state — rather than guessing."""
-        base = meta.get("dir_row_ids", {}).get(d)
-        stats = _load_dir_stats(self.path, d, meta)
-        derived = F.lit(None).cast("long")
-        if base is not None and stats:
-            pairs: list[Column] = []
-            off = 0
-            for f in sorted(stats, key=lambda r: r["path"]):
-                pairs += [F.lit(f["path"]), F.lit(int(base) + off)]
-                off += int(f.get("rows", 0))
-            # key the per-file base map by the path RELATIVE to the dir:
-            # dir names are unique uuid-suffixed tokens, so splitting on
-            # "/<dir>/" is scheme- and mount-independent (file:, viewfs:)
-            rel = F.regexp_replace(
-                F.col("_metadata.file_path"), "^.*?/" + re.escape(d) + "/", ""
-            )
-            derived = (
-                F.element_at(F.create_map(*pairs), rel) + F.col("_metadata.row_index")
-            ).cast("long")
-        return [
-            F.coalesce(F.col(LIN_ROW_ID), derived).alias("_row_id"),
-            F.coalesce(F.col(LIN_UPD_SEQ), F.lit(int(seqs.get(d, 0))).cast("long")).alias(
-                "_last_updated_sequence_number"
-            ),
-        ]
 
     def _read_dirs(
         self,
@@ -1588,7 +1496,6 @@ class Table:
         schema: T.StructType | None = None,
         file_pos: bool = False,
         seq_of: dict[str, int] | None = None,
-        lineage: bool = False,
     ) -> DataFrame:
         """``file_pos=True`` appends `_file`/`_pos` (from Spark's native
         `_metadata` hidden column — JVM-side, no extra scan) for
@@ -1607,16 +1514,8 @@ class Table:
                 )
             if seq_of is not None:
                 df = df.select("*", F.lit(None).cast("long").alias("_seq"))
-            if lineage:
-                df = df.select(
-                    "*",
-                    F.lit(None).cast("long").alias("_row_id"),
-                    F.lit(None).cast("long").alias("_last_updated_sequence_number"),
-                )
             return df
-        frames = self._dir_frames(dirs, schema, lineage=lineage)
-        lin_meta = self._meta() if lineage else None
-        lin_seqs = self._dir_seqs() if lineage else {}
+        frames = self._dir_frames(dirs, schema)
         cols = schema.fieldNames()
         extra = (
             [
@@ -1631,14 +1530,8 @@ class Table:
             dir_extra = list(extra)
             if seq_of is not None:
                 dir_extra.append(F.lit(int(seq_of.get(d, 0))).cast("long").alias("_seq"))
-            if lineage:
-                dir_extra.extend(self._lineage_cols(d, lin_meta, lin_seqs))
             # identity transform: the hive partition column holds the
-            # source value EXACTLY, so project it in the source's place —
-            # a filter on the source column then becomes a Catalyst
-            # PartitionFilter and prunes whole directories (this is what
-            # makes `WHERE created_date = ...` prune through the SQL
-            # front-end's views, not just through Table.scan())
+            # source value EXACTLY, so project it in the source's place
             if (
                 spec.transform == "identity"
                 and spec.column() is not None
@@ -1681,54 +1574,17 @@ class Table:
         )
         return keys.select(*[F.col(c).alias(f"__eq_{c}") for c in cols])
 
-    def _eq_match_cond(self, df: DataFrame, rec: dict, with_seq: bool = True):
-        cond = F.lit(True)
+    def _eq_match_cond(self, df: DataFrame, rec: dict):
+        # Iceberg v2 sequence rule: an equality delete applies only to
+        # rows whose data file PREDATES the delete file — later re-inserts
+        # of the same key survive
+        cond = df["_seq"] < F.lit(int(rec["seq"]))
         for c in rec["cols"]:
             cond = cond & df[c].eqNullSafe(F.col(f"__eq_{c}"))
-        if with_seq:
-            # Iceberg v2 sequence rule: an equality delete applies only to
-            # rows whose data file PREDATES the delete file — later
-            # re-inserts of the same key survive
-            cond = cond & (df["_seq"] < F.lit(int(rec["seq"])))
         return cond
-
-    def _apply_eq_deletes(self, df: DataFrame, eq_recs: list[dict], cols: list[str]) -> DataFrame:
-        """Anti-join live rows against each equality-delete file on its
-        key columns + the sequence rule. Delete files are tiny (distinct
-        keys), so each is a broadcast — map-side filters, no shuffle of
-        the data."""
-        for rec in eq_recs:
-            df = df.join(
-                F.broadcast(self._eq_key_frame(rec)), self._eq_match_cond(df, rec), "left_anti"
-            )
-        return df.select(*cols)
 
     # ------------- merge-on-read positional deletes (Iceberg v2) -----------
     _DELETE_SCHEMA = "file_path string, pos bigint"
-
-    @staticmethod
-    def _plain_path(col: Column) -> Column:
-        """Spark's `_metadata.file_path` is a `file:` URI; the Iceberg
-        export's manifests (and delete files written from this version
-        on) store plain filesystem paths. Normalize for storage and on
-        BOTH sides of every tombstone comparison, so legacy delete files
-        written in URI form keep matching."""
-        return F.regexp_replace(col, "^file:(//)?", "")
-
-    @classmethod
-    def _pos_delete_cond(cls, data: DataFrame, tomb: DataFrame) -> Column:
-        return (cls._plain_path(data["_file"]) == cls._plain_path(tomb["file_path"])) & (
-            data["_pos"] == tomb["pos"]
-        )
-
-    def _tombstones(self, delete_dirs: list[str]) -> DataFrame | None:
-        """Union of a snapshot's positional-delete files: (file_path, pos)
-        rows, exactly Iceberg v2's delete-file schema. None when the
-        snapshot carries no deletes (the common case costs nothing)."""
-        if not delete_dirs:
-            return None
-        paths = [os.path.join(self.path, d) for d in delete_dirs]
-        return self.spark.read.schema(self._DELETE_SCHEMA).parquet(*paths)
 
     def position_deletes(self) -> DataFrame:
         """<table>.position_deletes metadata table (Iceberg): the current
@@ -1746,18 +1602,6 @@ class Table:
             "file_path", "pos", F.col("_metadata.file_path").alias("delete_file_path")
         )
 
-    def _apply_deletes(self, df: DataFrame, delete_dirs: list[str], cols: list[str]) -> DataFrame:
-        """Anti-join live rows against the tombstones on (_file, _pos).
-        The tombstone side is broadcast: delete files are a tiny fraction
-        of the data (that is the point of merge-on-read), so at cluster
-        scale this is a map-side filter with no shuffle of the data."""
-        tomb = self._tombstones(delete_dirs)
-        if tomb is None:
-            return df.select(*cols)
-        return df.join(F.broadcast(tomb), self._pos_delete_cond(df, tomb), "left_anti").select(
-            *cols
-        )
-
     def read(
         self,
         version: int | str | None = None,
@@ -1765,153 +1609,65 @@ class Table:
         metadata_columns: bool = False,
         lineage: bool = False,
     ) -> DataFrame:
-        """Snapshot-isolated scan; `version`/`as_of_ms` give the reference's
-        VERSION AS OF / TIMESTAMP AS OF (warehouse_helpers.py:134-136),
-        projected with the SNAPSHOT's schema. ``metadata_columns=True``
-        adds Iceberg's metadata columns `_spec_id, _partition, _file,
-        _pos, _deleted` (reference getting_started.ipynb:128-132): _file/
-        _pos come from Spark's native `_metadata` hidden column (JVM-side,
-        no extra scan), _partition is the unified partition struct across
-        the specs in play, and _deleted is LIVE (Iceberg v2 semantics):
-        rows tombstoned by merge-on-read positional deletes surface with
-        `_deleted=true` in metadata scans (the Iceberg debugging workflow
-        of inspecting deleted rows) while normal reads exclude them.
-        Copy-on-write deletes rewrite data instead, so their removed rows
-        leave the manifest entirely.
+        """Snapshot-isolated read through `read_iceberg_table` over the
+        table's published Iceberg metadata. `version` (a snapshot id, or
+        a branch/tag name) and `as_of_ms` give the reference's VERSION AS
+        OF / TIMESTAMP AS OF (warehouse_helpers.py:134-136), projected
+        with the SNAPSHOT's schema; timestamps resolve on the main
+        lineage only, so a snapshot staged on a branch stays invisible to
+        them until published.
 
-        ``lineage=True`` adds Iceberg v3 ROW LINEAGE columns `_row_id` and
-        `_last_updated_sequence_number`: plain appends derive ids from the
-        dir's commit-assigned first-row-id + file offset + row position
-        (zero per-row storage), rewrites (compaction, copy-on-write DML)
-        materialize them so carried-over rows keep their identity, and
-        merge-on-read leaves surviving rows' files — and therefore ids —
-        untouched by construction."""
-        time_travel = version is not None or as_of_ms is not None
-        snap = self._resolve(version, as_of_ms)
-        schema = self._snapshot_schema(snap) if time_travel else self.schema()
-        cols = schema.fieldNames()
-        lin_cols = ["_row_id", "_last_updated_sequence_number"] if lineage else []
-        del_dirs = snap.get("delete_dirs", [])
-        eq_recs = snap.get("eq_deletes", [])
-        if not metadata_columns:
-            if del_dirs or eq_recs:
-                df = self._read_dirs(
-                    snap["manifest"],
-                    schema,
-                    file_pos=bool(del_dirs),
-                    seq_of=self._dir_seqs() if eq_recs else None,
-                    lineage=lineage,
-                )
-                if del_dirs:
-                    keep = cols + (["_seq"] if eq_recs else []) + lin_cols
-                    df = self._apply_deletes(df, del_dirs, keep)
-                if eq_recs:
-                    df = self._apply_eq_deletes(df, eq_recs, cols + lin_cols)
-                return df
-            return self._read_dirs(snap["manifest"], schema, lineage=lineage).select(
-                *cols, *lin_cols
-            )
+        ``metadata_columns=True`` adds Iceberg's metadata columns
+        `_file, _pos, _spec_id, _partition, _deleted` (reference
+        getting_started.ipynb:128-132). `_partition` is one struct over
+        the partition fields of every spec in play, and `_deleted` is
+        LIVE: rows that merge-on-read deletes retired stay visible with
+        `_deleted=true` (Iceberg's inspect-deleted-rows workflow) while
+        normal reads exclude them. Copy-on-write deletes rewrite data
+        instead, so their removed rows leave the table entirely.
 
-        frames = self._dir_frames(snap["manifest"], schema, lineage=lineage)
-        if not frames:
-            out = local_frame(self.spark, [], schema)
-            out = _with_null_metadata_columns(out, cols)
-            if lineage:
-                out = out.select(
-                    "*",
-                    F.lit(None).cast("long").alias("_row_id"),
-                    F.lit(None).cast("long").alias("_last_updated_sequence_number"),
-                )
-            return out
-
-        # unified partition struct type: one field per distinct spec column
-        cur_schema = self.schema()
-        part_fields: list[tuple[str, T.DataType]] = []
-        seen = set()
-        for spec, _sid, _df in frames:
-            if spec.column() is not None and spec.column() not in seen:
-                seen.add(spec.column())
-                # an old dir's identity/truncate spec may reference a
-                # column dropped since (drop_column only protects the
-                # CURRENT spec's source) — _transform_type falls back to
-                # string instead of raising on the schema lookup
-                dt = self._transform_type(
-                    spec,
-                    cur_schema[spec.source].dataType
-                    if spec.source in cur_schema.fieldNames()
-                    else None,
-                )
-                part_fields.append((spec.column(), dt))
-
-        seqs = self._dir_seqs() if eq_recs or lineage else {}
-        lin_snapmeta = self._meta() if lineage else None
-        parts = []
-        for (spec, spec_id, df), d in zip(frames, snap["manifest"]):
-            struct_cols = [
-                (
-                    F.col(name)
-                    if spec.column() == name and name in df.columns
-                    else F.lit(None).cast(dt)
-                ).alias(name)
-                for name, dt in part_fields
-            ]
-            partition_col = (
-                F.struct(*struct_cols)
-                if struct_cols
-                else F.lit(None).cast(T.StructType())
-            )
-            extra = (
-                [F.lit(int(seqs.get(d, 0))).cast("long").alias("_seq")] if eq_recs else []
-            )
-            if lineage:
-                extra.extend(self._lineage_cols(d, lin_snapmeta, seqs))
-            parts.append(
-                df.select(
-                    *cols,
-                    F.col("_metadata.file_path").alias("_file"),
-                    F.col("_metadata.row_index").alias("_pos"),
-                    F.lit(spec_id).alias("_spec_id"),
-                    partition_col.alias("_partition"),
-                    F.lit(False).alias("_deleted"),
-                    *extra,
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        meta_cols = ["_file", "_pos", "_spec_id", "_partition"] + (
-            ["_row_id", "_last_updated_sequence_number"] if lineage else []
+        ``lineage=True`` adds Iceberg v3 ROW LINEAGE columns `_row_id`
+        and `_last_updated_sequence_number`: a file's first row id (set
+        at commit, published in its manifest) plus the row's position,
+        or the ids that rewrites (compaction, copy-on-write DML)
+        materialized into the file so carried-over rows keep their
+        identity; merge-on-read never touches surviving rows' files, so
+        their ids hold by construction."""
+        snap = self._resolve(version, as_of_ms)  # the WarehouseErrors callers expect
+        at = (
+            {"ref": version}
+            if isinstance(version, str)
+            else {"snapshot_id": version, "as_of_ms": as_of_ms}
         )
-        if del_dirs:
-            # live _deleted: tombstoned rows stay VISIBLE in metadata scans,
-            # flagged true (Iceberg's inspect-deleted-rows workflow)
-            tomb = self._tombstones(del_dirs).select(
-                "file_path", "pos", F.lit(True).alias("_tomb")
-            )
-            cond = self._pos_delete_cond(out, tomb)
-            out = (
-                out.drop("_deleted")
-                .join(F.broadcast(tomb), cond, "left")
-                .select(
-                    *cols,
-                    *meta_cols,
-                    *(["_seq"] if eq_recs else []),
-                    F.coalesce(F.col("_tomb"), F.lit(False)).alias("_deleted"),
-                )
-            )
-        if eq_recs:
-            # equality-deleted rows also surface flagged, honoring the
-            # sequence rule (a re-inserted key's newer row stays false)
-            for i, rec in enumerate(eq_recs):
-                k = self._eq_key_frame(rec).withColumn(f"_ehit{i}", F.lit(True))
-                out = out.join(F.broadcast(k), self._eq_match_cond(out, rec), "left").drop(
-                    *[f"__eq_{c}" for c in rec["cols"]]
-                )
-            flag = F.col("_deleted")
-            for i in range(len(eq_recs)):
-                flag = flag | F.coalesce(F.col(f"_ehit{i}"), F.lit(False))
-            out = out.select(*cols, *meta_cols, flag.alias("_deleted"))
-        return out
+        df = read_iceberg_table(
+            self.spark,
+            self._published_metadata(),
+            row_lineage=lineage,
+            metadata_columns=metadata_columns,
+            **at,
+        )
+        time_travel = version is not None or as_of_ms is not None
+        return self._as_table_types(df, snap if time_travel else None)
+
+    def _as_table_types(self, df: DataFrame, snap: dict | None = None) -> DataFrame:
+        """Iceberg has no 8/16-bit integers: cast such columns of a
+        reader frame back to the table's own types (``snap``'s schema for
+        time travel, else the current one)."""
+        schema = (
+            T.StructType.fromJson(json.loads(snap["schema"]))
+            if snap and snap.get("schema")
+            else self.schema()
+        )
+        narrow = {
+            f.name: f.dataType
+            for f in schema.fields
+            if isinstance(f.dataType, (T.ByteType, T.ShortType))
+        }
+        if not narrow:
+            return df
+        return df.select(
+            *[df[c].cast(narrow[c]).alias(c) if c in narrow else df[c] for c in df.columns]
+        )
 
     def scan(self, eq: dict[str, Any] | None = None, between: dict[str, tuple] | None = None) -> DataFrame:
         """Pruned read of the current snapshot: ``eq={"created_at":
@@ -1922,27 +1678,11 @@ class Table:
         the transform each file was written under: hidden partitioning,
         correct across spec evolution), column bounds or Bloom index can
         match. Pruning saves IO only; the filters apply on top."""
-        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-            read_iceberg_table,
-        )
-
-        schema = self.schema()
-        df = read_iceberg_table(
-            self.spark, self._published_metadata(schema), eq=eq, between=between
-        )
-        # Iceberg has no 8/16-bit integers: restore the table's own types
-        narrow = {
-            f.name: f.dataType
-            for f in schema.fields
-            if isinstance(f.dataType, (T.ByteType, T.ShortType))
-        }
-        if narrow:
-            df = df.select(
-                *[
-                    F.col(c).cast(narrow[c]).alias(c) if c in narrow else F.col(c)
-                    for c in schema.fieldNames()
-                ]
+        df = self._as_table_types(
+            read_iceberg_table(
+                self.spark, self._published_metadata(), eq=eq, between=between
             )
+        )
         conds = [F.col(c) == v for c, v in (eq or {}).items()]
         for c, (lo, hi) in (between or {}).items():
             conds += ([F.col(c) >= lo] if lo is not None else []) + (
@@ -1955,24 +1695,28 @@ class Table:
             df = df.filter(cond)
         return df
 
-    def _published_metadata(self, schema: T.StructType) -> str:
-        """Path of the published `vN.metadata.json`. When its current
-        snapshot is not the table's head, or its current columns are not
-        ``schema``'s (an export after a commit or ALTER failed), the
-        table is re-exported under the commit lock first: a scan planned
-        from the published metadata must never serve an older state."""
-        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-            resolve_metadata_path,
-        )
-
+    def _published_metadata(self) -> str:
+        """Path of the published `vN.metadata.json`. When its main head,
+        its other refs (branches, tags) or its current columns are not
+        the table's (an export after a commit, ref move or ALTER failed),
+        the table is re-exported under the commit lock first: a read
+        planned from the published metadata must never serve an older
+        state."""
+        meta = self._meta()
+        refs = {n: int(r["snapshot_id"]) for n, r in meta.get("refs", {}).items()}
         head = self.current_snapshot_id()
+        if head is not None:
+            refs.setdefault("main", head)
+        columns = T.StructType.fromJson(json.loads(meta["schema"])).fieldNames()
         try:
             path = resolve_metadata_path(self.path)
             md = json.loads(fsio.read_text(path))
             (cur,) = [s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"]]
-            if md.get("current-snapshot-id") == (-1 if head is None else head) and [
-                f["name"] for f in cur["fields"]
-            ] == schema.fieldNames():
+            if (
+                md.get("current-snapshot-id") == (-1 if head is None else head)
+                and {n: r["snapshot-id"] for n, r in md.get("refs", {}).items()} == refs
+                and [f["name"] for f in cur["fields"]] == columns
+            ):
                 return path
         except FileNotFoundError:
             pass
@@ -1987,15 +1731,14 @@ class Table:
     def incremental_scan(
         self, from_version: int, to_version: int | None = None
     ) -> DataFrame:
-        """Iceberg-style incremental APPEND scan: the rows added by
-        snapshots (from_version, to_version] — i.e. exactly the data dirs
-        that joined the manifest in that interval, minus rows tombstoned
-        by merge-on-read deletes as of ``to_version``. This is the
-        change-consumption primitive a downstream pipeline polls
-        ("give me what's new since snapshot N") — O(new data), never a
-        rescan of the table. Snapshots that REPLACE data (overwrite/
-        compact/copy-on-write DML) are not expressible as pure appends;
-        encountering one raises, as Iceberg's incremental scan does."""
+        """Iceberg-style incremental APPEND scan: the rows of the data
+        files that joined the table in (from_version, to_version], minus
+        rows merge-on-read deletes retired as of ``to_version`` — the
+        change-consumption primitive a downstream pipeline polls ("give
+        me what's new since snapshot N"), O(new data), never a rescan.
+        Snapshots that REPLACE data (overwrite/compact/copy-on-write DML)
+        are not expressible as pure appends; encountering one raises, as
+        Iceberg's incremental scan does."""
         snaps = self._main_snaps()
         by_id = {s["snapshot_id"]: s for s in snaps}
         if from_version not in by_id:
@@ -2004,48 +1747,24 @@ class Table:
         if to_version not in by_id:
             raise SnapshotNotFoundError(f"snapshot {to_version} not found")
         base = set(by_id[from_version]["manifest"])
-        interval = [
-            s
-            for s in snaps
-            if from_version < s["snapshot_id"] <= to_version
-        ]
         non_append = [
             s["snapshot_id"]
-            for s in interval
-            if s["operation"] not in ("append", "delete", "update")
-            or not base.issubset(set(s["manifest"]))
+            for s in snaps
+            if from_version < s["snapshot_id"] <= to_version
+            and (
+                s["operation"] not in ("append", "delete", "update")
+                or not base.issubset(set(s["manifest"]))
+            )
         ]
         if non_append:
             raise WarehouseError(
                 f"incremental scan crosses replacing snapshot(s) {non_append}; "
                 "data was rewritten — fall back to a full scan"
             )
-        new_dirs = [d for d in by_id[to_version]["manifest"] if d not in base]
-        del_dirs = by_id[to_version].get("delete_dirs", [])
-        eq_recs = by_id[to_version].get("eq_deletes", [])
-        schema = self._snapshot_schema(by_id[to_version])
-        cols = schema.fieldNames()
-        if not new_dirs:
-            return local_frame(self.spark, [], schema)
-        if del_dirs or eq_recs:
-            df = self._read_dirs(
-                new_dirs,
-                schema,
-                file_pos=bool(del_dirs),
-                seq_of=self._dir_seqs() if eq_recs else None,
-            )
-            if del_dirs:
-                df = self._apply_deletes(df, del_dirs, cols + (["_seq"] if eq_recs else []))
-            if eq_recs:
-                df = self._apply_eq_deletes(df, eq_recs, cols)
-            return df
-        return self._read_dirs(new_dirs, schema).select(*cols)
-
-    _CHANGE_COLS = [
-        ("_change_type", T.StringType()),
-        ("_commit_snapshot_id", T.LongType()),
-        ("_change_ordinal", T.IntegerType()),
-    ]
+        df = incremental_read_iceberg_table(
+            self.spark, self._published_metadata(), from_version, to_version
+        )
+        return self._as_table_types(df, by_id[to_version])
 
     def changes(
         self,
@@ -2053,153 +1772,48 @@ class Table:
         to_version: int | None = None,
         lineage: bool = False,
     ) -> DataFrame:
-        """Iceberg changelog scan (`CALL system.create_changelog_view`):
-        the row-level changes committed by snapshots in
-        (``from_version``, ``to_version``], each tagged `_change_type`
-        ('insert' | 'delete'), `_commit_snapshot_id`, and
+        """Iceberg changelog scan (`CALL system.create_changelog_view`)
+        through `changes_iceberg_table` over the table's published
+        metadata: the row-level changes committed by main-lineage
+        snapshots in (``from_version``, ``to_version``], each tagged
+        `_change_type` ('insert' | 'delete'), `_commit_snapshot_id`, and
         `_change_ordinal` (commit order within the window) — the CDC feed
         a downstream consumer applies to stay in sync.
 
-        Per snapshot, exactly Iceberg's file-level changelog semantics:
-        rows of newly added data files are inserts; rows of removed data
-        files are deletes (minus rows the parent had already tombstoned —
-        those were emitted as deletes when the tombstone committed); rows
-        targeted by newly added positional-delete files are deletes.
-        `replace` snapshots (compaction, rewrite_position_delete_files)
-        rewrite bytes without changing table contents, so — like
-        Iceberg's changelog — they emit nothing.
-
-        Scale: the scan reads ONLY the churned dirs of each snapshot in
-        the window (plus, for MOR delete commits, the parent manifest
-        filtered by a broadcast semi-join on the tombstones) — O(changed
-        data), never a diff of two full table reads.
+        Per snapshot, Iceberg's file-level changelog semantics: rows of
+        added data files are inserts; rows of removed data files are
+        deletes (minus rows the parent had already retired — those were
+        emitted when their delete committed); rows that new
+        merge-on-read deletes retire are deletes. `replace` snapshots
+        (compaction, rewrite_position_delete_files) rewrite bytes without
+        changing table contents, so they emit nothing. The scan reads
+        only the churned files of each snapshot (plus, for a row-level
+        delete commit, the parent's live rows filtered by a broadcast
+        semi-join) — O(changed data), never a diff of two table reads.
 
         ``lineage=True`` (opt-in; existing consumers fold the change
         columns by prefix and must not see a new data column) adds
         Iceberg v3's `_row_id` to every emitted row: a delete and a
         later insert carrying the SAME `_row_id` are one logical row
-        moving (copy-on-write UPDATE under identity preservation) —
-        the correlation a CDC consumer cannot recover from values
-        alone."""
-        snaps = self._main_snaps()
-        by_id = {s["snapshot_id"]: s for s in snaps}
-        if to_version is None:
-            to_version = snaps[-1]["snapshot_id"] if snaps else 0
-        elif to_version not in by_id:
-            raise SnapshotNotFoundError(f"snapshot {to_version} not found")
-        if from_version is not None and from_version not in by_id:
-            raise SnapshotNotFoundError(f"snapshot {from_version} not found")
-        start = from_version if from_version is not None else 0
-        schema = self._snapshot_schema(by_id[to_version]) if snaps else self.schema()
-        cols = schema.fieldNames()
-        lin = ["_row_id"] if lineage else []
-
-        parts: list[DataFrame] = []
-        ordinal = 0
-        window = [s for s in snaps if start < s["snapshot_id"] <= to_version]
-        for s in window:
-            idx = snaps.index(s)
-            parent = snaps[idx - 1] if idx > 0 else {"manifest": [], "delete_dirs": []}
-            if s["operation"] == "replace":
-                continue  # physical rewrite, no logical change
-            cur_dirs = set(s["manifest"])
-            par_dirs = set(parent["manifest"])
-            par_dels = parent.get("delete_dirs", [])
-            par_eq = parent.get("eq_deletes", [])
-            added = [d for d in s["manifest"] if d not in par_dirs]
-            removed = [d for d in parent["manifest"] if d not in cur_dirs]
-            new_dels = [
-                d for d in s.get("delete_dirs", []) if d not in set(par_dels)
-            ]
-            new_eq = [
-                r
-                for r in s.get("eq_deletes", [])
-                if r["dir"] not in {p["dir"] for p in par_eq}
-            ]
-
-            def tag(df: DataFrame, change: str, sid=None, ord_=None) -> DataFrame:
-                return df.select(
-                    *cols,
-                    *lin,
-                    F.lit(change).alias("_change_type"),
-                    F.lit(sid).cast("long").alias("_commit_snapshot_id"),
-                    F.lit(ord_).cast("int").alias("_change_ordinal"),
-                )
-
-            sid, emitted = s["snapshot_id"], False
-            if added:
-                parts.append(
-                    tag(
-                        self._read_dirs(added, schema, lineage=lineage).select(
-                            *cols, *lin
-                        ),
-                        "insert",
-                        sid,
-                        ordinal,
-                    )
-                )
-                emitted = True
-            seqs = self._dir_seqs() if (par_eq or new_eq) else None
-
-            def parent_alive(dirs: list[str]) -> DataFrame:
-                # rows the parent had already tombstoned (positionally or
-                # by equality) were emitted as deletes by THOSE commits —
-                # don't emit them twice
-                df = self._read_dirs(
-                    dirs, schema, file_pos=True, seq_of=seqs, lineage=lineage
-                )
-                keep = (
-                    cols + ["_file", "_pos"] + (["_seq"] if par_eq or new_eq else []) + lin
-                )
-                df = self._apply_deletes(df, par_dels, keep)
-                if par_eq:
-                    df = self._apply_eq_deletes(df, par_eq, keep)
-                return df
-
-            if removed:
-                parts.append(
-                    tag(parent_alive(removed).select(*cols, *lin), "delete", sid, ordinal)
-                )
-                emitted = True
-            if new_dels:
-                # semi-join the new tombstones against the parent's LIVE
-                # rows, not its raw files — a tombstone landing on a row
-                # an earlier commit already killed (e.g. an equality
-                # delete in a legacy/foreign layout) must not emit a
-                # second delete for a once-inserted row
-                df = parent_alive(parent["manifest"])
-                tomb = self._tombstones(new_dels)
-                cond = self._pos_delete_cond(df, tomb)
-                hit = df.join(F.broadcast(tomb), cond, "left_semi").select(*cols, *lin)
-                parts.append(tag(hit, "delete", sid, ordinal))
-                emitted = True
-            if new_eq:
-                alive = parent_alive(parent["manifest"])
-                hits: DataFrame | None = None
-                for rec in new_eq:
-                    h = alive.join(
-                        F.broadcast(self._eq_key_frame(rec)),
-                        self._eq_match_cond(alive, rec),
-                        "left_semi",
-                    )
-                    hits = h if hits is None else hits.unionByName(h)
-                # a row matching several delete files emits once
-                hit = hits.dropDuplicates(["_file", "_pos"]).select(*cols, *lin)
-                parts.append(tag(hit, "delete", sid, ordinal))
-                emitted = True
-            if emitted:
-                ordinal += 1
-        if not parts:
-            empty = T.StructType(
-                list(schema.fields)
-                + [T.StructField(c, T.LongType(), True) for c in lin]
-                + [T.StructField(n, t, True) for n, t in self._CHANGE_COLS]
-            )
-            return local_frame(self.spark, [], empty)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        moving (copy-on-write UPDATE under identity preservation) — the
+        correlation a CDC consumer cannot recover from values alone."""
+        mains = self._main_snaps()
+        by_id = {s["snapshot_id"]: s for s in mains}
+        for v in (to_version, from_version):
+            if v is not None and v not in by_id:
+                raise SnapshotNotFoundError(f"snapshot {v} not found")
+        to = by_id[to_version] if to_version is not None else (mains[-1] if mains else None)
+        start = from_version or 0
+        if to is not None and start > to["snapshot_id"]:
+            start = to["snapshot_id"]  # a window ending before it starts is empty
+        df = changes_iceberg_table(
+            self.spark,
+            self._published_metadata(),
+            start,
+            to_version,
+            row_lineage=lineage,
+        )
+        return self._as_table_types(df, to)
 
     def to_pandas(self, **kw):
         """Arrow-backed pandas export (reference S9: warehouse_helpers.py:117)."""
@@ -2243,8 +1857,8 @@ class Table:
             *[F.col(c).cast(schema[c].dataType).alias(c) for c in cols],
             # lineage_cols: rewrites (compaction / copy-on-write DML)
             # materialize the rows' Iceberg v3 row ids into the files so
-            # carried-over rows keep their identity — read back by
-            # _dir_frames(lineage=True), invisible to normal reads
+            # carried-over rows keep their identity — read back by the
+            # Iceberg reader's row lineage, invisible to normal reads
             *(
                 [
                     F.col("_row_id").cast("long").alias(LIN_ROW_ID),
@@ -2310,8 +1924,6 @@ class Table:
                 )
             except Exception:
                 pass
-        if lineage_cols:
-            spec_rec["lineage"] = True
         return PendingData(dirname, sum(s["rows"] for s in stats), spec_rec, stats)
 
     def _current_spec_id(self, meta: dict) -> int:
@@ -2735,7 +2347,12 @@ class Table:
             .distinct()
             .collect()
         ]
-        live = self._live_with_pos(snap)
+        # live rows with their (file, position) identity: a row already
+        # dead by either delete kind must never be re-tombstoned, or the
+        # changelog would emit a second delete for a row inserted once
+        live = read_iceberg_table(
+            self.spark, self._published_metadata(), ref=branch, _keep_lineage=True
+        )
         pv = spec.expr(src_dt, spec_hash=spec_hash)
         non_null = [v for v in touched if v is not None]
         cond = F.lit(False)
@@ -2744,7 +2361,7 @@ class Table:
         if any(v is None for v in touched):
             cond = cond | pv.isNull()
         hits = live.filter(cond).select(
-            self._plain_path(F.col("_file")).alias("file_path"), F.col("_pos").alias("pos")
+            F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
         ddir = f"delete-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.path, ddir)
@@ -2798,26 +2415,6 @@ class Table:
         finally:
             self._release_commit_lock(lock, token)
 
-    def _live_with_pos(self, snap: dict) -> DataFrame:
-        """Live rows of a snapshot WITH `_file`/`_pos` lineage: data dirs
-        minus positional tombstones minus EQUALITY deletes. The row set a
-        new tombstone may legitimately target — a row already dead (by
-        either delete kind) must never be re-tombstoned, or the changelog
-        would emit a second delete for a row inserted once."""
-        eq_recs = snap.get("eq_deletes", [])
-        live = self._read_dirs(
-            snap["manifest"],
-            file_pos=True,
-            seq_of=self._dir_seqs() if eq_recs else None,
-        )
-        tomb = self._tombstones(snap.get("delete_dirs", []))
-        if tomb is not None:
-            live = live.join(F.broadcast(tomb), self._pos_delete_cond(live, tomb), "left_anti")
-        if eq_recs:
-            keep = [c for c in live.columns if c != "_seq"]
-            live = self._apply_eq_deletes(live, eq_recs, keep)
-        return live
-
     def _delete_where_mor(self, condition: str, branch: str | None = None) -> int:
         """Merge-on-read DELETE: compute matching LIVE row positions, land
         them as a zstd parquet delete file, commit a snapshot that keeps
@@ -2827,9 +2424,11 @@ class Table:
         parent = self._branch_head(branch) if branch else self.current_snapshot_id()
         snap = self._resolve(version=branch) if branch else self._resolve()
         existing = snap.get("delete_dirs", [])
-        live = self._live_with_pos(snap)
+        live = read_iceberg_table(
+            self.spark, self._published_metadata(), ref=branch, _keep_lineage=True
+        )
         hits = live.filter(f"({condition})").select(
-            self._plain_path(F.col("_file")).alias("file_path"), F.col("_pos").alias("pos")
+            F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
         dirname = f"delete-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.path, dirname)
@@ -3001,7 +2600,9 @@ class Table:
         parent = self._branch_head(branch) if branch else self.current_snapshot_id()
         snap = self._resolve(version=branch) if branch else self._resolve()
         existing = snap.get("delete_dirs", [])
-        live = self._live_with_pos(snap)
+        live = read_iceberg_table(
+            self.spark, self._published_metadata(), ref=branch, _keep_lineage=True
+        )
         # matched feeds TWO writes (tombstone positions + rewritten
         # rows); persist it so the full-table scan + predicate run once,
         # not once per write — the whole point of MOR UPDATE is
@@ -3009,7 +2610,7 @@ class Table:
         matched = live.filter(f"({condition})").persist()
         try:
             hits = matched.select(
-                self._plain_path(F.col("_file")).alias("file_path"), F.col("_pos").alias("pos")
+                F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
             )
             ddir = f"delete-{uuid.uuid4().hex[:12]}"
             out = os.path.join(self.path, ddir)
@@ -4780,10 +4381,9 @@ class Table:
             return parent or 0  # no tombstones — nothing to rewrite
         import urllib.parse
 
-        tomb = self._tombstones(del_dirs)
         tomb_files = {
             urllib.parse.urlparse(r.file_path).path  # _metadata paths are file: URIs
-            for r in tomb.select("file_path").distinct().collect()
+            for r in self.position_deletes().select("file_path").distinct().collect()
         }
         affected = [
             d
@@ -4791,11 +4391,16 @@ class Table:
             if any(f.startswith(os.path.join(self.path, d) + os.sep) for f in tomb_files)
         ]
         untouched = [d for d in snap["manifest"] if d not in affected]
-        schema = self.schema()
-        cols = schema.fieldNames()
-        rewritten = self._read_dirs(affected, schema, file_pos=True, lineage=True)
-        live = self._apply_deletes(
-            rewritten, del_dirs, cols + ["_row_id", "_last_updated_sequence_number"]
+        meta = self._meta()
+        live = read_iceberg_table(
+            self.spark,
+            self._published_metadata(),
+            row_lineage=True,
+            _files=[
+                os.path.join(self.path, d, f["path"])
+                for d in affected
+                for f in _load_dir_stats(self.path, d, meta)
+            ],
         )
         p = self._write_data(live, lineage_cols=True)
         return self._commit_replace(

@@ -342,6 +342,27 @@ def test_scan_never_serves_stale_published_metadata(wh, monkeypatch):
         t.add_column("w", "int")
     monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", real)
     assert [tuple(r) for r in t.scan(eq={"id": 2}).collect()] == [(2, None)]
+    # and for a BRANCH commit whose export failed: main's head did not
+    # move, but a branch read and merge-on-read DML on the branch plan
+    # from the published refs, so they must see the staged snapshot
+    t.create_ref("audit", "branch")
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", failing_export)
+    with pytest.raises(OSError):
+        t.insert_values([(3, 3)], branch="audit")
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", real)
+    staged = t._resolve("audit")["snapshot_id"]
+    assert sorted(tuple(r) for r in t.read(version="audit").collect()) == [
+        (1, None), (2, None), (3, 3)
+    ]
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", failing_export)
+    with pytest.raises(OSError):
+        t.insert_values([(4, 4)], branch="audit")
+    monkeypatch.setattr(iceberg_export, "write_iceberg_metadata", real)
+    t.delete_where("id >= 3", mode="merge-on-read", branch="audit")
+    assert sorted(tuple(r) for r in t.read(version="audit").collect()) == [(1, None), (2, None)]
+    assert sorted(tuple(r) for r in t.read(version=staged).collect()) == [
+        (1, None), (2, None), (3, 3)
+    ]
 
 
 def test_manifest_first_written_after_rename_keeps_values(wh, monkeypatch):

@@ -1,169 +1,13 @@
-"""Regression pins for the round-7 session-2 review findings: CDC
-lineage must follow parent pointers (not snapshot-id order), file:-URI
-manifests must resolve in the delete replay, a corrupt stream checkpoint
-must fail loudly, and content salts must tolerate nested maps."""
+"""Regression pins for the round-7 session-2 review findings: a
+corrupt stream checkpoint must fail loudly, and content salts must
+tolerate nested maps."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
-from minio_iceberg_polaris_lakehouse_spark import avro_io
-from minio_iceberg_polaris_lakehouse_spark.iceberg_export import _MANIFEST_LIST_SCHEMA
-from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
-    changes_iceberg_table,
-)
 from minio_iceberg_polaris_lakehouse_spark.warehouse import WarehouseError
-from tests.test_iceberg_reader import _foreign_entry_schema
-
-
-def _build_random_id_table(tmp_path):
-    """Commit order s900 → s120 → s450 (parent-chained), ids chosen so
-    id-order DISAGREES with commit order — like real Flink/Spark writers
-    whose snapshot ids are random int64s. s900 adds 2 rows (data file
-    recorded as a file: URI), s120 positionally deletes row 0 of it,
-    s450 appends 1 more row."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = str(tmp_path / "foreign_tbl")
-    mdir, ddir = f"{root}/metadata", f"{root}/data"
-    os.makedirs(mdir)
-    os.makedirs(ddir)
-
-    a_path = f"{ddir}/a.parquet"
-    pq.write_table(
-        pa.table({"id": pa.array([1, 2], pa.int32()), "v": pa.array(["x", "y"])}), a_path
-    )
-    b_path = f"{ddir}/b.parquet"
-    pq.write_table(
-        pa.table({"id": pa.array([3], pa.int32()), "v": pa.array(["z"])}), b_path
-    )
-    pos_path = f"{ddir}/posdel.parquet"
-    pq.write_table(
-        pa.table(
-            {"file_path": pa.array([f"file://{a_path}"]), "pos": pa.array([0], pa.int64())}
-        ),
-        pos_path,
-    )
-
-    schema_json = {
-        "schema-id": 0,
-        "type": "struct",
-        "fields": [
-            {"id": 1, "name": "id", "type": "int", "required": False},
-            {"id": 2, "name": "v", "type": "string", "required": False},
-        ],
-    }
-    entry_schema = _foreign_entry_schema()
-
-    def dfile(content, fpath, rows, snap):
-        return {
-            "status": 1,
-            "snapshot_id": snap,
-            "sequence_number": None,
-            "file_sequence_number": None,
-            "data_file": {
-                "content": content,
-                "file_path": fpath,
-                "file_format": "PARQUET",
-                "record_count": rows,
-                "file_size_in_bytes": 1,
-                "equality_ids": None,
-            },
-        }
-
-    def man(path, entries):
-        avro_io.write_container(
-            path, entry_schema, entries, metadata={"schema": json.dumps(schema_json)}
-        )
-        return path
-
-    # data file path recorded as a file: URI on purpose
-    m_a = man(f"{mdir}/m-a.avro", [dfile(0, f"file://{a_path}", 2, 900)])
-    m_del = man(f"{mdir}/m-del.avro", [dfile(1, pos_path, 1, 120)])
-    m_b = man(f"{mdir}/m-b.avro", [dfile(0, b_path, 1, 450)])
-
-    def mlrec(path, content, seq, rows, snap):
-        return {
-            "manifest_path": path,
-            "manifest_length": 1,
-            "partition_spec_id": 0,
-            "content": content,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap,
-            "added_files_count": 1,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-
-    lists = {}
-    for sid, recs in [
-        (900, [mlrec(m_a, 0, 1, 2, 900)]),
-        (120, [mlrec(m_a, 0, 1, 2, 900), mlrec(m_del, 1, 2, 1, 120)]),
-        (
-            450,
-            [
-                mlrec(m_a, 0, 1, 2, 900),
-                mlrec(m_del, 1, 2, 1, 120),
-                mlrec(m_b, 0, 3, 1, 450),
-            ],
-        ),
-    ]:
-        p = f"{mdir}/snap-{sid}-list.avro"
-        avro_io.write_container(p, _MANIFEST_LIST_SCHEMA, recs)
-        lists[sid] = p
-
-    meta = {
-        "format-version": 2,
-        "current-schema-id": 0,
-        "schemas": [schema_json],
-        "current-snapshot-id": 450,
-        "snapshots": [
-            # listed in id-sorted-DISAGREES-with-commit order on purpose
-            {"snapshot-id": 120, "parent-snapshot-id": 900, "timestamp-ms": 2000,
-             "schema-id": 0, "manifest-list": lists[120]},
-            {"snapshot-id": 450, "parent-snapshot-id": 120, "timestamp-ms": 3000,
-             "schema-id": 0, "manifest-list": lists[450]},
-            {"snapshot-id": 900, "timestamp-ms": 1000,
-             "schema-id": 0, "manifest-list": lists[900]},
-        ],
-    }
-    with open(f"{mdir}/v1.metadata.json", "w") as f:
-        json.dump(meta, f)
-    with open(f"{mdir}/version-hint.text", "w") as f:
-        f.write("1")
-    return root
-
-
-def test_cdc_follows_parent_pointers_not_id_order(spark, tmp_path):
-    root = _build_random_id_table(tmp_path)
-    # from s900: both later commits (ids SMALLER than 900) must appear
-    ch = changes_iceberg_table(spark, root, 900).collect()
-    got = sorted((r.id, r.v, r._change_type, r._commit_snapshot_id) for r in ch)
-    assert got == [(1, "x", "delete", 120), (3, "z", "insert", 450)]
-    # full replay walks the whole chain in commit order
-    full = changes_iceberg_table(spark, root, 0).collect()
-    assert sorted(r._commit_snapshot_id for r in full) == [120, 450, 900, 900]
-    # a snapshot outside the lineage fails loudly
-    with pytest.raises(ValueError, match="not found|ancestor"):
-        changes_iceberg_table(spark, root, 777)
-
-
-def test_cdc_delete_replay_resolves_file_uri_manifests(spark, tmp_path):
-    """The tombstoned data file is recorded as file://… in its manifest;
-    the delete replay must still find its schema generation (keys are
-    URI-normalized on both sides)."""
-    root = _build_random_id_table(tmp_path)
-    ch = changes_iceberg_table(spark, root, 900, 120).collect()
-    assert [(r.id, r.v, r._change_type) for r in ch] == [(1, "x", "delete")]
+from tests.test_changelog import _build_random_id_table
 
 
 def test_corrupt_stream_checkpoint_fails_loudly(spark, tmp_path):
@@ -215,108 +59,6 @@ def test_initial_stream_batch_pinned_to_polled_snapshot(spark, tmp_path, monkeyp
     df2, lo2, hi2 = stream.poll()
     assert (lo2, hi2) == (1, 2)
     assert [r.id for r in df2.collect()] == [2]
-
-
-def test_cdc_same_snapshot_delete_manifest_listed_first(spark, tmp_path):
-    """The manifest list carries no ordering guarantee: a snapshot whose
-    positional-delete manifest is listed BEFORE the data manifest it
-    tombstones must still replay (data manifests register first)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from minio_iceberg_polaris_lakehouse_spark.iceberg_export import (
-        _MANIFEST_LIST_SCHEMA,
-    )
-
-    root = str(tmp_path / "ft")
-    mdir, ddir = f"{root}/metadata", f"{root}/data"
-    os.makedirs(mdir)
-    os.makedirs(ddir)
-    a_path = f"{ddir}/a.parquet"
-    pq.write_table(
-        pa.table({"id": pa.array([1, 2], pa.int32()), "v": pa.array(["x", "y"])}), a_path
-    )
-    pos_path = f"{ddir}/pd.parquet"
-    pq.write_table(
-        pa.table({"file_path": pa.array([a_path]), "pos": pa.array([0], pa.int64())}),
-        pos_path,
-    )
-    schema_json = {
-        "schema-id": 0,
-        "type": "struct",
-        "fields": [
-            {"id": 1, "name": "id", "type": "int", "required": False},
-            {"id": 2, "name": "v", "type": "string", "required": False},
-        ],
-    }
-    entry_schema = _foreign_entry_schema()
-
-    def dfile(content, fpath, rows):
-        return {
-            "status": 1,
-            "snapshot_id": 5,
-            "sequence_number": None,
-            "file_sequence_number": None,
-            "data_file": {
-                "content": content,
-                "file_path": fpath,
-                "file_format": "PARQUET",
-                "record_count": rows,
-                "file_size_in_bytes": 1,
-                "equality_ids": None,
-            },
-        }
-
-    m_a = f"{mdir}/m-a.avro"
-    avro_io.write_container(
-        m_a, entry_schema, [dfile(0, a_path, 2)], metadata={"schema": json.dumps(schema_json)}
-    )
-    m_del = f"{mdir}/m-del.avro"
-    avro_io.write_container(
-        m_del, entry_schema, [dfile(1, pos_path, 1)], metadata={"schema": json.dumps(schema_json)}
-    )
-
-    def mlrec(path, content, rows):
-        return {
-            "manifest_path": path,
-            "manifest_length": 1,
-            "partition_spec_id": 0,
-            "content": content,
-            "sequence_number": 1,
-            "min_sequence_number": 1,
-            "added_snapshot_id": 5,
-            "added_files_count": 1,
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-
-    mlist = f"{mdir}/snap-5-list.avro"
-    # DELETE manifest deliberately listed first
-    avro_io.write_container(
-        mlist, _MANIFEST_LIST_SCHEMA, [mlrec(m_del, 1, 1), mlrec(m_a, 0, 2)]
-    )
-    meta = {
-        "format-version": 2,
-        "current-schema-id": 0,
-        "schemas": [schema_json],
-        "current-snapshot-id": 5,
-        "snapshots": [
-            {"snapshot-id": 5, "timestamp-ms": 1000, "schema-id": 0, "manifest-list": mlist}
-        ],
-    }
-    with open(f"{mdir}/v1.metadata.json", "w") as f:
-        json.dump(meta, f)
-    with open(f"{mdir}/version-hint.text", "w") as f:
-        f.write("1")
-
-    ch = changes_iceberg_table(spark, root, 0).collect()
-    got = sorted((r.id, r.v, r._change_type) for r in ch)
-    assert got == [(1, "x", "delete"), (1, "x", "insert"), (2, "y", "insert")]
 
 
 def test_snapshot_procedure_no_orphan_on_failed_import(spark, tmp_path):

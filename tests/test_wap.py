@@ -283,3 +283,47 @@ def test_wap_id_sql_surface(spark, tmp_path):
         lake.sql("INSERT INTO polaris.db.w VALUES (4, 'd')")
     lake.sql("RESET spark.wap.branch")
     lake.sql("RESET spark.wap.id")
+
+
+def test_timestamp_travel_over_open_metadata_skips_staged_snapshot(wh, spark):
+    """The published metadata lists branch snapshots too; timestamp time
+    travel resolves over its snapshot-log (main's heads), so a staged
+    write-audit-publish row never leaks into a TIMESTAMP AS OF read."""
+    import time
+
+    from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+        read_iceberg_table,
+    )
+
+    t = wh.create_table("db", "w_asof", "id int")
+    t.insert_values([(1,), (2,)])
+    t.create_ref("audit", "branch")
+    t.insert_values([(3,)], branch="audit")
+    now = int(time.time() * 1000)
+    assert _rows(t.read(as_of_ms=now)) == [(1,), (2,)]
+    assert _rows(read_iceberg_table(spark, t.path, as_of_ms=now)) == [(1,), (2,)]
+
+
+def test_merge_on_read_dml_on_branch_after_alter(wh):
+    """ALTER ADD/RENAME COLUMN commits no snapshot, so a branch head still
+    records the old schema. Merge-on-read DML staged on the branch (or a
+    transaction's hidden branch) reads the head with the CURRENT schema:
+    conditions and SETs may name the new and renamed columns."""
+    t = wh.create_table("db", "w_alter", "id int, v string")
+    t.insert_values([(1, "a"), (2, "b"), (3, "c")])
+    t.create_ref("audit", "branch")
+    t.add_column("w", "int")
+    t.rename_column("v", "s")
+    t.update_where({"w": "id * 10"}, "s <> 'b'", mode="merge-on-read", branch="audit")
+    t.delete_where("w = 30", mode="merge-on-read", branch="audit")
+    assert _rows(t.read(version="audit")) == [(1, "a", 10), (2, "b", None)]
+    assert _rows(t.read()) == [(1, "a", None), (2, "b", None), (3, "c", None)]
+    t.fast_forward("audit")
+    assert _rows(t.read()) == [(1, "a", 10), (2, "b", None)]
+
+    t.add_column("x", "string")
+    with wh.transaction() as txn:
+        tt = txn.table("db", "w_alter")
+        tt.update_where({"x": "s"}, "w IS NULL", mode="merge-on-read")
+        tt.delete_where("x = 'zzz' OR id = 1", mode="merge-on-read")
+    assert _rows(t.read()) == [(2, "b", None, "b")]
