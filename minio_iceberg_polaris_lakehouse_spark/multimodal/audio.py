@@ -13,15 +13,25 @@ alone, while the Spark side earns them by actually encoding and parsing
 WAV byte streams — a regression anywhere in the codec (header layout,
 chunk walk, PCM reshape) breaks the hash match.
 
-Scale: encode/decode are the only Python touchpoints, Arrow-batched and
+One Python stage per query: each codec step (WAV encode, decode,
+resample, chunk) is a per-batch function and a query runs its whole
+chain as one `mapInPandas` (`binary.kernel_chain`), so each partition
+pays the Python task set-up once and the WAV blobs never cross back to
+the JVM between steps. The chain carries ``source`` through to the
+per-source aggregate, so no query joins ``documents`` back on doc_id.
+The public stage functions (`wav_assets_from_documents`, `decode_audio`,
+`resample_audio`, `chunk_audio`) are one-stage chains over the same
+batch functions.
+
+Scale: the chain is the only Python touchpoint, Arrow-batched and
 shuffle-free (O(bytes) per partition); aggregation happens JVM-side after
-the kernels, so at 100 TB the audio stage is an embarrassingly parallel
-map over object-store blobs — the same shape as the image path.
+it, so at 100 TB the audio stage is an embarrassingly parallel map over
+object-store blobs — the same shape as the image path.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -37,6 +47,12 @@ from pyspark.sql.types import (
 )
 
 from minio_iceberg_polaris_lakehouse_spark.multimodal import wav
+from minio_iceberg_polaris_lakehouse_spark.multimodal.binary import (
+    Stage,
+    drop_blobs,
+    kernel_chain,
+    with_blobs,
+)
 from minio_iceberg_polaris_lakehouse_spark.registry import register
 from minio_iceberg_polaris_lakehouse_spark.sources.tables import (
     load_table,
@@ -65,6 +81,14 @@ AUDIO_DECODED_SCHEMA = StructType(
     ]
 )
 
+AUDIO_CHUNK_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("chunk_id", IntegerType()),
+        StructField("chunk", BinaryType()),
+    ]
+)
+
 
 def doc_samples(payload: bytes) -> np.ndarray:
     """Deterministic mono PCM16 clip for a document payload: byte values
@@ -78,106 +102,88 @@ def doc_samples(payload: bytes) -> np.ndarray:
     return (tiled - 128) * 256
 
 
+def encode_wav_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """text → WAV asset columns: each payload is synthesized to PCM
+    (`doc_samples`) and RIFF-encoded by the engine's codec."""
+    blobs = [wav.encode_wav(doc_samples(t.encode("utf-8")), SAMPLE_RATE) for t in pdf["text"]]
+    return with_blobs(pdf.drop(columns="text"), "audio/wav", blobs)
+
+
+def decode_wav_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """WAV asset columns → sample_rate, n_samples, audio_ms and the
+    integer-rounded RMS, from a RIFF chunk walk and fmt/data parse."""
+    decoded = [wav.decode_wav(bytes(b)) for b in pdf["blob"]]
+    n = [samples.shape[0] for samples, _rate in decoded]
+    rates = [rate for _samples, rate in decoded]
+    return drop_blobs(pdf).assign(
+        sample_rate=rates,
+        n_samples=n,
+        audio_ms=[wav.duration_ms(k, r) for k, r in zip(n, rates)],
+        rms=[int(round(wav.rms(samples))) for samples, _rate in decoded],
+    )
+
+
+def resample_wav_batch(pdf: pd.DataFrame, dst_rate: int) -> pd.DataFrame:
+    """WAV blob → WAV blob at ``dst_rate``: decode → linear resample →
+    re-encode. n_bytes is the new blob's length incl. the RIFF header;
+    sample counts come from a decode, never from this column."""
+    blobs = []
+    for blob in pdf["blob"]:
+        samples, rate = wav.decode_wav(bytes(blob))
+        blobs.append(wav.encode_wav(wav.resample_linear(samples[:, 0], rate, dst_rate), dst_rate))
+    return with_blobs(pdf, "audio/wav", blobs)
+
+
+def chunk_wav_batch(pdf: pd.DataFrame, chunk_len: int) -> pd.DataFrame:
+    """WAV blob → one row per zero-padded ``chunk_len``-sample chunk
+    (chunk_id, chunk); the other columns repeat per chunk."""
+    pieces = [wav.chunk_fixed(wav.decode_wav(bytes(b))[0][:, 0], chunk_len) for b in pdf["blob"]]
+    rows = np.repeat(np.arange(len(pdf)), [len(p) for p in pieces])
+    return (
+        drop_blobs(pdf)
+        .iloc[rows]
+        .reset_index(drop=True)
+        .assign(
+            chunk_id=[i for p in pieces for i in range(len(p))],
+            chunk=[c.tobytes() for p in pieces for c in p],
+        )
+    )
+
+
 def wav_assets_from_documents(df: DataFrame) -> DataFrame:
     """Asset table with REAL audio blobs: each document's payload is
     synthesized to PCM and WAV-encoded by the engine's codec, so the
     decode kernels exercise an actual RIFF parse, not a stub."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [
-                wav.encode_wav(doc_samples(t.encode("utf-8")), SAMPLE_RATE)
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": "audio/wav",
-                    "blob": blobs,
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    return _spread(df.select("doc_id", "text")).mapInPandas(kernel, AUDIO_ASSET_SCHEMA)
+    return kernel_chain(_spread(df.select("doc_id", "text")), AUDIO_ASSET_SCHEMA, encode_wav_batch)
 
 
 def decode_audio(assets: DataFrame) -> DataFrame:
     """Arrow-batched audio decode: RIFF chunk walk → fmt/data parse →
     typed columns (rate, sample count, duration, integer-rounded RMS)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["blob"]):
-                samples, rate = wav.decode_wav(bytes(blob))
-                rows.append(
-                    (
-                        did,
-                        rate,
-                        samples.shape[0],
-                        wav.duration_ms(samples.shape[0], rate),
-                        int(round(wav.rms(samples))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sample_rate", "n_samples", "audio_ms", "rms"]
-            )
-
-    return assets.mapInPandas(kernel, AUDIO_DECODED_SCHEMA)
+    return kernel_chain(assets, AUDIO_DECODED_SCHEMA, decode_wav_batch)
 
 
 def resample_audio(assets: DataFrame, dst_rate: int) -> DataFrame:
     """Batch sample-rate conversion: decode → linear resample →
-    re-encode, keeping the BINARY column so stages chain inside Arrow."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for blob in pdf["blob"]:
-                samples, rate = wav.decode_wav(bytes(blob))
-                out = wav.resample_linear(samples[:, 0], rate, dst_rate)
-                blobs.append(wav.encode_wav(out, dst_rate))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": "audio/wav",
-                    "blob": blobs,
-                    # n_bytes keeps the asset-schema contract (BLOB byte
-                    # length incl. RIFF header); sample counts come from
-                    # decode_audio, never from this column
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    return assets.mapInPandas(kernel, AUDIO_ASSET_SCHEMA)
+    re-encode, keeping the asset columns."""
+    return kernel_chain(assets, AUDIO_ASSET_SCHEMA, partial(resample_wav_batch, dst_rate=dst_rate))
 
 
 def chunk_audio(assets: DataFrame, chunk_len: int = CHUNK_LEN) -> DataFrame:
     """Fixed-length chunk fan-out (the audio twin of sequence packing):
     one output row per zero-padded training chunk."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("chunk_id", IntegerType()),
-            StructField("chunk", BinaryType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["blob"]):
-                samples, _rate = wav.decode_wav(bytes(blob))
-                for i, piece in enumerate(wav.chunk_fixed(samples[:, 0], chunk_len)):
-                    rows.append((did, i, piece.tobytes()))
-            yield pd.DataFrame(rows, columns=["doc_id", "chunk_id", "chunk"])
-
-    return assets.mapInPandas(kernel, schema)
+    return kernel_chain(assets, AUDIO_CHUNK_SCHEMA, partial(chunk_wav_batch, chunk_len=chunk_len))
 
 
-def _with_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    d = load_table(spark, sf_dir, "documents")
-    return d, wav_assets_from_documents(d)
+def _audio_chain(
+    spark: SparkSession, sf_dir: str, schema: StructType, *stages: Stage
+) -> DataFrame:
+    """The documents, spread for the kernel, through WAV encode and then
+    ``stages`` in one Python stage; ``source`` rides along for the
+    per-source aggregate."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    out = StructType([StructField("source", StringType()), *schema.fields])
+    return kernel_chain(_spread(docs), out, encode_wav_batch, *stages)
 
 
 @register(
@@ -197,12 +203,11 @@ def _with_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
 )
 def mm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio decode statistics per source, earned by a REAL WAV parse:
-    payload → PCM synth → RIFF encode → mapInPandas RIFF decode (chunk
-    walk, fmt/data, little-endian reshape) → per-source aggregation. The
-    oracle reproduces the sample/duration arithmetic from octet_length
-    alone; any codec regression breaks the hash."""
-    d, assets = _with_source(spark, sf_dir)
-    decoded = decode_audio(assets).join(d.select("doc_id", "source"), "doc_id")
+    payload → PCM synth → RIFF encode → RIFF decode (chunk walk,
+    fmt/data, little-endian reshape), one Python stage → per-source
+    aggregation. The oracle reproduces the sample/duration arithmetic
+    from octet_length alone; any codec regression breaks the hash."""
+    decoded = _audio_chain(spark, sf_dir, AUDIO_DECODED_SCHEMA, decode_wav_batch)
     return (
         decoded.groupBy("source")
         .agg(
@@ -232,8 +237,9 @@ def mm_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-length chunking fan-out over real WAV blobs: each clip is
     decoded and split into zero-padded 50 ms training chunks; the oracle
     pins ceil-division chunk counts and padded byte totals."""
-    d, assets = _with_source(spark, sf_dir)
-    chunks = chunk_audio(assets).join(d.select("doc_id", "source"), "doc_id")
+    chunks = _audio_chain(
+        spark, sf_dir, AUDIO_CHUNK_SCHEMA, partial(chunk_wav_batch, chunk_len=CHUNK_LEN)
+    )
     return (
         chunks.groupBy("source")
         .agg(
@@ -261,9 +267,13 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     np.interp upsample → re-encode → decode again to count samples (the
     count survives a full encode/decode round-trip, so the oracle pins
     both the resampler's length contract and the codec)."""
-    d, assets = _with_source(spark, sf_dir)
-    up = resample_audio(assets, 16000)
-    decoded = decode_audio(up).join(d.select("doc_id", "source"), "doc_id")
+    decoded = _audio_chain(
+        spark,
+        sf_dir,
+        AUDIO_DECODED_SCHEMA,
+        partial(resample_wav_batch, dst_rate=16000),
+        decode_wav_batch,
+    )
     return (
         decoded.groupBy("source")
         .agg(

@@ -9,13 +9,27 @@ unfiltering — yielding true width/height/luma. Non-PNG payloads (e.g.
 audio/video, for which the container ships no codec) fall back to the
 clearly-marked deterministic stub (`fake_decode_image`), keeping the
 plumbing testable for every media type.
+
+One Python stage per kernel chain: every codec step is a per-batch
+function (``pd.DataFrame -> pd.DataFrame``) and `kernel_chain` runs a
+whole chain (encode → decode, encode → resize) as ONE `mapInPandas`.
+Each Python task pays a fixed worker set-up (PySpark's
+``setup_spark_files`` re-reads the central directory of every zip on the
+worker's import path, 0.12–0.22 s of CPU per task on 4 vCPU) that is
+larger than the kernel work at small scale; one runner per chain pays it
+once per partition, and the intermediate blobs stay in the worker
+instead of crossing JVM↔Python twice. The public stage functions
+(`png_assets_from_documents`, `decode_assets`, `resize_assets`) are
+one-stage chains over the same batch functions.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +42,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from minio_iceberg_polaris_lakehouse_spark.multimodal import png
 from minio_iceberg_polaris_lakehouse_spark.registry import register
+from minio_iceberg_polaris_lakehouse_spark.session import local_frame
 from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
 
 # Typed metadata schema for a multimodal asset column.
@@ -63,8 +79,6 @@ def fake_decode_image(blob: bytes) -> tuple[int, int, int]:
 def decode_image(blob: bytes) -> tuple[int, int, int]:
     """Dispatch: REAL decode for PNG blobs (multimodal/png.py — full
     signature/CRC/inflate/unfilter parse), stub for anything else."""
-    from minio_iceberg_polaris_lakehouse_spark.multimodal import png
-
     if bytes(blob[:8]) == png.PNG_SIG:
         pixels = png.decode_png(bytes(blob))
         h, w = pixels.shape[:2]
@@ -76,8 +90,6 @@ def _doc_pixels(doc_id: int, payload: bytes):
     """Deterministic grayscale pixel grid for a document: the payload
     bytes tiled into a (h, w) image whose shape derives from doc_id and
     length — every byte of content contributes to the real luma."""
-    import numpy as np
-
     w = 32 + (len(payload) % 48)
     h = 24 + (doc_id % 40)
     buf = np.frombuffer(payload, dtype=np.uint8)
@@ -100,51 +112,77 @@ def assets_from_documents(df: DataFrame) -> DataFrame:
     )
 
 
+Stage = Callable[[pd.DataFrame], pd.DataFrame]
+
+
+def kernel_chain(df: DataFrame, schema: StructType, *stages: Stage) -> DataFrame:
+    """Run per-batch ``stages`` in order inside ONE `mapInPandas`: each
+    partition starts one Python runner for the whole chain, and what a
+    stage hands the next (blobs, PCM) never leaves the worker. A stage
+    replaces the columns it consumes with the ones it produces and
+    passes every other column through (a fan-out stage repeats them per
+    output row), so a chain carries keys such as ``source`` to the
+    aggregate without a join back. The output is ``schema``'s columns."""
+    names = schema.names
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for stage in stages:
+                pdf = stage(pdf)
+            yield pdf[names]
+
+    return df.mapInPandas(kernel, schema)
+
+
+def with_blobs(pdf: pd.DataFrame, media_type: str, blobs: list[bytes]) -> pd.DataFrame:
+    """``pdf`` with its asset columns set to ``blobs``."""
+    return pdf.assign(media_type=media_type, blob=blobs, n_bytes=[len(b) for b in blobs])
+
+
+def drop_blobs(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``pdf`` without its asset columns, for a stage that consumes the
+    blob."""
+    return pdf.drop(columns=["media_type", "blob", "n_bytes"], errors="ignore")
+
+
+def encode_png_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """doc_id, text → PNG asset columns: each document renders to its
+    deterministic pixel grid (`_doc_pixels`) and is PNG-encoded."""
+    blobs = [
+        png.encode_png(_doc_pixels(did, text.encode("utf-8")))
+        for did, text in zip(pdf["doc_id"], pdf["text"])
+    ]
+    return with_blobs(pdf.drop(columns="text"), "image/png", blobs)
+
+
+def decode_image_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Asset columns → width, height, mean_luma (`decode_image`)."""
+    decoded = [decode_image(b) for b in pdf["blob"]]
+    return drop_blobs(pdf).assign(
+        width=[d[0] for d in decoded],
+        height=[d[1] for d in decoded],
+        mean_luma=[d[2] for d in decoded],
+    )
+
+
+def resize_image_batch(pdf: pd.DataFrame, width: int, height: int) -> pd.DataFrame:
+    """Asset columns → resized blob, width, height (`resize_blob`)."""
+    out = [resize_blob(b, width, height) for b in pdf["blob"]]
+    return drop_blobs(pdf).assign(blob=out, width=width, height=height)
+
+
 def png_assets_from_documents(df: DataFrame) -> DataFrame:
     """Asset table with REAL image blobs: each document's text renders to
     a deterministic grayscale pixel grid, PNG-encoded by the engine's
-    codec — the decode kernels then exercise an actual parse, not a stub.
-    mapInPandas keeps the encode Arrow-batched and shuffle-free."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from minio_iceberg_polaris_lakehouse_spark.multimodal import png
-
-        for pdf in batches:
-            blobs = [
-                png.encode_png(_doc_pixels(did, text.encode("utf-8")))
-                for did, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": "image/png",
-                    "blob": blobs,
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    return df.select("doc_id", "text").mapInPandas(kernel, ASSET_SCHEMA)
+    codec — the decode kernels then exercise an actual parse, not a stub."""
+    return kernel_chain(df.select("doc_id", "text"), ASSET_SCHEMA, encode_png_batch)
 
 
 def decode_assets(assets: DataFrame) -> DataFrame:
-    """Arrow-batched decode over partitions: `mapInPandas` streams record
-    batches through Python once, yielding typed metadata — the pattern for
-    any per-blob kernel (resize, frame-sample, feature-extract). Scale: the
-    only Python touchpoint, O(bytes) per partition, no shuffle."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_image(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "mean_luma": [d[2] for d in decoded],
-                }
-            )
-
-    return assets.mapInPandas(decode, DECODED_SCHEMA)
+    """Arrow-batched decode over partitions, yielding typed metadata —
+    the pattern for any per-blob kernel (resize, frame-sample,
+    feature-extract). Scale: O(bytes) per partition, no shuffle."""
+    return kernel_chain(assets, DECODED_SCHEMA, decode_image_batch)
 
 
 @register(
@@ -178,13 +216,13 @@ def mm_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("mm_decode_features", oracle=None)
 def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode pipeline end-to-end over REAL image bytes: document text →
-    PNG encode kernel → mapInPandas PNG decode (signature/CRC/inflate/
-    unfilter) → true width/height/luma → aggregate. Rows-only check (the
-    PNG byte stream is engine-rendered, not SQL-expressible); the codec
-    itself is cross-validated against Java ImageIO in
+    PNG encode → PNG decode (signature/CRC/inflate/unfilter) in one
+    Python stage → true width/height/luma → aggregate. Rows-only check
+    (the PNG byte stream is engine-rendered, not SQL-expressible); the
+    codec itself is cross-validated against Java ImageIO in
     tests/test_multimodal.py."""
-    d = load_table(spark, sf_dir, "documents")
-    decoded = decode_assets(png_assets_from_documents(d))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    decoded = kernel_chain(docs, DECODED_SCHEMA, encode_png_batch, decode_image_batch)
     return (
         decoded.groupBy((F.col("mean_luma") / 32).cast("int").alias("luma_bucket"))
         .agg(
@@ -217,31 +255,16 @@ def fake_resize(blob: bytes, w: int, h: int) -> bytes:
 def resize_blob(blob: bytes, w: int, h: int) -> bytes:
     """REAL resize for PNG blobs: decode → vectorized nearest-neighbor →
     re-encode; stub for media without a codec."""
-    from minio_iceberg_polaris_lakehouse_spark.multimodal import png
-
     if bytes(blob[:8]) == png.PNG_SIG:
         return png.encode_png(png.resize_nearest(png.decode_png(bytes(blob)), w, h))
     return fake_resize(blob, w, h)
 
 
 def resize_assets(assets: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Batch resize over partitions — same mapInPandas shape as decode;
-    output keeps the BINARY column so stages chain (decode → resize →
-    feature-extract) without leaving Arrow."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [resize_blob(b, width, height) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": out,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return assets.mapInPandas(kernel, RESIZED_SCHEMA)
+    """Batch resize over partitions; the output keeps the BINARY column."""
+    return kernel_chain(
+        assets, RESIZED_SCHEMA, partial(resize_image_batch, width=width, height=height)
+    )
 
 
 @register("mm_frame_sample", oracle=None)
@@ -263,11 +286,17 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("mm_resize_stats", oracle=None)
 def mm_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize pipeline over REAL PNGs: encode → decode → nearest-neighbor
-    resize to 224×224 → re-encode → byte accounting. Rows-only check (PNG
-    byte stream is engine-rendered); tests assert the resized blobs decode
-    to the requested dimensions with content-derived pixels."""
-    d = load_table(spark, sf_dir, "documents")
-    resized = resize_assets(png_assets_from_documents(d), 224, 224)
+    resize to 224×224 → re-encode in one Python stage → byte accounting.
+    Rows-only check (PNG byte stream is engine-rendered); tests assert
+    the resized blobs decode to the requested dimensions with
+    content-derived pixels."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    resized = kernel_chain(
+        docs,
+        RESIZED_SCHEMA,
+        encode_png_batch,
+        partial(resize_image_batch, width=224, height=224),
+    )
     return (
         resized.groupBy("width", "height")
         .agg(
@@ -315,14 +344,14 @@ def mm_png_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round" #6 — the other mm_* kernels are rows-only by declared design):
     a fixed six-document corpus renders to deterministic pixel grids,
     PNG-encodes through the engine codec (multimodal/png.py), and decodes
-    back through the same Arrow-batched mapInPandas kernel every real
-    asset takes (decode_assets: signature check, CRC-verified chunks,
-    zlib inflate, scanline unfilter). The oracle pins the roundtripped
-    (width, height, mean_luma) per document as literal VALUES, so the
-    driver hash proves the full encode→decode chain bit-reproduces the
-    recorded truth — any codec, tiling, or luma regression flips the
-    hash. sf_dir is unused by design: the PNG byte stream is
+    back in the same Python stage through the batch function every real
+    asset takes (decode_image_batch: signature check, CRC-verified
+    chunks, zlib inflate, scanline unfilter). The oracle pins the
+    roundtripped (width, height, mean_luma) per document as literal
+    VALUES, so the driver hash proves the full encode→decode chain
+    bit-reproduces the recorded truth — any codec, tiling, or luma
+    regression flips the hash. sf_dir is unused by design: the PNG byte stream is
     engine-rendered and document text differs per scale factor."""
-    docs = spark.createDataFrame(_PNG_GOLDEN_DOCS, "doc_id long, text string")
-    decoded = decode_assets(png_assets_from_documents(docs))
+    docs = local_frame(spark, _PNG_GOLDEN_DOCS, "doc_id long, text string")
+    decoded = kernel_chain(docs, DECODED_SCHEMA, encode_png_batch, decode_image_batch)
     return decoded.select("doc_id", "width", "height", "mean_luma").orderBy("doc_id")

@@ -157,6 +157,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame call-site capture wraps every API call in an
+        # active-session lookup, a conf read and an origin set/clear over
+        # py4j; analysis errors still name the column without it
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "spark-warehouse"))
     )
     for k, v in (extra_conf or {}).items():

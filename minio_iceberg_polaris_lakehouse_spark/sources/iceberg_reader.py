@@ -1413,11 +1413,11 @@ def changes_iceberg_table(
     - parent-live rows of removed data files are deletes (a rewrite
       emits delete + insert for the rows it carries over);
     - rows retired by added position deletes or deletion vectors are
-      deletes: the parent's live rows, or rows of files the same
-      snapshot added;
-    - parent-live rows matching an added equality delete's keys under
-      the v2 sequence rule are deletes — an upsert reads as
-      delete(old image) + insert(new image);
+      deletes: live rows of the parent files the snapshot keeps, or rows
+      of files the same snapshot added;
+    - live rows of kept parent files matching an added equality
+      delete's keys under the v2 sequence rule are deletes — an upsert
+      reads as delete(old image) + insert(new image);
     - `replace` snapshots (compaction, rewrite_position_delete_files)
       change no rows and emit nothing.
     The scan reads only the churned files of each snapshot, plus the
@@ -1512,21 +1512,24 @@ def changes_iceberg_table(
         new_pos = [p for p in plan.pos_deletes if _norm(p) not in old_pos]
         new_dvs = [d for d in plan.dvs if (d["puffin"], d["offset"]) not in old_dvs]
         new_eq = [r for r in plan.eq_deletes if _norm(r["path"]) not in old_eq]
+        # a removed file's live rows are all deletes already: new
+        # tombstones and equality deletes retire rows of the kept files
+        kept = [f for f in parent.data if f["file"] in cur_files]
         emitted = []
         if added:
             emitted.append(tag(read(added, _NO_FILES), "insert", sid, ordinal))
         if removed:
             emitted.append(tag(read(removed, parent), "delete", sid, ordinal))
         if new_pos or new_dvs:
-            # what the new tombstones retire: the parent's live rows, or
-            # rows of files this snapshot added (the parent's deletes
+            # what the new tombstones retire: live rows of the kept files,
+            # or rows of files this snapshot added (the parent's deletes
             # cannot name those)
-            before = read(parent.data + added, parent, keep_pos=True)
+            before = read(kept + added, parent, keep_pos=True)
             tombs = _tombstones(spark, new_pos, new_dvs)
             hit = before.join(F.broadcast(tombs), ["__file", "__pos"], "left_semi")
             emitted.append(tag(hit, "delete", sid, ordinal))
         if new_eq:
-            alive = read(parent.data, parent, keep_pos=True, keep_seq=True)
+            alive = read(kept, parent, keep_pos=True, keep_seq=True)
             hits = None
             for rec in new_eq:
                 keys, cond = _eq_delete_keys_cond(spark, alive, rec, target)

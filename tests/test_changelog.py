@@ -526,3 +526,106 @@ def test_cdc_same_snapshot_delete_manifest_listed_first(spark, tmp_path):
     ch = changes_iceberg_table(spark, root, 0).collect()
     got = sorted((r.id, r.v, r._change_type) for r in ch)
     assert got == [(1, "x", "delete"), (1, "x", "insert"), (2, "y", "insert")]
+
+
+def test_cdc_tombstone_on_removed_file_deletes_once(spark, tmp_path):
+    """A snapshot that removes data file A and also tombstones a row of
+    A: every live row of A is one delete. The tombstone lookup covers
+    only the parent files the snapshot keeps (here B, whose tombstoned
+    row is a delete too) plus the files it adds."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "ft")
+    mdir, ddir = f"{root}/metadata", f"{root}/data"
+    os.makedirs(mdir)
+    os.makedirs(ddir)
+
+    def parquet(name, table):
+        path = f"{ddir}/{name}.parquet"
+        pq.write_table(table, path)
+        return path
+
+    def rows(ids, vs):
+        return pa.table({"id": pa.array(ids, pa.int32()), "v": pa.array(vs)})
+
+    a_path = parquet("a", rows([1, 2], ["x", "y"]))
+    b_path = parquet("b", rows([3], ["z"]))
+    c_path = parquet("c", rows([1], ["x2"]))
+    pos_path = parquet(
+        "pd",
+        pa.table({"file_path": pa.array([a_path, b_path]), "pos": pa.array([1, 0], pa.int64())}),
+    )
+    schema_json = {
+        "schema-id": 0,
+        "type": "struct",
+        "fields": [
+            {"id": 1, "name": "id", "type": "int", "required": False},
+            {"id": 2, "name": "v", "type": "string", "required": False},
+        ],
+    }
+
+    def manifest(name, content, fpath, n, snap, seq):
+        path = f"{mdir}/{name}.avro"
+        entry = {
+            "status": 1,
+            "snapshot_id": snap,
+            "sequence_number": None,
+            "file_sequence_number": None,
+            "data_file": {
+                "content": content,
+                "file_path": fpath,
+                "file_format": "PARQUET",
+                "record_count": n,
+                "file_size_in_bytes": 1,
+                "equality_ids": None,
+            },
+        }
+        avro_io.write_container(
+            path, _foreign_entry_schema(), [entry], metadata={"schema": json.dumps(schema_json)}
+        )
+        return {
+            "manifest_path": path,
+            "manifest_length": 1,
+            "partition_spec_id": 0,
+            "content": 1 if content else 0,
+            "sequence_number": seq,
+            "min_sequence_number": seq,
+            "added_snapshot_id": snap,
+            "added_files_count": 1,
+            "existing_files_count": 0,
+            "deleted_files_count": 0,
+            "added_rows_count": n,
+            "existing_rows_count": 0,
+            "deleted_rows_count": 0,
+        }
+
+    m_a = manifest("m-a", 0, a_path, 2, 1, 1)
+    m_b = manifest("m-b", 0, b_path, 1, 1, 1)
+    m_c = manifest("m-c", 0, c_path, 1, 2, 2)
+    m_pd = manifest("m-pd", 1, pos_path, 2, 2, 2)
+    snaps = []
+    for sid, parent, recs in [(1, None, [m_a, m_b]), (2, 1, [m_b, m_c, m_pd])]:
+        lst = f"{mdir}/snap-{sid}-list.avro"
+        avro_io.write_container(lst, _MANIFEST_LIST_SCHEMA, recs)
+        snap = {"snapshot-id": sid, "timestamp-ms": 1000 * sid, "schema-id": 0}
+        if parent is not None:
+            snap["parent-snapshot-id"] = parent
+        snaps.append({**snap, "manifest-list": lst})
+    meta = {
+        "format-version": 2,
+        "current-schema-id": 0,
+        "schemas": [schema_json],
+        "current-snapshot-id": 2,
+        "snapshots": snaps,
+    }
+    with open(f"{mdir}/v1.metadata.json", "w") as f:
+        json.dump(meta, f)
+    with open(f"{mdir}/version-hint.text", "w") as f:
+        f.write("1")
+
+    ch = changes_iceberg_table(spark, root, 1).collect()
+    got = sorted((r.id, r.v, r._change_type) for r in ch)
+    assert got == [(1, "x", "delete"), (1, "x2", "insert"), (2, "y", "delete"), (3, "z", "delete")]

@@ -133,7 +133,16 @@ def test_snapshot_times_ignore_session_zone(spark, lake):
     assert {r.snapshot_id: r.ms for r in hist} == want
 
 
-@pytest.mark.parametrize("module", ["sql_frontend.py", "warehouse.py", "sources/iceberg_reader.py"])
+@pytest.mark.parametrize(
+    "module",
+    [
+        "sql_frontend.py",
+        "warehouse.py",
+        "sources/iceberg_reader.py",
+        "multimodal/binary.py",
+        "multimodal/audio.py",
+    ],
+)
 def test_no_create_dataframe_over_driver_rows(module):
     """Driver-side rows go through local_frame: a createDataFrame call
     in these modules would bring back the Python-RDD path (one Spark job

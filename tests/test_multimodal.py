@@ -3,8 +3,12 @@ determinism, schema, fan-out shape."""
 
 from __future__ import annotations
 
+import runpy
+from pathlib import Path
+
 from minio_iceberg_polaris_lakehouse_spark.multimodal import frames as FR
 from minio_iceberg_polaris_lakehouse_spark.multimodal.binary import (
+    _PNG_GOLDEN_ROWS,
     assets_from_documents,
     decode_assets,
     fake_decode_image,
@@ -235,3 +239,11 @@ def test_resize_real_png_dimensions_and_content(spark, sf_dir):
         src = _doc_pixels(row.doc_id, row.text.encode("utf-8"))
         want = png.resize_nearest(src, 64, 48)
         assert (out == np.asarray(want)).all(), row.doc_id
+
+
+def test_png_golden_rows_match_recomputation():
+    """The literal oracle rows of mm_png_decode_roundtrip are what
+    tools/mm_golden_expect.py recomputes through the PNG codec (no
+    Spark): a codec or corpus change that leaves them stale fails here."""
+    tool = runpy.run_path(str(Path(__file__).resolve().parent.parent / "tools/mm_golden_expect.py"))
+    assert tool["expected_rows"]() == _PNG_GOLDEN_ROWS

@@ -13,6 +13,7 @@ from minio_iceberg_polaris_lakehouse_spark.plans.inspect import (
     plan_string,
     pushed_filters,
     read_schemas,
+    scan_count,
 )
 from minio_iceberg_polaris_lakehouse_spark.registry import all_queries
 
@@ -264,15 +265,34 @@ def test_pq_ann_no_unbroadcast_cartesian(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_audio_kernels_are_map_only_before_agg(spark, sf_dir):
-    """The audio decode pipeline shuffles once for the doc_id->source
-    join and once for the final per-source aggregate - no exchange
-    between the chained Python kernels (encode -> decode stay in one
-    stage pipeline)."""
-    df = q("mm_audio_stats", spark, sf_dir)
+_KERNEL_CHAINS = [
+    "mm_audio_stats",
+    "mm_audio_chunks",
+    "mm_audio_resample",
+    "mm_decode_features",
+    "mm_resize_stats",
+    "mm_png_decode_roundtrip",
+]
+
+
+@pytest.mark.parametrize("name", _KERNEL_CHAINS)
+def test_kernel_chain_is_one_python_stage(spark, sf_dir, name):
+    """Each multimodal kernel chain (encode → decode/resize/chunk/
+    resample) runs as ONE MapInPandas: one Python runner per partition,
+    blobs never cross back to the JVM between codec steps."""
+    df = q(name, spark, sf_dir)
+    assert count_nodes(df, "MapInPandas") == 1, plan_string(df)
+
+
+@pytest.mark.parametrize("name", [n for n in _KERNEL_CHAINS if n.startswith("mm_audio_")])
+def test_audio_chain_reads_documents_once_without_join(spark, sf_dir, name):
+    """``source`` rides through the kernel to the per-source aggregate:
+    one documents scan, no join back on doc_id, partial aggregation
+    before the exchange."""
+    df = q(name, spark, sf_dir)
     plan = plan_string(df)
-    assert "CartesianProduct" not in plan, plan
-    # partial aggregation before the exchange (map-side combine)
+    assert scan_count(df) == 1, plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
     assert plan.count("HashAggregate") >= 2, plan
 
 

@@ -1,6 +1,10 @@
 """Recompute the pinned expectations for mm_png_decode_roundtrip
 (multimodal/binary.py:_PNG_GOLDEN_ROWS) after a deliberate change to the
-corpus, _doc_pixels, or the PNG codec. Pure Python — no Spark."""
+corpus, _doc_pixels, or the PNG codec. Pure Python — no Spark.
+tests/test_multimodal.py checks that the pinned rows equal
+``expected_rows()``.
+
+    python tools/mm_golden_expect.py"""
 
 import os
 import sys
@@ -13,10 +17,20 @@ from minio_iceberg_polaris_lakehouse_spark.multimodal.binary import (
     _doc_pixels,
 )
 
-if __name__ == "__main__":
+
+def expected_rows() -> list[tuple[int, int, int, int]]:
+    """(doc_id, width, height, mean_luma) of each golden document after a
+    PNG encode → decode round trip."""
+    rows = []
     for did, text in _PNG_GOLDEN_DOCS:
         px = _doc_pixels(did, text.encode("utf-8"))
         dec = png.decode_png(png.encode_png(px))
         assert (dec == px).all(), f"roundtrip mismatch for doc {did}"
         h, w = dec.shape[:2]
-        print(f"    ({did}, {w}, {h}, {png.mean_luma(dec)}),")
+        rows.append((did, w, h, png.mean_luma(dec)))
+    return rows
+
+
+if __name__ == "__main__":
+    for row in expected_rows():
+        print(f"    {row},")
