@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 _HASH = 2654435761  # Knuth multiplicative constant
 
@@ -128,5 +128,5 @@ def text_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("kept_chars"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )

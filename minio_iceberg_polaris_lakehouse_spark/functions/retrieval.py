@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.operators.dedup import tokens_expr
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 # Fixed query for the BM25 demo entry (a real API takes these as
 # parameters; the driver contract needs a deterministic instance).
@@ -232,5 +232,5 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("docs_mostly_boiler"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )

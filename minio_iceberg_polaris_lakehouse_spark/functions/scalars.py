@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -156,7 +156,7 @@ def fn_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select((F.get_json_object("props", "$.k").cast("int") % 10).alias("k_bucket"))
         .groupBy("k_bucket")
         .agg(F.count("*").alias("n"))
-        .orderBy("k_bucket")
+        .transform(sort_result, "k_bucket")
     )
 
 

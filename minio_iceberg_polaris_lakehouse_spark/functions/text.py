@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.operators.dedup import tokens_expr
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 # Tiny English stopword profile used by quality scoring + lang-ID heuristic.
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
@@ -54,7 +54,7 @@ def text_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_chars").cast("long").alias("min_chars"),
             F.max("n_chars").cast("long").alias("max_chars"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -156,7 +156,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.count_distinct("fp").alias("n_distinct_fingerprints"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -187,7 +187,7 @@ def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(F.col("lang").alias("labeled_lang"), (stop_ratio >= 0.05).alias("predicted_en"))
         .groupBy("labeled_lang", "predicted_en")
         .agg(F.count("*").alias("n"))
-        .orderBy("labeled_lang", "predicted_en")
+        .transform(sort_result, "labeled_lang", "predicted_en")
     )
 
 
@@ -299,7 +299,7 @@ def text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("long").alias("sampled_chars"),
             F.min("doc_id").alias("first_doc"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -350,7 +350,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         counted.select("lang", "bigram", "n", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= 5)
-        .orderBy("lang", "rn")
+        .transform(sort_result, "lang", "rn")
     )
 
 
@@ -869,7 +869,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("removed").cast("long").alias("chars_removed"),
             F.sum("residual").cast("long").alias("residual_pii"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 def make_vector_norm():
@@ -83,7 +83,7 @@ def udf_grouped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = d.groupBy("lang").applyInPandas(
         stats, "lang string, n_docs bigint, total_chars bigint, char_range bigint"
     )
-    return out.orderBy("lang")
+    return out.transform(sort_result, "lang")
 
 
 @register(
@@ -159,7 +159,7 @@ def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             F.percentile_approx("o_totalprice", 0.5, 1000000).alias("median_price"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_result, "o_orderstatus")
     )
 
 
@@ -190,7 +190,7 @@ def udf_grouped_agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_rows("o_totalprice").alias("n_orders"),
             F.round(median_price("o_totalprice"), 6).alias("median_price"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_result, "o_orderstatus")
     )
 
 

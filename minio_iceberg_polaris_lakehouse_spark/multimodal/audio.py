@@ -56,6 +56,7 @@ from minio_iceberg_polaris_lakehouse_spark.multimodal.binary import (
 from minio_iceberg_polaris_lakehouse_spark.registry import register
 from minio_iceberg_polaris_lakehouse_spark.sources.tables import (
     load_table,
+    sort_result,
     spread_for_kernel as _spread,
 )
 
@@ -216,7 +217,7 @@ def mm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("audio_ms").cast("long").alias("total_ms"),
             F.first("sample_rate").alias("sample_rate"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -246,7 +247,7 @@ def mm_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("total_chunks"),
             F.sum(F.octet_length("chunk")).cast("long").alias("total_bytes"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -280,5 +281,5 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_samples").cast("long").alias("total_resampled"),
             F.first("sample_rate").alias("dst_rate"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )

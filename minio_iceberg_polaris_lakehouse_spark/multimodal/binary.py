@@ -45,7 +45,7 @@ from pyspark.sql.types import (
 from minio_iceberg_polaris_lakehouse_spark.multimodal import png
 from minio_iceberg_polaris_lakehouse_spark.registry import register
 from minio_iceberg_polaris_lakehouse_spark.session import local_frame
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 # Typed metadata schema for a multimodal asset column.
 ASSET_SCHEMA = StructType(
@@ -209,7 +209,7 @@ def mm_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_bytes").cast("long").alias("total_bytes"),
             F.max("n_bytes").cast("long").alias("max_bytes"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -230,7 +230,7 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg(F.col("width").cast("double")).alias("avg_width"),
             F.avg(F.col("height").cast("double")).alias("avg_height"),
         )
-        .orderBy("luma_bucket")
+        .transform(sort_result, "luma_bucket")
     )
 
 
@@ -303,7 +303,7 @@ def mm_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum(F.octet_length("blob")).cast("long").alias("total_bytes"),
         )
-        .orderBy("width")
+        .transform(sort_result, "width")
     )
 
 

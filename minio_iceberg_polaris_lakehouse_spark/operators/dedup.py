@@ -19,6 +19,7 @@ from minio_iceberg_polaris_lakehouse_spark.registry import register
 from minio_iceberg_polaris_lakehouse_spark.sources.tables import (
     load_table,
     materialize_once,
+    sort_result,
     spread_for_kernel,
 )
 
@@ -472,7 +473,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= 3)
-        .orderBy("label", "rn")
+        .transform(sort_result, "label", "rn")
     )
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from minio_iceberg_polaris_lakehouse_spark.registry import register
 from minio_iceberg_polaris_lakehouse_spark.sources.tables import (
     load_table,
+    sort_result,
     spread_for_kernel,
 )
 
@@ -424,7 +425,7 @@ def text_model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("keep").cast("long").alias("n_kept"),
             F.round(F.sum("keep") * 1.0 / F.count("*"), 6).alias("keep_rate"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 def dsum(col: Column | str, alias: str, scale: int = 8) -> Column:
@@ -90,7 +90,7 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
             F.count("*").alias("n_items"),
         )
-        .orderBy(F.desc("revenue"), "nation")
+        .transform(sort_result, F.desc("revenue"), "nation")
     )
 
 
@@ -133,7 +133,7 @@ def rel_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("l_discount", "avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(sort_result, "l_returnflag", "l_linestatus")
     )
 
 
@@ -184,7 +184,8 @@ def rel_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rel_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT = shuffle on the full row; low-cardinality column keeps the
     exchange tiny after partial aggregation."""
-    return _t(spark, sf_dir, "customer").select("c_mktsegment").distinct().orderBy("c_mktsegment")
+    segments = _t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
+    return sort_result(segments, "c_mktsegment")
 
 
 @register(
@@ -205,7 +206,7 @@ def rel_groupby_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(F.count("*").alias("n_customers"), dsum("c_acctbal", "total_balance"))
         .filter(F.col("n_customers") > 5)
-        .orderBy("segment")
+        .transform(sort_result, "segment")
     )
 
 
@@ -402,7 +403,7 @@ def rel_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("s_suppkey").alias("n_suppliers"),
             dsum("s_acctbal", "total_bal"),
         )
-        .orderBy("region", "nation")
+        .transform(sort_result, "region", "nation")
     )
 
 
@@ -511,7 +512,8 @@ def rel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping("l_returnflag").cast("int").alias("g_flag"),
             F.grouping("l_linestatus").cast("int").alias("g_status"),
         )
-        .orderBy(
+        .transform(
+            sort_result,
             "g_flag",
             "g_status",
             F.col("l_returnflag").asc_nulls_first(),
@@ -543,7 +545,8 @@ def rel_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping("o_orderstatus").cast("int").alias("g_status"),
             F.grouping("o_orderpriority").cast("int").alias("g_prio"),
         )
-        .orderBy(
+        .transform(
+            sort_result,
             "g_status",
             "g_prio",
             F.col("o_orderstatus").asc_nulls_first(),

@@ -5,9 +5,9 @@ as-of/range rows are SURVEY §2.3 J2-J9).
 
 Scale notes: the as-of join is the window formulation (union the two
 event streams, carry the last-seen left row forward) — one shuffle on the
-entity key, no inequality join blow-up. The range join uses bucketed
-equality join + residual filter, the standard rewrite that keeps a
-time-window self-join linear in events per bucket.
+entity key, no inequality join blow-up. The range join's pair COUNT is
+a sliding RANGE frame over the same kind of per-entity window — one
+shuffle, no self-join.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.operators.relational import dsum
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -81,49 +81,45 @@ def rel_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (interval) self-join, COUNT form: per user, the number of
     event pairs within 60 seconds.
 
-    r12 plan (SCALE.md "rel_range_join"): because the aggregate never
-    needs the pairs themselves, the bucketed equality join + residual
-    filter used through r11 (explode each event into 2 candidate
-    buckets, join on (user, bucket), filter Δt) is strictly more work
-    than a sliding RANGE frame — ONE shuffle on user_id, sort by
-    microsecond, and `COUNT(*) OVER (RANGE BETWEEN CURRENT ROW AND 60 s
-    FOLLOWING) - 1` counts each event's in-window successors as the
-    frame slides in O(n) per partition. Same-timestamp ties are counted
-    toward BOTH members by the value-range frame where the oracle's
-    a_id < b_id orientation counts each unordered tie pair once, so a
-    per-(user, ts) tie correction of C(k,2) is subtracted (computed by a
-    tiny second aggregation; integer-exact). Profiled at the 10×
-    replica: 1.9×/10× data vs the join plan's 4.6× in the same session
-    — the join's candidate stream (~1 row per event here) was never
-    quadratic, but it paid a 2× explode and a second shuffle side.
-    Pair ENUMERATION (not count) at 100 TB still wants the bucketed
-    join shape this operator used through r11 (git history) — a window
-    cannot emit the cross product. Integer MICROSECONDS end to end:
-    double seconds put pairs
-    near the exact 60 s boundary at the mercy of a ~0.25 µs ulp, where
-    the oracle's timestamp arithmetic is exact."""
+    Plan (SCALE.md "rel_range_join"): the aggregate never needs the
+    pairs themselves, so a sliding RANGE frame counts them — ONE shuffle
+    on user_id, sort by microsecond, and `cnt = COUNT(*) OVER (RANGE
+    BETWEEN CURRENT ROW AND 60 s FOLLOWING) - 1` counts each event's
+    in-window successors as the frame slides in O(n) per partition.
+    The value-range frame counts same-timestamp ties toward BOTH
+    members where the oracle's a_id < b_id orientation counts each
+    unordered tie pair once; the correction comes from the same window
+    pass: `tie = COUNT(*) OVER (PARTITION BY user_id, us) - 1`, which the
+    user_id partitioning and the (user_id, us) sort already serve, and
+    `n_pairs = SUM(cnt) - SUM(tie) div 2`. Integer-exact: a tie group of
+    k rows sums `tie` to k(k-1), even, twice the C(k,2) over-count. One
+    events scan, one hash exchange, no join, no broadcast. The result
+    keeps only users with an in-window pair (149 of 1,500 users at
+    sf0.1, 1,490 of 15,000 at its 10x replica), and the final sort
+    gathers those rows into one partition (`sort_result`), as `collect()`
+    gathers them to the driver; a result of millions of users would want
+    `orderBy`'s parallel range sort back. Pair
+    ENUMERATION (not count) at 100 TB still wants a bucketed equality
+    join + residual filter (the shape this operator used through r11,
+    git history) — a window cannot emit the cross product. Integer
+    MICROSECONDS end to end: double seconds put pairs near the exact
+    60 s boundary at the mercy of a ~0.25 µs ulp, where the oracle's
+    timestamp arithmetic is exact."""
     e = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us").rangeBetween(0, 60_000_000)
-    gross = (
-        e.withColumn("cnt", F.count("*").over(w) - 1)
-        .groupBy("user_id")
-        .agg(F.sum("cnt").alias("gross"))
-    )
-    ties = (
-        e.groupBy("user_id", "us")
-        .count()
-        .groupBy("user_id")
-        .agg((F.sum(F.col("count") * (F.col("count") - 1)) / 2).cast("long").alias("over"))
-    )
+    ties = Window.partitionBy("user_id", "us")
     return (
-        gross.join(ties, "user_id")
-        .select(
-            "user_id", (F.col("gross") - F.col("over")).cast("long").alias("n_pairs")
+        e.select(
+            "user_id",
+            (F.count("*").over(w) - 1).alias("cnt"),
+            (F.count("*").over(ties) - 1).alias("tie"),
         )
+        .groupBy("user_id")
+        .agg(F.expr("sum(cnt) - sum(tie) div 2").alias("n_pairs"))
         .filter(F.col("n_pairs") > 0)  # oracle's INNER join: pairless users drop
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -154,7 +150,7 @@ def rel_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "day", *[F.col(k).cast("long").alias(k) for k in kinds]
-    ).orderBy("day")
+    ).transform(sort_result, "day")
 
 
 @register(
@@ -205,7 +201,7 @@ def rel_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(c_acctbal, 0.9)"), 6).alias("p90_bal"),
             F.round(F.expr("percentile(c_acctbal, 0.99)"), 6).alias("p99_bal"),
         )
-        .orderBy("segment")
+        .transform(sort_result, "segment")
     )
 
 
@@ -232,7 +228,7 @@ def rel_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.var_samp("o_totalprice"), 2).alias("price_var"),
             F.round(F.corr("o_totalprice", "o_custkey"), 6).alias("price_cust_corr"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_result, "o_orderstatus")
     )
 
 
@@ -253,7 +249,7 @@ def rel_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         n.groupBy(F.col("n_regionkey").alias("regionkey"))
         .agg(F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations"))
-        .orderBy("regionkey")
+        .transform(sort_result, "regionkey")
     )
 
 
@@ -324,7 +320,7 @@ def rel_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
+        .transform(sort_result, "o_orderpriority")
     )
 
 
@@ -419,7 +415,7 @@ def rel_q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"), F.year("o_orderdate").cast("int").alias("o_year")
         )
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "amount"))
-        .orderBy("nation", F.desc("o_year"))
+        .transform(sort_result, "nation", F.desc("o_year"))
     )
 
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -36,7 +36,9 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").cast("int").alias("nationkey")
     )
-    return c.exceptAll(s).groupBy("nationkey").agg(F.count("*").alias("n")).orderBy("nationkey")
+    return sort_result(
+        c.exceptAll(s).groupBy("nationkey").agg(F.count("*").alias("n")), "nationkey"
+    )
 
 
 @register(
@@ -57,8 +59,8 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").cast("int").alias("nationkey")
     )
-    return (
-        c.intersectAll(s).groupBy("nationkey").agg(F.count("*").alias("n")).orderBy("nationkey")
+    return sort_result(
+        c.intersectAll(s).groupBy("nationkey").agg(F.count("*").alias("n")), "nationkey"
     )
 
 
@@ -91,7 +93,7 @@ def rel_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("high_bal_total"),
         )
-        .orderBy("segment")
+        .transform(sort_result, "segment")
     )
 
 
@@ -203,7 +205,7 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(bpe).cast("long").alias("n_bpe_tokens"),
             F.sum(ws).cast("long").alias("n_ws_tokens"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 

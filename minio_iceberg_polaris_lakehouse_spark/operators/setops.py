@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 def _cust_nations(spark, sf_dir) -> DataFrame:
@@ -37,7 +37,8 @@ def _supp_nations(spark, sf_dir) -> DataFrame:
 )
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct): nations that have customers or suppliers."""
-    return _cust_nations(spark, sf_dir).union(_supp_nations(spark, sf_dir)).distinct().orderBy("nationkey")
+    u = _cust_nations(spark, sf_dir).union(_supp_nations(spark, sf_dir))
+    return sort_result(u.distinct(), "nationkey")
 
 
 @register(
@@ -54,7 +55,7 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL preserves duplicates (counted per key to keep output small)."""
     u = _cust_nations(spark, sf_dir).unionAll(_supp_nations(spark, sf_dir))
-    return u.groupBy("nationkey").agg(F.count("*").alias("n")).orderBy("nationkey")
+    return sort_result(u.groupBy("nationkey").agg(F.count("*").alias("n")), "nationkey")
 
 
 def _urgent_custkeys(spark, sf_dir) -> DataFrame:

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 N_QUERIES = 8  # vec_id < 8 are the demo query vectors
 TOP_K = 10
@@ -97,7 +97,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 
@@ -147,7 +147,7 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim",
         )
     )
-    return assembled.orderBy("label")
+    return assembled.transform(sort_result, "label")
 
 
 N_TABLES = 8
@@ -259,7 +259,7 @@ def _lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 
@@ -346,7 +346,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 
@@ -505,7 +505,7 @@ def ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 
@@ -640,7 +640,7 @@ def _int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 
@@ -828,7 +828,7 @@ def lsh_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 

@@ -47,6 +47,7 @@ from minio_iceberg_polaris_lakehouse_spark.operators.similarity import (
 from minio_iceberg_polaris_lakehouse_spark.registry import register
 from minio_iceberg_polaris_lakehouse_spark.sources.tables import (
     load_table,
+    sort_result,
     spread_for_kernel,
 )
 
@@ -206,7 +207,7 @@ def _rescore_topk(
     return (
         rescored.select("*", F.row_number().over(w).cast("int").alias("rn"))
         .filter(F.col("rn") <= TOP_K)
-        .orderBy("q_id", "rn")
+        .transform(sort_result, "q_id", "rn")
     )
 
 

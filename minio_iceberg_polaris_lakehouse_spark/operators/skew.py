@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 SALT_BUCKETS = 16
 
@@ -74,8 +74,8 @@ def skew_salted_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot). Result must equal the direct GROUP BY — the oracle IS the direct
     form, so this checks the rewrite's exactness."""
     l = load_table(spark, sf_dir, "lineitem")
-    return salted_sum(l, "l_returnflag", F.col("l_extendedprice"), "total_price").orderBy(
-        "l_returnflag"
+    return salted_sum(l, "l_returnflag", F.col("l_extendedprice"), "total_price").transform(
+        sort_result, "l_returnflag"
     )
 
 
@@ -110,5 +110,5 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy(F.col("n_name").alias("nation"))
         .agg(F.count("*").alias("n_customers"))
-        .orderBy("nation")
+        .transform(sort_result, "nation")
     )

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.operators.relational import dsum
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -39,7 +39,7 @@ def rel_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("n_orders")
         .agg(F.count("*").alias("n_customers"))
-        .orderBy(F.desc("n_customers"), F.desc("n_orders"))
+        .transform(sort_result, F.desc("n_customers"), F.desc("n_orders"))
     )
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.operators.relational import dsum
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -135,7 +135,7 @@ def rel_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
+        .transform(sort_result, F.desc("revenue"), "n_name")
     )
 
 
@@ -217,7 +217,7 @@ def rel_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
         )
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .transform(sort_result, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -277,7 +277,7 @@ def rel_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("nation_volume") / F.col("total_volume"), 6)
         .cast("double")
         .alias("mkt_share"),
-    ).orderBy("o_year")
+    ).transform(sort_result, "o_year")
 
 
 @register(
@@ -355,7 +355,7 @@ def rel_q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFram
             F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
+        .transform(sort_result, "l_linestatus")
     )
 
 
@@ -431,7 +431,7 @@ def rel_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(bad), "l_suppkey", "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        .transform(sort_result, F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -557,8 +557,9 @@ def rel_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM(n_r) grouped by rmn — the same per-order aggregate that decides
     qualification also carries the count. One lineitem scan and ONE
     lineitem-sized exchange total (was: two scans, two exchanges, one
-    extra shuffle join); plan pinned in plans/r12/, parity re-verified
-    (hash match) at sf0.001/0.01/0.1."""
+    extra shuffle join); the plan shape is pinned by
+    `tests/test_plans.py::test_q21_aggregated_witnesses_not_self_joins`,
+    parity re-verified (hash match) at sf0.001/0.01/0.1."""
     s = load_table(spark, sf_dir, "supplier")
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
@@ -633,5 +634,5 @@ def rel_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("numcust"),
             dsum("c_acctbal", "totacctbal"),
         )
-        .orderBy("c_nationkey")
+        .transform(sort_result, "c_nationkey")
     )

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -43,7 +43,7 @@ def win_top3_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("int").alias("rn"),
         )
         .filter(F.col("rn") <= 3)
-        .orderBy("segment", "rn")
+        .transform(sort_result, "segment", "rn")
     )
 
 

@@ -17,6 +17,16 @@ comparison against another engine is meaningful):
 - Integer-typed aggregates are cast explicitly (DuckDB SUM(BIGINT) is
   HUGEINT, Spark's is BIGINT; DuckDB year() is BIGINT, Spark's is INT).
 - ORDER BY always ends with a unique tiebreaker column.
+- The final ORDER BY of a DataFrame query whose result is bounded by a
+  small fixed domain (grouped by nation, segment, status, language,
+  source or a calendar bucket, or top-k per query) is
+  ``sources.tables.sort_result``: a gather into one partition and a local
+  sort, with no range-bounds sampling job. A result with one row per
+  document, customer or user keeps ``orderBy`` (its sort stays
+  parallel), as does a row-level sort; ``orderBy().limit()`` stays a
+  TakeOrderedAndProject, and queries built from SQL text sort as their
+  SQL says. ``rel_range_join`` is the one per-user result on
+  ``sort_result``: it keeps only users with an in-window pair.
 """
 
 from __future__ import annotations

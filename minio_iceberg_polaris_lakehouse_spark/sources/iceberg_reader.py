@@ -1272,6 +1272,7 @@ def read_iceberg_table(
     between: dict | None = None,
     metadata_columns: bool = False,
     _files=None,
+    _metadata: dict | None = None,
 ) -> DataFrame:
     """Open the table at ``location`` (table dir / metadata dir /
     metadata file) as a DataFrame; optional time travel by snapshot id,
@@ -1307,9 +1308,10 @@ def read_iceberg_table(
     Internal: ``_files`` (paths) reads only those data files of the
     snapshot, its deletes still applied; ``_keep_lineage`` keeps each
     live row's `__file`/`__pos` and projects the current schema even at
-    a ref, ``_keep_seq`` its data sequence."""
+    a ref, ``_keep_seq`` its data sequence; ``_metadata`` is the parsed
+    document at ``location`` when the caller already read it."""
     md_path = resolve_metadata_path(location)
-    md = json.loads(fsio.read_text(md_path))
+    md = _metadata or json.loads(fsio.read_text(md_path))
     snap = _select_snapshot(md, location, snapshot_id, as_of_ms, ref)
     # the internal DML reads (`_keep_lineage`) stage a write on a branch
     # head: they project the CURRENT schema, which an ALTER (no snapshot)
@@ -1360,6 +1362,7 @@ def incremental_read_iceberg_table(
     location: str,
     from_snapshot_id: int,
     to_snapshot_id: int | None = None,
+    _metadata: dict | None = None,
 ) -> DataFrame:
     """Iceberg-style incremental APPEND scan: the rows of the data files
     present at `to` but not at `from`, with `to`'s deletes applied (a row
@@ -1370,8 +1373,9 @@ def incremental_read_iceberg_table(
     A missing snapshot raises ValueError (an expired checkpoint must fail
     loudly, not silently skip). An interval that REMOVES a data file
     (rewrite, compaction, copy-on-write DML) is not expressible as
-    appends and raises: the consumer falls back to a full re-read."""
-    md = json.loads(fsio.read_text(resolve_metadata_path(location)))
+    appends and raises: the consumer falls back to a full re-read.
+    ``_metadata`` is as for `read_iceberg_table`."""
+    md = _metadata or json.loads(fsio.read_text(resolve_metadata_path(location)))
     by_id = {s["snapshot-id"]: s for s in md.get("snapshots", [])}
     if from_snapshot_id not in by_id:
         raise ValueError(f"snapshot {from_snapshot_id} not found at {location}")
@@ -1400,6 +1404,7 @@ def changes_iceberg_table(
     from_snapshot_id: int,
     to_snapshot_id: int | None = None,
     row_lineage: bool = False,
+    _metadata: dict | None = None,
 ) -> DataFrame:
     """Iceberg changelog scan (`CALL system.create_changelog_view`) over
     the open metadata: the row-level changes committed by the snapshots
@@ -1431,8 +1436,9 @@ def changes_iceberg_table(
     removed is bridged over the snapshot-log (main's history) to the
     surviving snapshot current before it, so a window across the gap
     diffs the two states. A ``from`` still not reached (a diverged
-    branch) raises ValueError."""
-    md = json.loads(fsio.read_text(resolve_metadata_path(location)))
+    branch) raises ValueError. ``_metadata`` is as for
+    `read_iceberg_table`."""
+    md = _metadata or json.loads(fsio.read_text(resolve_metadata_path(location)))
     by_id = {s["snapshot-id"]: s for s in md.get("snapshots", [])}
     if from_snapshot_id != 0 and from_snapshot_id not in by_id:
         raise ValueError(f"snapshot {from_snapshot_id} not found at {location}")

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = [
@@ -109,6 +109,33 @@ def spread_for_kernel(df: DataFrame, *key_cols: str) -> DataFrame:
             target, F.pmod(F.xxhash64(*key_cols), F.lit(100 * target))
         )
     return df.repartition(target)
+
+
+def sort_result(df: DataFrame, *cols: Column | str) -> DataFrame:
+    """The final ORDER BY of a grouped result the caller collects: gather
+    the rows into ONE partition, then sort them locally.
+
+    A global ``orderBy`` plans a range-partitioning exchange, whose
+    bounds cost a sampling job over the input before the shuffle runs —
+    a whole extra job to order the few rows a GROUP BY, DISTINCT or
+    per-group top-k returns. ``repartition(1)`` is a single-partition
+    gather with no bounds to compute, and the stages before it keep
+    their full parallelism. Not ``coalesce(1)``: that folds the whole
+    stage after the last shuffle (a window over every event, say) into
+    one task.
+
+    Use it only where the rows go to the driver anyway and their count is
+    bounded by a small fixed domain: nation, region, segment, status,
+    language, source, a calendar bucket, or top-k per query. A result
+    with one row per document, customer or user grows with the data, and
+    one task would sort all of it, so it keeps the parallel range sort of
+    ``orderBy``; so do row-level sorts, and ``orderBy().limit()`` stays a
+    TakeOrderedAndProject. Under ``count()`` the optimizer drops a final
+    ``orderBy`` but keeps this gather, which then carries the result rows
+    where ``count()`` would have gathered one partial count per
+    partition — the same one exchange, cheap only because the result is
+    small."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def materialize_once(df: DataFrame) -> DataFrame:

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minio_iceberg_polaris_lakehouse_spark.registry import register
-from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table
+from minio_iceberg_polaris_lakehouse_spark.sources.tables import load_table, sort_result
 
 
 @register(
@@ -43,7 +43,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(26,8)")).cast("double").alias("total_value"),
         )
         .select(F.col("w.start").alias("win_start"), "event_type", "n_events", "total_value")
-        .orderBy("win_start", "event_type")
+        .transform(sort_result, "win_start", "event_type")
     )
 
 
@@ -70,7 +70,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(26,8)")).cast("double").alias("total_value"),
         )
         .select(F.col("w.start").alias("win_start"), "n_events", "total_value")
-        .orderBy("win_start")
+        .transform(sort_result, "win_start")
     )
 
 
@@ -128,5 +128,5 @@ def stream_event_type_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(F.count("*").alias("n"), F.count_distinct("user_id").alias("n_users"))
-        .orderBy("event_type", "day")
+        .transform(sort_result, "event_type", "day")
     )

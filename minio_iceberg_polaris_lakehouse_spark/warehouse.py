@@ -56,6 +56,7 @@ from minio_iceberg_polaris_lakehouse_spark import fsio
 from minio_iceberg_polaris_lakehouse_spark.session import local_frame
 from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (  # noqa: F401
     _bloom_positions_py,
+    _parquet,
     changes_iceberg_table,
     incremental_read_iceberg_table,
     read_iceberg_table,
@@ -1296,13 +1297,20 @@ class Table:
         mains = self._main_snaps()
         return mains[-1]["snapshot_id"] if mains else None
 
-    def _resolve(self, version: int | str | None = None, as_of_ms: int | None = None) -> dict:
+    def _resolve(
+        self,
+        version: int | str | None = None,
+        as_of_ms: int | None = None,
+        snaps: list[dict] | None = None,
+    ) -> dict:
+        """The snapshot a read at ``version``/``as_of_ms`` sees, resolved
+        over ``snaps`` (default: `_snapshots.json` as stored)."""
         if isinstance(version, str):  # branch/tag name -> pinned snapshot
             refs = self._meta().get("refs", {})
             if version not in refs:
                 raise WarehouseError(f"unknown ref {version!r} on {self.ns}.{self.name}")
             version = int(refs[version]["snapshot_id"])
-        snaps = self._snaps()
+        snaps = self._snaps() if snaps is None else snaps
         if not snaps:
             if version is not None:
                 raise WarehouseError(f"snapshot {version} not found for {self.ns}.{self.name}")
@@ -1591,15 +1599,19 @@ class Table:
         snapshot's positional tombstones exactly as stored — (file_path,
         pos) plus the delete file that recorded each. Unlike the other
         metadata tables this one reads data files (the delete parquets),
-        as Iceberg's does; the read is distributed and O(delete files)."""
+        as Iceberg's does; the read is distributed and O(delete files),
+        and building it lists no directories in a Spark job (`_parquet`
+        slices the delete dirs at the listing threshold)."""
         snap = self._resolve()
         dirs = snap.get("delete_dirs", [])
         schema = "file_path string, pos bigint, delete_file_path string"
         if not dirs:
             return local_frame(self.spark, [], schema)
-        paths = [os.path.join(self.path, d) for d in dirs]
-        return self.spark.read.schema(self._DELETE_SCHEMA).parquet(*paths).select(
-            "file_path", "pos", F.col("_metadata.file_path").alias("delete_file_path")
+        return _parquet(
+            self.spark,
+            self._DELETE_SCHEMA,
+            [os.path.join(self.path, d) for d in dirs],
+            ["file_path", "pos", F.col("_metadata.file_path").alias("delete_file_path")],
         )
 
     def read(
@@ -1633,17 +1645,20 @@ class Table:
         materialized into the file so carried-over rows keep their
         identity; merge-on-read never touches surviving rows' files, so
         their ids hold by construction."""
-        snap = self._resolve(version, as_of_ms)  # the WarehouseErrors callers expect
+        snaps = self._snaps()
+        snap = self._resolve(version, as_of_ms, snaps)  # the WarehouseErrors callers expect
         at = (
             {"ref": version}
             if isinstance(version, str)
             else {"snapshot_id": version, "as_of_ms": as_of_ms}
         )
+        path, md = self._published_metadata(snaps)
         df = read_iceberg_table(
             self.spark,
-            self._published_metadata(),
+            path,
             row_lineage=lineage,
             metadata_columns=metadata_columns,
+            _metadata=md,
             **at,
         )
         time_travel = version is not None or as_of_ms is not None
@@ -1678,10 +1693,9 @@ class Table:
         the transform each file was written under: hidden partitioning,
         correct across spec evolution), column bounds or Bloom index can
         match. Pruning saves IO only; the filters apply on top."""
+        path, md = self._published_metadata()
         df = self._as_table_types(
-            read_iceberg_table(
-                self.spark, self._published_metadata(), eq=eq, between=between
-            )
+            read_iceberg_table(self.spark, path, eq=eq, between=between, _metadata=md)
         )
         conds = [F.col(c) == v for c, v in (eq or {}).items()]
         for c, (lo, hi) in (between or {}).items():
@@ -1695,16 +1709,19 @@ class Table:
             df = df.filter(cond)
         return df
 
-    def _published_metadata(self) -> str:
-        """Path of the published `vN.metadata.json`. When its main head,
-        its other refs (branches, tags) or its current columns are not
-        the table's (an export after a commit, ref move or ALTER failed),
-        the table is re-exported under the commit lock first: a read
-        planned from the published metadata must never serve an older
-        state."""
+    def _published_metadata(self, snaps: list[dict] | None = None) -> tuple[str, dict]:
+        """Path and parsed document of the published `vN.metadata.json`,
+        checked against the main lineage of ``snaps`` (default:
+        `_snapshots.json` as stored).
+        When its main head, its other refs (branches, tags) or its
+        current columns are not the table's (an export after a commit,
+        ref move or ALTER failed), the table is re-exported under the
+        commit lock first: a read planned from the published metadata
+        must never serve an older state."""
         meta = self._meta()
         refs = {n: int(r["snapshot_id"]) for n, r in meta.get("refs", {}).items()}
-        head = self.current_snapshot_id()
+        mains = self._main_snaps(snaps)
+        head = mains[-1]["snapshot_id"] if mains else None
         if head is not None:
             refs.setdefault("main", head)
         columns = T.StructType.fromJson(json.loads(meta["schema"])).fieldNames()
@@ -1717,16 +1734,17 @@ class Table:
                 and {n: r["snapshot-id"] for n, r in md.get("refs", {}).items()} == refs
                 and [f["name"] for f in cur["fields"]] == columns
             ):
-                return path
+                return path, md
         except FileNotFoundError:
             pass
         from minio_iceberg_polaris_lakehouse_spark.iceberg_export import write_iceberg_metadata
 
         lock, token = self._acquire_commit_lock()
         try:
-            return write_iceberg_metadata(self)
+            path = write_iceberg_metadata(self)
         finally:
             self._release_commit_lock(lock, token)
+        return path, json.loads(fsio.read_text(path))
 
     def incremental_scan(
         self, from_version: int, to_version: int | None = None
@@ -1761,8 +1779,9 @@ class Table:
                 f"incremental scan crosses replacing snapshot(s) {non_append}; "
                 "data was rewritten — fall back to a full scan"
             )
+        path, md = self._published_metadata(snaps)
         df = incremental_read_iceberg_table(
-            self.spark, self._published_metadata(), from_version, to_version
+            self.spark, path, from_version, to_version, _metadata=md
         )
         return self._as_table_types(df, by_id[to_version])
 
@@ -1806,12 +1825,9 @@ class Table:
         start = from_version or 0
         if to is not None and start > to["snapshot_id"]:
             start = to["snapshot_id"]  # a window ending before it starts is empty
+        path, md = self._published_metadata(mains)
         df = changes_iceberg_table(
-            self.spark,
-            self._published_metadata(),
-            start,
-            to_version,
-            row_lineage=lineage,
+            self.spark, path, start, to_version, row_lineage=lineage, _metadata=md
         )
         return self._as_table_types(df, to)
 
@@ -2350,8 +2366,9 @@ class Table:
         # live rows with their (file, position) identity: a row already
         # dead by either delete kind must never be re-tombstoned, or the
         # changelog would emit a second delete for a row inserted once
+        path, md = self._published_metadata()
         live = read_iceberg_table(
-            self.spark, self._published_metadata(), ref=branch, _keep_lineage=True
+            self.spark, path, ref=branch, _keep_lineage=True, _metadata=md
         )
         pv = spec.expr(src_dt, spec_hash=spec_hash)
         non_null = [v for v in touched if v is not None]
@@ -2424,8 +2441,9 @@ class Table:
         parent = self._branch_head(branch) if branch else self.current_snapshot_id()
         snap = self._resolve(version=branch) if branch else self._resolve()
         existing = snap.get("delete_dirs", [])
+        path, md = self._published_metadata()
         live = read_iceberg_table(
-            self.spark, self._published_metadata(), ref=branch, _keep_lineage=True
+            self.spark, path, ref=branch, _keep_lineage=True, _metadata=md
         )
         hits = live.filter(f"({condition})").select(
             F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
@@ -2600,8 +2618,9 @@ class Table:
         parent = self._branch_head(branch) if branch else self.current_snapshot_id()
         snap = self._resolve(version=branch) if branch else self._resolve()
         existing = snap.get("delete_dirs", [])
+        path, md = self._published_metadata()
         live = read_iceberg_table(
-            self.spark, self._published_metadata(), ref=branch, _keep_lineage=True
+            self.spark, path, ref=branch, _keep_lineage=True, _metadata=md
         )
         # matched feeds TWO writes (tombstone positions + rewritten
         # rows); persist it so the full-table scan + predicate run once,
@@ -4392,10 +4411,12 @@ class Table:
         ]
         untouched = [d for d in snap["manifest"] if d not in affected]
         meta = self._meta()
+        path, md = self._published_metadata()
         live = read_iceberg_table(
             self.spark,
-            self._published_metadata(),
+            path,
             row_lineage=True,
+            _metadata=md,
             _files=[
                 os.path.join(self.path, d, f["path"])
                 for d in affected

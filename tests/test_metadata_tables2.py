@@ -159,6 +159,34 @@ def test_position_deletes_metadata_table(lake):
     assert "delete-" in rows[0].delete_file_path
 
 
+def test_position_deletes_frame_lists_no_dirs_in_a_job(spark, lake):
+    """Building the position_deletes frame over more delete dirs than
+    Spark's parallel-listing threshold runs no Spark job: the dirs are
+    read in slices no longer than the threshold."""
+    lake.sql("CREATE NAMESPACE IF NOT EXISTS db3")
+    lake.sql(
+        "CREATE TABLE db3.m (id INT) USING iceberg "
+        "TBLPROPERTIES ('write.delete.mode'='merge-on-read')"
+    )
+    lake.sql("INSERT INTO db3.m VALUES (1), (2), (3), (4)")
+    for i in (1, 2, 3):
+        lake.sql(f"DELETE FROM db3.m WHERE id = {i}")
+    tab = lake.wh.table("db3", "m")
+    assert len(tab._resolve()["delete_dirs"]) == 3
+    sc = spark.sparkContext
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    sc.setJobGroup("position_deletes_build", "position_deletes_build")
+    try:
+        df = tab.position_deletes()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(conf, old)
+    assert list(sc.statusTracker().getJobIdsForGroup("position_deletes_build")) == []
+    assert len(df.collect()) == 3
+
+
 def test_remove_orphan_files_older_than(lake, tmp_path):
     import os as _os
 

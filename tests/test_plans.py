@@ -469,3 +469,53 @@ def test_pivot_statement_single_aggregation(spark, sf_dir):
     assert "Generate" not in s, s
     assert len(read_schemas(df)) == 1, "fact table scanned more than once"
     assert_no_cartesian(df)
+
+
+def _physical(df) -> str:
+    """The physical plan as planned before execution (AQE's initial plan)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "flagship_revenue_by_nation",
+        "win_top3_per_segment",
+        "text_bpe_tokens",
+        "rel_range_join",
+        "mm_audio_stats",
+    ],
+)
+def test_grouped_result_sorts_in_one_partition(spark, sf_dir, name):
+    """The final ORDER BY of a collected grouped result is a gather into
+    one partition plus a local sort (`sort_result`): no range-partitioning
+    exchange, whose bounds cost a sampling job, and exactly one
+    SinglePartition exchange, right under the final sort."""
+    plan = _physical(q(name, spark, sf_dir))
+    assert "rangepartitioning" not in plan, plan
+    assert plan.count("Exchange SinglePartition") == 1, plan
+    top = [ln.strip(" +-:") for ln in plan.splitlines()[1:3]]
+    assert top[0].startswith("Sort ") and top[1].startswith("Exchange SinglePartition"), plan
+
+
+def test_range_join_is_one_window_pass(spark, sf_dir):
+    """rel_range_join counts its pairs and its same-timestamp ties in one
+    window pass over one events scan: one hash exchange on user_id, no
+    join, no second scan."""
+    df = q("rel_range_join", spark, sf_dir)
+    plan = _physical(df)
+    assert scan_count(df) == 1, plan
+    assert "Join" not in plan, plan
+    assert plan.count("hashpartitioning") == 1, plan
+
+
+@pytest.mark.parametrize(
+    "name", ["rel_join_left_outer", "dedup_exact_keep_first", "stream_session_window"]
+)
+def test_per_entity_result_keeps_parallel_sort(spark, sf_dir, name):
+    """A result with one row per customer, document or user grows with
+    the data, so its final ORDER BY stays a range-partitioned sort: no
+    single task sorts it."""
+    plan = _physical(q(name, spark, sf_dir))
+    assert "rangepartitioning" in plan, plan
+    assert "Exchange SinglePartition" not in plan, plan
