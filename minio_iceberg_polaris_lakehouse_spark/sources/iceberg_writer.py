@@ -34,6 +34,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from minio_iceberg_polaris_lakehouse_spark import avro_io, fsio
 from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
@@ -505,24 +506,10 @@ def delete_iceberg_table_where(
         return _commit_dv_delete(spark, md, md_path, mdir, root, matched, update_hint)
 
     dirname = f"delete-{uuid.uuid4().hex[:12]}"
-    out_dir = os.path.join(root, "data", dirname)
-    # sorted by (file_path, pos) — the spec's required delete-file order,
-    # and what lets a reader merge tombstones against a file in one pass
-    matched.sort("file_path", "pos").write.option("compression", "zstd").parquet(out_dir)
-    import pyarrow.parquet as pq
-
-    files = []
-    for name in sorted(fsio.listdir(out_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        p = os.path.join(out_dir, name)
-        pf = pq.ParquetFile(fsio.open_binary(p))
-        if pf.metadata.num_rows:
-            files.append((p, pf.metadata.num_rows, fsio.getsize(p)))
-    deleted_rows = sum(r for _, r, _ in files)
-    if deleted_rows == 0:
-        fsio.rmtree(out_dir)
+    files = _write_position_deletes(matched, os.path.join(root, "data", dirname))
+    if not files:
         return None
+    deleted_rows = sum(r for _, r, _ in files)
 
     return _stage_row_level_commit(
         md,
@@ -731,6 +718,23 @@ def _list_parquet(out_dir: str) -> list[tuple[str, int, int]]:
         pf = pq.ParquetFile(fsio.open_binary(p))
         if pf.metadata.num_rows:
             files.append((p, pf.metadata.num_rows, fsio.getsize(p)))
+    return files
+
+
+def _write_position_deletes(pos: DataFrame, out_dir: str) -> list[tuple[str, int, int]]:
+    """Write ``pos`` (file_path, pos) tombstones as position-delete files
+    under ``out_dir``, with Iceberg's own position-delete distribution:
+    hash-clustered on file_path and sorted within each task, so one data
+    file's tombstones land in one delete file, in the spec's (file_path,
+    pos) order, without the sampling job a global sort runs. Returns the
+    non-empty files (path, rows, size); a write with no rows leaves no
+    directory."""
+    pos.repartition("file_path").sortWithinPartitions("file_path", "pos").write.option(
+        "compression", "zstd"
+    ).parquet(out_dir)
+    files = _list_parquet(out_dir)
+    if not files:
+        fsio.rmtree(out_dir)
     return files
 
 
@@ -1093,9 +1097,9 @@ def update_iceberg_table_where(
     dv_files: list[dict] = []
     supersede_refs: set[str] = set()
     if not use_dv:
-        del_dir = os.path.join(root, "data", f"{tag}-deletes")
-        pos_df.sort("file_path", "pos").write.option("compression", "zstd").parquet(del_dir)
-        delete_files = _list_parquet(del_dir)
+        delete_files = _write_position_deletes(
+            pos_df, os.path.join(root, "data", f"{tag}-deletes")
+        )
 
     # rewritten rows: assignments applied on the pre-update values, then
     # cast back to the declared column types (Iceberg UPDATE semantics)
@@ -1120,8 +1124,6 @@ def update_iceberg_table_where(
         if enc is not None:
             dv_files, supersede_refs, _ = enc
     if updated_rows == 0:
-        if not use_dv:
-            fsio.rmtree(del_dir)
         fsio.rmtree(data_dir)
         return None
 
@@ -1348,11 +1350,8 @@ def overwrite_iceberg_table_partitions(
     matched = live.filter(cond).select(
         F.col("__file").alias("file_path"), F.col("__pos").cast("long").alias("pos")
     )
-    del_dir = os.path.join(root, "data", f"{tag}-del")
-    matched.sort("file_path", "pos").write.option("compression", "zstd").parquet(del_dir)
-    delete_files = _list_parquet(del_dir)
-    if not delete_files:
-        fsio.rmtree(del_dir)  # only fresh partitions: nothing to tombstone
+    # no delete files when the write touched only fresh partitions
+    delete_files = _write_position_deletes(matched, os.path.join(root, "data", f"{tag}-del"))
 
     return _stage_row_level_commit(
         md,
@@ -1378,125 +1377,98 @@ def merge_iceberg_table(
     location: str,
     source: DataFrame,
     on: str,
-    when_matched: str = "update",
-    insert_not_matched: bool = True,
-    not_matched_by_source_delete: bool = False,
+    matched_arms: list[dict] | None = None,
+    insert_arm: dict | None = None,
+    not_matched_by_source_arm: dict | None = None,
+    target_alias: str = "t",
+    source_alias: str = "s",
     update_hint: bool = True,
 ) -> str | None:
     """MERGE INTO a FOREIGN Iceberg table through its open metadata, as
-    ONE snapshot — the upsert form the reference points at for dedup
-    remediation (SETUP_GUIDE_WIN.md:368), now available on tables the
-    engine didn't create:
+    ONE merge-on-read snapshot — the upsert form the reference points at
+    for dedup remediation (SETUP_GUIDE_WIN.md:368), on tables the engine
+    didn't create, with every clause form of `Table.merge_into_arms`.
 
-    - ``when_matched='update'``: matched target rows are tombstoned and
-      the matching SOURCE rows land as new data files (UPDATE SET *);
-      ``'delete'`` tombstones without replacement (MATCHED THEN DELETE).
-    - ``insert_not_matched``: source rows with no target match insert.
-    - ``not_matched_by_source_delete``: target rows with no source match
-      are tombstoned too (full two-way sync).
-
-    Cardinality rule (Iceberg/Spark MERGE semantics): a target row
-    matching several source rows raises; duplicate source rows that
-    match nothing are legal inserts. Returns the new metadata path, or
-    None when the merge changes nothing.
-
-    Scale: key-only semi/anti joins decide row fates (the wide source
-    payload never enters the matching shuffle); tombstone and data
-    writes are O(affected rows)."""
+    The plan is the engine's one MERGE plan (`warehouse._merge_plan`)
+    over the reader's live rows with their (file, pos) lineage: every
+    target row whose action is not carry-over is tombstoned (position
+    deletes, or deletion vectors at format-version 3), and the rows an
+    UPDATE arm or the INSERT arm produce land as new data files. The
+    cardinality check fails the first write; a failed MERGE removes
+    what it staged and commits nothing. Returns the new metadata path,
+    or None when the merge changes nothing."""
     from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
         read_iceberg_table,
     )
+    from minio_iceberg_polaris_lakehouse_spark.warehouse import (
+        _CARRY,
+        _merge_cardinality,
+        _merge_plan,
+    )
 
-    if when_matched not in ("update", "delete"):
-        raise ValueError(f"when_matched must be 'update' or 'delete': {when_matched!r}")
     md_path = resolve_metadata_path(location)
     md = json.loads(fsio.read_text(md_path))
     mdir = os.path.dirname(md_path)
     root = md.get("location") or os.path.dirname(mdir)
-
     schemas = {s["schema-id"]: s for s in md.get("schemas", [])}
-    target = schemas[md["current-schema-id"]]
-    names = [f["name"] for f in target["fields"]]
-    if on not in names:
-        raise ValueError(f"merge key {on!r} is not a column of the target")
-    aligned_src = source.select(
-        *[
-            (
-                F.col(f["name"]).cast(_spark_type(f["type"]))
-                if f["name"] in source.columns
-                else F.lit(None).cast(_spark_type(f["type"]))
-            ).alias(f["name"])
-            for f in target["fields"]
+    schema = T.StructType(
+        [
+            T.StructField(f["name"], _spark_type(f["type"]))
+            for f in schemas[md["current-schema-id"]]["fields"]
         ]
     )
-
-    live = read_iceberg_table(spark, location, _keep_lineage=True)
-    tgt_keys = live.select(on)
-
-    # cardinality: duplicated source keys that actually match the target
-    dup = (
-        aligned_src.join(tgt_keys, on, "left_semi")
-        .groupBy(on)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .limit(1)
-        .collect()
+    live = read_iceberg_table(spark, md_path, _keep_lineage=True, _metadata=md)
+    rows, values = _merge_plan(
+        live,
+        source,
+        on,
+        schema,
+        matched_arms,
+        insert_arm,
+        not_matched_by_source_arm,
+        target_alias,
+        source_alias,
     )
-    if dup:
-        raise ValueError(
-            f"MERGE cardinality violation: source key {dup[0][0]!r} matches "
-            "a target row more than once"
-        )
+    code = F.col("__act")
+    ta = target_alias
+    doomed = rows.filter(F.col(f"{ta}.__file").isNotNull() & ~code.eqNullSafe(_CARRY)).select(
+        F.col(f"{ta}.__file").alias("file_path"), F.col(f"{ta}.__pos").cast("long").alias("pos")
+    )
+    new_rows = rows.filter(code != _CARRY).select(*values)
 
-    src_keys = aligned_src.select(on)
-    # target rows leaving the table: matched (update/delete rewrites or
-    # drops them) plus, optionally, rows no source key covers
-    doomed = live.join(src_keys, on, "left_semi")
-    if not_matched_by_source_delete:
-        doomed = doomed.unionByName(live.join(src_keys, on, "left_anti"))
     tag = f"merge-{uuid.uuid4().hex[:12]}"
-    use_dv = int(md.get("format-version", 2)) >= 3
-    doomed_pos = doomed.select(
-        F.col("__file").alias("file_path"), F.col("__pos").cast("long").alias("pos")
+    del_dir, dv_path, data_dir = (
+        os.path.join(root, "data", f"{tag}{suffix}") for suffix in ("-deletes", ".puffin", "-rows")
     )
     delete_files: list = []
     dv_files: list[dict] = []
     supersede_refs: set[str] = set()
     deleted_records = 0
-    if use_dv:
-        # v3 tables tombstone with deletion vectors; deleted_records is
-        # the NEW tombstone count (the merged-forward old positions stay
-        # attributed to their original commits) — derived from the blob
-        # cardinalities, no extra count job over the join
-        enc = _encode_dv_files(spark, md, root, doomed_pos, tag)
-        if enc is not None:
-            dv_files, supersede_refs, merged_old = enc
-            deleted_records = sum(d["cardinality"] for d in dv_files) - merged_old
-    else:
-        del_dir = os.path.join(root, "data", f"{tag}-deletes")
-        doomed_pos.sort("file_path", "pos").write.option("compression", "zstd").parquet(
-            del_dir
-        )
-        delete_files = _list_parquet(del_dir)
-        deleted_records = sum(r for _, r, _ in delete_files)
-
-    incoming = []
-    if when_matched == "update":
-        incoming.append(aligned_src.join(tgt_keys, on, "left_semi"))
-    if insert_not_matched:
-        incoming.append(aligned_src.join(tgt_keys, on, "left_anti"))
-    data_dir = os.path.join(root, "data", f"{tag}-rows")
-    new_rows = incoming[0] if incoming else aligned_src.limit(0)
-    for part in incoming[1:]:
-        new_rows = new_rows.unionByName(part)
-    new_rows.write.option("compression", "zstd").parquet(data_dir)
-
+    try:
+        with _merge_cardinality(source, on):
+            if int(md.get("format-version", 2)) >= 3:
+                # deleted_records is the NEW tombstone count: positions
+                # merged forward from superseded DVs stay attributed to
+                # their original commits
+                enc = _encode_dv_files(spark, md, root, doomed, tag)
+                if enc is not None:
+                    dv_files, supersede_refs, merged_old = enc
+                    deleted_records = sum(d["cardinality"] for d in dv_files) - merged_old
+            else:
+                delete_files = _write_position_deletes(doomed, del_dir)
+                deleted_records = sum(r for _, r, _ in delete_files)
+            new_rows.write.option("compression", "zstd").parquet(data_dir)
+    except BaseException:
+        fsio.rmtree(del_dir, ignore_errors=True)
+        fsio.rmtree(data_dir, ignore_errors=True)
+        if fsio.exists(dv_path):
+            fsio.remove(dv_path)
+        raise
     data_files = _list_parquet(data_dir)
-    if not delete_files and not dv_files and not data_files:
-        if not use_dv:
-            fsio.rmtree(del_dir)
+    if not data_files:
         fsio.rmtree(data_dir)
-        return None
+        if not delete_files and not dv_files:
+            return None
 
     return _stage_row_level_commit(
         md,

@@ -2981,66 +2981,24 @@ class LakehouseSQL:
         fake = re.match(r"(?s)()(.*)", rest)
         return self._create_table(fake)
 
-    def _merge_into(self, m: re.Match) -> DataFrame:
-        """MERGE INTO t [t_alias] USING src [s_alias] ON a.k = b.k
-        WHEN MATCHED [AND <cond>] THEN UPDATE SET *
-        WHEN NOT MATCHED THEN INSERT *
-        [WHEN NOT MATCHED BY SOURCE THEN DELETE] —
-        the upsert form the reference points at for dedup remediation
-        (SETUP_GUIDE_WIN.md:368 'Use MERGE or DELETE + INSERT'). ``src``
-        is a warehouse table name or a parenthesized SELECT; execution is
-        the warehouse's copy-on-write merge (one full outer join). The
-        conditional arm references the two sides by the statement's own
-        aliases (defaulting to t/s when none are written); matched rows
-        failing it carry over unchanged. It requires the engine merge
-        path — a FOREIGN target refuses rather than silently updating
-        every match."""
-        cond = m.group(7).strip() if m.group(7) else None
-        foreign = self._merge_foreign_target(m)
-        if foreign:
-            if cond:
-                raise WarehouseError(
-                    "WHEN MATCHED AND <cond> is not supported on a foreign "
-                    "MERGE target (key-only matching) — apply it via the "
-                    "engine table path"
-                )
-            src, key = self._merge_src_key(m)
-            self.wh.merge_foreign_table(
-                *foreign,
-                src,
-                key,
-                when_matched="update",
-                insert_not_matched=True,
-                not_matched_by_source_delete=bool(m.group(8)),
-            )
-            return self._empty()
-        tab, src, key = self._merge_parts(m)
-        tab.merge_into(
-            src,
-            on=key,
-            not_matched_by_source_action="delete" if m.group(8) else None,
-            branch=self._wap_branch,
-            matched_condition=cond,
-            target_alias=m.group(2) or "t",
-            source_alias=m.group(4) or "s",
-        )
-        return self._empty()
-
     def _merge_general(self, m: re.Match) -> DataFrame:
-        """The full MERGE matrix (Spark 3.5 / Iceberg): any number of
-        ordered `WHEN MATCHED [AND c] THEN UPDATE SET (*|a=expr,…)|DELETE`
-        arms (first matching arm fires per row), a conditional
+        """MERGE INTO t [t_alias] USING src [s_alias] ON a.k = b.k with
+        the full Spark 3.5 / Iceberg clause matrix: any number of ordered
+        `WHEN MATCHED [AND c] THEN UPDATE SET (*|a=expr,…)|DELETE` arms
+        (first matching arm fires per row), a conditional
         `WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT *`, and
-        `WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE|UPDATE SET …`.
-        Statements the two simpler patterns above already cover never
-        reach here (first-match dispatch); foreign targets support
-        key-only matching and refuse the rich forms."""
-        if self._merge_foreign_target(m):
-            raise WarehouseError(
-                "multi-arm / assignment MERGE is not supported on a foreign "
-                "target (key-only matching) — use the engine table path"
-            )
-        tab, src, key = self._merge_parts(m)
+        `WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE|UPDATE SET …` —
+        incl. the upsert and dedup-remediation forms the reference points
+        at (SETUP_GUIDE_WIN.md:368 'Use MERGE or DELETE + INSERT').
+        ``src`` is a warehouse table name or a parenthesized SELECT; the
+        clauses reference the two sides by the statement's own aliases
+        (t/s when none are written). A native target runs
+        `Table.merge_into_arms` (copy-on-write), a registered foreign
+        target `Warehouse.merge_foreign_table` (merge-on-read): the same
+        plan and arms, only the commit differs."""
+        foreign = self._merge_foreign_target(m)
+        tab = None if foreign else self._dml_table(m.group(1))
+        src, key = self._merge_src_key(m)
         clauses = [
             c.strip()
             for c in re.split(
@@ -3110,21 +3068,22 @@ class LakehouseSQL:
             raise WarehouseError(f"cannot parse MERGE clause: {cl[:80]!r}")
         if not (matched_arms or insert_arm or nbs_arm):
             raise WarehouseError("MERGE needs at least one WHEN clause")
-        tab.merge_into_arms(
-            src,
-            on=key,
-            matched_arms=matched_arms,
-            insert_arm=insert_arm,
-            not_matched_by_source_arm=nbs_arm,
-            branch=self._wap_branch,
-            target_alias=m.group(2) or "t",
-            source_alias=m.group(4) or "s",
-        )
+        arms = {
+            "matched_arms": matched_arms,
+            "insert_arm": insert_arm,
+            "not_matched_by_source_arm": nbs_arm,
+            "target_alias": m.group(2) or "t",
+            "source_alias": m.group(4) or "s",
+        }
+        if foreign:
+            self.wh.merge_foreign_table(*foreign, src, key, **arms)
+        else:
+            tab.merge_into_arms(src, key, branch=self._wap_branch, **arms)
         return self._empty()
 
     def _merge_foreign_target(self, m: re.Match) -> tuple[str, str] | None:
         """(ns, table) when the MERGE target is a registered foreign
-        table — routed through the open-metadata merge writer (WAP
+        table — committed through the open-metadata merge writer (WAP
         branch sessions refuse, as for every foreign write)."""
         foreign = self._foreign_for_write(m.group(1))
         if foreign and self._wap_branch:
@@ -3135,9 +3094,9 @@ class LakehouseSQL:
         return foreign
 
     def _merge_src_key(self, m: re.Match):
-        """Source frame + join key for the MERGE forms (group layout:
-        1 target, 2 target alias?, 3 source, 4 source alias?, 5/6 ON
-        sides, 7 condition?, 8 trailing arm?)."""
+        """Source frame + join key of a MERGE (group layout: 1 target,
+        2 target alias?, 3 source, 4 source alias?, 5/6 ON sides,
+        7 WHEN clauses)."""
         src_text, on_l, on_r = m.group(3).strip(), m.group(5), m.group(6)
         if src_text.startswith("("):
             inner, _rest = _balanced_paren_group(src_text)
@@ -3149,50 +3108,6 @@ class LakehouseSQL:
         if kl != kr:
             raise WarehouseError(f"MERGE ON must equate the same column name: {on_l} = {on_r}")
         return src, kl
-
-    def _merge_parts(self, m: re.Match):
-        """Shared target/source/key resolution for the MERGE forms."""
-        tab = self._dml_table(m.group(1))
-        src, key = self._merge_src_key(m)
-        return tab, src, key
-
-    def _merge_into_delete(self, m: re.Match) -> DataFrame:
-        """MERGE INTO t USING src ON ... WHEN MATCHED [AND <cond>] THEN
-        DELETE [WHEN NOT MATCHED THEN INSERT *] — the dedup-remediation
-        form the reference's troubleshooting guide reaches for
-        (SETUP_GUIDE_WIN.md:368 'Use MERGE or DELETE + INSERT'): matched
-        target rows (passing the optional condition) drop; source rows
-        with no match optionally insert."""
-        cond = m.group(7).strip() if m.group(7) else None
-        foreign = self._merge_foreign_target(m)
-        if foreign:
-            if cond:
-                raise WarehouseError(
-                    "WHEN MATCHED AND <cond> is not supported on a foreign "
-                    "MERGE target (key-only matching) — apply it via the "
-                    "engine table path"
-                )
-            src, key = self._merge_src_key(m)
-            self.wh.merge_foreign_table(
-                *foreign,
-                src,
-                key,
-                when_matched="delete",
-                insert_not_matched=bool(m.group(8)),
-            )
-            return self._empty()
-        tab, src, key = self._merge_parts(m)
-        tab.merge_into(
-            src,
-            on=key,
-            matched_action="delete",
-            insert_missing=bool(m.group(8)),
-            branch=self._wap_branch,
-            matched_condition=cond,
-            target_alias=m.group(2) or "t",
-            source_alias=m.group(4) or "s",
-        )
-        return self._empty()
 
     # ------------------------------------------------------- ALTER handlers
     def _alter_add_column(self, m: re.Match) -> DataFrame:
@@ -3877,25 +3792,6 @@ class LakehouseSQL:
         (r"EXPLAIN\s+(EXTENDED\s+|FORMATTED\s+|CODEGEN\s+|COST\s+)?(SELECT\s+.*|WITH\s+.*|FROM\s+.*)", _explain),
         (rf"DELETE\s+FROM\s+((?:{_IDENT}\.)*{_IDENT})\s+WHERE\s+(.*)", _delete_from),
         (
-            rf"MERGE\s+INTO\s+((?:{_IDENT}\.)*{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-            rf"\s+USING\s+(\(.*\)|(?:{_IDENT}\.)*{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-            rf"\s+ON\s+({_IDENT}\.{_IDENT})\s*=\s*({_IDENT}\.{_IDENT})"
-            rf"\s+WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+\*"
-            rf"\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*"
-            r"(\s+WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+THEN\s+DELETE)?",
-            _merge_into,
-        ),
-        (
-            rf"MERGE\s+INTO\s+((?:{_IDENT}\.)*{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-            rf"\s+USING\s+(\(.*\)|(?:{_IDENT}\.)*{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-            rf"\s+ON\s+({_IDENT}\.{_IDENT})\s*=\s*({_IDENT}\.{_IDENT})"
-            rf"\s+WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE"
-            rf"(\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*)?",
-            _merge_into_delete,
-        ),
-        (
-            # the FULL matrix: any WHEN-clause sequence the two simpler
-            # patterns above didn't already claim (first-match dispatch)
             rf"MERGE\s+INTO\s+((?:{_IDENT}\.)*{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
             rf"\s+USING\s+(\(.*\)|(?:{_IDENT}\.)*{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
             rf"\s+ON\s+({_IDENT}\.{_IDENT})\s*=\s*({_IDENT}\.{_IDENT})"

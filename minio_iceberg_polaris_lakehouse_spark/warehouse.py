@@ -45,6 +45,7 @@ import os
 import re
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -95,6 +96,144 @@ class CommitConflictError(WarehouseError):
     Retryable — re-read the table and re-apply the operation (the same
     contract Iceberg documents for concurrent writers, reference
     README.md:124: "multiple writers ... optimistic concurrency")."""
+
+
+def _merge_plan(
+    tgt: DataFrame,
+    source: DataFrame,
+    on: str,
+    schema: T.StructType,
+    matched_arms: list[dict] | None,
+    insert_arm: dict | None,
+    nbs: dict | None,
+    ta: str,
+    sa: str,
+) -> tuple[DataFrame, list[Column]]:
+    """The one MERGE plan — the shape of Spark's RewriteMergeIntoTable,
+    for every clause form and both kinds of table:
+
+      matched_arms: [{cond: str|None, action: 'update'|'delete',
+                      set: dict[col, expr]|None}, ...]
+          evaluated IN ORDER per matched (target, source) pair: the
+          FIRST arm whose condition holds fires (SQL three-valued
+          logic: NULL does not fire); no arm firing carries the target
+          row unchanged. ``set`` None means SET * (all non-key columns
+          from the source); expressions may reference both sides via
+          the statement aliases.
+      insert_arm: {cond: str|None} | None — WHEN NOT MATCHED [AND cond]
+          THEN INSERT *; None = no insert.
+      nbs: {cond: str|None, action: 'delete'|'update', set: dict} |
+          None — WHEN NOT MATCHED BY SOURCE: target rows with no source
+          match; condition-gated, non-firing rows carry over.
+
+    ``tgt`` FULL OUTER JOIN ``source`` on ``on``, with an ``__act``
+    column per row: the index of the firing UPDATE arm, _CARRY,
+    _NBS_UPDATE, _INSERT, or NULL (the row leaves the table). The first
+    CASE branch is the cardinality check, so whichever job first
+    evaluates ``__act`` fails (see _merge_cardinality). Returns the
+    joined rows, whose target side keeps every column of ``tgt`` under
+    ``ta``, and one value expression per column of ``schema``; the
+    caller projects and commits them in its own mode."""
+    matched_arms = matched_arms or []
+    for arm in matched_arms:
+        if arm.get("action") not in ("update", "delete"):
+            raise WarehouseError(f"bad matched arm action: {arm.get('action')}")
+    if nbs and nbs.get("action") not in ("update", "delete"):
+        raise WarehouseError(f"bad NOT MATCHED BY SOURCE action: {nbs.get('action')}")
+    if ta == sa:
+        raise WarehouseError(f"MERGE aliases must differ: both {ta!r}")
+    cols = schema.fieldNames()
+
+    def _assigns(set_map: dict) -> dict:
+        unknown = [c for c in set_map if c not in cols]
+        if unknown:
+            raise WarehouseError(f"MERGE SET of unknown column(s): {unknown}")
+        return {c: F.expr(e) for c, e in set_map.items()}
+
+    # the source carries its per-key row count (the window's hash
+    # exchange is the one the join reuses), the target a presence
+    # marker. One-sided clauses resolve on their own side, as in Spark,
+    # so an unqualified name is not ambiguous: NOT MATCHED BY SOURCE on
+    # the target (__nbs, __nbs_<col>), the INSERT condition on the
+    # source (__ins)
+    tgt = tgt.alias(ta).withColumn("__t", F.lit(True))
+    src = source.alias(sa).withColumn("__sn", F.count(F.lit(1)).over(Window.partitionBy(on)))
+    nbs_set: dict = {}
+    if nbs:
+        fires = F.expr(nbs["cond"]) if nbs.get("cond") else F.lit(True)
+        if nbs["action"] == "update":
+            nbs_set = {c: F.when(fires, e) for c, e in _assigns(nbs.get("set") or {}).items()}
+        tgt = tgt.withColumns({"__nbs": fires, **{f"__nbs_{c}": e for c, e in nbs_set.items()}})
+    if insert_arm is not None:
+        cond = insert_arm.get("cond")
+        src = src.withColumn("__ins", F.expr(cond) if cond else F.lit(True))
+    tgt, src = tgt.alias(ta), src.alias(sa)
+    rows = tgt.join(src, F.col(f"{ta}.{on}") == F.col(f"{sa}.{on}"), "full_outer")
+    in_t, in_s = F.col(f"{ta}.__t").isNotNull(), F.col(f"{sa}.__sn").isNotNull()
+    matched = in_t & in_s
+    dup_key = F.hex(F.col(f"{sa}.{on}").cast("string"))
+    # the check tests the keys of both sides, not the presence markers:
+    # once a caller's filter over __act lets the optimizer turn the join
+    # inner, the target marker folds to true, and a check on the source
+    # side alone would be pushed below the join onto unmatched source rows
+    act = F.when(
+        (F.col(f"{ta}.{on}") == F.col(f"{sa}.{on}")) & (F.col(f"{sa}.__sn") > 1),
+        F.raise_error(F.concat(F.lit(_MERGE_DUP), dup_key, F.lit(_MERGE_DUP))),
+    )
+    sets: list[tuple[int, dict]] = []
+    for i, arm in enumerate(matched_arms):
+        cond = matched & F.expr(arm["cond"]) if arm.get("cond") else matched
+        if arm["action"] == "update":
+            set_map = arm.get("set")
+            if set_map is None:  # SET * — every non-key column from the source
+                set_map = {c: f"{sa}.{c}" for c in cols if c != on}
+            sets.append((i, _assigns(set_map)))
+        act = act.when(cond, F.lit(i if arm["action"] == "update" else None))
+    # the rows left are one-sided: target-only, then source-only
+    act = act.when(matched, F.lit(_CARRY))
+    if nbs:
+        sets.append((_NBS_UPDATE, {c: F.col(f"{ta}.__nbs_{c}") for c in nbs_set}))
+        fired = _NBS_UPDATE if nbs["action"] == "update" else None
+        act = act.when(F.col(f"{ta}.__nbs"), F.lit(fired))
+    act = act.when(in_t, F.lit(_CARRY))
+    if insert_arm is not None:
+        sets.append((_INSERT, {c: F.col(f"{sa}.{c}") for c in cols}))
+        act = act.when(F.col(f"{sa}.__ins"), F.lit(_INSERT))
+    code = F.col("__act")
+
+    def _value(c: str):
+        # a column no assignment of the row's action sets keeps the
+        # target value
+        v = None
+        for k, assigns in sets:
+            if c in assigns:
+                e = assigns[c].cast(schema[c].dataType)
+                v = F.when(code == k, e) if v is None else v.when(code == k, e)
+        t = F.col(f"{ta}.{c}")
+        return (t if v is None else v.otherwise(t)).alias(c)
+
+    return rows.withColumn("__act", act), [_value(c) for c in cols]
+
+
+@contextmanager
+def _merge_cardinality(source: DataFrame, on: str):
+    """Turn the MERGE plan's cardinality check failing a write job into
+    the engine's own error, naming the key as the source types it; any
+    other failure propagates as Spark raised it."""
+    try:
+        yield
+    except Exception as e:
+        dup = re.search(rf"{_MERGE_DUP}([0-9A-F]*){_MERGE_DUP}", str(e))
+        if dup is None:
+            raise
+        # the typed key, fetched back from the source by its string
+        hex_key = dup.group(1)
+        hit = source.filter(F.hex(F.col(on).cast("string")) == hex_key).select(on).take(1)
+        key = hit[0][0] if hit else bytes.fromhex(hex_key).decode(errors="replace")
+        raise WarehouseError(
+            f"MERGE cardinality violation: multiple source rows match target key {on}={key!r} "
+            "(ON clause must match at most one source row per target row)"
+        ) from None
 
 
 def _iceberg_bucket_col(src: Column, n: int, dtype: T.DataType | None) -> Column:
@@ -626,26 +765,32 @@ class Warehouse:
             raise WarehouseError(f"foreign table {ns}.{name} is not registered")
         return read_iceberg_table(self.spark, loc, snapshot_id=snapshot_id, as_of_ms=as_of_ms)
 
-    def append_foreign_table(self, ns: str, name: str, df: DataFrame) -> str:
-        """Append to a registered foreign table through its open metadata
-        (sources/iceberg_writer.py) — new data files + manifest + vN+1
-        metadata, version hint advanced; returns the new metadata path.
+    def _writable_foreign(self, ns: str, name: str) -> str:
+        """Location of the registered foreign table ``ns.name`` for a
+        write through its open metadata (sources/iceberg_writer.py).
         Refuses a registration PINNED to a specific vN.metadata.json:
-        the append would land in a version the pinned registration never
+        the write would land in a version the pinned registration never
         serves, silently invisible to every subsequent read."""
-        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_writer import (
-            append_iceberg_table,
-        )
-
         loc = self.foreign_tables().get(f"{ns}.{name}")
         if loc is None:
             raise WarehouseError(f"foreign table {ns}.{name} is not registered")
         if loc.endswith(".metadata.json"):
             raise WarehouseError(
-                f"foreign table {ns}.{name} is pinned to {loc}; appends to a "
+                f"foreign table {ns}.{name} is pinned to {loc}; writes to a "
                 "pinned registration would be invisible — register the table "
                 "directory instead"
             )
+        return loc
+
+    def append_foreign_table(self, ns: str, name: str, df: DataFrame) -> str:
+        """Append to a registered foreign table — new data files +
+        manifest + vN+1 metadata, version hint advanced; returns the new
+        metadata path."""
+        from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_writer import (
+            append_iceberg_table,
+        )
+
+        loc = self._writable_foreign(ns, name)
         # honor the FOREIGN table's own write.upsert.enabled property
         # (Flink parity): its appends — incl. SQL INSERT INTO — commit
         # the upsert shape keyed on the schema's identifier-field-ids
@@ -657,46 +802,26 @@ class Warehouse:
     def upsert_foreign_table(
         self, ns: str, name: str, df: DataFrame, keys: list[str] | None = None
     ) -> str:
-        """Flink/CDC-style UPSERT on a registered foreign table through
-        its open metadata (sources/iceberg_writer.upsert_iceberg_table):
-        ONE snapshot = raw content=2 equality-delete file over the
-        batch's identifier-field keys + the batch's data files. Pinned
-        registrations refuse, as for every foreign write."""
+        """Flink/CDC-style UPSERT on a registered foreign table
+        (sources/iceberg_writer.upsert_iceberg_table): ONE snapshot = raw
+        content=2 equality-delete file over the batch's identifier-field
+        keys + the batch's data files."""
         from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_writer import (
             upsert_iceberg_table,
         )
 
-        loc = self.foreign_tables().get(f"{ns}.{name}")
-        if loc is None:
-            raise WarehouseError(f"foreign table {ns}.{name} is not registered")
-        if loc.endswith(".metadata.json"):
-            raise WarehouseError(
-                f"foreign table {ns}.{name} is pinned to {loc}; writes to a "
-                "pinned registration would be invisible — register the table "
-                "directory instead"
-            )
-        return upsert_iceberg_table(self.spark, loc, df, keys=keys)
+        return upsert_iceberg_table(self.spark, self._writable_foreign(ns, name), df, keys=keys)
 
     def delete_foreign_table_where(self, ns: str, name: str, predicate: str) -> str | None:
-        """Row-level DELETE on a registered foreign table through its
-        open metadata (merge-on-read positional delete files +
-        content=1 manifest, sources/iceberg_writer.py); returns the new
-        metadata path, or None when nothing matched. Pinned
-        registrations refuse for the same reason appends do."""
+        """Row-level DELETE on a registered foreign table (merge-on-read
+        positional delete files + content=1 manifest,
+        sources/iceberg_writer.py); returns the new metadata path, or
+        None when nothing matched."""
         from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_writer import (
             delete_iceberg_table_where,
         )
 
-        loc = self.foreign_tables().get(f"{ns}.{name}")
-        if loc is None:
-            raise WarehouseError(f"foreign table {ns}.{name} is not registered")
-        if loc.endswith(".metadata.json"):
-            raise WarehouseError(
-                f"foreign table {ns}.{name} is pinned to {loc}; a delete on a "
-                "pinned registration would be invisible — register the table "
-                "directory instead"
-            )
-        return delete_iceberg_table_where(self.spark, loc, predicate)
+        return delete_iceberg_table_where(self.spark, self._writable_foreign(ns, name), predicate)
 
     def update_foreign_table_where(
         self, ns: str, name: str, assignments: dict[str, str], predicate: str
@@ -708,16 +833,9 @@ class Warehouse:
             update_iceberg_table_where,
         )
 
-        loc = self.foreign_tables().get(f"{ns}.{name}")
-        if loc is None:
-            raise WarehouseError(f"foreign table {ns}.{name} is not registered")
-        if loc.endswith(".metadata.json"):
-            raise WarehouseError(
-                f"foreign table {ns}.{name} is pinned to {loc}; an update on a "
-                "pinned registration would be invisible — register the table "
-                "directory instead"
-            )
-        return update_iceberg_table_where(self.spark, loc, assignments, predicate)
+        return update_iceberg_table_where(
+            self.spark, self._writable_foreign(ns, name), assignments, predicate
+        )
 
     def merge_foreign_table(
         self,
@@ -725,39 +843,30 @@ class Warehouse:
         name: str,
         source: DataFrame,
         on: str,
-        when_matched: str = "update",
-        insert_not_matched: bool = True,
-        not_matched_by_source_delete: bool = False,
+        matched_arms: list[dict] | None = None,
+        insert_arm: dict | None = None,
+        not_matched_by_source_arm: dict | None = None,
+        target_alias: str = "t",
+        source_alias: str = "s",
     ) -> str | None:
-        """MERGE INTO a registered foreign table as ONE open-metadata
-        snapshot (sources/iceberg_writer.py merge_iceberg_table)."""
+        """MERGE INTO a registered foreign table as ONE merge-on-read
+        snapshot: the arms of `Table.merge_into_arms`, planned by the
+        same `_merge_plan` (sources/iceberg_writer.merge_iceberg_table)."""
         from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_writer import (
             merge_iceberg_table,
         )
 
-        loc = self.foreign_tables().get(f"{ns}.{name}")
-        if loc is None:
-            raise WarehouseError(f"foreign table {ns}.{name} is not registered")
-        if loc.endswith(".metadata.json"):
-            raise WarehouseError(
-                f"foreign table {ns}.{name} is pinned to {loc}; a merge into a "
-                "pinned registration would be invisible — register the table "
-                "directory instead"
-            )
-        try:
-            return merge_iceberg_table(
-                self.spark,
-                loc,
-                source,
-                on,
-                when_matched=when_matched,
-                insert_not_matched=insert_not_matched,
-                not_matched_by_source_delete=not_matched_by_source_delete,
-            )
-        except ValueError as e:
-            if "cardinality" in str(e):
-                raise WarehouseError(str(e)) from e
-            raise
+        return merge_iceberg_table(
+            self.spark,
+            self._writable_foreign(ns, name),
+            source,
+            on,
+            matched_arms=matched_arms,
+            insert_arm=insert_arm,
+            not_matched_by_source_arm=not_matched_by_source_arm,
+            target_alias=target_alias,
+            source_alias=source_alias,
+        )
 
 
 def _tzinfo_of(tz: str):
@@ -1302,11 +1411,13 @@ class Table:
         version: int | str | None = None,
         as_of_ms: int | None = None,
         snaps: list[dict] | None = None,
+        meta: dict | None = None,
     ) -> dict:
         """The snapshot a read at ``version``/``as_of_ms`` sees, resolved
-        over ``snaps`` (default: `_snapshots.json` as stored)."""
+        over ``snaps`` (default: `_snapshots.json` as stored); a ref name
+        resolves over ``meta`` (default: `_meta.json` as stored)."""
         if isinstance(version, str):  # branch/tag name -> pinned snapshot
-            refs = self._meta().get("refs", {})
+            refs = (meta or self._meta()).get("refs", {})
             if version not in refs:
                 raise WarehouseError(f"unknown ref {version!r} on {self.ns}.{self.name}")
             version = int(refs[version]["snapshot_id"])
@@ -1645,14 +1756,14 @@ class Table:
         materialized into the file so carried-over rows keep their
         identity; merge-on-read never touches surviving rows' files, so
         their ids hold by construction."""
-        snaps = self._snaps()
-        snap = self._resolve(version, as_of_ms, snaps)  # the WarehouseErrors callers expect
+        snaps, meta = self._snaps(), self._meta()
+        snap = self._resolve(version, as_of_ms, snaps, meta)  # the WarehouseErrors callers expect
         at = (
             {"ref": version}
             if isinstance(version, str)
             else {"snapshot_id": version, "as_of_ms": as_of_ms}
         )
-        path, md = self._published_metadata(snaps)
+        path, md = self._published_metadata(snaps, meta)
         df = read_iceberg_table(
             self.spark,
             path,
@@ -1662,16 +1773,21 @@ class Table:
             **at,
         )
         time_travel = version is not None or as_of_ms is not None
-        return self._as_table_types(df, snap if time_travel else None)
+        return self._as_table_types(df, snap if time_travel else None, meta)
 
-    def _as_table_types(self, df: DataFrame, snap: dict | None = None) -> DataFrame:
+    def _as_table_types(
+        self, df: DataFrame, snap: dict | None = None, meta: dict | None = None
+    ) -> DataFrame:
         """Iceberg has no 8/16-bit integers: cast such columns of a
         reader frame back to the table's own types (``snap``'s schema for
-        time travel, else the current one)."""
-        schema = (
-            T.StructType.fromJson(json.loads(snap["schema"]))
-            if snap and snap.get("schema")
-            else self.schema()
+        time travel, else the current one of ``meta``, default
+        `_meta.json` as stored)."""
+        schema = T.StructType.fromJson(
+            json.loads(
+                snap["schema"]
+                if snap and snap.get("schema")
+                else (meta or self._meta())["schema"]
+            )
         )
         narrow = {
             f.name: f.dataType
@@ -1709,16 +1825,19 @@ class Table:
             df = df.filter(cond)
         return df
 
-    def _published_metadata(self, snaps: list[dict] | None = None) -> tuple[str, dict]:
+    def _published_metadata(
+        self, snaps: list[dict] | None = None, meta: dict | None = None
+    ) -> tuple[str, dict]:
         """Path and parsed document of the published `vN.metadata.json`,
-        checked against the main lineage of ``snaps`` (default:
-        `_snapshots.json` as stored).
+        checked against the main lineage of ``snaps`` and the refs and
+        columns of ``meta`` (defaults: `_snapshots.json` and `_meta.json`
+        as stored).
         When its main head, its other refs (branches, tags) or its
         current columns are not the table's (an export after a commit,
         ref move or ALTER failed), the table is re-exported under the
         commit lock first: a read planned from the published metadata
         must never serve an older state."""
-        meta = self._meta()
+        meta = meta or self._meta()
         refs = {n: int(r["snapshot_id"]) for n, r in meta.get("refs", {}).items()}
         mains = self._main_snaps(snaps)
         head = mains[-1]["snapshot_id"] if mains else None
@@ -2755,142 +2874,45 @@ class Table:
     ) -> int:
         """The FULL Spark 3.5 / Iceberg MERGE matrix — multiple ordered
         WHEN MATCHED arms, a conditional INSERT arm, and a WHEN NOT
-        MATCHED BY SOURCE arm that can UPDATE as well as DELETE:
+        MATCHED BY SOURCE arm that can UPDATE as well as DELETE (the arm
+        forms are documented on `_merge_plan`, the one MERGE plan, which
+        registered foreign tables run too).
 
-          matched_arms: [{cond: str|None, action: 'update'|'delete',
-                          set: dict[col, expr]|None}, ...]
-              evaluated IN ORDER per matched (target, source) pair: the
-              FIRST arm whose condition holds fires (SQL three-valued
-              logic: NULL does not fire); no arm firing carries the
-              target row unchanged. ``set`` None means SET * (all
-              non-key columns from the source); expressions may
-              reference both sides via the statement aliases.
-          insert_arm: {cond: str|None} | None — WHEN NOT MATCHED [AND
-              cond] THEN INSERT *; None = no insert.
-          not_matched_by_source_arm: {cond: str|None, action: 'delete'|
-              'update', set: dict} | None — target rows with no source
-              match; condition-gated, non-firing rows carry over.
-
-        Same machinery as merge_into: one copy-on-write plan — target
-        FULL OUTER JOIN source on the key, one action column per row,
-        one projection — with the MERGE cardinality check inside the
-        write job, and Iceberg v3 row-identity preservation
-        (carried/updated rows keep `_row_id`; touched rows' update
-        sequence resets to this commit; inserts get fresh ids)."""
-        matched_arms = matched_arms or []
-        for arm in matched_arms:
-            if arm.get("action") not in ("update", "delete"):
-                raise WarehouseError(f"bad matched arm action: {arm.get('action')}")
-        nbs = not_matched_by_source_arm
-        if nbs and nbs.get("action") not in ("update", "delete"):
-            raise WarehouseError(f"bad NOT MATCHED BY SOURCE action: {nbs.get('action')}")
-        ta, sa = target_alias, source_alias
-        if ta == sa:
-            raise WarehouseError(f"MERGE aliases must differ: both {ta!r}")
+        Copy-on-write: the plan's rows that stay in the table are
+        rewritten as one new data directory that replaces the snapshot,
+        with the cardinality check inside the write job and Iceberg v3
+        row-identity preservation (carried/updated rows keep `_row_id`;
+        touched rows' update sequence resets to this commit; inserts get
+        fresh ids)."""
         parent = self._branch_head(branch) if branch else self.current_snapshot_id()
-        schema = self.schema()
-        cols = schema.fieldNames()
-
-        def _assigns(set_map: dict) -> dict:
-            unknown = [c for c in set_map if c not in cols]
-            if unknown:
-                raise WarehouseError(f"MERGE SET of unknown column(s): {unknown}")
-            return {c: F.expr(e) for c, e in set_map.items()}
-
-        # Spark's RewriteMergeIntoTable shape: the source carries its
-        # per-key row count (the window's hash exchange is the one the
-        # join reuses), the target a presence marker. One-sided clauses
-        # resolve on their own side, as in Spark, so an unqualified name
-        # is not ambiguous: NOT MATCHED BY SOURCE on the target (__nbs,
-        # __nbs_<col>), the INSERT condition on the source (__ins)
-        tgt = (
-            self.read(version=branch, lineage=True) if branch else self.read(lineage=True)
-        ).alias(ta).withColumn("__t", F.lit(True))
-        src = source.alias(sa).withColumn("__sn", F.count(F.lit(1)).over(Window.partitionBy(on)))
-        nbs_set: dict = {}
-        if nbs:
-            fires = F.expr(nbs["cond"]) if nbs.get("cond") else F.lit(True)
-            if nbs["action"] == "update":
-                nbs_set = {c: F.when(fires, e) for c, e in _assigns(nbs.get("set") or {}).items()}
-            tgt = tgt.withColumns({"__nbs": fires, **{f"__nbs_{c}": e for c, e in nbs_set.items()}})
-        if insert_arm is not None:
-            cond = insert_arm.get("cond")
-            src = src.withColumn("__ins", F.expr(cond) if cond else F.lit(True))
-        tgt, src = tgt.alias(ta), src.alias(sa)
-        rows = tgt.join(src, F.col(f"{ta}.{on}") == F.col(f"{sa}.{on}"), "full_outer")
-        in_t, in_s = F.col(f"{ta}.__t").isNotNull(), F.col(f"{sa}.__sn").isNotNull()
-        matched = in_t & in_s
-        # __act: the index of the firing UPDATE arm, _CARRY, _NBS_UPDATE,
-        # _INSERT, or NULL (the row is dropped); the first CASE branch is
-        # the cardinality check, so it fails the write job itself
-        dup_key = F.hex(F.col(f"{sa}.{on}").cast("string"))
-        act = F.when(
-            matched & (F.col(f"{sa}.__sn") > 1),
-            F.raise_error(F.concat(F.lit(_MERGE_DUP), dup_key, F.lit(_MERGE_DUP))),
+        tgt = self.read(version=branch, lineage=True) if branch else self.read(lineage=True)
+        rows, values = _merge_plan(
+            tgt,
+            source,
+            on,
+            self.schema(),
+            matched_arms,
+            insert_arm,
+            not_matched_by_source_arm,
+            target_alias,
+            source_alias,
         )
-        sets: list[tuple[int, dict]] = []
-        for i, arm in enumerate(matched_arms):
-            cond = matched & F.expr(arm["cond"]) if arm.get("cond") else matched
-            if arm["action"] == "update":
-                set_map = arm.get("set")
-                if set_map is None:  # SET * — every non-key column from the source
-                    set_map = {c: f"{sa}.{c}" for c in cols if c != on}
-                sets.append((i, _assigns(set_map)))
-            act = act.when(cond, F.lit(i if arm["action"] == "update" else None))
-        # the rows left are one-sided: target-only, then source-only
-        act = act.when(matched, F.lit(_CARRY))
-        if nbs:
-            sets.append((_NBS_UPDATE, {c: F.col(f"{ta}.__nbs_{c}") for c in nbs_set}))
-            fired = _NBS_UPDATE if nbs["action"] == "update" else None
-            act = act.when(F.col(f"{ta}.__nbs"), F.lit(fired))
-        act = act.when(in_t, F.lit(_CARRY))
-        if insert_arm is not None:
-            sets.append((_INSERT, {c: F.col(f"{sa}.{c}") for c in cols}))
-            act = act.when(F.col(f"{sa}.__ins"), F.lit(_INSERT))
         code = F.col("__act")
-
-        def _value(c: str):
-            # a column no assignment of the row's action sets keeps the
-            # target value
-            v = None
-            for k, assigns in sets:
-                if c in assigns:
-                    e = assigns[c].cast(schema[c].dataType)
-                    v = F.when(code == k, e) if v is None else v.when(code == k, e)
-            t = F.col(f"{ta}.{c}")
-            return (t if v is None else v.otherwise(t)).alias(c)
-
-        merged = (
-            rows.withColumn("__act", act)
-            .filter(code.isNotNull())
-            .select(
-                *[_value(c) for c in cols],
-                # inserts read NULL from the absent target row: fresh ids
-                F.col(f"{ta}._row_id").alias("_row_id"),
-                F.when(code == _CARRY, F.col(f"{ta}._last_updated_sequence_number")).alias(
-                    "_last_updated_sequence_number"
-                ),
-            )
+        merged = rows.filter(code.isNotNull()).select(
+            *values,
+            # inserts read NULL from the absent target row: fresh ids
+            F.col(f"{target_alias}._row_id").alias("_row_id"),
+            F.when(
+                code == _CARRY, F.col(f"{target_alias}._last_updated_sequence_number")
+            ).alias("_last_updated_sequence_number"),
         )
-        try:
+        with _merge_cardinality(source, on):
             p = self._write_data(merged, lineage_cols=True)
-        except Exception as e:
-            dup = re.search(rf"{_MERGE_DUP}([0-9A-F]*){_MERGE_DUP}", str(e))
-            if dup is None:
-                raise
-            # the typed key, fetched back from the source by its string
-            hex_key = dup.group(1)
-            hit = source.filter(F.hex(F.col(on).cast("string")) == hex_key).select(on).take(1)
-            key = hit[0][0] if hit else bytes.fromhex(hex_key).decode(errors="replace")
-            raise WarehouseError(
-                f"MERGE: multiple source rows match target key {on}={key!r} "
-                "(ON clause must match at most one source row per target row)"
-            ) from None
         summary = {
             "on": on,
-            "matched-arms": str(len(matched_arms)),
+            "matched-arms": str(len(matched_arms or [])),
             "insert": str(bool(insert_arm)),
-            "not-matched-by-source": (nbs or {}).get("action", ""),
+            "not-matched-by-source": (not_matched_by_source_arm or {}).get("action", ""),
         }
         return self._commit_replace("merge", [p], summary, parent, branch=branch)
 

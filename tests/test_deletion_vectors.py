@@ -227,9 +227,39 @@ def test_dv_update_and_merge_on_v3_table(spark, tmp_path):
     dvs = [d for d in _live_dv_entries(root)]
     assert sum(c for _, c in dvs) == 3 and len(dvs) == 1
     src = spark.createDataFrame([(2, "TWO"), (77, "new")], "id int, v string")
-    merge_iceberg_table(spark, root, src, on="id")
+    merge_iceberg_table(
+        spark,
+        root,
+        src,
+        on="id",
+        matched_arms=[{"cond": None, "action": "update", "set": None}],
+        insert_arm={"cond": None},
+    )
     got = {r["id"]: r["v"] for r in read_iceberg_table(spark, root).collect()}
     assert got[2] == "TWO" and got[77] == "new" and got[3] == "d"
+    _assert_one_live_dv_per_file(root)
+    # the full clause matrix on the v3 table: a conditional DELETE arm,
+    # a SET assignment and a NOT MATCHED BY SOURCE arm, all tombstoned
+    # through the same per-file DVs
+    src = spark.createDataFrame([(3, "x"), (4, "y"), (88, "z")], "id int, v string")
+    merge_iceberg_table(
+        spark,
+        root,
+        src,
+        on="id",
+        matched_arms=[
+            {"cond": "t.id = 3", "action": "delete"},
+            {"cond": None, "action": "update", "set": {"v": "concat(t.v, s.v)"}},
+        ],
+        insert_arm={"cond": None},
+        not_matched_by_source_arm={"cond": "t.id = 5", "action": "delete"},
+    )
+    got = {r["id"]: r["v"] for r in read_iceberg_table(spark, root).collect()}
+    assert got == {0: "A", 1: "B", 2: "TWO", 4: "ey", 6: "g", 7: "h", 8: "i", 77: "new", 88: "z"}
+    _assert_one_live_dv_per_file(root)
+
+
+def _assert_one_live_dv_per_file(root):
     per_file: dict[str, int] = {}
     for ref, _c in _live_dv_entries(root):
         per_file[ref] = per_file.get(ref, 0) + 1

@@ -447,6 +447,74 @@ def test_merge_foreign_delete_form_and_cardinality(spark, tmp_path):
     assert sorted(v for _i, v in got if _i == 7) == ["d1", "d2"]
 
 
+def _jobs(spark, statement) -> int:
+    """Spark jobs ``statement()`` runs, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(statement)}"
+    sc.setJobGroup(group, group)
+    try:
+        statement()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_foreign_two_arm_merge_job_count(spark, tmp_path):
+    """A foreign MERGE runs the one MERGE plan: a tombstone write and a
+    data write over the full outer join, the cardinality check inside
+    the first — 7 jobs for the upsert scenario above (the key-only
+    planner with its separate cardinality collect ran 9)."""
+    from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
+
+    wh = Warehouse(spark, str(tmp_path / "src_wh"))
+    t = wh.create_table("db", "tgt", "id int, v string")
+    t.insert_values([(1, "a"), (2, "b"), (3, "c")])
+    lake = LakehouseSQL(spark, str(tmp_path / "wh"))
+    lake.sql(
+        "CALL polaris.system.register_table(table => 'ext.tgt', "
+        f"metadata_file => '{t.path}')"
+    )
+    lake.sql("CREATE TABLE polaris.db.src (id INT, v STRING) USING ICEBERG")
+    lake.sql("INSERT INTO db.src VALUES (2, 'B'), (4, 'D')")
+    n = _jobs(
+        spark,
+        lambda: lake.sql(
+            "MERGE INTO ext.tgt t USING db.src s ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        ),
+    )
+    assert n <= 7
+    assert _rows(read_iceberg_table(spark, t.path)) == [(1, "a"), (2, "B"), (3, "c"), (4, "D")]
+
+
+def test_foreign_delete_files_cluster_by_data_file(spark, tmp_path):
+    """Position deletes are hash-clustered on the data file and sorted
+    within each task: every delete file is in (file_path, pos) order,
+    one data file's tombstones sit in one delete file, and the DELETE
+    runs 2 jobs (a global sort added a range-sampling job)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
+
+    wh = Warehouse(spark, str(tmp_path / "src_wh"))
+    t = wh.create_table("db", "d", "id int, v string")
+    for k in range(3):
+        t.insert_values([(k * 200 + i, "x") for i in range(200)])
+    lake = LakehouseSQL(spark, str(tmp_path / "wh"))
+    lake.sql(f"CALL polaris.system.register_table(table => 'ext.d', metadata_file => '{t.path}')")
+    assert _jobs(spark, lambda: lake.sql("DELETE FROM ext.d WHERE id % 3 <> 0")) <= 2
+    seen: dict[str, str] = {}
+    for path in glob.glob(f"{t.path}/data/delete-*/*.parquet"):
+        got = [tuple(r.values()) for r in pq.read_table(path).to_pylist()]
+        assert got == sorted(got), path
+        for file_path, _pos in got:
+            assert seen.setdefault(file_path, path) == path, file_path
+    assert len(seen) >= 2
+    assert sorted(r.id for r in lake.sql("SELECT id FROM ext.d").collect()) == list(range(0, 600, 3))
+
+
 # ------------------------------------------------------------ COMPACTION
 
 

@@ -1,7 +1,10 @@
-"""The full MERGE matrix (warehouse.merge_into_arms + the SQL
-general-form handler): ordered multi-arm WHEN MATCHED, assignment
-expressions, conditional INSERT, and WHEN NOT MATCHED BY SOURCE
-UPDATE/DELETE — Spark 3.5 / Iceberg semantics."""
+"""The full MERGE matrix (the one MERGE plan, warehouse._merge_plan,
+through the SQL MERGE handler): ordered multi-arm WHEN MATCHED,
+assignment expressions, conditional INSERT, and WHEN NOT MATCHED BY
+SOURCE UPDATE/DELETE — Spark 3.5 / Iceberg semantics. Every behaviour
+case runs on a native table (copy-on-write, module-level tests) and
+again on a registered foreign Iceberg v2 table holding the same rows
+(merge-on-read, `TestForeignTarget`)."""
 
 from __future__ import annotations
 
@@ -9,22 +12,47 @@ import os
 
 import pytest
 
+from minio_iceberg_polaris_lakehouse_spark.sources.iceberg_reader import (
+    read_iceberg_table,
+    resolve_metadata_path,
+)
 from minio_iceberg_polaris_lakehouse_spark.sql_frontend import LakehouseSQL
 from minio_iceberg_polaris_lakehouse_spark.warehouse import Warehouse, WarehouseError
 
 
 @pytest.fixture()
-def lake(spark, tmp_path):
+def kind():
+    return "native"
+
+
+@pytest.fixture()
+def lake(spark, tmp_path, kind):
     lk = LakehouseSQL(spark, str(tmp_path / "wh"))
     lk.sql("CREATE NAMESPACE polaris.db")
-    lk.sql(
-        "CREATE TABLE polaris.db.acct (id INT, bal INT, status STRING) USING ICEBERG"
-    )
-    lk.sql(
-        "INSERT INTO polaris.db.acct VALUES "
-        "(1, 100, 'ok'), (2, -5, 'ok'), (3, 0, 'ok'), (4, 50, 'old')"
+    _create(
+        lk,
+        kind,
+        "acct",
+        "id INT, bal INT, status STRING",
+        "(1, 100, 'ok'), (2, -5, 'ok'), (3, 0, 'ok'), (4, 50, 'old')",
     )
     return lk
+
+
+def _create(lake, kind, name, cols, values):
+    """polaris.db.<name> holding ``values``: a native table, or a table
+    of a second warehouse registered under that name as a foreign one."""
+    if kind == "native":
+        lake.sql(f"CREATE TABLE polaris.db.{name} ({cols}) USING ICEBERG")
+        lake.sql(f"INSERT INTO polaris.db.{name} VALUES {values}")
+        return
+    other = LakehouseSQL(lake.spark, lake.wh.root + "_foreign")
+    other.sql(f"CREATE TABLE polaris.db.{name} ({cols}) USING ICEBERG")
+    other.sql(f"INSERT INTO polaris.db.{name} VALUES {values}")
+    path = other.wh.table("db", name).path
+    lake.sql(
+        f"CALL polaris.system.register_table(table => 'db.{name}', metadata_file => '{path}')"
+    )
 
 
 def _state(lake):
@@ -144,9 +172,9 @@ def test_row_lineage_preserved_across_arms(lake):
     assert after[7] not in set(before.values())  # fresh id for the insert
 
 
-def test_simple_forms_still_route_to_simple_handlers(lake):
-    """The classic two-arm upsert must keep working (covered by the
-    narrow patterns, first-match dispatch)."""
+def test_classic_two_arm_upsert(lake):
+    """The classic two-arm upsert (SET * / INSERT *) is one case of
+    the matrix."""
     lake.sql(
         "MERGE INTO polaris.db.acct t USING (SELECT * FROM VALUES "
         "(1, 11, 'u'), (6, 60, 'new') AS s(id, bal, status)) s ON t.id = s.id "
@@ -194,12 +222,11 @@ def test_python_api_multi_arm(spark, tmp_path):
     assert got == {1: 110, 3: 5, 9: 90}
 
 
-def test_merge_rejects_duplicate_source_keys(lake, spark):
+def test_merge_rejects_duplicate_source_keys(lake, kind):
     """Several source rows matching one target key is a cardinality
     violation (Iceberg/Spark MERGE semantics), not a silent row
     multiplication."""
-    lake.sql("CREATE TABLE polaris.db.m (id INT, v STRING) USING ICEBERG")
-    lake.sql("INSERT INTO polaris.db.m VALUES (1, 'a')")
+    _create(lake, kind, "m", "id INT, v STRING", "(1, 'a')")
     with pytest.raises(WarehouseError, match="multiple source rows"):
         lake.sql(
             "MERGE INTO polaris.db.m t "
@@ -211,13 +238,12 @@ def test_merge_rejects_duplicate_source_keys(lake, spark):
     assert [(r.id, r.v) for r in lake.sql("SELECT id, v FROM db.m").collect()] == [(1, "a")]
 
 
-def test_merge_allows_duplicate_unmatched_source_rows(lake):
+def test_merge_allows_duplicate_unmatched_source_rows(lake, kind):
     """Iceberg/Spark MERGE only raises a cardinality violation when a
     TARGET row matches multiple source rows; duplicate source rows that
     match nothing are legal and all insert via WHEN NOT MATCHED. The
     pre-fix check rejected any duplicate source key."""
-    lake.sql("CREATE TABLE polaris.db.mi (id INT, v STRING) USING ICEBERG")
-    lake.sql("INSERT INTO polaris.db.mi VALUES (1, 'a')")
+    _create(lake, kind, "mi", "id INT, v STRING", "(1, 'a')")
     lake.sql(
         "MERGE INTO polaris.db.mi t "
         "USING (SELECT * FROM VALUES (7, 'x'), (7, 'y'), (1, 'upd') AS s(id, v)) s "
@@ -237,12 +263,16 @@ def test_merge_allows_duplicate_unmatched_source_rows(lake):
 
 
 def _files_and_history(lake, name):
-    tab = lake.wh.table("db", name)
-    data_dirs = sorted(d for d in os.listdir(tab.path) if d.startswith("data-"))
-    with open(os.path.join(tab.path, "_meta.json")) as f:
+    """Every file under the table directory, its `_meta.json`, the
+    published metadata pointer and the snapshots table."""
+    path = lake.wh.foreign_tables().get(f"db.{name}") or lake.wh.table("db", name).path
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), path) for d, _, fs in os.walk(path) for f in fs
+    )
+    with open(os.path.join(path, "_meta.json")) as f:
         meta = f.read()
     snaps = sorted(tuple(r) for r in lake.sql(f"SELECT * FROM db.{name}.snapshots").collect())
-    return data_dirs, meta, snaps
+    return files, meta, resolve_metadata_path(path), snaps
 
 
 @pytest.mark.parametrize(
@@ -257,13 +287,12 @@ def _files_and_history(lake, name):
     ],
     ids=["int", "string", "string_with_quote", "binary_not_utf8", "struct", "array"],
 )
-def test_rejected_merge_leaves_table_untouched(lake, key_type, key, want):
-    """The cardinality check fails inside the write job: the error is
-    the engine's own (no Spark error class or SQLSTATE), and the data
-    directory the failed job started is removed, so the table's files,
+def test_rejected_merge_leaves_table_untouched(lake, kind, key_type, key, want):
+    """The cardinality check fails inside the first write job: the
+    error is the engine's own (no Spark error class or SQLSTATE), and
+    what the failed job staged is removed, so the table's files,
     metadata and history are exactly what they were."""
-    lake.sql(f"CREATE TABLE polaris.db.rj (id {key_type}, v STRING) USING ICEBERG")
-    lake.sql(f"INSERT INTO polaris.db.rj VALUES ({key}, 'a')")
+    _create(lake, kind, "rj", f"id {key_type}, v STRING", f"({key}, 'a')")
     before = _files_and_history(lake, "rj")
     with pytest.raises(WarehouseError) as err:
         lake.sql(
@@ -273,7 +302,7 @@ def test_rejected_merge_leaves_table_untouched(lake, key_type, key, want):
             "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
         )
     assert str(err.value) == (
-        f"MERGE: multiple source rows match target key {want}"
+        f"MERGE cardinality violation: multiple source rows match target key {want}"
         "(ON clause must match at most one source row per target row)"
     )
     assert _files_and_history(lake, "rj") == before
@@ -389,3 +418,66 @@ def test_two_arm_merge_runs_at_most_three_jobs(spark, lake):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
     assert _state(lake)[6] == (60, "new")
+
+
+class TestForeignTarget:
+    """The behaviour cases above on a registered foreign Iceberg v2
+    table: merge-on-read runs the same plan, so it gives the same
+    answers and errors."""
+
+    @pytest.fixture()
+    def kind(self):
+        return "foreign"
+
+    def test_python_api_multi_arm(self, spark, tmp_path):
+        src_wh = Warehouse(spark, str(tmp_path / "w2"))
+        t = src_wh.create_table("db", "m", "id int, v int")
+        t.insert_values([(1, 10), (2, -1), (3, 5)])
+        wh = Warehouse(spark, str(tmp_path / "w3"))
+        wh.register_foreign_table("ext", "m", t.path)
+        src = spark.createDataFrame([(1, 0), (2, 0), (9, 90)], "id int, v int")
+        wh.merge_foreign_table(
+            "ext",
+            "m",
+            src,
+            on="id",
+            matched_arms=[
+                {"cond": "t.v < 0", "action": "delete"},
+                {"cond": None, "action": "update", "set": {"v": "t.v + s.v + 100"}},
+            ],
+            insert_arm={"cond": "s.v > 50"},
+        )
+        got = {r.id: r.v for r in read_iceberg_table(spark, t.path).collect()}
+        assert got == {1: 110, 3: 5, 9: 90}
+
+    def test_insert_star_needs_every_target_column(self, lake):
+        """INSERT * reads every target column from the source, as on a
+        native table: a source without one fails instead of inserting
+        NULLs."""
+        with pytest.raises(Exception, match="bal"):
+            lake.sql(
+                "MERGE INTO polaris.db.acct t USING (SELECT * FROM VALUES "
+                "(7, 'new') AS s(id, status)) s ON t.id = s.id "
+                "WHEN NOT MATCHED THEN INSERT *"
+            )
+
+
+for _case in (
+    test_multi_arm_first_match_fires,
+    test_arm_order_matters,
+    test_assignment_expressions_reference_both_sides,
+    test_conditional_insert_arm,
+    test_not_matched_by_source_update,
+    test_not_matched_by_source_conditional_delete,
+    test_null_condition_does_not_fire,
+    test_classic_two_arm_upsert,
+    test_cardinality_violation_still_detected,
+    test_garbled_clause_is_loud,
+    test_merge_rejects_duplicate_source_keys,
+    test_merge_allows_duplicate_unmatched_source_rows,
+    test_rejected_merge_leaves_table_untouched,
+    test_one_sided_clauses_resolve_unqualified_names,
+    test_other_write_failures_propagate,
+    test_null_keys_never_match,
+):
+    setattr(TestForeignTarget, _case.__name__, staticmethod(_case))

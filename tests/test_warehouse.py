@@ -640,3 +640,22 @@ def test_incremental_append_scan(wh, spark):
     # but consuming from AFTER the rewrite works again
     t.insert_values([(6,)])  # v6
     assert sorted(r.id for r in t.incremental_scan(5).collect()) == [6]
+
+
+@pytest.mark.parametrize("version", [None, "v1"], ids=["current", "ref"])
+def test_read_parses_table_meta_once(wh, monkeypatch, version):
+    """`Table.read` reads `_meta.json` once and passes the document to
+    ref resolution, the published-metadata check and the type casts."""
+    from minio_iceberg_polaris_lakehouse_spark.warehouse import Table
+
+    t = wh.create_table("db", "meta_once", "id int, v tinyint")
+    t.insert_values([(1, 2)])
+    t.create_ref("v1")
+    t.read(version=version)  # publishes the metadata once, outside the count
+    reads = []
+    orig = Table._meta
+    monkeypatch.setattr(Table, "_meta", lambda self: reads.append(1) or orig(self))
+    df = t.read(version=version)
+    assert len(reads) == 1
+    assert [tuple(r) for r in df.collect()] == [(1, 2)]
+    assert df.schema["v"].dataType.simpleString() == "tinyint"
